@@ -17,6 +17,32 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def row_images(
+    old: DataFrame,
+    new: DataFrame,
+    *,
+    key: str,
+    cols: list[str],
+) -> DataFrame:
+    """Pre/post images of the rows that differ between two snapshots: one
+    row per key that was inserted, deleted, or changed in any of ``cols``,
+    as (<key>, _in_old, _o_<c>..., _in_new, <c>...). ``_in_old`` /
+    ``_in_new`` are true on the side the key is present and null on the
+    other, so a side whose payload is all-null still reads as present.
+    Unchanged keys are dropped, so the result is sized by the change, not by
+    the snapshots. ``snapshot_diff`` and the view syncs both fold this."""
+    o = old.select(key, F.lit(True).alias("_in_old"),
+                   *[F.col(c).alias(f"_o_{c}") for c in cols])
+    # the join key is never duplicated: a ``cols`` entry naming it reads the
+    # joined key on the new side
+    n = new.select(key, F.lit(True).alias("_in_new"),
+                   *[c for c in cols if c != key])
+    moved = F.col("_in_old").isNull() | F.col("_in_new").isNull()
+    for c in cols:
+        moved = moved | ~F.col(c).eqNullSafe(F.col(f"_o_{c}"))
+    return o.join(n, key, "full_outer").filter(moved)
+
+
 def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
@@ -33,28 +59,14 @@ def snapshot_diff(
     skip-unchanged-snapshot optimization).
     """
     payload_cols = payload_cols or [c for c in new.columns if c != key]
-    o = old.select(
-        key, F.lit(1).alias("_in_old"), *[F.col(c).alias(f"_o_{c}") for c in payload_cols]
-    )
-    n = new.select(key, F.lit(1).alias("_in_new"), *payload_cols)
-    j = o.join(n, key, "full_outer")
-
-    changed = F.lit(False)
-    for c in payload_cols:
-        changed = changed | ~F.col(c).eqNullSafe(F.col(f"_o_{c}"))
-    # presence markers survive the full-outer join even for all-null payloads
-    in_old = F.col("_in_old").isNotNull()
-    in_new = F.col("_in_new").isNotNull()
-
+    j = row_images(old, new, key=key, cols=payload_cols)
     op = (
-        F.when(~in_old & in_new, "I")
-        .when(in_old & ~in_new, "D")
-        .when(changed, "U")
-        .otherwise(None)  # unchanged -> no event
+        F.when(F.col("_in_old").isNull(), "I")
+        .when(F.col("_in_new").isNull(), "D")
+        .otherwise("U")
     )
     out = (
         j.withColumn("op", op)
-        .filter(F.col("op").isNotNull())
         .select(
             F.lit(snapshot_seq).cast("long").alias("event_seq"),
             "op",
@@ -72,6 +84,7 @@ def snapshot_diff(
         )
     )
     return out
+
 
 def table_changes_pruned(
     spark,
@@ -93,8 +106,31 @@ def table_changes_pruned(
     ingests (text / embedding), so column pruning reaches the parquet scan
     too. Falls back to full reads when bucket identity is not comparable
     (``changed_buckets`` returns None: the bucket function changed)."""
+    key, old, new = _pruned_pair(spark, table, from_version, to_version, cols)
+    return snapshot_diff(old, new, key=key, payload_cols=list(cols))
+
+
+def table_row_images(
+    spark,
+    table,
+    from_version: int,
+    to_version: int,
+    *,
+    cols: list[str],
+) -> DataFrame:
+    """``row_images`` between two snapshots of a miniberg table, with the
+    same bucket and column prune as ``table_changes_pruned`` — the keyed
+    changed-row diff the materialized views fold."""
+    key, old, new = _pruned_pair(spark, table, from_version, to_version, cols)
+    return row_images(old, new, key=key, cols=list(cols))
+
+
+def _pruned_pair(spark, table, from_version, to_version, cols):
     key = table.manifest(to_version)["key_col"]
     buckets = table.changed_buckets(from_version, to_version)
-    old = table.read(spark, version=from_version, buckets=buckets).select(key, *cols)
-    new = table.read(spark, version=to_version, buckets=buckets).select(key, *cols)
-    return snapshot_diff(old, new, key=key, payload_cols=list(cols))
+    old, new = (
+        table.read(spark, version=v, buckets=buckets)
+        .select(key, *[c for c in cols if c != key])
+        for v in (from_version, to_version)
+    )
+    return key, old, new

@@ -8,31 +8,27 @@ Reference parity: the reference's metric/export views (SURVEY.md §2.1 S7,
 §2.4 A1/A7 [U]) are recomputed per run; this module gives them the
 CDC-native form — the view advances with the table.
 
-How a sync stays exact without reading old row values:
+How a sync stays exact:
 
-- The snapshot differ never emits pre-images, and it does not need to here:
-  buckets whose file sets did not move between the two snapshots contribute
-  IDENTICALLY to both, so for the additive aggregates (count / sum — avg is
-  sum/count at read) the delta is ``partial(new, changed buckets) −
-  partial(old, changed buckets)``, two bucket-pruned map-side-combinable
-  partial aggregations merged into the stored view by group key. Untouched
-  buckets are never read; untouched groups are carried verbatim.
-- min/max are not self-maintainable under delete/update (the dropped row may
-  BE the extremum). The recompute set is ROW-precise: a keyed diff over the
-  changed buckets finds groups that LOST a row (deleted key, or an updated
-  key whose group/value moved) — only those get their min/max recomputed
-  exactly, with ONE scan of the current snapshot semi-joined to that group
-  set. Groups merely co-located in a touched bucket (their rows survive
-  identically) and insert-only groups merge monotonically
-  (``least``/``greatest``) with no recompute. That scan is the honest cost
-  of exact extrema in the default ``minmax="scan"`` mode; it runs at most
-  once per sync and skips entirely for insert-only batches. For metric-view
-  workloads ``minmax="partials"`` removes it: a persisted per-(group,
-  bucket) min/max PARTIAL TREE (partitioned by bucket, hardlink-carried
-  like the distinct support) is refreshed for the changed buckets from the
-  read the sync already holds, and affected groups fold their extrema from
-  the partial table — update/delete syncs become fully bucket-bounded, no
-  data-table scan at all.
+- Every incremental sync folds one keyed changed-row diff
+  (``cdc.differ.table_row_images``): the pre- and post-image (group, value)
+  of each key whose (group, value) moved, read from the changed buckets
+  only. As a signed multiset (−1 per removed pre-image, +1 per added
+  post-image) it is the exact delta of every view here: count/sum add it,
+  the distinct support adds it at the (group, value) grain. Untouched
+  buckets are never read; keys whose (group, value) did not move, and the
+  groups they sit in, contribute nothing.
+- min/max are not self-maintainable under delete/update (the removed row
+  may BE the extremum). The same aggregate over the diff yields each
+  group's gained min/max and its lost values; a group is recomputed only
+  when a lost value equals its stored min or max. Every other group merges
+  with ``least``/``greatest`` and stays exact, because its stored extremum
+  survives. The recompute runs at most once per sync: in the default
+  ``minmax="scan"`` mode one scan of the current snapshot semi-joined to
+  the recompute set; with ``minmax="partials"`` a fold of a persisted
+  per-(group, bucket) min/max PARTIAL TREE (partitioned by bucket,
+  hardlink-carried like the distinct support, refreshed for the changed
+  buckets), so no sync reads the whole table.
 
 Sums are maintained in DECIMAL(28,4) (values cast to DECIMAL(18,4) before
 the first SUM): decimal add/subtract is exact, so incremental deltas never
@@ -55,6 +51,7 @@ from pyspark.sql import functions as F
 
 from recidiviz_data_spark.operators.base import _qx
 from recidiviz_data_spark.session import materialize
+from recidiviz_data_spark.tables import artifacts
 
 _VAL_T = "decimal(18,4)"   # cast-before-SUM type (repo exactness rule)
 _SUM_T = "decimal(28,4)"   # stored running-sum type: exact +/- deltas
@@ -64,6 +61,14 @@ def agg_view_path(table, group_col: str, value_col: str) -> str:
     uid = table.manifest()["table_uuid"]
     return os.path.join(
         tempfile.gettempdir(), f"rds_aggview_{uid}_{group_col}_{value_col}"
+    )
+
+
+def view_uid(table) -> str:
+    """The table identity a view's sync.json records: the table uuid,
+    scoped to the branch of a branch handle."""
+    return table.manifest()["table_uuid"] + (
+        f"@{table.branch}" if getattr(table, "branch", None) else ""
     )
 
 
@@ -83,12 +88,7 @@ def agg_view_read(spark, path: str):
     """Current view: (group, n_rows, sum_val, min_val, max_val, avg_val).
     avg derives at read (sum/count are the maintained state). Accepts a
     resolved payload dir in place of the artifact base (pinned readers)."""
-    from recidiviz_data_spark.tables import artifacts
-
-    r = artifacts.resolve(path)
-    payload = r[0] if r is not None else path
-    df = spark.read.parquet(os.path.join(payload, "view"))
-    return df.withColumn(
+    return _read_payload(spark, path, "view").withColumn(
         "avg_val", F.col("sum_val").cast("double") / F.col("n_rows")
     )
 
@@ -96,46 +96,46 @@ def agg_view_read(spark, path: str):
 def agg_view_sync(spark, table, path: str | None = None, *,
                   group_col: str, value_col: str,
                   rebuild_changed_fraction: float = 0.5,
-                  minmax: str = "scan") -> dict:
+                  minmax: str = "scan",
+                  changes=None, from_version: int | None = None,
+                  to_version: int | None = None) -> dict:
     """Advance the materialized aggregate view to the table's current
     version. First call (or spec/table/mode mismatch, or a version the view
     is ahead of, or lost bucket identity) rebuilds from a full scan; after
     that every sync is incremental AND exact — see the module docstring.
 
-    ``minmax`` selects how extrema survive deletes/updates:
+    ``changes`` / ``from_version`` / ``to_version``: a ``table_row_images``
+    diff holding both columns and the two snapshots it spans, as
+    ``index_sync_hook`` shares it between views. It is folded only when it
+    spans the view's stored version to the table's current one; otherwise
+    the sync diffs the changed buckets itself.
 
-    - ``"scan"`` (default): groups that lost a row get min/max recomputed
-      with one scan of the current snapshot semi-joined to that group set.
-      Zero extra storage; the scan is the cost (it prices like a rebuild's
-      scan whenever any group lost a row).
+    ``minmax`` selects what a group whose stored extremum was lost is
+    recomputed from:
+
+    - ``"scan"`` (default): one scan of the current snapshot semi-joined to
+      those groups. Zero extra storage.
     - ``"partials"``: the view also persists a per-(group, BUCKET) min/max
-      partial tree (``minmax/`` partitioned by bucket). A sync recomputes
-      partials ONLY for the changed buckets (from the changed-bucket read it
-      already holds — no extra data-table scan), hardlink-carries the rest,
-      and folds affected groups' extrema from the PARTIAL table instead of
-      the data table. Update/delete syncs become fully bucket-bounded: the
-      full data scan disappears; the fold reads the partial table, which is
+      partial tree (``minmax/`` partitioned by bucket), refreshed for the
+      changed buckets from one current-version read of them; the rest
+      hardlink-carry, and the groups fold from the partial table. It holds
       one row per (group, bucket) pair with data — use when
       group_cardinality × num_buckets ≪ row count (the usual case for
       metric views), stay on "scan" for pathological group cardinalities.
 
     ``rebuild_changed_fraction``: when MORE than this fraction of buckets
-    moved since the last sync, rebuild instead — the incremental path costs
-    two changed-bucket scans plus merges, so past roughly half the table it
-    is strictly worse than the one full scan a rebuild pays (measured: a
-    batch scattered over 60/64 buckets synced 3.4× SLOWER than its rebuild —
+    moved since the last sync, rebuild instead — the diff reads the changed
+    buckets at both versions, so past roughly half the table it costs more
+    than the one full scan a rebuild pays (measured: a batch scattered over
+    60/64 buckets synced 3.4× SLOWER than its rebuild —
     tools/ivm_scale_bench.py). The incremental win lives where web-scale CDC
     lives: batches touching a small fraction of a large bucket count.
     Returns {action, version, groups, recomputed_groups}."""
-    from recidiviz_data_spark.tables import artifacts
-
     if minmax not in ("scan", "partials"):
         raise ValueError(f"minmax must be 'scan' or 'partials': {minmax!r}")
     base = path or agg_view_path(table, group_col, value_col)
     cur_v = table.current_version()
-    uid = table.manifest()["table_uuid"] + (
-        f"@{table.branch}" if getattr(table, "branch", None) else ""
-    )
+    uid = view_uid(table)
 
     def _meta(n_groups: int) -> dict:
         return {"table_uuid": uid, "version": cur_v, "n_groups": n_groups,
@@ -194,143 +194,96 @@ def agg_view_sync(spark, table, path: str | None = None, *,
     if len(cb) > rebuild_changed_fraction * table.manifest(cur_v)["num_buckets"]:
         return _rebuild()  # most of the table moved: one full scan is cheaper
 
-    g = group_col
-    key = table.manifest(cur_v)["key_col"]
-    view = spark.read.parquet(os.path.join(r0[0], "view"))
-    zero = F.lit(0).cast(_SUM_T)
-    # both changed-bucket snapshots are consumed twice (partial aggregate +
-    # the keyed removal diff) — materialize each once
-    o_rows = materialize(
-        table.read(spark, version=meta["version"], buckets=cb)
-        .select(key, g, value_col)
+    g, v = group_col, value_col
+    rows = _signed_rows(spark, table, meta["version"], cur_v, g, v,
+                        changes, (from_version, to_version))
+    sv, gained = F.col(v).cast(_VAL_T), F.col("sign") > 0
+    delta = rows.groupBy(g).agg(
+        F.sum("sign").alias("dn"),
+        F.sum(F.when(gained, sv).otherwise(-sv)).cast(_SUM_T).alias("ds"),
+        F.min(F.when(gained, F.col(v))).alias("g_min"),
+        F.max(F.when(gained, F.col(v))).alias("g_max"),
+        F.min(F.when(~gained, F.col(v))).alias("l_min"),
+        F.max(F.when(~gained, F.col(v))).alias("l_max"),
     )
-    n_rows_df = materialize(
-        table.read(spark, version=cur_v, buckets=cb).select(key, g, value_col)
-    )
-    old_part = _aggs(o_rows, g, value_col).select(
-        g, F.col("n_rows").alias("o_n"), F.col("sum_val").alias("o_sum")
-    )
-    new_part = _aggs(n_rows_df, g, value_col).select(
-        g, F.col("n_rows").alias("i_n"), F.col("sum_val").alias("i_sum"),
-        F.col("min_val").alias("i_min"), F.col("max_val").alias("i_max"))
+    view = _read_state(spark, os.path.join(r0[0], "view"))
     # all group-key joins are NULL-SAFE: a null group is a real group under
     # GROUP BY semantics, and plain equi-joins would never match it (the
     # stored null-group row and its partials would drift apart as duplicates)
-    j1 = (
-        view.alias("v")
-        .join(old_part.alias("o"),
-              F.col(f"v.{g}").eqNullSafe(F.col(f"o.{g}")), "full_outer")
-        .select(F.coalesce(f"v.{g}", f"o.{g}").alias(g),
-                "v.n_rows", "v.sum_val", "v.min_val", "v.max_val",
-                "o.o_n", "o.o_sum")
-    )
     merged = materialize(
-        j1.alias("x")
-        .join(new_part.alias("i"),
-              F.col(f"x.{g}").eqNullSafe(F.col(f"i.{g}")), "full_outer")
-        .select(F.coalesce(f"x.{g}", f"i.{g}").alias(g),
-                "x.n_rows", "x.sum_val", "x.min_val", "x.max_val",
-                "x.o_n", "x.o_sum", "i.i_n", "i.i_sum", "i.i_min", "i.i_max")
-        .withColumn(
-            "n2",
-            F.coalesce("n_rows", F.lit(0)) - F.coalesce("o_n", F.lit(0))
-            + F.coalesce("i_n", F.lit(0)),
+        view.alias("v")
+        .join(delta.alias("d"),
+              F.col(f"v.{g}").eqNullSafe(F.col(f"d.{g}")), "full_outer")
+        .select(
+            F.coalesce(f"v.{g}", f"d.{g}").alias(g),
+            (F.coalesce("n_rows", F.lit(0)) + F.coalesce("dn", F.lit(0)))
+            .cast("long").alias("n_rows"),
+            (F.coalesce("sum_val", F.lit(0)) + F.coalesce("ds", F.lit(0)))
+            .cast(_SUM_T).alias("sum_val"),
+            F.least("min_val", "g_min").alias("min_val"),
+            F.greatest("max_val", "g_max").alias("max_val"),
+            # a lost value at the stored extremum may have been its last copy
+            (F.coalesce(F.col("l_min") <= F.col("min_val"), F.lit(False))
+             | F.coalesce(F.col("l_max") >= F.col("max_val"), F.lit(False)))
+            .alias("_rescan"),
         )
-        .withColumn(
-            "sum2",
-            F.coalesce(F.col("sum_val"), zero) - F.coalesce(F.col("o_sum"), zero)
-            + F.coalesce(F.col("i_sum"), zero),
-        )
-        .filter(F.col("n2") > 0)  # emptied groups leave the view
+        .filter(F.col("n_rows") > 0)  # emptied groups leave the view
     )
+    n_out, n_rec = merged.agg(
+        F.count("*"), F.count(F.when(F.col("_rescan"), 1))
+    ).first()
 
-    # min/max recompute set: groups that LOST a row (delete, or an update
-    # that changed the row's group/value) — a row-level keyed diff over the
-    # changed buckets only. Pure inserts never land here (their bucket
-    # neighbours' rows survive identically into the new partial), so
-    # append-heavy syncs pay no recompute scan at all.
-    a, b = o_rows.alias("a"), n_rows_df.alias("b")
-    lost = a.join(b, F.col(f"a.{key}") == F.col(f"b.{key}"), "left_anti").select(
-        F.col(f"a.{g}").alias(g)
-    )
-    changed_rows = (
-        a.join(b, F.col(f"a.{key}") == F.col(f"b.{key}"))
-        .filter(
-            ~F.col(f"a.{g}").eqNullSafe(F.col(f"b.{g}"))
-            | ~F.col(f"a.{value_col}").eqNullSafe(F.col(f"b.{value_col}"))
-        )
-        .select(F.col(f"a.{g}").alias(g))  # the OLD group lost this row
-    )
-    rec = lost.unionByName(changed_rows).distinct()
-    n_rec = rec.count()
     new_partials = None
     if minmax == "partials":
-        # partials for the changed buckets, recomputed from the changed-
-        # bucket read the sync ALREADY holds — no extra data-table scan;
-        # unchanged buckets' partials hardlink-carry at publish below
-        new_partials = materialize(_partials_of(n_rows_df))
+        # partials for the changed buckets; unchanged buckets' partials
+        # hardlink-carry at publish below
+        key = table.manifest(cur_v)["key_col"]
+        new_partials = materialize(_partials_of(
+            table.read(spark, version=cur_v, buckets=cb).select(key, g, v)
+        ))
+    out = merged
     if n_rec:
         if minmax == "partials":
-            # fold affected groups' extrema from the PARTIAL table: carried
+            # fold recomputed groups' extrema from the PARTIAL table: carried
             # partials for unchanged buckets + the fresh changed-bucket ones
-            old_partials = spark.read.parquet(os.path.join(r0[0], "minmax"))
+            old_partials = _read_state(spark, os.path.join(r0[0], "minmax"))
             fold_src = old_partials.filter(
                 ~F.col("bucket").isin(cb)
-            ).unionByName(new_partials).alias("t")
+            ).unionByName(new_partials)
+            lo, hi = "mn", "mx"
         else:
-            fold_src = table.read(spark, version=cur_v).alias("t")
+            fold_src, lo, hi = table.read(spark, version=cur_v), v, v
         rx = (
-            fold_src.join(rec.alias("r"),
-                          F.col(f"t.{g}").eqNullSafe(F.col(f"r.{g}")), "left_semi")
-            .groupBy(g)
+            fold_src.alias("t")
+            .join(merged.filter("_rescan").alias("r"),
+                  F.col(f"t.{g}").eqNullSafe(F.col(f"r.{g}")), "left_semi")
+            .groupBy(g).agg(F.min(lo).alias("r_min"), F.max(hi).alias("r_max"))
         )
-        if minmax == "partials":
-            rx = rx.agg(F.min("mn").alias("r_min"), F.max("mx").alias("r_max"))
-        else:
-            rx = rx.agg(F.min(value_col).alias("r_min"),
-                        F.max(value_col).alias("r_max"))
-        rx = rx.withColumn("_rec", F.lit(True))
-        merged = (
+        # r_min/r_max may be legitimately null when the group's surviving
+        # values are all null — pick by _rescan, never by coalesce
+        out = (
             merged.alias("m")
             .join(rx.alias("rx"),
                   F.col(f"m.{g}").eqNullSafe(F.col(f"rx.{g}")), "left_outer")
-            .drop(F.col(f"rx.{g}"))
+            .select(
+                F.col(f"m.{g}").alias(g), "n_rows", "sum_val",
+                *[F.when(F.col("_rescan"), F.col(f"r_{c}"))
+                  .otherwise(F.col(f"{c}_val")).alias(f"{c}_val")
+                  for c in ("min", "max")],
+            )
         )
-        # _rec marks recomputed groups (r_min/r_max may be legitimately null
-        # when the group's surviving values are all null)
-        min_expr = F.when(F.col("_rec").isNotNull(), F.col("r_min")).otherwise(
-            F.least("min_val", "i_min")
-        )
-        max_expr = F.when(F.col("_rec").isNotNull(), F.col("r_max")).otherwise(
-            F.greatest("max_val", "i_max")
-        )
-    else:  # insert-only sync: pure monotone merge, no table scan at all
-        min_expr = F.least("min_val", "i_min")
-        max_expr = F.greatest("max_val", "i_max")
-
-    out = materialize(
-        merged.select(
-            g,
-            F.col("n2").cast("long").alias("n_rows"),
-            F.col("sum2").cast(_SUM_T).alias("sum_val"),
-            min_expr.alias("min_val"),
-            max_expr.alias("max_val"),
-        )
+    # SUM over no non-null value is NULL, exactly when MIN is
+    out = out.select(
+        g, "n_rows",
+        F.when(F.col("min_val").isNotNull(), F.col("sum_val")).alias("sum_val"),
+        "min_val", "max_val",
     )
-    n_out = out.count()
 
     def _build(stage: str) -> None:
         _write(stage, out, _meta(n_out))
         if minmax == "partials":
-            # carry unchanged buckets' partial partitions; write the rest
-            os.makedirs(os.path.join(stage, "minmax"), exist_ok=True)
-            src = os.path.join(r0[0], "minmax")
-            for d in os.listdir(src):
-                full = os.path.join(src, d)
-                if not os.path.isdir(full):
-                    continue
-                if int(d.split("=", 1)[1]) not in cb:
-                    artifacts.link_tree(full, os.path.join(stage, "minmax", d))
+            _carry_parts(os.path.join(r0[0], "minmax"),
+                         os.path.join(stage, "minmax"), cb)
             _write_partitioned(new_partials, os.path.join(stage, "minmax"),
                                "bucket")
 
@@ -342,9 +295,34 @@ def agg_view_sync(spark, table, path: str | None = None, *,
         return agg_view_sync(spark, table, path,
                              group_col=group_col, value_col=value_col,
                              rebuild_changed_fraction=rebuild_changed_fraction,
-                             minmax=minmax)
+                             minmax=minmax, changes=changes,
+                             from_version=from_version, to_version=to_version)
     return {"action": "incremental", "version": cur_v, "groups": n_out,
             "recomputed_groups": n_rec}
+
+
+def _signed_rows(spark, table, from_v: int, to_v: int, g: str, v: str,
+                 changes, span: tuple):
+    """The keyed changed-row diff from ``from_v`` to ``to_v`` as a signed
+    multiset of (group, value) rows: -1 for each removed pre-image, +1 for
+    each added post-image, only for keys whose (group, value) moved.
+    ``changes`` (a ``table_row_images`` frame holding both columns) is
+    folded when its ``span`` is (``from_v``, ``to_v``); otherwise the
+    changed buckets are diffed here."""
+    from recidiviz_data_spark.cdc.differ import table_row_images
+
+    if (changes is None or span != (from_v, to_v)
+            or not {g, v, f"_o_{g}", f"_o_{v}"} <= set(changes.columns)):
+        changes = table_row_images(spark, table, from_v, to_v,
+                                   cols=list(dict.fromkeys((g, v))))
+    in_old, in_new = F.col("_in_old").isNotNull(), F.col("_in_new").isNotNull()
+    moved = (~in_old | ~in_new | ~F.col(g).eqNullSafe(F.col(f"_o_{g}"))
+             | ~F.col(v).eqNullSafe(F.col(f"_o_{v}")))
+    d = changes.filter(moved)
+    return d.filter(in_old).select(
+        F.col(f"_o_{g}").alias(g), F.col(f"_o_{v}").alias(v),
+        F.lit(-1).alias("sign"),
+    ).unionByName(d.filter(in_new).select(g, v, F.lit(1).alias("sign")))
 
 
 def _agg_oracle_sql() -> str:
@@ -455,21 +433,13 @@ def distinct_view_path(table, group_col: str, value_col: str) -> str:
 def distinct_view_read(spark, path: str):
     """Current summary: (group, n_distinct). Accepts a resolved payload dir
     (pinned readers) in place of the artifact base."""
-    from recidiviz_data_spark.tables import artifacts
-
-    r = artifacts.resolve(path)
-    payload = r[0] if r is not None else path
-    return spark.read.parquet(os.path.join(payload, "view"))
+    return _read_payload(spark, path, "view")
 
 
 def distinct_view_support(spark, path: str):
     """The support multiset: (group, value, cnt, part) — one row per live
     (group, value) pair with its multiplicity."""
-    from recidiviz_data_spark.tables import artifacts
-
-    r = artifacts.resolve(path)
-    payload = r[0] if r is not None else path
-    return spark.read.parquet(os.path.join(payload, "support"))
+    return _read_payload(spark, path, "support")
 
 
 def _support_of(df, g: str, v: str):
@@ -487,33 +457,71 @@ def _write_partitioned(df, out: str, part_col: str = "part") -> None:
     would fail), so an emptied table lands as one zero-row unpartitioned
     file that still carries the full schema."""
     df.write.mode("append").partitionBy(part_col).parquet(out)
-    has_files = any(
-        f.endswith(".parquet")
-        for _r, _d, fs in os.walk(out)
-        for f in fs
-    )
-    if not has_files:
+    if not _parquet_files(out):
         df.limit(0).write.mode("overwrite").parquet(out)
+
+
+def _parquet_files(out: str) -> list[str]:
+    return sorted(os.path.join(r, f) for r, _d, fs in os.walk(out)
+                  for f in fs if f.endswith(".parquet"))
+
+
+def _carry_parts(src: str, dst: str, rewritten) -> None:
+    """Hardlink-carry the partition dirs (``<col>=<k>``) of ``src`` whose k
+    is not ``rewritten`` into ``dst``; the caller writes the rest."""
+    os.makedirs(dst, exist_ok=True)
+    for d in os.listdir(src):
+        full = os.path.join(src, d)  # skips files: parquet _SUCCESS etc.
+        if os.path.isdir(full) and int(d.split("=", 1)[1]) not in rewritten:
+            artifacts.link_tree(full, os.path.join(dst, d))
+
+
+def _read_payload(spark, path: str, sub: str):
+    """``sub`` of the view's current payload; ``path`` may also be a
+    resolved payload dir (pinned readers)."""
+    r = artifacts.resolve(path)
+    return _read_state(spark, os.path.join(r[0] if r is not None else path, sub))
+
+
+def _read_state(spark, out: str):
+    """A stored parquet directory read with the schema of one footer (plus
+    its int partition column) — Spark's own inference runs a job per read."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import IntegerType
+
+    first = _parquet_files(out)[0]
+    schema = from_arrow_schema(pq.ParquetFile(first).schema_arrow,
+                               prefer_timestamp_ntz=True)
+    part = os.path.relpath(os.path.dirname(first), out)
+    if part != ".":
+        schema = schema.add(part.split("=", 1)[0], IntegerType())
+    return spark.read.schema(schema).parquet(out)
+
+
+def _rows_written(out: str) -> int:
+    """Row count of a parquet directory, from its footers (no Spark job)."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(out))
 
 
 def distinct_view_sync(spark, table, path: str | None = None, *,
                        group_col: str, value_col: str,
-                       rebuild_changed_fraction: float = 0.5) -> dict:
+                       rebuild_changed_fraction: float = 0.5,
+                       changes=None, from_version: int | None = None,
+                       to_version: int | None = None) -> dict:
     """Advance the COUNT(DISTINCT value_col) view per group_col to the
     table's current version. Fully incremental and exact under I/U/D — the
-    delta multiset from the changed buckets merges into the support at the
-    (group, value) grain; only support partitions holding changed groups
-    are rewritten (the rest hardlink-carry). ``rebuild_changed_fraction``:
-    same guard as ``agg_view_sync`` — past this fraction of moved buckets
-    the two delta scans cost more than the rebuild's one. Returns {action,
+    changed-row diff's signed rows merge into the support at the (group,
+    value) grain; only support partitions holding changed groups are
+    rewritten (the rest hardlink-carry). ``changes`` / ``from_version`` /
+    ``to_version`` and ``rebuild_changed_fraction``: as in
+    ``agg_view_sync``. Returns {action,
     version, groups, changed_parts}."""
-    from recidiviz_data_spark.tables import artifacts
-
     base = path or distinct_view_path(table, group_col, value_col)
     cur_v = table.current_version()
-    uid = table.manifest()["table_uuid"] + (
-        f"@{table.branch}" if getattr(table, "branch", None) else ""
-    )
+    uid = view_uid(table)
     g, v = group_col, value_col
 
     def _meta(n_groups: int) -> dict:
@@ -561,18 +569,15 @@ def distinct_view_sync(spark, table, path: str | None = None, *,
         return _rebuild()  # most of the table moved: one full scan is cheaper
 
     payload = r0[0]
-    # delta multiset at the (group, value) grain: -old +new multiplicities
-    o_sup = _support_of(
-        table.read(spark, version=meta["version"], buckets=cb).select(g, v), g, v
-    ).withColumn("cnt", -F.col("cnt"))
-    n_sup = _support_of(
-        table.read(spark, version=cur_v, buckets=cb).select(g, v), g, v
-    )
+    # delta multiset at the (group, value) grain: the diff's signed rows
     delta = materialize(
-        o_sup.unionByName(n_sup)
-        .groupBy(g, v, "part")
-        .agg(F.sum("cnt").cast("long").alias("d"))
+        _signed_rows(spark, table, meta["version"], cur_v, g, v,
+                     changes, (from_version, to_version))
+        .filter(F.col(v).isNotNull())  # COUNT(DISTINCT) ignores nulls
+        .groupBy(g, v)
+        .agg(F.sum("sign").cast("long").alias("d"))
         .filter(F.col("d") != 0)
+        .withColumn("part", _part_of(g))
     )
     changed_parts = sorted(
         r["part"] for r in delta.select("part").distinct().collect()
@@ -595,14 +600,16 @@ def distinct_view_sync(spark, table, path: str | None = None, *,
         except artifacts.ArtifactConflict:
             return distinct_view_sync(
                 spark, table, path, group_col=g, value_col=v,
-                rebuild_changed_fraction=rebuild_changed_fraction)
+                rebuild_changed_fraction=rebuild_changed_fraction,
+                changes=changes, from_version=from_version,
+                to_version=to_version)
         return {"action": "incremental", "version": cur_v,
                 "groups": n_groups, "changed_parts": 0}
 
     # merge the delta into ONLY the touched support partitions (partition
     # pruning on part); keep dead rows long enough to compute the summary
     # delta (a value dropping to multiplicity 0 decrements n_distinct)
-    old_sup = spark.read.parquet(os.path.join(payload, "support")).filter(
+    old_sup = _read_state(spark, os.path.join(payload, "support")).filter(
         F.col("part").isin(changed_parts)
     )
     merged = materialize(
@@ -633,8 +640,8 @@ def distinct_view_sync(spark, table, path: str | None = None, *,
         .groupBy(g).agg(F.sum("dd").cast("long").alias("dd"))
         .filter(F.col("dd") != 0)
     )
-    old_view = spark.read.parquet(os.path.join(payload, "view"))
-    new_view = materialize(
+    old_view = _read_state(spark, os.path.join(payload, "view"))
+    new_view = (
         old_view.alias("o")
         .join(sum_delta.alias("x"),
               F.col(f"o.{g}").eqNullSafe(F.col(f"x.{g}")), "full_outer")
@@ -645,20 +652,15 @@ def distinct_view_sync(spark, table, path: str | None = None, *,
         )
         .filter(F.col("n_distinct") > 0)
     )
-    n_groups = new_view.count()
+    n_groups = None
 
     def _build(stage: str) -> None:
-        os.makedirs(os.path.join(stage, "support"))
-        # hardlink-carry the untouched support partitions; rewrite the rest
-        for d in os.listdir(os.path.join(payload, "support")):
-            full = os.path.join(payload, "support", d)
-            if not os.path.isdir(full):
-                continue  # parquet _SUCCESS etc. — regenerated by the write
-            k = int(d.split("=", 1)[1])
-            if k not in changed_parts:
-                artifacts.link_tree(full, os.path.join(stage, "support", d))
+        nonlocal n_groups
+        _carry_parts(os.path.join(payload, "support"),
+                     os.path.join(stage, "support"), changed_parts)
         _write_partitioned(new_support, os.path.join(stage, "support"))
         new_view.write.parquet(os.path.join(stage, "view"))
+        n_groups = _rows_written(os.path.join(stage, "view"))
         with open(os.path.join(stage, "sync.json"), "w") as f:
             json.dump(_meta(n_groups), f)
 
@@ -672,6 +674,7 @@ def distinct_view_sync(spark, table, path: str | None = None, *,
         return distinct_view_sync(
             spark, table, path, group_col=g, value_col=v,
             rebuild_changed_fraction=rebuild_changed_fraction,
+            changes=changes, from_version=from_version, to_version=to_version,
         )
     return {"action": "incremental", "version": cur_v, "groups": n_groups,
             "changed_parts": len(changed_parts)}
@@ -755,11 +758,7 @@ def topk_view_path(table, group_col: str, value_col: str, k: int) -> str:
 
 def topk_view_read(spark, path: str):
     """Current view: (group, rnk, <key>, <value>) — k rows per group."""
-    from recidiviz_data_spark.tables import artifacts
-
-    r = artifacts.resolve(path)
-    payload = r[0] if r is not None else path
-    return spark.read.parquet(os.path.join(payload, "view"))
+    return _read_payload(spark, path, "view")
 
 
 def _topk_fold(partials, g: str, key: str, v: str, k: int):
@@ -785,13 +784,9 @@ def topk_view_sync(spark, table, path: str | None = None, *,
     Returns {action, version, groups, refolded_groups}."""
     from pyspark.sql.window import Window
 
-    from recidiviz_data_spark.tables import artifacts
-
     base = path or topk_view_path(table, group_col, value_col, k)
     cur_v = table.current_version()
-    uid = table.manifest()["table_uuid"] + (
-        f"@{table.branch}" if getattr(table, "branch", None) else ""
-    )
+    uid = view_uid(table)
     g, v = group_col, value_col
     key = table.manifest(cur_v)["key_col"]
 
@@ -854,7 +849,7 @@ def topk_view_sync(spark, table, path: str | None = None, *,
     new_partials = materialize(_partials_of(
         table.read(spark, version=cur_v, buckets=cb).select(key, g, v)
     ))
-    old_partials = spark.read.parquet(os.path.join(payload, "parts"))
+    old_partials = _read_state(spark, os.path.join(payload, "parts"))
     old_cb = old_partials.filter(F.col("bucket").isin(cb))
     # groups whose changed-bucket partials DIFFER: only these can have a
     # different global top-k (rows outside the bucket top-k can't displace
@@ -866,7 +861,7 @@ def topk_view_sync(spark, table, path: str | None = None, *,
         .select(g).distinct()
     )
     n_ref = diff_g.count()
-    old_view = spark.read.parquet(os.path.join(payload, "view"))
+    old_view = _read_state(spark, os.path.join(payload, "view"))
     if n_ref == 0:
         out = old_view
     else:
@@ -889,14 +884,8 @@ def topk_view_sync(spark, table, path: str | None = None, *,
     def _build(stage: str) -> None:
         os.makedirs(stage)
         out.write.parquet(os.path.join(stage, "view"))
-        os.makedirs(os.path.join(stage, "parts"), exist_ok=True)
-        src = os.path.join(payload, "parts")
-        for d in os.listdir(src):
-            full = os.path.join(src, d)
-            if not os.path.isdir(full):
-                continue
-            if int(d.split("=", 1)[1]) not in cb:
-                artifacts.link_tree(full, os.path.join(stage, "parts", d))
+        _carry_parts(os.path.join(payload, "parts"),
+                     os.path.join(stage, "parts"), cb)
         _write_partitioned(new_partials, os.path.join(stage, "parts"), "bucket")
         with open(os.path.join(stage, "sync.json"), "w") as f:
             json.dump(_meta(n_groups), f)

@@ -13,8 +13,4 @@ from recidiviz_data_spark.operators.base import (  # noqa: F401
 )
 
 for _name in ("relational", "textops", "dedup", "similarity", "multimodal", "cdcops", "statefulops", "pipeline", "aggview"):
-    try:
-        importlib.import_module(f"recidiviz_data_spark.operators.{_name}")
-    except ModuleNotFoundError as e:  # only tolerate a module that isn't built yet
-        if e.name != f"recidiviz_data_spark.operators.{_name}":
-            raise
+    importlib.import_module(f"recidiviz_data_spark.operators.{_name}")

@@ -70,11 +70,5 @@ def materialize(df):
     """Multi-consumer materialization point (localCheckpoint) for derived
     tables that several plan branches consume — the plain DAG re-runs the
     whole derivation per consumer (AQE's join reshaping defeats exchange
-    reuse). ``RDS_NO_MATERIALIZE=1`` turns these into no-ops so the bench
-    harness can A/B the wins under its own session policy (round-5 verdict:
-    reconcile the same-session A/B claims with the driver harness numbers).
-    Correctness-required checkpoints (iterative-lineage truncation, staged
-    index writes) do NOT route through here and ignore the flag."""
-    if os.environ.get("RDS_NO_MATERIALIZE") == "1":
-        return df
+    reuse)."""
     return df.localCheckpoint()

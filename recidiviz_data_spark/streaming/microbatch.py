@@ -178,6 +178,35 @@ def stream_apply_available_now(
     q.awaitTermination()
 
 
+def _shared_view_diff(spark, table: Miniberg, views: list[tuple[str, str, str]]):
+    """(diff, from_version, to_version) for one ``index_sync_hook`` call:
+    the changed-row diff (``table_row_images``) over every column of
+    ``views`` — (path, group_col, value_col) — from the version most of them
+    last synced to, up to the current one. It is persisted lazily, so the
+    first view sync that folds it computes it and the rest read it back; a
+    view stored at another version (or a sync that sees a newer commit)
+    diffs for itself. (None, None, None) when no view of this table is
+    behind. The caller unpersists it when the call ends."""
+    from collections import Counter
+
+    from recidiviz_data_spark.cdc.differ import table_row_images
+    from recidiviz_data_spark.operators.aggview import view_uid
+    from recidiviz_data_spark.tables import artifacts
+
+    cur_v, uid = table.current_version(), view_uid(table)
+    behind = Counter()
+    for vpath, _g, _v in views:
+        meta = artifacts.sync_meta(vpath)
+        if meta and meta.get("table_uuid") == uid and meta["version"] < cur_v:
+            behind[meta["version"]] += 1
+    if not behind:
+        return None, None, None
+    from_v = behind.most_common(1)[0][0]
+    cols = sorted({c for _p, g, v in views for c in (g, v)})
+    diff = table_row_images(spark, table, from_v, cur_v, cols=cols)
+    return diff.persist(), from_v, cur_v
+
+
 def index_sync_hook(
     spark: SparkSession,
     *,
@@ -206,10 +235,16 @@ def index_sync_hook(
 
     ``agg_views`` / ``distinct_views`` — (path, group_col, value_col) — and
     ``topk_views`` — (path, group_col, value_col, k) — keep incremental
-    materialized views (operators/aggview.py) in the same loop: each
-    micro-batch advances them exactly via changed-bucket deltas (partial
-    re-aggregation / support multiset / per-bucket top-k partials), the
-    streaming half of classic IVM.
+    materialized views (operators/aggview.py) in the same loop, the
+    streaming half of classic IVM. Each call builds ONE keyed changed-row
+    diff over the agg and distinct views' columns, from the version most of
+    them last synced to, and hands it to each of their syncs with its
+    ``from_version`` / ``to_version``; a view stored at another version
+    diffs for itself.
+    The diff lives only for this call. An agg view recomputes a group's
+    min/max only when the diff removed a value equal to its stored
+    extremum. Top-k views read their changed buckets themselves (their
+    per-bucket partials need the full bucket).
 
     ``view_sync_kw`` forwards keyword overrides shared by all three VIEW
     syncs (``rebuild_changed_fraction``) — ``sync_kw`` reaches only the
@@ -223,6 +258,7 @@ def index_sync_hook(
     vkw = view_sync_kw or {}
 
     def hook(table: Miniberg, batch_id: int) -> None:
+        from recidiviz_data_spark.operators import aggview
         from recidiviz_data_spark.operators.dedup import (
             band_index_sync,
             neardup_clusters_sync,
@@ -240,32 +276,27 @@ def index_sync_hook(
                  neardup_clusters_sync(spark, table, clusters_path,
                                        band_path=band_path, **kw))
             )
-        for spec in agg_views or []:
-            from recidiviz_data_spark.operators.aggview import agg_view_sync
-
-            vpath, g, v = spec
-            outs.append(
-                (f"aggview:{g}:{v}",
-                 agg_view_sync(spark, table, vpath, group_col=g, value_col=v,
-                               **vkw))
-            )
-        for spec in distinct_views or []:
-            from recidiviz_data_spark.operators.aggview import distinct_view_sync
-
-            vpath, g, v = spec
-            outs.append(
-                (f"distinctview:{g}:{v}",
-                 distinct_view_sync(spark, table, vpath,
-                                    group_col=g, value_col=v, **vkw))
-            )
-        for spec in topk_views or []:
-            from recidiviz_data_spark.operators.aggview import topk_view_sync
-
-            vpath, g, v, k = spec
+        changes, from_v, to_v = _shared_view_diff(
+            spark, table, [*(agg_views or []), *(distinct_views or [])])
+        try:
+            for kind, vsync, specs in (("aggview", aggview.agg_view_sync, agg_views),
+                                       ("distinctview", aggview.distinct_view_sync,
+                                        distinct_views)):
+                for vpath, g, v in specs or []:
+                    outs.append(
+                        (f"{kind}:{g}:{v}",
+                         vsync(spark, table, vpath, group_col=g, value_col=v,
+                               changes=changes, from_version=from_v,
+                               to_version=to_v, **vkw))
+                    )
+        finally:
+            if changes is not None:
+                changes.unpersist()
+        for vpath, g, v, k in topk_views or []:
             outs.append(
                 (f"topkview:{g}:{v}:{k}",
-                 topk_view_sync(spark, table, vpath,
-                                group_col=g, value_col=v, k=k, **vkw))
+                 aggview.topk_view_sync(spark, table, vpath, group_col=g,
+                                        value_col=v, k=k, **vkw))
             )
         if results is not None:
             for kind, r in outs:

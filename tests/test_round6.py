@@ -509,22 +509,6 @@ def test_range_layout_full_apply_path(spark, tmp_path):
     assert os.path.getsize(table._vpath(m["version"])) < 4096
 
 
-# ------------------------------------- materialization A/B toggle (r6 #2)
-def test_no_materialize_flag_is_result_neutral(spark, monkeypatch):
-    """RDS_NO_MATERIALIZE=1 (the bench A/B knob) must only change the plan
-    shape, never a result — the materialization points are pure perf."""
-    from recidiviz_data_spark.operators.registry import QUERIES
-
-    sf = "/root/testdata/sf0.001"
-    want = {tuple(r) for r in QUERIES["d_minhash_lsh"](spark, sf).collect()}
-    monkeypatch.setenv("RDS_NO_MATERIALIZE", "1")
-    got = {tuple(r) for r in QUERIES["d_minhash_lsh"](spark, sf).collect()}
-    assert got == want
-    evec = {tuple(r) for r in QUERIES["e_ann_topk"](spark, sf).collect()}
-    monkeypatch.delenv("RDS_NO_MATERIALIZE")
-    assert evec == {tuple(r) for r in QUERIES["e_ann_topk"](spark, sf).collect()}
-
-
 # ------------------------------------ exact per-bucket key stamps (r6 MOR fix)
 def _kv_batch(spark, seq0, ids):
     return spark.createDataFrame(

@@ -12,8 +12,10 @@ across the two batch shapes that matter:
   sync reads only the moved bucket(s); the distinct view additionally
   rewrites only the support partitions holding the touched groups. This
   phase measures the incremental win. The agg view's min/max recompute
-  scan (update/delete batches) is the documented exception — an insert-only
-  clustered phase shows the scan-free fast path.
+  scan runs only for groups whose stored min or max value the batch
+  removed (``clustered_agg_recomputed_groups``); every other group, and
+  every group of the insert-only clustered phase, merges its extrema with
+  no scan.
 
 Run:  python tools/ivm_scale_bench.py [n_rows]
 Prints one JSON line; wall numbers are from THIS host and only same-run
