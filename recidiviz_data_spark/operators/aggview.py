@@ -36,16 +36,15 @@ drift from the full recompute — float sums would diverge by fold order.
 
 Storage/lifecycle: the view is an artifact-store versioned payload
 (``view/`` parquet + ``sync.json`` carrying {table_uuid, version, group_col,
-value_col}) with the same contract as the band/IVF indexes — atomic CURRENT
-flip, CAS'd mutating lifecycle (one sync writer; a lost CAS re-enters),
-snapshot-keyed rebuilds, GC grace + reader pins.
+value_col}) kept current by the same lifecycle driver as the band/IVF
+indexes (``artifacts.sync``) — atomic CURRENT flip, CAS'd mutating
+lifecycle (one sync writer; a lost CAS re-enters), snapshot-keyed rebuilds,
+GC grace + reader pins.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -58,18 +57,7 @@ _SUM_T = "decimal(28,4)"   # stored running-sum type: exact +/- deltas
 
 
 def agg_view_path(table, group_col: str, value_col: str) -> str:
-    uid = table.manifest()["table_uuid"]
-    return os.path.join(
-        tempfile.gettempdir(), f"rds_aggview_{uid}_{group_col}_{value_col}"
-    )
-
-
-def view_uid(table) -> str:
-    """The table identity a view's sync.json records: the table uuid,
-    scoped to the branch of a branch handle."""
-    return table.manifest()["table_uuid"] + (
-        f"@{table.branch}" if getattr(table, "branch", None) else ""
-    )
+    return artifacts.default_path(table, "aggview", group_col, value_col)
 
 
 def _aggs(df, group_col: str, value_col: str):
@@ -131,20 +119,18 @@ def agg_view_sync(spark, table, path: str | None = None, *,
     tools/ivm_scale_bench.py). The incremental win lives where web-scale CDC
     lives: batches touching a small fraction of a large bucket count.
     Returns {action, version, groups, recomputed_groups}."""
+    call = dict(locals())  # every bound argument, for the conflict re-entry
     if minmax not in ("scan", "partials"):
         raise ValueError(f"minmax must be 'scan' or 'partials': {minmax!r}")
     base = path or agg_view_path(table, group_col, value_col)
-    cur_v = table.current_version()
-    uid = view_uid(table)
-
-    def _meta(n_groups: int) -> dict:
-        return {"table_uuid": uid, "version": cur_v, "n_groups": n_groups,
-                "group_col": group_col, "value_col": value_col,
-                "minmax": minmax, "kind": "agg"}
+    g, v = group_col, value_col
+    uid = artifacts.table_uid(table)
+    ident = {"table_uuid": uid, "group_col": g, "value_col": v,
+             "minmax": minmax, "kind": "agg"}
 
     def _partials_of(df):
-        return df.groupBy(group_col, table.bucket_col().alias("bucket")).agg(
-            F.min(value_col).alias("mn"), F.max(value_col).alias("mx")
+        return df.groupBy(g, table.bucket_col().alias("bucket")).agg(
+            F.min(v).alias("mn"), F.max(v).alias("mx")
         )
 
     def _write(stage: str, view_df, meta: dict, partials=None) -> None:
@@ -152,166 +138,156 @@ def agg_view_sync(spark, table, path: str | None = None, *,
         view_df.write.parquet(os.path.join(stage, "view"))
         if partials is not None:
             _write_partitioned(partials, os.path.join(stage, "minmax"), "bucket")
-        with open(os.path.join(stage, "sync.json"), "w") as f:
-            json.dump(meta, f)
+        artifacts.write_sync_meta(stage, meta)
 
-    def _rebuild() -> dict:
-        view = materialize(_aggs(table.read(spark), group_col, value_col))
+    def _rebuild(cur_v: int) -> dict:
+        view = materialize(_aggs(table.read(spark), g, v))
         n_groups = view.count()
         partials = (
             materialize(_partials_of(table.read(spark)))
             if minmax == "partials" else None
         )
+        meta = {**ident, "version": cur_v, "n_groups": n_groups}
         artifacts.ensure(
-            base,
-            f"miniberg:{uid}:v{cur_v}:agg:{group_col}:{value_col}:{minmax}",
-            lambda stage: _write(stage, view, _meta(n_groups), partials),
+            base, f"miniberg:{uid}:v{cur_v}:agg:{g}:{v}:{minmax}",
+            lambda stage: _write(stage, view, meta, partials),
         )
         return {"action": "rebuild", "version": cur_v, "groups": n_groups,
                 "recomputed_groups": 0}
 
-    # ONE resolve: the meta we plan from and the seq we CAS on must come
-    # from the same pointer state (the standard sync-lifecycle rule)
-    r0 = artifacts.resolve_full(base)
-    meta = artifacts.sync_meta_at(r0[0]) if r0 is not None else None
-    if (
-        meta is None
-        or meta.get("table_uuid") != uid
-        or meta["version"] > cur_v
-        or meta.get("group_col") != group_col
-        or meta.get("value_col") != value_col
-        or meta.get("minmax", "scan") != minmax
-        or meta.get("kind", "agg") != "agg"  # a distinct/topk artifact at
-        # this path rebuilds as an agg view instead of mis-merging its state
-    ):
-        return _rebuild()
-    if meta["version"] == cur_v:
-        return {"action": "noop", "version": cur_v,
-                "groups": meta["n_groups"], "recomputed_groups": 0}
-    cb = table.changed_buckets(meta["version"], cur_v)
-    if cb is None:
-        return _rebuild()  # bucket function changed: no stable prune identity
-    if len(cb) > rebuild_changed_fraction * table.manifest(cur_v)["num_buckets"]:
-        return _rebuild()  # most of the table moved: one full scan is cheaper
-
-    g, v = group_col, value_col
-    rows = _signed_rows(spark, table, meta["version"], cur_v, g, v,
-                        changes, (from_version, to_version))
-    sv, gained = F.col(v).cast(_VAL_T), F.col("sign") > 0
-    delta = rows.groupBy(g).agg(
-        F.sum("sign").alias("dn"),
-        F.sum(F.when(gained, sv).otherwise(-sv)).cast(_SUM_T).alias("ds"),
-        F.min(F.when(gained, F.col(v))).alias("g_min"),
-        F.max(F.when(gained, F.col(v))).alias("g_max"),
-        F.min(F.when(~gained, F.col(v))).alias("l_min"),
-        F.max(F.when(~gained, F.col(v))).alias("l_max"),
-    )
-    view = _read_state(spark, os.path.join(r0[0], "view"))
-    # all group-key joins are NULL-SAFE: a null group is a real group under
-    # GROUP BY semantics, and plain equi-joins would never match it (the
-    # stored null-group row and its partials would drift apart as duplicates)
-    merged = materialize(
-        view.alias("v")
-        .join(delta.alias("d"),
-              F.col(f"v.{g}").eqNullSafe(F.col(f"d.{g}")), "full_outer")
-        .select(
-            F.coalesce(f"v.{g}", f"d.{g}").alias(g),
-            (F.coalesce("n_rows", F.lit(0)) + F.coalesce("dn", F.lit(0)))
-            .cast("long").alias("n_rows"),
-            (F.coalesce("sum_val", F.lit(0)) + F.coalesce("ds", F.lit(0)))
-            .cast(_SUM_T).alias("sum_val"),
-            F.least("min_val", "g_min").alias("min_val"),
-            F.greatest("max_val", "g_max").alias("max_val"),
-            # a lost value at the stored extremum may have been its last copy
-            (F.coalesce(F.col("l_min") <= F.col("min_val"), F.lit(False))
-             | F.coalesce(F.col("l_max") >= F.col("max_val"), F.lit(False)))
-            .alias("_rescan"),
+    def _advance(r0, meta, cur_v: int, changes) -> dict:
+        cb = _changed_buckets(table, meta, cur_v, rebuild_changed_fraction)
+        if cb is None:
+            return _rebuild(cur_v)
+        rows = _signed_rows(spark, table, meta["version"], cur_v, g, v, changes)
+        sv, gained = F.col(v).cast(_VAL_T), F.col("sign") > 0
+        delta = rows.groupBy(g).agg(
+            F.sum("sign").alias("dn"),
+            F.sum(F.when(gained, sv).otherwise(-sv)).cast(_SUM_T).alias("ds"),
+            F.min(F.when(gained, F.col(v))).alias("g_min"),
+            F.max(F.when(gained, F.col(v))).alias("g_max"),
+            F.min(F.when(~gained, F.col(v))).alias("l_min"),
+            F.max(F.when(~gained, F.col(v))).alias("l_max"),
         )
-        .filter(F.col("n_rows") > 0)  # emptied groups leave the view
-    )
-    n_out, n_rec = merged.agg(
-        F.count("*"), F.count(F.when(F.col("_rescan"), 1))
-    ).first()
-
-    new_partials = None
-    if minmax == "partials":
-        # partials for the changed buckets; unchanged buckets' partials
-        # hardlink-carry at publish below
-        key = table.manifest(cur_v)["key_col"]
-        new_partials = materialize(_partials_of(
-            table.read(spark, version=cur_v, buckets=cb).select(key, g, v)
-        ))
-    out = merged
-    if n_rec:
-        if minmax == "partials":
-            # fold recomputed groups' extrema from the PARTIAL table: carried
-            # partials for unchanged buckets + the fresh changed-bucket ones
-            old_partials = _read_state(spark, os.path.join(r0[0], "minmax"))
-            fold_src = old_partials.filter(
-                ~F.col("bucket").isin(cb)
-            ).unionByName(new_partials)
-            lo, hi = "mn", "mx"
-        else:
-            fold_src, lo, hi = table.read(spark, version=cur_v), v, v
-        rx = (
-            fold_src.alias("t")
-            .join(merged.filter("_rescan").alias("r"),
-                  F.col(f"t.{g}").eqNullSafe(F.col(f"r.{g}")), "left_semi")
-            .groupBy(g).agg(F.min(lo).alias("r_min"), F.max(hi).alias("r_max"))
-        )
-        # r_min/r_max may be legitimately null when the group's surviving
-        # values are all null — pick by _rescan, never by coalesce
-        out = (
-            merged.alias("m")
-            .join(rx.alias("rx"),
-                  F.col(f"m.{g}").eqNullSafe(F.col(f"rx.{g}")), "left_outer")
+        view = _read_state(spark, os.path.join(r0[0], "view"))
+        # all group-key joins are NULL-SAFE: a null group is a real group
+        # under GROUP BY semantics, and plain equi-joins would never match it
+        # (the stored null-group row and its partials would drift apart as
+        # duplicates)
+        merged = materialize(
+            view.alias("v")
+            .join(delta.alias("d"),
+                  F.col(f"v.{g}").eqNullSafe(F.col(f"d.{g}")), "full_outer")
             .select(
-                F.col(f"m.{g}").alias(g), "n_rows", "sum_val",
-                *[F.when(F.col("_rescan"), F.col(f"r_{c}"))
-                  .otherwise(F.col(f"{c}_val")).alias(f"{c}_val")
-                  for c in ("min", "max")],
+                F.coalesce(f"v.{g}", f"d.{g}").alias(g),
+                (F.coalesce("n_rows", F.lit(0)) + F.coalesce("dn", F.lit(0)))
+                .cast("long").alias("n_rows"),
+                (F.coalesce("sum_val", F.lit(0)) + F.coalesce("ds", F.lit(0)))
+                .cast(_SUM_T).alias("sum_val"),
+                F.least("min_val", "g_min").alias("min_val"),
+                F.greatest("max_val", "g_max").alias("max_val"),
+                # a lost value at the stored extremum may have been its last
+                # copy
+                (F.coalesce(F.col("l_min") <= F.col("min_val"), F.lit(False))
+                 | F.coalesce(F.col("l_max") >= F.col("max_val"), F.lit(False)))
+                .alias("_rescan"),
             )
+            .filter(F.col("n_rows") > 0)  # emptied groups leave the view
         )
-    # SUM over no non-null value is NULL, exactly when MIN is
-    out = out.select(
-        g, "n_rows",
-        F.when(F.col("min_val").isNotNull(), F.col("sum_val")).alias("sum_val"),
-        "min_val", "max_val",
-    )
+        n_out, n_rec = merged.agg(
+            F.count("*"), F.count(F.when(F.col("_rescan"), 1))
+        ).first()
 
-    def _build(stage: str) -> None:
-        _write(stage, out, _meta(n_out))
+        new_partials = None
         if minmax == "partials":
-            _carry_parts(os.path.join(r0[0], "minmax"),
-                         os.path.join(stage, "minmax"), cb)
-            _write_partitioned(new_partials, os.path.join(stage, "minmax"),
-                               "bucket")
+            # partials for the changed buckets; unchanged buckets' partials
+            # hardlink-carry at publish below
+            key = table.manifest(cur_v)["key_col"]
+            new_partials = materialize(_partials_of(
+                table.read(spark, version=cur_v, buckets=cb).select(key, g, v)
+            ))
+        out = merged
+        if n_rec:
+            if minmax == "partials":
+                # fold recomputed groups' extrema from the PARTIAL table:
+                # carried partials for unchanged buckets + the fresh
+                # changed-bucket ones
+                old_partials = _read_state(spark, os.path.join(r0[0], "minmax"))
+                fold_src = old_partials.filter(
+                    ~F.col("bucket").isin(cb)
+                ).unionByName(new_partials)
+                lo, hi = "mn", "mx"
+            else:
+                fold_src, lo, hi = table.read(spark, version=cur_v), v, v
+            rx = (
+                fold_src.alias("t")
+                .join(merged.filter("_rescan").alias("r"),
+                      F.col(f"t.{g}").eqNullSafe(F.col(f"r.{g}")), "left_semi")
+                .groupBy(g).agg(F.min(lo).alias("r_min"), F.max(hi).alias("r_max"))
+            )
+            # r_min/r_max may be legitimately null when the group's surviving
+            # values are all null — pick by _rescan, never by coalesce
+            out = (
+                merged.alias("m")
+                .join(rx.alias("rx"),
+                      F.col(f"m.{g}").eqNullSafe(F.col(f"rx.{g}")), "left_outer")
+                .select(
+                    F.col(f"m.{g}").alias(g), "n_rows", "sum_val",
+                    *[F.when(F.col("_rescan"), F.col(f"r_{c}"))
+                      .otherwise(F.col(f"{c}_val")).alias(f"{c}_val")
+                      for c in ("min", "max")],
+                )
+            )
+        # SUM over no non-null value is NULL, exactly when MIN is
+        out = out.select(
+            g, "n_rows",
+            F.when(F.col("min_val").isNotNull(), F.col("sum_val")).alias("sum_val"),
+            "min_val", "max_val",
+        )
 
-    try:
+        def _build(stage: str) -> None:
+            _write(stage, out, {**ident, "version": cur_v, "n_groups": n_out})
+            if minmax == "partials":
+                _carry_parts(os.path.join(r0[0], "minmax"),
+                             os.path.join(stage, "minmax"), cb)
+                _write_partitioned(new_partials, os.path.join(stage, "minmax"),
+                                   "bucket")
+
         artifacts.publish(base, artifacts.mutated_key(r0[1]), _build,
                           expected_seq=r0[2])
-    except artifacts.ArtifactConflict:
-        # a concurrent sync advanced the view: re-enter against its state
-        return agg_view_sync(spark, table, path,
-                             group_col=group_col, value_col=value_col,
-                             rebuild_changed_fraction=rebuild_changed_fraction,
-                             minmax=minmax, changes=changes,
-                             from_version=from_version, to_version=to_version)
-    return {"action": "incremental", "version": cur_v, "groups": n_out,
-            "recomputed_groups": n_rec}
+        return {"action": "incremental", "version": cur_v, "groups": n_out,
+                "recomputed_groups": n_rec}
+
+    return artifacts.sync(
+        base, table, ident, rebuild=_rebuild, advance=_advance,
+        noop=lambda m: {"groups": m["n_groups"], "recomputed_groups": 0},
+        retry=lambda: agg_view_sync(**call),
+        changes=changes, span=(from_version, to_version),
+    )
+
+
+def _changed_buckets(table, meta: dict, cur_v: int, fraction: float):
+    """Buckets whose files moved since the view's stored version, or None
+    when the view should rebuild instead: bucket identity changed, or more
+    than ``fraction`` of the buckets moved (one full scan is then cheaper
+    than reading the changed buckets at both versions)."""
+    cb = table.changed_buckets(meta["version"], cur_v)
+    if cb is None or len(cb) > fraction * table.manifest(cur_v)["num_buckets"]:
+        return None
+    return cb
 
 
 def _signed_rows(spark, table, from_v: int, to_v: int, g: str, v: str,
-                 changes, span: tuple):
+                 changes):
     """The keyed changed-row diff from ``from_v`` to ``to_v`` as a signed
     multiset of (group, value) rows: -1 for each removed pre-image, +1 for
     each added post-image, only for keys whose (group, value) moved.
-    ``changes`` (a ``table_row_images`` frame holding both columns) is
-    folded when its ``span`` is (``from_v``, ``to_v``); otherwise the
-    changed buckets are diffed here."""
+    ``changes`` (a ``table_row_images`` frame of that span, which
+    ``artifacts.sync`` has checked) is folded when it holds both columns;
+    otherwise the changed buckets are diffed here."""
     from recidiviz_data_spark.cdc.differ import table_row_images
 
-    if (changes is None or span != (from_v, to_v)
+    if (changes is None
             or not {g, v, f"_o_{g}", f"_o_{v}"} <= set(changes.columns)):
         changes = table_row_images(spark, table, from_v, to_v,
                                    cols=list(dict.fromkeys((g, v))))
@@ -325,10 +301,10 @@ def _signed_rows(spark, table, from_v: int, to_v: int, g: str, v: str,
     ).unionByName(d.filter(in_new).select(g, v, F.lit(1).alias("sign")))
 
 
-def _agg_oracle_sql() -> str:
-    """DuckDB oracle: the LWW fold of the deterministic generated changelog,
-    aggregated per source with the view's exact column set. Single division
-    for avg on both engines (exact-integer operands → bit-identical)."""
+def _events_cte() -> str:
+    """``WITH ev AS (...)``: every event of the deterministic generated
+    changelog ranked newest-first per doc (rn = 1 is the LWW winner) — the
+    head of each view demo's DuckDB oracle."""
     from recidiviz_data_spark.operators.cdcops import APPLY_GEN, changelog_dir
 
     glob_path = os.path.join(
@@ -339,27 +315,15 @@ def _agg_oracle_sql() -> str:
       SELECT doc_id, op, n_tok, source,
              row_number() OVER (PARTITION BY doc_id ORDER BY event_seq DESC) AS rn
       FROM read_parquet('{glob_path}')
-    )
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CAST(n_tok AS BIGINT)) AS BIGINT) AS total_tokens,
-           MIN(n_tok) AS min_tok,
-           MAX(n_tok) AS max_tok,
-           CAST(SUM(CAST(n_tok AS BIGINT)) AS DOUBLE) / COUNT(*) AS avg_tok
-    FROM ev WHERE rn = 1 AND op <> 'D'
-    GROUP BY source
-    """
+    )"""
 
 
-@_qx("x_agg_view_sync", _agg_oracle_sql())
-def x_agg_view_sync(spark, sf_dir):
-    """End-to-end IVM demo on the deterministic engine changelog: apply it
-    batch-by-batch into the shared miniberg table (same workdir as
-    ``cdc_apply_state`` — watermark makes re-application a noop) and
-    ``agg_view_sync`` after EVERY batch, so the returned state was reached
-    through incremental maintenance, not one final recompute. The oracle is
-    the single-shot SQL LWW fold + GROUP BY — batchwise view maintenance
-    must converge to exactly it."""
+def _demo_view(spark, name: str, sync, **kw) -> str:
+    """Apply the deterministic engine changelog batch-by-batch into the
+    shared miniberg table (same workdir as ``cdc_apply_state`` — the
+    watermark makes re-application a noop) and ``sync`` the view ``name``
+    of n_tok per source after EVERY batch, so its state is reached through
+    incremental maintenance, not one final recompute. Returns its path."""
     from recidiviz_data_spark.cdc.apply import apply_batches, create_empty_table
     from recidiviz_data_spark.operators.cdcops import (
         APPLY_GEN,
@@ -376,14 +340,39 @@ def x_agg_view_sync(spark, sf_dir):
         table = Miniberg(troot)
     else:
         table = create_empty_table(troot, _payload_schema(), num_buckets=8)
-    vpath = os.path.join(wd, "aggview_source_ntok")
+    vpath = os.path.join(wd, name)
     for b in range(APPLY_GEN["n_batches"]):
         apply_batches(spark, table, cl, upto=b)
         # the demo table has 8 buckets and every generated batch touches all
         # of them — disable the changed-fraction rebuild guard so the path
         # under oracle-check is the INCREMENTAL one
-        agg_view_sync(spark, table, vpath, group_col="source",
-                      value_col="n_tok", rebuild_changed_fraction=1.0)
+        sync(spark, table, vpath, group_col="source", value_col="n_tok",
+             rebuild_changed_fraction=1.0, **kw)
+    return vpath
+
+
+def _agg_oracle_sql() -> str:
+    """DuckDB oracle: the LWW fold of the deterministic generated changelog,
+    aggregated per source with the view's exact column set. Single division
+    for avg on both engines (exact-integer operands → bit-identical)."""
+    return _events_cte() + """
+    SELECT source,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(CAST(n_tok AS BIGINT)) AS BIGINT) AS total_tokens,
+           MIN(n_tok) AS min_tok,
+           MAX(n_tok) AS max_tok,
+           CAST(SUM(CAST(n_tok AS BIGINT)) AS DOUBLE) / COUNT(*) AS avg_tok
+    FROM ev WHERE rn = 1 AND op <> 'D'
+    GROUP BY source
+    """
+
+
+@_qx("x_agg_view_sync", _agg_oracle_sql())
+def x_agg_view_sync(spark, sf_dir):
+    """End-to-end IVM demo on the deterministic engine changelog
+    (``_demo_view``): batch-by-batch ``agg_view_sync`` must converge to
+    exactly the single-shot SQL LWW fold + GROUP BY."""
+    vpath = _demo_view(spark, "aggview_source_ntok", agg_view_sync)
     return agg_view_read(spark, vpath).select(
         "source",
         F.col("n_rows").alias("n_docs"),
@@ -424,10 +413,7 @@ def _part_of(g):
 
 
 def distinct_view_path(table, group_col: str, value_col: str) -> str:
-    uid = table.manifest()["table_uuid"]
-    return os.path.join(
-        tempfile.gettempdir(), f"rds_distview_{uid}_{group_col}_{value_col}"
-    )
+    return artifacts.default_path(table, "distview", group_col, value_col)
 
 
 def distinct_view_read(spark, path: str):
@@ -519,16 +505,14 @@ def distinct_view_sync(spark, table, path: str | None = None, *,
     ``to_version`` and ``rebuild_changed_fraction``: as in
     ``agg_view_sync``. Returns {action,
     version, groups, changed_parts}."""
+    call = dict(locals())  # every bound argument, for the conflict re-entry
     base = path or distinct_view_path(table, group_col, value_col)
-    cur_v = table.current_version()
-    uid = view_uid(table)
     g, v = group_col, value_col
+    uid = artifacts.table_uid(table)
+    ident = {"table_uuid": uid, "group_col": g, "value_col": v,
+             "kind": "distinct"}
 
-    def _meta(n_groups: int) -> dict:
-        return {"table_uuid": uid, "version": cur_v, "n_groups": n_groups,
-                "group_col": g, "value_col": v, "kind": "distinct"}
-
-    def _rebuild() -> dict:
+    def _rebuild(cur_v: int) -> dict:
         sup = materialize(_support_of(table.read(spark), g, v))
         summary = materialize(
             sup.groupBy(g).agg(F.count("*").cast("long").alias("n_distinct"))
@@ -539,8 +523,8 @@ def distinct_view_sync(spark, table, path: str | None = None, *,
             os.makedirs(stage)
             _write_partitioned(sup, os.path.join(stage, "support"))
             summary.write.parquet(os.path.join(stage, "view"))
-            with open(os.path.join(stage, "sync.json"), "w") as f:
-                json.dump(_meta(n_groups), f)
+            artifacts.write_sync_meta(
+                stage, {**ident, "version": cur_v, "n_groups": n_groups})
 
         artifacts.ensure(
             base, f"miniberg:{uid}:v{cur_v}:distinct:{g}:{v}", _build
@@ -548,150 +532,113 @@ def distinct_view_sync(spark, table, path: str | None = None, *,
         return {"action": "rebuild", "version": cur_v, "groups": n_groups,
                 "changed_parts": DISTINCT_SUPPORT_PARTS}
 
-    r0 = artifacts.resolve_full(base)
-    meta = artifacts.sync_meta_at(r0[0]) if r0 is not None else None
-    if (
-        meta is None
-        or meta.get("table_uuid") != uid
-        or meta["version"] > cur_v
-        or meta.get("group_col") != g
-        or meta.get("value_col") != v
-        or meta.get("kind") != "distinct"
-    ):
-        return _rebuild()
-    if meta["version"] == cur_v:
-        return {"action": "noop", "version": cur_v,
-                "groups": meta["n_groups"], "changed_parts": 0}
-    cb = table.changed_buckets(meta["version"], cur_v)
-    if cb is None:
-        return _rebuild()
-    if len(cb) > rebuild_changed_fraction * table.manifest(cur_v)["num_buckets"]:
-        return _rebuild()  # most of the table moved: one full scan is cheaper
+    def _advance(r0, meta, cur_v: int, changes) -> dict:
+        if _changed_buckets(table, meta, cur_v, rebuild_changed_fraction) is None:
+            return _rebuild(cur_v)
+        payload = r0[0]
+        # delta multiset at the (group, value) grain: the diff's signed rows
+        delta = materialize(
+            _signed_rows(spark, table, meta["version"], cur_v, g, v, changes)
+            .filter(F.col(v).isNotNull())  # COUNT(DISTINCT) ignores nulls
+            .groupBy(g, v)
+            .agg(F.sum("sign").cast("long").alias("d"))
+            .filter(F.col("d") != 0)
+            .withColumn("part", _part_of(g))
+        )
+        changed_parts = sorted(
+            r["part"] for r in delta.select("part").distinct().collect()
+        )
+        if not changed_parts:  # file sets moved (compaction) but values didn't
+            n_groups = meta["n_groups"]
 
-    payload = r0[0]
-    # delta multiset at the (group, value) grain: the diff's signed rows
-    delta = materialize(
-        _signed_rows(spark, table, meta["version"], cur_v, g, v,
-                     changes, (from_version, to_version))
-        .filter(F.col(v).isNotNull())  # COUNT(DISTINCT) ignores nulls
-        .groupBy(g, v)
-        .agg(F.sum("sign").cast("long").alias("d"))
-        .filter(F.col("d") != 0)
-        .withColumn("part", _part_of(g))
-    )
-    changed_parts = sorted(
-        r["part"] for r in delta.select("part").distinct().collect()
-    )
-    if not changed_parts:  # file sets moved (compaction) but values didn't
-        n_groups = meta["n_groups"]
+            def _carry(stage: str) -> None:
+                os.makedirs(stage)
+                artifacts.link_tree(os.path.join(payload, "support"),
+                                    os.path.join(stage, "support"))
+                artifacts.link_tree(os.path.join(payload, "view"),
+                                    os.path.join(stage, "view"))
+                artifacts.write_sync_meta(
+                    stage, {**ident, "version": cur_v, "n_groups": n_groups})
 
-        def _carry(stage: str) -> None:
-            os.makedirs(stage)
-            artifacts.link_tree(os.path.join(payload, "support"),
-                                os.path.join(stage, "support"))
-            artifacts.link_tree(os.path.join(payload, "view"),
-                                os.path.join(stage, "view"))
-            with open(os.path.join(stage, "sync.json"), "w") as f:
-                json.dump(_meta(n_groups), f)
-
-        try:
             artifacts.publish(base, artifacts.mutated_key(r0[1]), _carry,
                               expected_seq=r0[2])
-        except artifacts.ArtifactConflict:
-            return distinct_view_sync(
-                spark, table, path, group_col=g, value_col=v,
-                rebuild_changed_fraction=rebuild_changed_fraction,
-                changes=changes, from_version=from_version,
-                to_version=to_version)
-        return {"action": "incremental", "version": cur_v,
-                "groups": n_groups, "changed_parts": 0}
+            return {"action": "incremental", "version": cur_v,
+                    "groups": n_groups, "changed_parts": 0}
 
-    # merge the delta into ONLY the touched support partitions (partition
-    # pruning on part); keep dead rows long enough to compute the summary
-    # delta (a value dropping to multiplicity 0 decrements n_distinct)
-    old_sup = _read_state(spark, os.path.join(payload, "support")).filter(
-        F.col("part").isin(changed_parts)
-    )
-    merged = materialize(
-        old_sup.alias("s")
-        .join(
-            delta.alias("d"),
-            F.col(f"s.{g}").eqNullSafe(F.col(f"d.{g}"))
-            & (F.col(f"s.{v}") == F.col(f"d.{v}")),
-            "full_outer",
+        # merge the delta into ONLY the touched support partitions
+        # (partition pruning on part); keep dead rows long enough to compute
+        # the summary delta (a value dropping to multiplicity 0 decrements
+        # n_distinct)
+        old_sup = _read_state(spark, os.path.join(payload, "support")).filter(
+            F.col("part").isin(changed_parts)
         )
-        .select(
-            F.coalesce(f"s.{g}", f"d.{g}").alias(g),
-            F.coalesce(f"s.{v}", f"d.{v}").alias(v),
-            (F.coalesce("s.cnt", F.lit(0)) + F.coalesce("d.d", F.lit(0)))
-            .cast("long").alias("cnt"),
-            F.coalesce("s.part", "d.part").alias("part"),
-            F.col("s.cnt").isNotNull().alias("was_live"),
+        merged = materialize(
+            old_sup.alias("s")
+            .join(
+                delta.alias("d"),
+                F.col(f"s.{g}").eqNullSafe(F.col(f"d.{g}"))
+                & (F.col(f"s.{v}") == F.col(f"d.{v}")),
+                "full_outer",
+            )
+            .select(
+                F.coalesce(f"s.{g}", f"d.{g}").alias(g),
+                F.coalesce(f"s.{v}", f"d.{v}").alias(v),
+                (F.coalesce("s.cnt", F.lit(0)) + F.coalesce("d.d", F.lit(0)))
+                .cast("long").alias("cnt"),
+                F.coalesce("s.part", "d.part").alias("part"),
+                F.col("s.cnt").isNotNull().alias("was_live"),
+            )
         )
-    )
-    new_support = merged.filter(F.col("cnt") > 0).select(g, v, "cnt", "part")
-    sum_delta = (
-        merged.withColumn(
-            "dd",
-            F.when(~F.col("was_live") & (F.col("cnt") > 0), 1)
-            .when(F.col("was_live") & (F.col("cnt") <= 0), -1)
-            .otherwise(0),
+        new_support = merged.filter(F.col("cnt") > 0).select(g, v, "cnt", "part")
+        sum_delta = (
+            merged.withColumn(
+                "dd",
+                F.when(~F.col("was_live") & (F.col("cnt") > 0), 1)
+                .when(F.col("was_live") & (F.col("cnt") <= 0), -1)
+                .otherwise(0),
+            )
+            .groupBy(g).agg(F.sum("dd").cast("long").alias("dd"))
+            .filter(F.col("dd") != 0)
         )
-        .groupBy(g).agg(F.sum("dd").cast("long").alias("dd"))
-        .filter(F.col("dd") != 0)
-    )
-    old_view = _read_state(spark, os.path.join(payload, "view"))
-    new_view = (
-        old_view.alias("o")
-        .join(sum_delta.alias("x"),
-              F.col(f"o.{g}").eqNullSafe(F.col(f"x.{g}")), "full_outer")
-        .select(
-            F.coalesce(f"o.{g}", f"x.{g}").alias(g),
-            (F.coalesce("o.n_distinct", F.lit(0)) + F.coalesce("x.dd", F.lit(0)))
-            .cast("long").alias("n_distinct"),
+        old_view = _read_state(spark, os.path.join(payload, "view"))
+        new_view = (
+            old_view.alias("o")
+            .join(sum_delta.alias("x"),
+                  F.col(f"o.{g}").eqNullSafe(F.col(f"x.{g}")), "full_outer")
+            .select(
+                F.coalesce(f"o.{g}", f"x.{g}").alias(g),
+                (F.coalesce("o.n_distinct", F.lit(0))
+                 + F.coalesce("x.dd", F.lit(0))).cast("long").alias("n_distinct"),
+            )
+            .filter(F.col("n_distinct") > 0)
         )
-        .filter(F.col("n_distinct") > 0)
-    )
-    n_groups = None
+        n_groups = None
 
-    def _build(stage: str) -> None:
-        nonlocal n_groups
-        _carry_parts(os.path.join(payload, "support"),
-                     os.path.join(stage, "support"), changed_parts)
-        _write_partitioned(new_support, os.path.join(stage, "support"))
-        new_view.write.parquet(os.path.join(stage, "view"))
-        n_groups = _rows_written(os.path.join(stage, "view"))
-        with open(os.path.join(stage, "sync.json"), "w") as f:
-            json.dump(_meta(n_groups), f)
+        def _build(stage: str) -> None:
+            nonlocal n_groups
+            _carry_parts(os.path.join(payload, "support"),
+                         os.path.join(stage, "support"), changed_parts)
+            _write_partitioned(new_support, os.path.join(stage, "support"))
+            new_view.write.parquet(os.path.join(stage, "view"))
+            n_groups = _rows_written(os.path.join(stage, "view"))
+            artifacts.write_sync_meta(
+                stage, {**ident, "version": cur_v, "n_groups": n_groups})
 
-    try:
         artifacts.publish(base, artifacts.mutated_key(r0[1]), _build,
                           expected_seq=r0[2])
-    except artifacts.ArtifactConflict:
-        # pass the caller's guard through the re-entry (ADVICE r7: dropping
-        # it reverted a conflict retry to the 0.5 default — a caller on a
-        # few-bucket table asking 1.0 silently got a full rebuild)
-        return distinct_view_sync(
-            spark, table, path, group_col=g, value_col=v,
-            rebuild_changed_fraction=rebuild_changed_fraction,
-            changes=changes, from_version=from_version, to_version=to_version,
-        )
-    return {"action": "incremental", "version": cur_v, "groups": n_groups,
-            "changed_parts": len(changed_parts)}
+        return {"action": "incremental", "version": cur_v, "groups": n_groups,
+                "changed_parts": len(changed_parts)}
+
+    return artifacts.sync(
+        base, table, ident, rebuild=_rebuild, advance=_advance,
+        noop=lambda m: {"groups": m["n_groups"], "changed_parts": 0},
+        retry=lambda: distinct_view_sync(**call),
+        changes=changes, span=(from_version, to_version),
+    )
 
 
 def _distinct_oracle_sql() -> str:
-    from recidiviz_data_spark.operators.cdcops import APPLY_GEN, changelog_dir
-
-    glob_path = os.path.join(
-        changelog_dir("apply", APPLY_GEN), "batch_id=*", "part-*.parquet"
-    )
-    return f"""
-    WITH ev AS (
-      SELECT doc_id, op, n_tok, source,
-             row_number() OVER (PARTITION BY doc_id ORDER BY event_seq DESC) AS rn
-      FROM read_parquet('{glob_path}')
-    )
+    return _events_cte() + """
     SELECT source, CAST(COUNT(DISTINCT n_tok) AS BIGINT) AS n_distinct
     FROM ev WHERE rn = 1 AND op <> 'D'
     GROUP BY source
@@ -703,28 +650,7 @@ def x_distinct_view_sync(spark, sf_dir):
     """COUNT(DISTINCT) IVM demo on the deterministic engine changelog:
     batch-by-batch `distinct_view_sync` must converge to the single-shot
     DuckDB fold's per-source distinct n_tok count."""
-    from recidiviz_data_spark.cdc.apply import apply_batches, create_empty_table
-    from recidiviz_data_spark.operators.cdcops import (
-        APPLY_GEN,
-        _payload_schema,
-        _workdir,
-        ensure_changelog,
-    )
-    from recidiviz_data_spark.tables.miniberg import Miniberg
-
-    cl = ensure_changelog("apply", APPLY_GEN)
-    wd = _workdir("apply", APPLY_GEN)
-    troot = os.path.join(wd, "table")
-    if Miniberg.exists(troot):
-        table = Miniberg(troot)
-    else:
-        table = create_empty_table(troot, _payload_schema(), num_buckets=8)
-    vpath = os.path.join(wd, "distview_source_ntok")
-    for b in range(APPLY_GEN["n_batches"]):
-        apply_batches(spark, table, cl, upto=b)
-        # see x_agg_view_sync: keep the incremental path under oracle-check
-        distinct_view_sync(spark, table, vpath, group_col="source",
-                           value_col="n_tok", rebuild_changed_fraction=1.0)
+    vpath = _demo_view(spark, "distview_source_ntok", distinct_view_sync)
     return distinct_view_read(spark, vpath).select("source", "n_distinct")
 
 
@@ -750,10 +676,7 @@ def x_distinct_view_sync(spark, sf_dir):
 # order is engine-dependent; SQL consumers filter them before ranking).
 
 def topk_view_path(table, group_col: str, value_col: str, k: int) -> str:
-    uid = table.manifest()["table_uuid"]
-    return os.path.join(
-        tempfile.gettempdir(), f"rds_topkview_{uid}_{group_col}_{value_col}_{k}"
-    )
+    return artifacts.default_path(table, "topkview", group_col, value_col, k)
 
 
 def topk_view_read(spark, path: str):
@@ -782,17 +705,15 @@ def topk_view_sync(spark, table, path: str | None = None, *,
     carry, and only groups whose changed-bucket partials DIFFER re-fold
     their view rows (from the partial table, never the data table).
     Returns {action, version, groups, refolded_groups}."""
+    call = dict(locals())  # every bound argument, for the conflict re-entry
     from pyspark.sql.window import Window
 
     base = path or topk_view_path(table, group_col, value_col, k)
-    cur_v = table.current_version()
-    uid = view_uid(table)
     g, v = group_col, value_col
-    key = table.manifest(cur_v)["key_col"]
-
-    def _meta(n_groups: int) -> dict:
-        return {"table_uuid": uid, "version": cur_v, "n_groups": n_groups,
-                "group_col": g, "value_col": v, "k": k, "kind": "topk"}
+    uid = artifacts.table_uid(table)
+    ident = {"table_uuid": uid, "group_col": g, "value_col": v, "k": k,
+             "kind": "topk"}
+    key = table.manifest()["key_col"]
 
     def _partials_of(df):
         wb = Window.partitionBy(g, "bucket").orderBy(
@@ -806,113 +727,86 @@ def topk_view_sync(spark, table, path: str | None = None, *,
             .select(g, key, v, "bucket")
         )
 
-    def _write(stage: str, view_df, partials, meta: dict) -> None:
+    def _write(stage: str, view_df, meta: dict, partials,
+               carry_from: str | None = None, cb=()) -> None:
         os.makedirs(stage)
         view_df.write.parquet(os.path.join(stage, "view"))
+        if carry_from is not None:
+            _carry_parts(os.path.join(carry_from, "parts"),
+                         os.path.join(stage, "parts"), cb)
         _write_partitioned(partials, os.path.join(stage, "parts"), "bucket")
-        with open(os.path.join(stage, "sync.json"), "w") as f:
-            json.dump(meta, f)
+        artifacts.write_sync_meta(stage, meta)
 
-    def _rebuild() -> dict:
+    def _rebuild(cur_v: int) -> dict:
         partials = materialize(_partials_of(table.read(spark)))
         view = materialize(_topk_fold(partials, g, key, v, k))
         n_groups = view.select(g).distinct().count()
+        meta = {**ident, "version": cur_v, "n_groups": n_groups}
         artifacts.ensure(
             base, f"miniberg:{uid}:v{cur_v}:topk:{g}:{v}:{k}",
-            lambda stage: _write(stage, view, partials, _meta(n_groups)),
+            lambda stage: _write(stage, view, meta, partials),
         )
         return {"action": "rebuild", "version": cur_v, "groups": n_groups,
                 "refolded_groups": 0}
 
-    r0 = artifacts.resolve_full(base)
-    meta = artifacts.sync_meta_at(r0[0]) if r0 is not None else None
-    if (
-        meta is None
-        or meta.get("table_uuid") != uid
-        or meta["version"] > cur_v
-        or meta.get("group_col") != g
-        or meta.get("value_col") != v
-        or meta.get("k") != k
-        or meta.get("kind") != "topk"
-    ):
-        return _rebuild()
-    if meta["version"] == cur_v:
-        return {"action": "noop", "version": cur_v,
-                "groups": meta["n_groups"], "refolded_groups": 0}
-    cb = table.changed_buckets(meta["version"], cur_v)
-    if cb is None:
-        return _rebuild()
-    if len(cb) > rebuild_changed_fraction * table.manifest(cur_v)["num_buckets"]:
-        return _rebuild()
-
-    payload = r0[0]
-    new_partials = materialize(_partials_of(
-        table.read(spark, version=cur_v, buckets=cb).select(key, g, v)
-    ))
-    old_partials = _read_state(spark, os.path.join(payload, "parts"))
-    old_cb = old_partials.filter(F.col("bucket").isin(cb))
-    # groups whose changed-bucket partials DIFFER: only these can have a
-    # different global top-k (rows outside the bucket top-k can't displace
-    # view rows — they don't even displace their bucket's k-th row)
-    cols = [g, key, v, "bucket"]
-    diff_g = (
-        old_cb.select(*cols).exceptAll(new_partials.select(*cols))
-        .unionByName(new_partials.select(*cols).exceptAll(old_cb.select(*cols)))
-        .select(g).distinct()
-    )
-    n_ref = diff_g.count()
-    old_view = _read_state(spark, os.path.join(payload, "view"))
-    if n_ref == 0:
-        out = old_view
-    else:
-        all_partials = old_partials.filter(
-            ~F.col("bucket").isin(cb)
-        ).unionByName(new_partials)
-        refolded = _topk_fold(
-            all_partials.alias("p").join(
-                diff_g.alias("d"),
-                F.col(f"p.{g}").eqNullSafe(F.col(f"d.{g}")), "left_semi"),
-            g, key, v, k,
+    def _advance(r0, meta, cur_v: int, _changes) -> dict:
+        cb = _changed_buckets(table, meta, cur_v, rebuild_changed_fraction)
+        if cb is None:
+            return _rebuild(cur_v)
+        payload = r0[0]
+        new_partials = materialize(_partials_of(
+            table.read(spark, version=cur_v, buckets=cb).select(key, g, v)
+        ))
+        old_partials = _read_state(spark, os.path.join(payload, "parts"))
+        old_cb = old_partials.filter(F.col("bucket").isin(cb))
+        # groups whose changed-bucket partials DIFFER: only these can have a
+        # different global top-k (rows outside the bucket top-k can't
+        # displace view rows — they don't even displace their bucket's k-th
+        # row)
+        cols = [g, key, v, "bucket"]
+        diff_g = (
+            old_cb.select(*cols).exceptAll(new_partials.select(*cols))
+            .unionByName(new_partials.select(*cols).exceptAll(old_cb.select(*cols)))
+            .select(g).distinct()
         )
-        kept = old_view.alias("o").join(
-            diff_g.alias("d"),
-            F.col(f"o.{g}").eqNullSafe(F.col(f"d.{g}")), "left_anti")
-        out = kept.unionByName(refolded)
-    out = materialize(out)
-    n_groups = out.select(g).distinct().count()
+        n_ref = diff_g.count()
+        old_view = _read_state(spark, os.path.join(payload, "view"))
+        if n_ref == 0:
+            out = old_view
+        else:
+            all_partials = old_partials.filter(
+                ~F.col("bucket").isin(cb)
+            ).unionByName(new_partials)
+            refolded = _topk_fold(
+                all_partials.alias("p").join(
+                    diff_g.alias("d"),
+                    F.col(f"p.{g}").eqNullSafe(F.col(f"d.{g}")), "left_semi"),
+                g, key, v, k,
+            )
+            kept = old_view.alias("o").join(
+                diff_g.alias("d"),
+                F.col(f"o.{g}").eqNullSafe(F.col(f"d.{g}")), "left_anti")
+            out = kept.unionByName(refolded)
+        out = materialize(out)
+        n_groups = out.select(g).distinct().count()
+        new_meta = {**ident, "version": cur_v, "n_groups": n_groups}
+        artifacts.publish(
+            base, artifacts.mutated_key(r0[1]),
+            lambda stage: _write(stage, out, new_meta, new_partials,
+                                 carry_from=payload, cb=cb),
+            expected_seq=r0[2])
+        return {"action": "incremental", "version": cur_v, "groups": n_groups,
+                "refolded_groups": n_ref}
 
-    def _build(stage: str) -> None:
-        os.makedirs(stage)
-        out.write.parquet(os.path.join(stage, "view"))
-        _carry_parts(os.path.join(payload, "parts"),
-                     os.path.join(stage, "parts"), cb)
-        _write_partitioned(new_partials, os.path.join(stage, "parts"), "bucket")
-        with open(os.path.join(stage, "sync.json"), "w") as f:
-            json.dump(_meta(n_groups), f)
-
-    try:
-        artifacts.publish(base, artifacts.mutated_key(r0[1]), _build,
-                          expected_seq=r0[2])
-    except artifacts.ArtifactConflict:
-        return topk_view_sync(spark, table, path, group_col=g, value_col=v,
-                              k=k,
-                              rebuild_changed_fraction=rebuild_changed_fraction)
-    return {"action": "incremental", "version": cur_v, "groups": n_groups,
-            "refolded_groups": n_ref}
+    return artifacts.sync(
+        base, table, ident, rebuild=_rebuild, advance=_advance,
+        noop=lambda m: {"groups": m["n_groups"], "refolded_groups": 0},
+        retry=lambda: topk_view_sync(**call),
+    )
 
 
 def _topk_oracle_sql() -> str:
-    from recidiviz_data_spark.operators.cdcops import APPLY_GEN, changelog_dir
-
-    glob_path = os.path.join(
-        changelog_dir("apply", APPLY_GEN), "batch_id=*", "part-*.parquet"
-    )
-    return f"""
-    WITH ev AS (
-      SELECT doc_id, op, n_tok, source,
-             row_number() OVER (PARTITION BY doc_id ORDER BY event_seq DESC) AS rn
-      FROM read_parquet('{glob_path}')
-    ),
+    return _events_cte() + """,
     live AS (SELECT doc_id, source, n_tok FROM ev
              WHERE rn = 1 AND op <> 'D' AND n_tok IS NOT NULL)
     SELECT source, rnk, doc_id, n_tok FROM (
@@ -929,28 +823,6 @@ def x_topk_view_sync(spark, sf_dir):
     """Top-k IVM demo on the deterministic engine changelog: batch-by-batch
     `topk_view_sync` must converge to the single-shot ranked fold (top-3
     docs per source by n_tok, doc_id tiebreak)."""
-    from recidiviz_data_spark.cdc.apply import apply_batches, create_empty_table
-    from recidiviz_data_spark.operators.cdcops import (
-        APPLY_GEN,
-        _payload_schema,
-        _workdir,
-        ensure_changelog,
-    )
-    from recidiviz_data_spark.tables.miniberg import Miniberg
-
-    cl = ensure_changelog("apply", APPLY_GEN)
-    wd = _workdir("apply", APPLY_GEN)
-    troot = os.path.join(wd, "table")
-    if Miniberg.exists(troot):
-        table = Miniberg(troot)
-    else:
-        table = create_empty_table(troot, _payload_schema(), num_buckets=8)
-    vpath = os.path.join(wd, "topkview_source_ntok")
-    for b in range(APPLY_GEN["n_batches"]):
-        apply_batches(spark, table, cl, upto=b)
-        # 8-bucket demo table, every batch touches all buckets: keep the
-        # incremental path under oracle-check (see x_agg_view_sync)
-        topk_view_sync(spark, table, vpath, group_col="source",
-                       value_col="n_tok", k=3, rebuild_changed_fraction=1.0)
+    vpath = _demo_view(spark, "topkview_source_ntok", topk_view_sync, k=3)
     return topk_view_read(spark, vpath).select(
         "source", "rnk", "doc_id", F.col("n_tok"))

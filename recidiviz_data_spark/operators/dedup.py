@@ -449,7 +449,6 @@ def band_index_build(spark, sf_dir, path: str | None = None, *,
     md5/lane pipeline runs exactly once. ``meta`` (if given) lands as
     ``sync.json`` in the payload — the CDC-sync bookkeeping record
     (see ``band_index_sync``)."""
-    import json
     import os
 
     from recidiviz_data_spark.operators.relational import _roundtrip_cache_tag
@@ -475,8 +474,7 @@ def band_index_build(spark, sf_dir, path: str | None = None, *,
             os.path.join(stage, "sizes")
         )
         if meta is not None:
-            with open(os.path.join(stage, "sync.json"), "w") as f:
-                json.dump(meta, f)
+            artifacts.write_sync_meta(stage, meta)
 
     artifacts.ensure(base, key, _build)
     return base
@@ -498,9 +496,8 @@ def band_index_append(spark, path: str, new_docs, *,
     retries internally (each attempt recomputes from the then-current
     version — right for independent batches); an explicit seq from
     ``resolve_full`` propagates ``ArtifactConflict`` to the caller instead
-    (the sync lifecycles re-enter themselves: a blind retry would re-append
-    rows the conflicting sync already landed)."""
-    import json
+    (``artifacts.sync`` re-enters the whole sync: a blind retry would
+    re-append rows the conflicting sync already landed)."""
     import os
 
     from recidiviz_data_spark.tables import artifacts
@@ -548,8 +545,7 @@ def band_index_append(spark, path: str, new_docs, *,
             )
             merged.write.parquet(os.path.join(stage, "sizes"))
             if meta is not None:
-                with open(os.path.join(stage, "sync.json"), "w") as f:
-                    json.dump(meta, f)
+                artifacts.write_sync_meta(stage, meta)
 
         try:
             artifacts.publish(path, artifacts.mutated_key(old_key), _build,
@@ -592,12 +588,9 @@ def band_index_bands(spark, path: str, *, band_cap=MINHASH_BAND_CAP, live=None):
 def table_band_index_path(table) -> str:
     """Default artifact location for a band index synced to a miniberg table
     — keyed on the table's uuid, so every table gets its own index dir."""
-    import os
-    import tempfile
+    from recidiviz_data_spark.tables import artifacts
 
-    uid = table.manifest()["table_uuid"].replace("-", "")[:12] + (
-        f"-{table.branch}" if getattr(table, "branch", None) else "")
-    return os.path.join(tempfile.gettempdir(), f"rds_bandidx_tbl_{uid}")
+    return artifacts.default_path(table, "bandidx_tbl")
 
 
 def _band_sync_meta(path: str) -> dict | None:
@@ -610,12 +603,14 @@ def _band_sync_meta(path: str) -> dict | None:
 
 def band_index_sync(spark, table, path: str | None = None, *,
                     rebuild_stale_fraction: float = 0.25,
-                    changes=None, from_version: int | None = None) -> dict:
+                    changes=None, from_version: int | None = None,
+                    to_version: int | None = None) -> dict:
     """Keep the persisted band index in step with a miniberg CDC table: the
     search-index-ingest loop, driven by the table's own change feed.
 
     Each call advances the index from the snapshot it last represented
-    (recorded in the payload's ``sync.json``) to the table's current version:
+    (recorded in the payload's ``sync.json``) to the table's current version
+    through the artifact store's one sync lifecycle (``artifacts.sync``):
 
     - first call / foreign index / rolled-back source -> FULL build over the
       current snapshot, keyed ``miniberg:<uuid>:v<N>`` (pure-build cache key);
@@ -632,29 +627,27 @@ def band_index_sync(spark, table, path: str | None = None, *,
     - same snapshot -> no-op.
 
     At lake scale the version diff is the sync's dominant cost; a deployment
-    already holding the CDC events between the two snapshots passes them as
-    ``changes`` (columns op/doc_id/text) WITH ``from_version`` = the snapshot
-    the diff was computed FROM, and skips the diff entirely. The events are
-    applied only if ``from_version`` equals the version recorded in the
-    index's own ``sync.json`` — an index that was synced independently to an
-    intermediate version falls back to its own snapshot diff (applying a
-    wider-span diff would re-append rows the intermediate sync already
-    landed, inflating merged bucket sizes past the band cap). Every
+    already holding the CDC events between two snapshots passes them as
+    ``changes`` (columns op/doc_id/text) WITH the snapshots they span,
+    ``from_version`` and ``to_version``, and skips the diff entirely. The
+    events are applied only if that span is exactly (the version in the
+    index's own ``sync.json``, the table's current version); otherwise the
+    sync diffs for itself. An index synced independently to an intermediate
+    version would re-append rows it already landed from a wider diff
+    (inflating merged bucket sizes past the band cap), and a diff that ends
+    before a newer commit would stamp a stale index current. Every
     publication is an atomic artifact-store flip; run ONE sync writer per
     index (the store's standard mutating-lifecycle contract).
 
     Returns {action, version, live_docs, stale_docs, appended_docs,
     appended_rows}."""
-    from recidiviz_data_spark.cdc.differ import table_changes_pruned
+    call = dict(locals())  # every bound argument, for the conflict re-entry
     from recidiviz_data_spark.tables import artifacts
 
     base = path or table_band_index_path(table)
-    cur_v = table.current_version()
-    uid = table.manifest()["table_uuid"] + (
-        f"@{table.branch}" if getattr(table, "branch", None) else ""
-    )  # branch version numbering aliases main's: scope the sync identity
+    uid = artifacts.table_uid(table)
 
-    def _rebuild() -> dict:
+    def _rebuild(cur_v: int) -> dict:
         docs = table.read(spark).select("doc_id", "text")
         live = docs.count()
         band_index_build(
@@ -666,37 +659,11 @@ def band_index_sync(spark, table, path: str | None = None, *,
         return {"action": "rebuild", "version": cur_v, "live_docs": live,
                 "stale_docs": 0, "appended_docs": 0, "appended_rows": 0}
 
-    # ONE resolve: the meta we plan from and the seq we CAS on must come
-    # from the same pointer state (re-resolving later could straddle a
-    # concurrent sync's publish)
-    r0 = artifacts.resolve_full(base)
-    meta = artifacts.sync_meta_at(r0[0]) if r0 is not None else None
-    if meta is None or meta.get("table_uuid") != uid or meta["version"] > cur_v:
-        return _rebuild()
-    if meta["version"] == cur_v:
-        return {"action": "noop", "version": cur_v,
-                "live_docs": meta["live_docs"], "stale_docs": meta["stale_docs"],
-                "appended_docs": 0, "appended_rows": 0}
-    if changes is not None and from_version != meta["version"]:
-        changes = None  # supplied diff spans a different base: use our own
-    if changes is None:
-        # bucket-pruned: only buckets whose file sets moved between the two
-        # snapshots are read (identical buckets diff to nothing), and the
-        # payload is pruned to the one column the index ingests
-        changes = table_changes_pruned(
-            spark, table, meta["version"], cur_v, cols=["text"]
-        )
-    changes = materialize(changes)  # consumed by the counts AND the append
-    ops = {
-        r["op"]: r["n"]
-        for r in changes.groupBy("op").agg(F.count("*").alias("n")).collect()
-    }
-    n_i, n_u, n_d = ops.get("I", 0), ops.get("U", 0), ops.get("D", 0)
-    live = meta["live_docs"] + n_i - n_d
-    stale = meta["stale_docs"] + n_u + n_d
-    if stale > rebuild_stale_fraction * max(live, 1):
-        return _rebuild()
-    try:
+    def _advance(r0, meta, cur_v: int, changes) -> dict:
+        changes, appended, live, stale = index_delta(
+            spark, table, meta, cur_v, changes, "text")
+        if stale > rebuild_stale_fraction * max(live, 1):
+            return _rebuild(cur_v)
         rows = band_index_append(
             spark, base,
             changes.filter(F.col("op").isin("I", "U")).select("doc_id", "text"),
@@ -704,14 +671,42 @@ def band_index_sync(spark, table, path: str | None = None, *,
                   "live_docs": live, "stale_docs": stale},
             expected_seq=r0[2],
         )
-    except artifacts.ArtifactConflict:
-        # a concurrent sync advanced the index: re-enter against its state
-        # (same version pair -> noop; further table movement -> fresh diff)
-        return band_index_sync(spark, table, path,
-                               rebuild_stale_fraction=rebuild_stale_fraction)
-    return {"action": "append", "version": cur_v, "live_docs": live,
-            "stale_docs": stale, "appended_docs": n_i + n_u,
-            "appended_rows": rows}
+        return {"action": "append", "version": cur_v, "live_docs": live,
+                "stale_docs": stale, "appended_docs": appended,
+                "appended_rows": rows}
+
+    return artifacts.sync(
+        base, table, {"table_uuid": uid}, rebuild=_rebuild, advance=_advance,
+        noop=lambda m: {"live_docs": m["live_docs"],
+                        "stale_docs": m["stale_docs"],
+                        "appended_docs": 0, "appended_rows": 0},
+        retry=lambda: band_index_sync(**call),
+        changes=changes, span=(from_version, to_version),
+    )
+
+
+def index_delta(spark, table, meta: dict, cur_v: int, changes, col: str):
+    """(changes, appended_docs, live_docs, stale_docs) for an index sync
+    advancing from its stored version to ``cur_v``: the caller's diff
+    (op/doc_id/``col``), or when None a bucket- and column-pruned one of our
+    own (only buckets whose file sets moved are read, only ``col`` is
+    carried). It is materialized because the counts and the append both
+    consume it; its op counts fold into the sync record's live/stale
+    counts."""
+    from recidiviz_data_spark.cdc.differ import table_changes_pruned
+
+    if changes is None:
+        changes = table_changes_pruned(
+            spark, table, meta["version"], cur_v, cols=[col]
+        )
+    changes = materialize(changes)
+    ops = {
+        r["op"]: r["n"]
+        for r in changes.groupBy("op").agg(F.count("*").alias("n")).collect()
+    }
+    n_i, n_u, n_d = ops.get("I", 0), ops.get("U", 0), ops.get("D", 0)
+    return (changes, n_i + n_u, meta["live_docs"] + n_i - n_d,
+            meta["stale_docs"] + n_u + n_d)
 
 
 @_qx(
@@ -1070,12 +1065,9 @@ def materialize_neardup_clusters(spark, sf_dir, *, key: str | None = None) -> st
 def table_clusters_path(table) -> str:
     """Default artifact location for a cluster table synced to a miniberg
     table — keyed on the table's uuid."""
-    import os
-    import tempfile
+    from recidiviz_data_spark.tables import artifacts
 
-    uid = table.manifest()["table_uuid"].replace("-", "")[:12] + (
-        f"-{table.branch}" if getattr(table, "branch", None) else "")
-    return os.path.join(tempfile.gettempdir(), f"rds_clusters_tbl_{uid}")
+    return artifacts.default_path(table, "clusters_tbl")
 
 
 # Largest shrunk cluster whose post-removal connectivity is re-verified
@@ -1087,22 +1079,24 @@ def table_clusters_path(table) -> str:
 SPLIT_VERIFY_CAP = 1024
 
 
-def _consumed_band_stamp(band_path: str) -> dict | None:
-    """Provenance stamp recorded in the cluster table's ``sync.json`` for the
-    band-index version a sync consumed: the artifact dir + seq it probed and
-    the TABLE SNAPSHOT VERSION that band version represents. Compose-time
-    consistency checks compare snapshot versions (``neardup_artifacts_
-    consistent``); dir/seq document exactly which physical version fed the
-    candidates."""
+def _band_version(band_path: str) -> tuple[str, dict | None]:
+    """(payload, stamp) of the band index's current version, from ONE
+    resolve: the payload a cluster sync probes and the provenance stamp its
+    ``sync.json`` records for it — the artifact dir + seq and the TABLE
+    SNAPSHOT VERSION that band version represents. Two resolves could
+    straddle a concurrent band publish and stamp a version never read.
+    Compose-time consistency checks compare snapshot versions
+    (``neardup_artifacts_consistent``); dir/seq document exactly which
+    physical version fed the candidates."""
     import os
 
     from recidiviz_data_spark.tables import artifacts
 
     br = artifacts.resolve_full(band_path)
     if br is None:
-        return None
+        return band_path, None
     bmeta = artifacts.sync_meta_at(br[0])
-    return {
+    return br[0], {
         "dir": os.path.basename(br[0]),
         "seq": br[2],
         "version": None if bmeta is None else bmeta.get("version"),
@@ -1143,20 +1137,13 @@ def neardup_composed_read(spark, table, path: str | None = None, *,
     bp = band_path or table_band_index_path(table)
     for _ in range(max_resyncs + 1):
         if neardup_artifacts_consistent(base, bp):
-            return neardup_clusters_view(spark, base), _band_payload(bp)
+            return neardup_clusters_view(spark, base), _band_version(bp)[0]
         band_index_sync(spark, table, bp, **sync_kw)
         neardup_clusters_sync(spark, table, base, band_path=bp, **sync_kw)
     raise RuntimeError(
         "could not compose a consistent (cluster table, band index) pair "
         f"after {max_resyncs} re-syncs — is a writer racing the table?"
     )
-
-
-def _band_payload(band_path: str) -> str:
-    from recidiviz_data_spark.tables import artifacts
-
-    r = artifacts.resolve(band_path)
-    return r[0] if r is not None else band_path
 
 
 def neardup_clusters_view(spark, path: str):
@@ -1184,6 +1171,7 @@ def neardup_clusters_sync(spark, table, path: str | None = None, *,
                           band_path: str | None = None,
                           rebuild_stale_fraction: float = 0.25,
                           changes=None, from_version: int | None = None,
+                          to_version: int | None = None,
                           split_verify_cap: int = SPLIT_VERIFY_CAP) -> dict:
     """Keep the near-dup CLUSTER table in step with a miniberg CDC table —
     incremental connected components on top of the synced band index.
@@ -1224,326 +1212,293 @@ def neardup_clusters_sync(spark, table, path: str | None = None, *,
     exact shingle join); an over-cap shrunk cluster's split is deferred the
     same way. Both are bounded by ``rebuild_stale_fraction``: past it the
     sync re-runs the exact full clustering. ``changes`` (op/doc_id/text,
-    with ``from_version`` = the base snapshot of the diff) skips the version
-    diff exactly as in ``band_index_sync``. Returns {action, version,
-    live_docs, stale_docs, new_edges}."""
-    import json
+    with ``from_version`` / ``to_version`` = the snapshots the diff spans)
+    skips the version diff exactly as in ``band_index_sync``, and the same
+    diff advances the band index. Returns {action, version, live_docs,
+    stale_docs, new_edges}."""
+    call = dict(locals())  # every bound argument, for the conflict re-entry
     import os
 
-    from recidiviz_data_spark.cdc.differ import table_changes_pruned
     from recidiviz_data_spark.tables import artifacts
 
     base = path or table_clusters_path(table)
     bp = band_path or table_band_index_path(table)
-    cur_v = table.current_version()
-    uid = table.manifest()["table_uuid"] + (
-        f"@{table.branch}" if getattr(table, "branch", None) else ""
-    )  # branch version numbering aliases main's: scope the sync identity
+    uid = artifacts.table_uid(table)
 
-    def _rebuild() -> dict:
+    def _rebuild(cur_v: int) -> dict:
+        # the candidate index first: the stamp records the version it is at
+        band_index_sync(spark, table, bp,
+                        rebuild_stale_fraction=rebuild_stale_fraction)
         docs = materialize(table.read(spark).select("doc_id", "text"))
         live = docs.count()
         meta = {"table_uuid": uid, "version": cur_v,
                 "live_docs": live, "stale_docs": 0,
-                "consumed": {"band_index": _consumed_band_stamp(bp)}}
+                "consumed": {"band_index": _band_version(bp)[1]}}
 
         def _build(stage: str) -> None:
             os.makedirs(stage)
             x_neardup_clusters(spark, None, docs=docs).select(
                 "doc_id", "cluster_id"
             ).write.parquet(os.path.join(stage, "clusters"))
-            with open(os.path.join(stage, "sync.json"), "w") as f:
-                json.dump(meta, f)
+            artifacts.write_sync_meta(stage, meta)
 
         artifacts.ensure(base, f"miniberg:{uid}:v{cur_v}", _build)
         return {"action": "rebuild", "version": cur_v, "live_docs": live,
                 "stale_docs": 0, "new_edges": 0}
 
-    # ONE resolve: the meta we plan from and the seq we CAS on must come
-    # from the same pointer state (re-resolving later could straddle a
-    # concurrent sync's publish)
-    r0 = artifacts.resolve_full(base)
-    meta = artifacts.sync_meta_at(r0[0]) if r0 is not None else None
-    if meta is None or meta.get("table_uuid") != uid or meta["version"] > cur_v:
-        band_index_sync(spark, table, bp)
-        return _rebuild()
-    if meta["version"] == cur_v:
-        return {"action": "noop", "version": cur_v,
-                "live_docs": meta["live_docs"], "stale_docs": meta["stale_docs"],
-                "new_edges": 0}
-    if changes is not None and from_version != meta["version"]:
-        changes = None  # supplied diff spans a different base: use our own
-    if changes is None:
-        # bucket-pruned + column-pruned: see band_index_sync
-        changes = table_changes_pruned(
-            spark, table, meta["version"], cur_v, cols=["text"]
-        )
-    # candidates first. The diff was computed from THIS sync's recorded
-    # version — band_index_sync applies it only if its own sync.json agrees
-    # (an independently-advanced band index re-diffs for its own span)
-    changes = materialize(changes)
-    band_index_sync(spark, table, bp, changes=changes,
-                    from_version=meta["version"])
-    ops = {
-        r["op"]: r["n"]
-        for r in changes.groupBy("op").agg(F.count("*").alias("n")).collect()
-    }
-    n_i, n_u, n_d = ops.get("I", 0), ops.get("U", 0), ops.get("D", 0)
-    live = meta["live_docs"] + n_i - n_d
-    stale = meta["stale_docs"] + n_u + n_d
-    if stale > rebuild_stale_fraction * max(live, 1):
-        return _rebuild()
-
-    payload, old_key, seq = r0
-    cur = spark.read.parquet(os.path.join(payload, "clusters"))
-    cur_s = cur.withColumn("cl_s", F.col("cluster_id").cast("string"))
-    new_docs = materialize(
-        changes.filter(F.col("op").isin("I", "U")).select("doc_id", "text")
-    )
-    new_ids = new_docs.select("doc_id")
-    removed = changes.filter(F.col("op").isin("U", "D")).select("doc_id")
-
-    # -- SHRUNK clusters (lost a member): connectivity may have broken (a
-    # removed doc can be the bridge), so their remaining members leave the
-    # one-node collapse and get re-verified pairwise below — the exact split
-    # handling. Driver-side state is bounded by the BATCH, never by cluster
-    # size: the per-cluster survivor COUNT is computed distributed (one row
-    # per shrunk cluster — at most one per removed doc), and only clusters
-    # at or under ``split_verify_cap`` have their members point-read for the
-    # inline split-check. A mega cluster (boilerplate/template dedup
-    # clusters are heavy-tailed at web scale) skips it: its survivors keep
-    # one cluster (keeper hand-off stays exact — min(live member) is a
-    # distributed aggregate), its members count toward the stale fraction,
-    # and a missed split is folded at the periodic exact rebuild — the same
-    # contract as LSH recall misses.
-    removed_cl = (
-        cur_s.join(removed, "doc_id", "left_semi")
-        .select("cl_s").distinct().localCheckpoint()
-    )
-    survivor_counts = {
-        r["cl_s"]: r["n"]
-        for r in cur_s.join(F.broadcast(removed_cl), "cl_s", "left_semi")
-        .join(removed, "doc_id", "left_anti")
-        .groupBy("cl_s").agg(F.count("*").alias("n")).collect()
-    }
-    big_cl = {c for c, n in survivor_counts.items() if n > split_verify_cap}
-    skipped_split_members = sum(survivor_counts[c] for c in big_cl)
-    if skipped_split_members:
-        # deferred split-checks are inexactness debt: count those members as
-        # stale so repeated hits on mega clusters drive the exact rebuild
-        stale += skipped_split_members
+    def _advance(r0, meta, cur_v: int, changes) -> dict:
+        changes, _appended, live, stale = index_delta(
+            spark, table, meta, cur_v, changes, "text")
+        # candidates first, from the same diff: band_index_sync applies it
+        # only if its own sync.json is at the diff's base (an independently-
+        # advanced band index re-diffs for its own span)
+        band_index_sync(spark, table, bp,
+                        rebuild_stale_fraction=rebuild_stale_fraction,
+                        changes=changes, from_version=meta["version"],
+                        to_version=cur_v)
         if stale > rebuild_stale_fraction * max(live, 1):
-            return _rebuild()
-    small_cl = removed_cl
-    if big_cl:
-        small_cl = removed_cl.join(
-            spark.createDataFrame([(c,) for c in sorted(big_cl)], "cl_s string"),
-            "cl_s", "left_anti",
-        ).localCheckpoint()
-    shrunk_members = (
-        cur_s.join(F.broadcast(small_cl), "cl_s", "left_semi")
-        .join(removed, "doc_id", "left_anti")
-        .select("doc_id", "cl_s")
-        .localCheckpoint()
-    )
-    member_ids = [r["doc_id"] for r in shrunk_members.select("doc_id").collect()]
+            return _rebuild(cur_v)
 
-    # -- candidates: probe the band index with the new docs. The band
-    # artifact is resolved ONCE — the version we probe is the version the
-    # sync.json stamp records (two resolves could straddle a concurrent band
-    # publish and stamp a version we never read). No live filter needed
-    # here: a deleted partner's candidacy dies at verification — read_keys
-    # returns no text for a tombstoned doc, so it contributes no shingles
-    # and no edge (cheaper than semi-joining the corpus key set)
-    br = artifacts.resolve_full(bp)
-    band_payload = br[0] if br is not None else bp
-    bmeta = artifacts.sync_meta_at(band_payload)
-    band_stamp = None if br is None else {
-        "dir": os.path.basename(br[0]), "seq": br[2],
-        "version": None if bmeta is None else bmeta.get("version"),
-    }
-    bands = band_index_bands(spark, band_payload)
-    probe = bands.join(new_ids, "doc_id", "left_semi").alias("p")
-    cand = (
-        bands.alias("c")
-        .join(
-            probe,
-            (F.col("c.band") == F.col("p.band"))
-            & (F.col("c.h_lo") == F.col("p.h_lo"))
-            & (F.col("c.h_hi") == F.col("p.h_hi"))
-            & (F.col("c.doc_id") != F.col("p.doc_id")),
+        payload, old_key, seq = r0
+        cur = spark.read.parquet(os.path.join(payload, "clusters"))
+        cur_s = cur.withColumn("cl_s", F.col("cluster_id").cast("string"))
+        new_docs = materialize(
+            changes.filter(F.col("op").isin("I", "U")).select("doc_id", "text")
         )
-        .select(F.col("p.doc_id").alias("np"), F.col("c.doc_id").alias("pp"))
-        .distinct()
-    )
-    partner_ids = sorted(
-        r["pp"]
-        for r in cand.select("pp").join(new_ids.withColumnRenamed("doc_id", "pp"),
-                                        "pp", "left_anti").distinct().collect()
-    )  # batch-bounded: candidates of THIS batch only — never corpus-scale
+        new_ids = new_docs.select("doc_id")
+        removed = changes.filter(F.col("op").isin("U", "D")).select("doc_id")
 
-    # -- exact Jaccard verification on the involved docs only (frozen hot
-    # cap): new docs + their candidate partners + shrunk clusters' members
-    point_ids = sorted(set(partner_ids) | set(member_ids))
-    involved = new_docs
-    if point_ids:
-        involved = involved.unionByName(
-            table.read_keys(spark, point_ids).select("doc_id", "text")
+        # -- SHRUNK clusters (lost a member): connectivity may have broken (a
+        # removed doc can be the bridge), so their remaining members leave the
+        # one-node collapse and get re-verified pairwise below — the exact split
+        # handling. Driver-side state is bounded by the BATCH, never by cluster
+        # size: the per-cluster survivor COUNT is computed distributed (one row
+        # per shrunk cluster — at most one per removed doc), and only clusters
+        # at or under ``split_verify_cap`` have their members point-read for the
+        # inline split-check. A mega cluster (boilerplate/template dedup
+        # clusters are heavy-tailed at web scale) skips it: its survivors keep
+        # one cluster (keeper hand-off stays exact — min(live member) is a
+        # distributed aggregate), its members count toward the stale fraction,
+        # and a missed split is folded at the periodic exact rebuild — the same
+        # contract as LSH recall misses.
+        removed_cl = (
+            cur_s.join(removed, "doc_id", "left_semi")
+            .select("cl_s").distinct().localCheckpoint()
         )
-    hot = spark.read.parquet(os.path.join(band_payload, "hot"))
-    sh = materialize(
-        _shingles(spark, None, docs=involved).join(
-            F.broadcast(hot), "shingle", "left_anti"
+        survivor_counts = {
+            r["cl_s"]: r["n"]
+            for r in cur_s.join(F.broadcast(removed_cl), "cl_s", "left_semi")
+            .join(removed, "doc_id", "left_anti")
+            .groupBy("cl_s").agg(F.count("*").alias("n")).collect()
+        }
+        big_cl = {c for c, n in survivor_counts.items() if n > split_verify_cap}
+        skipped_split_members = sum(survivor_counts[c] for c in big_cl)
+        if skipped_split_members:
+            # deferred split-checks are inexactness debt: count those members as
+            # stale so repeated hits on mega clusters drive the exact rebuild
+            stale += skipped_split_members
+            if stale > rebuild_stale_fraction * max(live, 1):
+                return _rebuild(cur_v)
+        small_cl = removed_cl
+        if big_cl:
+            small_cl = removed_cl.join(
+                spark.createDataFrame([(c,) for c in sorted(big_cl)], "cl_s string"),
+                "cl_s", "left_anti",
+            ).localCheckpoint()
+        shrunk_members = (
+            cur_s.join(F.broadcast(small_cl), "cl_s", "left_semi")
+            .join(removed, "doc_id", "left_anti")
+            .select("doc_id", "cl_s")
+            .localCheckpoint()
         )
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count("*").alias("shared"))
-    )
-    ver = (
-        pairs.join(sizes.withColumnRenamed("doc_id", "d1")
-                   .withColumnRenamed("n", "na"), "d1")
-        .join(sizes.withColumnRenamed("doc_id", "d2")
-              .withColumnRenamed("n", "nb"), "d2")
-        .filter(F.col("shared").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("shared")) >= 0.3)
-        .select("d1", "d2")
-    )
-    # keep only pairs touching a new doc (two old partners of different new
-    # docs may incidentally share shingles — their pair is NOT part of this
-    # batch's blast radius)...
-    edges = (
-        ver.join(new_ids.withColumnRenamed("doc_id", "d1"), "d1", "left_semi")
-        .unionByName(
-            ver.join(new_ids.withColumnRenamed("doc_id", "d2"), "d2", "left_semi")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    n_edges = edges.count()
-    # ...plus SAME-shrunk-cluster member pairs: the re-verified internal
-    # edges that decide whether a cluster that lost a member stays connected
-    # or SPLITS (removing a bridge doc must split the survivors exactly as
-    # the full reclustering would)
-    intra = (
-        ver.join(shrunk_members.withColumnRenamed("doc_id", "d1"), "d1")
-        .join(shrunk_members.withColumnRenamed("doc_id", "d2")
-              .withColumnRenamed("cl_s", "cl2"), "d2")
-        .filter(F.col("cl_s") == F.col("cl2"))
-        .select("d1", "d2")
-        .localCheckpoint()
-    )
-    n_intra = intra.count()
+        member_ids = [r["doc_id"] for r in shrunk_members.select("doc_id").collect()]
 
-    # -- mini component pass: an endpoint that is an EXISTING doc in an
-    # INTACT cluster collapses to its cluster id, so that whole cluster is
-    # ONE node; members of SHRUNK clusters participate as themselves (their
-    # cluster's connectivity is exactly what is being recomputed). Nodes are
-    # NAMESPACED ("c:<cluster_id>" vs "d:<doc_id>"): cluster labels ARE doc
-    # ids, so an updated doc participating as itself would otherwise collide
-    # with the label of the cluster it just left (fusing them spuriously).
-    # Removed docs are dropped from the endpoint->cluster map first — an
-    # updated doc's old membership must not leak in.
-    comp_groups = None
-    if n_edges or n_intra:
-        assign_live = (
-            cur.select(
-                F.col("doc_id").alias("m_doc"),
-                F.concat(F.lit("c:"), F.col("cluster_id").cast("string")).alias("m_cl"),
+        # -- candidates: probe the band index with the new docs, at the
+        # version the sync.json stamp records. No live filter needed here: a
+        # deleted partner's candidacy dies at verification — read_keys
+        # returns no text for a tombstoned doc, so it contributes no shingles
+        # and no edge (cheaper than semi-joining the corpus key set)
+        band_payload, band_stamp = _band_version(bp)
+        bands = band_index_bands(spark, band_payload)
+        probe = bands.join(new_ids, "doc_id", "left_semi").alias("p")
+        cand = (
+            bands.alias("c")
+            .join(
+                probe,
+                (F.col("c.band") == F.col("p.band"))
+                & (F.col("c.h_lo") == F.col("p.h_lo"))
+                & (F.col("c.h_hi") == F.col("p.h_hi"))
+                & (F.col("c.doc_id") != F.col("p.doc_id")),
             )
-            .join(removed.withColumnRenamed("doc_id", "m_doc"), "m_doc", "left_anti")
-            .join(shrunk_members.select(F.col("doc_id").alias("m_doc")),
-                  "m_doc", "left_anti")
+            .select(F.col("p.doc_id").alias("np"), F.col("c.doc_id").alias("pp"))
+            .distinct()
         )
+        partner_ids = sorted(
+            r["pp"]
+            for r in cand.select("pp").join(new_ids.withColumnRenamed("doc_id", "pp"),
+                                            "pp", "left_anti").distinct().collect()
+        )  # batch-bounded: candidates of THIS batch only — never corpus-scale
 
-        def _as_node(col):
-            return F.coalesce(
-                F.col("m_cl"), F.concat(F.lit("d:"), F.col(col).cast("string"))
+        # -- exact Jaccard verification on the involved docs only (frozen hot
+        # cap): new docs + their candidate partners + shrunk clusters' members
+        point_ids = sorted(set(partner_ids) | set(member_ids))
+        involved = new_docs
+        if point_ids:
+            involved = involved.unionByName(
+                table.read_keys(spark, point_ids).select("doc_id", "text")
             )
-
-        e1 = edges.join(assign_live.withColumnRenamed("m_doc", "d1"), "d1", "left") \
-                  .select(_as_node("d1").alias("na"), F.col("d2"))
-        mini = e1.join(assign_live.withColumnRenamed("m_doc", "d2"), "d2", "left") \
-                 .select("na", _as_node("d2").alias("nb"))
-        mini = mini.unionByName(
-            intra.select(
-                F.concat(F.lit("d:"), F.col("d1").cast("string")).alias("na"),
-                F.concat(F.lit("d:"), F.col("d2").cast("string")).alias("nb"),
+        hot = spark.read.parquet(os.path.join(band_payload, "hot"))
+        sh = materialize(
+            _shingles(spark, None, docs=involved).join(
+                F.broadcast(hot), "shingle", "left_anti"
             )
         )
-        comp_groups = connected_components(spark, mini, src="na", dst="nb")
-
-    # -- affected clusters: merged ones, plus every cluster losing a member
-    if comp_groups is not None:
-        merged_cl = comp_groups.filter(F.col("node").startswith("c:")) \
-            .select(F.expr("substring(node, 3)").alias("cl_s"))
-        affected_cl = removed_cl.unionByName(merged_cl).distinct().localCheckpoint()
-    else:
-        affected_cl = removed_cl
-
-    untouched = cur_s.join(F.broadcast(affected_cl), "cl_s", "left_anti") \
-                     .join(removed, "doc_id", "left_anti")
-
-    # -- rebuild the affected region: intact-cluster members grouped by
-    # their cluster's mini-CC label, shrunk-cluster members and new docs by
-    # their OWN node's label (self if edge-less — a split singleton), then
-    # final label = min(doc_id) per group — keeper hand-off is exact
-    old_aff = (
-        cur_s.join(F.broadcast(affected_cl), "cl_s", "left_semi")
-        .join(removed, "doc_id", "left_anti")
-        .join(shrunk_members.select("doc_id", F.lit(True).alias("_sm")),
-              "doc_id", "left")
-        .withColumn(
-            "node",
-            F.when(F.col("_sm"),
-                   F.concat(F.lit("d:"), F.col("doc_id").cast("string")))
-            .otherwise(F.concat(F.lit("c:"), F.col("cl_s"))),
+        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+        a, b = sh.alias("a"), sh.alias("b")
+        pairs = (
+            a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
+            .agg(F.count("*").alias("shared"))
         )
-    )
-    if comp_groups is not None:
-        lbl = comp_groups.select(F.col("node"), F.col("cluster_id").alias("grp"))
-        old_part = old_aff.join(lbl, "node", "left") \
-            .select("doc_id", F.coalesce("grp", F.col("node")).alias("grp"))
-        new_part = new_ids.withColumn(
-            "node", F.concat(F.lit("d:"), F.col("doc_id").cast("string"))
-        ).join(lbl, "node", "left") \
-            .select("doc_id", F.coalesce("grp", F.col("node")).alias("grp"))
-    else:
-        old_part = old_aff.select("doc_id", F.col("node").alias("grp"))
-        new_part = new_ids.select(
-            "doc_id", F.concat(F.lit("d:"), F.col("doc_id").cast("string")).alias("grp"))
-    region = old_part.unionByName(new_part)
-    final = region.groupBy("grp").agg(F.min("doc_id").alias("cluster_id"))
-    rebuilt = region.join(final, "grp").select("doc_id", "cluster_id")
+        ver = (
+            pairs.join(sizes.withColumnRenamed("doc_id", "d1")
+                       .withColumnRenamed("n", "na"), "d1")
+            .join(sizes.withColumnRenamed("doc_id", "d2")
+                  .withColumnRenamed("n", "nb"), "d2")
+            .filter(F.col("shared").cast("double")
+                    / (F.col("na") + F.col("nb") - F.col("shared")) >= 0.3)
+            .select("d1", "d2")
+        )
+        # keep only pairs touching a new doc (two old partners of different new
+        # docs may incidentally share shingles — their pair is NOT part of this
+        # batch's blast radius)...
+        edges = (
+            ver.join(new_ids.withColumnRenamed("doc_id", "d1"), "d1", "left_semi")
+            .unionByName(
+                ver.join(new_ids.withColumnRenamed("doc_id", "d2"), "d2", "left_semi")
+            )
+            .distinct()
+            .localCheckpoint()
+        )
+        n_edges = edges.count()
+        # ...plus SAME-shrunk-cluster member pairs: the re-verified internal
+        # edges that decide whether a cluster that lost a member stays connected
+        # or SPLITS (removing a bridge doc must split the survivors exactly as
+        # the full reclustering would)
+        intra = (
+            ver.join(shrunk_members.withColumnRenamed("doc_id", "d1"), "d1")
+            .join(shrunk_members.withColumnRenamed("doc_id", "d2")
+                  .withColumnRenamed("cl_s", "cl2"), "d2")
+            .filter(F.col("cl_s") == F.col("cl2"))
+            .select("d1", "d2")
+            .localCheckpoint()
+        )
+        n_intra = intra.count()
 
-    out = untouched.select("doc_id", "cluster_id").unionByName(rebuilt)
-    new_meta = {"table_uuid": uid, "version": cur_v,
-                "live_docs": live, "stale_docs": stale,
-                "consumed": {"band_index": band_stamp}}
+        # -- mini component pass: an endpoint that is an EXISTING doc in an
+        # INTACT cluster collapses to its cluster id, so that whole cluster is
+        # ONE node; members of SHRUNK clusters participate as themselves (their
+        # cluster's connectivity is exactly what is being recomputed). Nodes are
+        # NAMESPACED ("c:<cluster_id>" vs "d:<doc_id>"): cluster labels ARE doc
+        # ids, so an updated doc participating as itself would otherwise collide
+        # with the label of the cluster it just left (fusing them spuriously).
+        # Removed docs are dropped from the endpoint->cluster map first — an
+        # updated doc's old membership must not leak in.
+        comp_groups = None
+        if n_edges or n_intra:
+            assign_live = (
+                cur.select(
+                    F.col("doc_id").alias("m_doc"),
+                    F.concat(F.lit("c:"), F.col("cluster_id").cast("string")).alias("m_cl"),
+                )
+                .join(removed.withColumnRenamed("doc_id", "m_doc"), "m_doc", "left_anti")
+                .join(shrunk_members.select(F.col("doc_id").alias("m_doc")),
+                      "m_doc", "left_anti")
+            )
 
-    def _build(stage: str) -> None:
-        os.makedirs(stage)
-        out.write.parquet(os.path.join(stage, "clusters"))
-        with open(os.path.join(stage, "sync.json"), "w") as f:
-            json.dump(new_meta, f)
+            def _as_node(col):
+                return F.coalesce(
+                    F.col("m_cl"), F.concat(F.lit("d:"), F.col(col).cast("string"))
+                )
 
-    try:
+            e1 = edges.join(assign_live.withColumnRenamed("m_doc", "d1"), "d1", "left") \
+                      .select(_as_node("d1").alias("na"), F.col("d2"))
+            mini = e1.join(assign_live.withColumnRenamed("m_doc", "d2"), "d2", "left") \
+                     .select("na", _as_node("d2").alias("nb"))
+            mini = mini.unionByName(
+                intra.select(
+                    F.concat(F.lit("d:"), F.col("d1").cast("string")).alias("na"),
+                    F.concat(F.lit("d:"), F.col("d2").cast("string")).alias("nb"),
+                )
+            )
+            comp_groups = connected_components(spark, mini, src="na", dst="nb")
+
+        # -- affected clusters: merged ones, plus every cluster losing a member
+        if comp_groups is not None:
+            merged_cl = comp_groups.filter(F.col("node").startswith("c:")) \
+                .select(F.expr("substring(node, 3)").alias("cl_s"))
+            affected_cl = removed_cl.unionByName(merged_cl).distinct().localCheckpoint()
+        else:
+            affected_cl = removed_cl
+
+        untouched = cur_s.join(F.broadcast(affected_cl), "cl_s", "left_anti") \
+                         .join(removed, "doc_id", "left_anti")
+
+        # -- rebuild the affected region: intact-cluster members grouped by
+        # their cluster's mini-CC label, shrunk-cluster members and new docs by
+        # their OWN node's label (self if edge-less — a split singleton), then
+        # final label = min(doc_id) per group — keeper hand-off is exact
+        old_aff = (
+            cur_s.join(F.broadcast(affected_cl), "cl_s", "left_semi")
+            .join(removed, "doc_id", "left_anti")
+            .join(shrunk_members.select("doc_id", F.lit(True).alias("_sm")),
+                  "doc_id", "left")
+            .withColumn(
+                "node",
+                F.when(F.col("_sm"),
+                       F.concat(F.lit("d:"), F.col("doc_id").cast("string")))
+                .otherwise(F.concat(F.lit("c:"), F.col("cl_s"))),
+            )
+        )
+        if comp_groups is not None:
+            lbl = comp_groups.select(F.col("node"), F.col("cluster_id").alias("grp"))
+            old_part = old_aff.join(lbl, "node", "left") \
+                .select("doc_id", F.coalesce("grp", F.col("node")).alias("grp"))
+            new_part = new_ids.withColumn(
+                "node", F.concat(F.lit("d:"), F.col("doc_id").cast("string"))
+            ).join(lbl, "node", "left") \
+                .select("doc_id", F.coalesce("grp", F.col("node")).alias("grp"))
+        else:
+            old_part = old_aff.select("doc_id", F.col("node").alias("grp"))
+            new_part = new_ids.select(
+                "doc_id", F.concat(F.lit("d:"), F.col("doc_id").cast("string")).alias("grp"))
+        region = old_part.unionByName(new_part)
+        final = region.groupBy("grp").agg(F.min("doc_id").alias("cluster_id"))
+        rebuilt = region.join(final, "grp").select("doc_id", "cluster_id")
+
+        out = untouched.select("doc_id", "cluster_id").unionByName(rebuilt)
+        new_meta = {"table_uuid": uid, "version": cur_v,
+                    "live_docs": live, "stale_docs": stale,
+                    "consumed": {"band_index": band_stamp}}
+
+        def _build(stage: str) -> None:
+            os.makedirs(stage)
+            out.write.parquet(os.path.join(stage, "clusters"))
+            artifacts.write_sync_meta(stage, new_meta)
+
         artifacts.publish(base, artifacts.mutated_key(old_key), _build,
                           expected_seq=seq)
-    except artifacts.ArtifactConflict:
-        # a concurrent sync advanced the cluster table: re-enter against its
-        # state (deterministic per version pair — usually lands as a noop)
-        return neardup_clusters_sync(
-            spark, table, path, band_path=band_path,
-            rebuild_stale_fraction=rebuild_stale_fraction,
-            split_verify_cap=split_verify_cap,
-        )
-    return {"action": "append", "version": cur_v, "live_docs": live,
-            "stale_docs": stale, "new_edges": n_edges}
+        return {"action": "append", "version": cur_v, "live_docs": live,
+                "stale_docs": stale, "new_edges": n_edges}
+
+    return artifacts.sync(
+        base, table, {"table_uuid": uid}, rebuild=_rebuild, advance=_advance,
+        noop=lambda m: {"live_docs": m["live_docs"],
+                        "stale_docs": m["stale_docs"], "new_edges": 0},
+        retry=lambda: neardup_clusters_sync(**call),
+        changes=changes, span=(from_version, to_version),
+    )
 
 
 SPAN_LEN = 8  # words per span for substring-level dedup

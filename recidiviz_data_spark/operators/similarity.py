@@ -721,12 +721,9 @@ def ivf_index_refresh(spark, path: str) -> str:
 def table_ivf_index_path(table) -> str:
     """Default artifact location for an IVF index synced to a miniberg table
     — keyed on the table's uuid, so every table gets its own index dir."""
-    import os
-    import tempfile
+    from recidiviz_data_spark.tables import artifacts
 
-    uid = table.manifest()["table_uuid"].replace("-", "")[:12] + (
-        f"-{table.branch}" if getattr(table, "branch", None) else "")
-    return os.path.join(tempfile.gettempdir(), f"rds_ivfidx_tbl_{uid}")
+    return artifacts.default_path(table, "ivfidx_tbl")
 
 
 def table_vectors(df):
@@ -747,7 +744,8 @@ def table_vectors(df):
 def ivf_index_sync(spark, table, path: str | None = None, *,
                    rebuild_stale_fraction: float = 0.25,
                    lloyd_iters: int = 1, changes=None,
-                   from_version: int | None = None) -> dict:
+                   from_version: int | None = None,
+                   to_version: int | None = None) -> dict:
     """Keep the materialized IVF index in step with a miniberg CDC table —
     the vector-search mirror of ``band_index_sync``, plus the one thing a
     top-k index needs that a candidate index does not: DELETES MUST AFFECT
@@ -768,26 +766,24 @@ def ivf_index_sync(spark, table, path: str | None = None, *,
     run ONE sync writer per index.
 
     ``changes`` (op/doc_id/embedding) skips the version diff when the caller
-    already holds the CDC events; it must come with ``from_version`` = the
-    snapshot the events advance FROM, and is applied only if that equals the
-    version in the index's own ``sync.json`` (else the sync falls back to
-    its own diff — a wider-span event set would re-append rows an
-    intermediate sync already landed). Returns {action, version, live_docs,
-    stale_docs, appended_docs}."""
-    import json
+    already holds the CDC events; it must come with ``from_version`` /
+    ``to_version`` = the snapshots the events span, and is applied only if
+    that span is (the version in the index's own ``sync.json``, the table's
+    current version), else the sync falls back to its own diff — a
+    wider-span event set would re-append rows an intermediate sync already
+    landed, a shorter one would stamp a stale index current. Returns
+    {action, version, live_docs, stale_docs, appended_docs}."""
+    call = dict(locals())  # every bound argument, for the conflict re-entry
     import os
 
-    from recidiviz_data_spark.cdc.differ import table_changes_pruned
+    from recidiviz_data_spark.operators.dedup import index_delta
     from recidiviz_data_spark.tables import artifacts
 
     base = path or table_ivf_index_path(table)
-    cur_v = table.current_version()
-    uid = table.manifest()["table_uuid"] + (
-        f"@{table.branch}" if getattr(table, "branch", None) else ""
-    )  # branch version numbering aliases main's: scope the sync identity
+    uid = artifacts.table_uid(table)
     dead_schema = "vec_id long, dead_gen int"
 
-    def _rebuild() -> dict:
+    def _rebuild(cur_v: int) -> dict:
         vecs = materialize(table_vectors(table.read(spark).select("doc_id", "embedding")))
         live = vecs.count()
         meta = {"table_uuid": uid, "version": cur_v,
@@ -807,97 +803,69 @@ def ivf_index_sync(spark, table, path: str | None = None, *,
             spark.createDataFrame([], dead_schema).write.parquet(
                 os.path.join(stage, "dead")
             )
-            with open(os.path.join(stage, "sync.json"), "w") as f:
-                json.dump(meta, f)
+            artifacts.write_sync_meta(stage, meta)
 
         artifacts.ensure(base, f"miniberg:{uid}:v{cur_v}", _build)
         return {"action": "rebuild", "version": cur_v, "live_docs": live,
                 "stale_docs": 0, "appended_docs": 0}
 
-    # ONE resolve: the meta we plan from and the seq we CAS on must come
-    # from the same pointer state (re-resolving later could straddle a
-    # concurrent sync's publish)
-    r0 = artifacts.resolve_full(base)
-    meta = artifacts.sync_meta_at(r0[0]) if r0 is not None else None
-    if meta is None or meta.get("table_uuid") != uid or meta["version"] > cur_v:
-        return _rebuild()
-    if meta["version"] == cur_v:
-        return {"action": "noop", "version": cur_v,
-                "live_docs": meta["live_docs"], "stale_docs": meta["stale_docs"],
-                "appended_docs": 0}
-    if changes is not None and from_version != meta["version"]:
-        changes = None  # supplied diff spans a different base: use our own
-    if changes is None:
-        # bucket-pruned + column-pruned diff (see table_changes_pruned):
-        # only buckets whose file sets moved are read, only the embedding
-        # column is carried
-        changes = table_changes_pruned(
-            spark, table, meta["version"], cur_v, cols=["embedding"]
-        )
-    changes = materialize(changes)  # consumed by the counts, append, and dead
-    ops = {
-        r["op"]: r["n"]
-        for r in changes.groupBy("op").agg(F.count("*").alias("n")).collect()
-    }
-    n_i, n_u, n_d = ops.get("I", 0), ops.get("U", 0), ops.get("D", 0)
-    live = meta["live_docs"] + n_i - n_d
-    stale = meta["stale_docs"] + n_u + n_d
-    if stale > rebuild_stale_fraction * max(live, 1):
-        return _rebuild()
+    def _advance(r0, meta, cur_v: int, changes) -> dict:
+        changes, appended, live, stale = index_delta(
+            spark, table, meta, cur_v, changes, "embedding")
+        if stale > rebuild_stale_fraction * max(live, 1):
+            return _rebuild(cur_v)
 
-    payload, old_key, seq = r0
-    cents = spark.read.parquet(os.path.join(payload, "centroids"))
-    new_vecs = table_vectors(
-        changes.filter(F.col("op").isin("I", "U")).select("doc_id", "embedding")
-    )
-    assigned = new_vecs.join(
-        _nearest_cent(new_vecs, cents).select("vec_id", "cent_id"), "vec_id"
-    ).select(
-        "vec_id", "label", "v", "n2",
-        F.lit(cur_v).alias("gen"), F.col("cent_id").alias("cell"),
-    )
-    merged_dead = (
-        spark.read.parquet(os.path.join(payload, "dead"))
-        .unionByName(
-            changes.filter(F.col("op").isin("U", "D")).select(
-                phash(F.col("doc_id")).alias("vec_id"),
-                F.lit(cur_v).alias("dead_gen"),
+        payload, old_key, seq = r0
+        cents = spark.read.parquet(os.path.join(payload, "centroids"))
+        new_vecs = table_vectors(
+            changes.filter(F.col("op").isin("I", "U")).select("doc_id", "embedding")
+        )
+        assigned = new_vecs.join(
+            _nearest_cent(new_vecs, cents).select("vec_id", "cent_id"), "vec_id"
+        ).select(
+            "vec_id", "label", "v", "n2",
+            F.lit(cur_v).alias("gen"), F.col("cent_id").alias("cell"),
+        )
+        merged_dead = (
+            spark.read.parquet(os.path.join(payload, "dead"))
+            .unionByName(
+                changes.filter(F.col("op").isin("U", "D")).select(
+                    phash(F.col("doc_id")).alias("vec_id"),
+                    F.lit(cur_v).alias("dead_gen"),
+                )
             )
+            .groupBy("vec_id")
+            .agg(F.max("dead_gen").alias("dead_gen"))
         )
-        .groupBy("vec_id")
-        .agg(F.max("dead_gen").alias("dead_gen"))
-    )
-    new_meta = {"table_uuid": uid, "version": cur_v,
-                "live_docs": live, "stale_docs": stale}
+        new_meta = {"table_uuid": uid, "version": cur_v,
+                    "live_docs": live, "stale_docs": stale}
 
-    def _build(stage: str) -> None:
-        os.makedirs(stage)
-        # vectors + centroids carried as hardlinks; dead/ and sync.json are
-        # rewritten per version (each version's bookkeeping is its own)
-        artifacts.link_tree(os.path.join(payload, "vectors"),
-                            os.path.join(stage, "vectors"))
-        artifacts.link_tree(os.path.join(payload, "centroids"),
-                            os.path.join(stage, "centroids"))
-        assigned.write.mode("append").partitionBy("cell").parquet(
-            os.path.join(stage, "vectors")
-        )
-        merged_dead.write.parquet(os.path.join(stage, "dead"))
-        with open(os.path.join(stage, "sync.json"), "w") as f:
-            json.dump(new_meta, f)
+        def _build(stage: str) -> None:
+            os.makedirs(stage)
+            # vectors + centroids carried as hardlinks; dead/ and sync.json are
+            # rewritten per version (each version's bookkeeping is its own)
+            artifacts.link_tree(os.path.join(payload, "vectors"),
+                                os.path.join(stage, "vectors"))
+            artifacts.link_tree(os.path.join(payload, "centroids"),
+                                os.path.join(stage, "centroids"))
+            assigned.write.mode("append").partitionBy("cell").parquet(
+                os.path.join(stage, "vectors")
+            )
+            merged_dead.write.parquet(os.path.join(stage, "dead"))
+            artifacts.write_sync_meta(stage, new_meta)
 
-    try:
         artifacts.publish(base, artifacts.mutated_key(old_key), _build,
                           expected_seq=seq)
-    except artifacts.ArtifactConflict:
-        # a concurrent sync advanced the index: re-enter against its state
-        # (deterministic per version pair — usually lands as a noop)
-        return ivf_index_sync(
-            spark, table, path,
-            rebuild_stale_fraction=rebuild_stale_fraction,
-            lloyd_iters=lloyd_iters,
-        )
-    return {"action": "append", "version": cur_v, "live_docs": live,
-            "stale_docs": stale, "appended_docs": n_i + n_u}
+        return {"action": "append", "version": cur_v, "live_docs": live,
+                "stale_docs": stale, "appended_docs": appended}
+
+    return artifacts.sync(
+        base, table, {"table_uuid": uid}, rebuild=_rebuild, advance=_advance,
+        noop=lambda m: {"live_docs": m["live_docs"],
+                        "stale_docs": m["stale_docs"], "appended_docs": 0},
+        retry=lambda: ivf_index_sync(**call),
+        changes=changes, span=(from_version, to_version),
+    )
 
 
 def ivf_index_search(spark, path: str, query_df, *, k: int = 3, nprobe: int = 1):

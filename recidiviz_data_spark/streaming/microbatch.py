@@ -190,10 +190,9 @@ def _shared_view_diff(spark, table: Miniberg, views: list[tuple[str, str, str]])
     from collections import Counter
 
     from recidiviz_data_spark.cdc.differ import table_row_images
-    from recidiviz_data_spark.operators.aggview import view_uid
     from recidiviz_data_spark.tables import artifacts
 
-    cur_v, uid = table.current_version(), view_uid(table)
+    cur_v, uid = table.current_version(), artifacts.table_uid(table)
     behind = Counter()
     for vpath, _g, _v in views:
         meta = artifacts.sync_meta(vpath)

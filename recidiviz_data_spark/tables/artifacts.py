@@ -55,6 +55,13 @@ payload straight to ``ivf_index_search`` / ``band_index_bands``).
 Resolve-then-pin is safe because GC only removes versions superseded
 longer than the grace window ago — a just-resolved payload is either
 current or freshly superseded, both inside the window.
+
+Table-derived artifacts (the band and IVF indexes, the near-dup cluster
+table, the aggregate/distinct/top-k views) follow a miniberg table's change
+feed through ONE lifecycle driver, ``sync``: it owns the resolve, the
+identity check, the no-op, the span check of a caller's diff and the CAS
+re-entry; each artifact supplies only its rebuild, its advance (with its own
+rebuild guard) and its result fields.
 """
 
 from __future__ import annotations
@@ -63,6 +70,7 @@ import glob
 import json
 import os
 import shutil
+import tempfile
 import time
 import uuid
 
@@ -344,16 +352,17 @@ def link_tree(src: str, dst: str) -> None:
 
 
 def sync_meta(base: str) -> dict | None:
-    """The current version's ``sync.json`` bookkeeping record (written by the
-    CDC-sync lifecycles — band_index_sync / ivf_index_sync), or None if the
-    artifact is missing or was not built through a sync lifecycle."""
+    """The current version's ``sync.json`` bookkeeping record (written by
+    every artifact that follows a table through ``sync``: the band and IVF
+    indexes, the near-dup cluster table and the agg/distinct/top-k views),
+    or None if the artifact is missing or was not built through ``sync``."""
     r = resolve(base)
     return None if r is None else sync_meta_at(r[0])
 
 
 def sync_meta_at(payload: str) -> dict | None:
-    """``sync.json`` of one SPECIFIC version payload — the form the sync
-    lifecycles use so the bookkeeping they read and the seq they CAS on come
+    """``sync.json`` of one SPECIFIC version payload — the form ``sync``
+    uses so the bookkeeping it reads and the seq it CAS-publishes on come
     from the same ``resolve_full`` snapshot (re-resolving in between could
     straddle a concurrent publish)."""
     try:
@@ -361,6 +370,12 @@ def sync_meta_at(payload: str) -> dict | None:
             return json.load(f)
     except (FileNotFoundError, ValueError):
         return None
+
+
+def write_sync_meta(stage: str, meta: dict) -> None:
+    """Write ``meta`` as the ``sync.json`` of a version being staged."""
+    with open(os.path.join(stage, "sync.json"), "w") as f:
+        json.dump(meta, f)
 
 
 def mutated_key(key: str) -> str:
@@ -381,3 +396,59 @@ def miniberg_source_key(table, version: int | None = None) -> str:
     # versa)
     scope = f"@{table.branch}" if getattr(table, "branch", None) else ""
     return f"miniberg:{m['table_uuid']}{scope}:v{m['version']}"
+
+
+def table_uid(table) -> str:
+    """The source identity a synced artifact records: the table uuid, scoped
+    to the branch of a branch handle (a branch's manifest copies main's uuid
+    and its version numbering aliases main's)."""
+    uid = table.manifest()["table_uuid"]
+    branch = getattr(table, "branch", None)
+    return f"{uid}@{branch}" if branch else uid
+
+
+def default_path(table, kind: str, *spec) -> str:
+    """Default directory of a ``kind`` artifact synced to ``table``: keyed
+    on the table uuid and the branch of a branch handle, so main and each
+    branch get their own, then on the artifact's ``spec``."""
+    uid = table.manifest()["table_uuid"].replace("-", "")[:12]
+    branch = getattr(table, "branch", None)
+    name = [f"rds_{kind}", uid + (f"-{branch}" if branch else ""), *spec]
+    return os.path.join(tempfile.gettempdir(), "_".join(map(str, name)))
+
+
+def sync(base: str, table, ident: dict, *, rebuild, advance, noop, retry,
+         changes=None, span: tuple = (None, None)) -> dict:
+    """Bring the artifact under ``base`` to ``table``'s current version
+    ``cur_v``. The artifact is resolved ONCE, so the ``sync.json`` it plans
+    from and the seq it CAS-publishes on come from one pointer state:
+
+    - no record, a record whose identity differs from ``ident`` (the
+      ``table_uid`` as ``table_uuid`` plus the artifact's spec), or one
+      ahead of the table -> ``rebuild(cur_v)``;
+    - a record at ``cur_v`` -> a no-op carrying ``noop(meta)``'s fields;
+    - else ``advance(r0, meta, cur_v, changes)``: move the version
+      ``r0`` = (payload, key, seq) to ``cur_v`` and publish with
+      ``expected_seq=r0[2]`` (or fall back to ``rebuild`` under its own
+      guard). A lost CAS calls ``retry()``, which re-enters the sync with
+      the call's own bound arguments.
+
+    ``changes`` is the caller's diff of the snapshots ``span`` =
+    (from_version, to_version). It reaches ``advance`` only when the span
+    is (stored version, cur_v), else ``advance`` gets None and diffs for
+    itself: a wider diff would re-apply changes an independent sync already
+    landed, and a shorter one would stamp a stale artifact current."""
+    cur_v = table.current_version()
+    r0 = resolve_full(base)
+    meta = sync_meta_at(r0[0]) if r0 is not None else None
+    if (meta is None or any(meta.get(k) != v for k, v in ident.items())
+            or meta["version"] > cur_v):
+        return rebuild(cur_v)
+    if meta["version"] == cur_v:
+        return {"action": "noop", "version": cur_v, **noop(meta)}
+    if span != (meta["version"], cur_v):
+        changes = None
+    try:
+        return advance(r0, meta, cur_v, changes)
+    except ArtifactConflict:
+        return retry()
