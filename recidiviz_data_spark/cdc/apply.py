@@ -243,11 +243,14 @@ def apply_batch(
     ``mor_max_changed_fraction`` — the write-amplification fix for dribble
     batches at lake scale; auto-compaction bounds delta depth.
 
-    Driver-synchronous work is kept to the minimum: 2 collect jobs + 1 write
-    per batch on the common path (metrics/changed-bucket selection share one
-    aggregation; the decision-prune job is skipped below
-    ``DECISION_PRUNE_MIN_BYTES``) — the serial term that bounds scaling at
-    high executor counts.
+    Driver-synchronous work is kept to the minimum: two collects and one
+    write per batch on the common path (metrics/changed-bucket selection
+    share one aggregation; the decision-prune collect is skipped below
+    ``DECISION_PRUNE_MIN_BYTES``), and planning the target reads starts no
+    Spark job. Counted as Spark jobs, AQE sub-jobs included, that is about
+    11.5 per batch (``cdc.spark_jobs_per_batch`` in the perfbench
+    ``stream_tail`` trace: 12-event batches into a 32-bucket table) — the
+    serial term that bounds scaling at high executor counts.
     """
     t0 = time.monotonic()
     m = table.manifest()

@@ -49,6 +49,11 @@ def get_spark(
         .config("spark.sql.warehouse.dir", os.environ.get(
             "SPARK_WAREHOUSE_DIR", "/tmp/rds_spark_warehouse"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # table reads pass the manifest's explicit file paths; Spark's parallel
+        # listing (a job of one task per path past 32 paths) exists to discover
+        # files under directories, so no read may reach its threshold. Only the
+        # session conf removes the job: a reader .option() does not.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -82,6 +82,7 @@ import math
 import os
 import re
 import shutil
+import struct
 import uuid
 from time import time as _now
 
@@ -696,6 +697,11 @@ class Miniberg:
         and, on a batch-appended table, only the files whose key range
         covers the key — not the bucket's whole history.
 
+        The bucket hash runs on the driver (``key_bucket``, the same
+        ``pmod(xxhash64(key), num_buckets)`` the writers bucket by), for any
+        number of keys: planning the lookup starts no Spark job. Key columns
+        of a type ``key_bucket`` cannot hash raise ``ValueError``.
+
         The exact filter adapts to the list size: up to
         ``READ_KEYS_ISIN_MAX`` keys it is an ``isin`` literal (pushed into
         the parquet scan as an In filter); past it, a broadcast LEFT SEMI
@@ -709,14 +715,8 @@ class Miniberg:
         key_field = [
             f for f in self._schema_struct(m, m["schema_id"]).fields if f.name == key_col
         ][0]
-        kdf = spark.createDataFrame([(k,) for k in keys], T.StructType([key_field]))
         buckets = sorted(
-            r[0]
-            for r in kdf.select(
-                F.pmod(F.xxhash64(key_col), F.lit(m["num_buckets"])).cast("int").alias("b")
-            )
-            .distinct()
-            .collect()
+            {self.key_bucket(k, key_field.dataType, m["num_buckets"]) for k in keys}
         )
         files = self.files_for_keys(self.files(buckets=buckets, manifest=m), keys)
         if stats_filter:
@@ -727,6 +727,7 @@ class Miniberg:
         if len(keys) <= READ_KEYS_ISIN_MAX:
             out = out.filter(F.col(key_col).isin(keys))
         else:
+            kdf = spark.createDataFrame([(k,) for k in keys], T.StructType([key_field]))
             out = out.join(F.broadcast(kdf.distinct()), key_col, "left_semi")
         if stats_filter:
             out = _residual_filter(out, stats_filter)
@@ -1453,6 +1454,34 @@ class Miniberg:
         m = self.manifest()
         return F.pmod(F.xxhash64(F.col(m["key_col"])), F.lit(m["num_buckets"])).cast("int")
 
+    @staticmethod
+    def key_bucket(key, data_type: T.DataType, num_buckets: int) -> int:
+        """``pmod(xxhash64(key), num_buckets)`` computed on the driver: the
+        bucket ``bucket_col`` gives a key of ``data_type``, with no Spark job.
+        Hashes the bytes Spark's ``XxHash64`` hashes for the type: UTF-8 for
+        strings, 4 little-endian bytes for byte/short/int/date, 8 for
+        long/timestamp (the value's internal form, as ``createDataFrame``
+        converts it). Any other key type, or a key that does not fit its
+        type, raises ``ValueError``."""
+        if isinstance(data_type, T.StringType):
+            fmt = None
+        elif isinstance(data_type, (T.ByteType, T.ShortType, T.IntegerType, T.DateType)):
+            fmt = "<i"
+        elif isinstance(data_type, (T.LongType, T.TimestampType)):
+            fmt = "<q"
+        else:
+            raise ValueError(
+                f"no driver-side bucket hash for key type {data_type.simpleString()}"
+            )
+        try:
+            data = (key.encode("utf-8") if fmt is None
+                    else struct.pack(fmt, data_type.toInternal(key)))
+        except (AttributeError, TypeError, struct.error) as e:
+            raise ValueError(
+                f"key {key!r} does not fit key type {data_type.simpleString()}"
+            ) from e
+        return _xxh64(data) % num_buckets
+
     def lineage(self) -> list[dict]:
         rows: list[dict] = []
         for p in sorted(glob.glob(os.path.join(self.lineage_dir, "batch-*.json"))):
@@ -1506,6 +1535,55 @@ class Miniberg:
             if not young:
                 shutil.rmtree(d, ignore_errors=True)
         return removed
+
+
+_XXH_P1 = 0x9E3779B185EBCA87
+_XXH_P2 = 0xC2B2AE3D27D4EB4F
+_XXH_P3 = 0x165667B19E3779F9
+_XXH_P4 = 0x85EBCA77C2B2AE63
+_XXH_P5 = 0x27D4EB2F165667C5
+_U64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _U64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _XXH_P2) & _U64, 31) * _XXH_P1 & _U64
+
+
+def _xxh64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of ``data`` as a signed 64-bit int: Spark's ``xxhash64`` (seed
+    42) of a value whose hashed bytes are ``data``."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _XXH_P1 + _XXH_P2) & _U64, (seed + _XXH_P2) & _U64, seed,
+             (seed - _XXH_P1) & _U64]
+        while i + 32 <= n:
+            for j, lane in enumerate(struct.unpack_from("<4Q", data, i)):
+                v[j] = _xxh_round(v[j], lane)
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _U64
+        for x in v:
+            h = ((h ^ _xxh_round(0, x)) * _XXH_P1 + _XXH_P4) & _U64
+    else:
+        h = (seed + _XXH_P5) & _U64
+    h = (h + n) & _U64
+    while i + 8 <= n:
+        (lane,) = struct.unpack_from("<Q", data, i)
+        h = (_rotl(h ^ _xxh_round(0, lane), 27) * _XXH_P1 + _XXH_P4) & _U64
+        i += 8
+    if i + 4 <= n:
+        (word,) = struct.unpack_from("<I", data, i)
+        h = (_rotl(h ^ (word * _XXH_P1 & _U64), 23) * _XXH_P2 + _XXH_P3) & _U64
+        i += 4
+    for byte in data[i:]:
+        h = _rotl(h ^ (byte * _XXH_P5 & _U64), 11) * _XXH_P1 & _U64
+    h = (h ^ (h >> 33)) * _XXH_P2 & _U64
+    h = (h ^ (h >> 29)) * _XXH_P3 & _U64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
 
 
 def _residual_filter(out: DataFrame, stats_filter: dict) -> DataFrame:

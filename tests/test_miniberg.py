@@ -314,3 +314,107 @@ def test_table_changes_between_versions(spark, changelog_plain, tmp_path):
     # completeness: every membership change appears
     assert {r["doc_id"] for r in changes if r["op"] == "I"} == new_keys - old_keys
     assert {r["doc_id"] for r in changes if r["op"] == "D"} == old_keys - new_keys
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _commit_bucketed(spark, table, schema, rows, *, n_files, kind=None):
+    """Commit ``rows`` as files bucketed by Spark's own ``bucket_col`` (not
+    the driver hash under test): ``n_files`` write tasks each emit one file
+    per bucket they hold. ``kind="delta"`` marks them merge-on-read deltas."""
+    staging = table.staging_dir()
+    (spark.createDataFrame(rows, schema).repartition(n_files)
+     .withColumn("_bucket", table.bucket_col())
+     .write.partitionBy("_bucket").parquet(staging))
+    added = table.collect_staged_files(staging, table.manifest()["schema_id"])
+    if kind:
+        for e in added:
+            e["kind"] = kind
+    table.commit(added_files=added, replaced_buckets=set())
+
+
+def test_table_reads_start_no_spark_job(spark, tmp_path):
+    """Building a table read starts no Spark job: the manifest already names
+    every file, so more than 32 explicit paths must not trigger Spark's
+    parallel listing job, and ``read_keys`` hashes its keys to buckets on the
+    driver instead of collecting them from Spark."""
+    schema = T.StructType([
+        T.StructField("doc_id", T.StringType(), False),
+        T.StructField("val", T.LongType()),
+        T.StructField("_seq", T.LongType()),
+        T.StructField("_deleted", T.BooleanType()),
+    ])
+    rows = [(f"d{i:04d}", i, 0, False) for i in range(400)]
+    table = Miniberg.create(str(tmp_path / "t"), schema, num_buckets=4)
+    _commit_bucketed(spark, table, schema, rows, n_files=12)
+    _commit_bucketed(spark, table, schema, [("d0007", -7, 1, False)], n_files=1,
+                     kind="delta")
+    files = table.files()
+    deltas = [f for f in files if f.get("kind") == "delta"]
+    assert len(files) > 32 and deltas, (len(files), len(deltas))
+    delta_bucket = deltas[0]["bucket"]
+    assert len(table.files(buckets=[delta_bucket])) > 1
+
+    before = _next_job_id(spark)
+    full = table.read(spark)
+    pruned = table.read(spark, buckets=[delta_bucket])
+    keyed = table.read_keys(spark, ["d0007", "d0123"])
+    assert _next_job_id(spark) == before
+
+    assert full.count() == 400
+    got = {r["doc_id"]: r["val"] for r in keyed.collect()}
+    assert got == {"d0007": -7, "d0123": 123}
+    assert pruned.filter("doc_id = 'd0007'").first()["val"] == -7
+
+
+def test_key_bucket_matches_spark_pmod_xxhash64(spark):
+    """The driver-side bucket hash equals Spark's ``pmod(xxhash64(k), n)``
+    for string keys of every byte length 0-100 (the 32-byte stripe and the
+    8/4/1-byte tails), multibyte UTF-8, and int/long keys at their extremes."""
+    from pyspark.sql import functions as F
+
+    mixed = "aé漢😀"
+    strings = ["", "doc_00000042"]
+    for n in range(101):
+        strings.append("".join(chr(33 + (i * 7 + n) % 90) for i in range(n)))
+        strings.append("".join(mixed[(i + n) % len(mixed)] for i in range(n)))
+    ints = [0, 1, -1, 42, -42, 7, 2**31 - 1, -(2**31), 123456789, -987654321]
+    longs = ints + [2**31, -(2**31) - 1, 2**63 - 1, -(2**63), 2**40 + 3, -(2**52)]
+    ns = (1, 7, 32, 10_001)
+    for dtype, keys in ((T.StringType(), strings), (T.IntegerType(), ints),
+                        (T.LongType(), longs)):
+        df = spark.createDataFrame([(k,) for k in keys],
+                                   T.StructType([T.StructField("k", dtype)]))
+        rows = df.select(
+            "k", *[F.pmod(F.xxhash64("k"), F.lit(n)).alias(f"b{n}") for n in ns]
+        ).collect()
+        assert len(rows) == len(keys)
+        for r in rows:
+            for n in ns:
+                assert Miniberg.key_bucket(r["k"], dtype, n) == r[f"b{n}"], (
+                    dtype, r["k"], n)
+    with pytest.raises(ValueError, match="double"):
+        Miniberg.key_bucket(1.5, T.DoubleType(), 4)
+    with pytest.raises(ValueError, match="does not fit"):
+        Miniberg.key_bucket("a", T.LongType(), 4)
+
+
+def test_read_keys_on_a_long_key_table(spark, tmp_path):
+    """``read_keys`` on a LongType key (the ``vec_id`` shape) finds each key
+    in the bucket Spark wrote it to, negatives and the long extremes too."""
+    schema = T.StructType([
+        T.StructField("vec_id", T.LongType()),
+        T.StructField("label", T.StringType()),
+        T.StructField("v", T.ArrayType(T.LongType())),
+    ])
+    ids = list(range(-40, 40)) + [2**63 - 1, -(2**63), 2**40]
+    rows = [(i, f"l{i % 3}", [i % 13, -6]) for i in ids]
+    table = Miniberg.create(str(tmp_path / "vecs"), schema, key_col="vec_id",
+                            num_buckets=7)
+    _commit_bucketed(spark, table, schema, rows, n_files=3)
+    want = [-(2**63), -17, 0, 5, 2**40, 2**63 - 1]
+    got = table.read_keys(spark, want + [10**6]).collect()
+    assert sorted(r["vec_id"] for r in got) == want
+    assert {r["vec_id"]: r["label"] for r in got} == {i: f"l{i % 3}" for i in want}

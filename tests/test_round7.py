@@ -897,10 +897,15 @@ def test_agg_view_follows_stream(spark, tmp_path):
         stream_apply_available_now,
     )
 
+    # the file stream source orders files by mtime (millisecond grain), so
+    # each batch file gets its own increasing mtime: base + bid seconds
+    base = time.time() - 60
+
     def write_batch(bid, rows):
         # rows: (event_seq, op, doc_id, source|None, val|None)
         bdir = tmp_path / "cl" / f"batch_id={bid}"
         bdir.mkdir(parents=True, exist_ok=True)
+        path = str(bdir / "part-0.parquet")
         pq.write_table(
             pa.table({
                 "event_seq": pa.array([r[0] for r in rows], pa.int64()),
@@ -914,8 +919,9 @@ def test_agg_view_follows_stream(spark, tmp_path):
                 "source": pa.array([r[3] for r in rows], pa.string()),
                 "val": pa.array([r[4] for r in rows], pa.int32()),
             }),
-            str(bdir / "part-0.parquet"),
+            path,
         )
+        os.utime(path, (base + bid, base + bid))
 
     write_batch(0, [(i + 1, "I", f"doc_{i:02d}", f"s{i % 3}", i * 10)
                     for i in range(12)])

@@ -41,6 +41,8 @@ spark = (
     .config("spark.sql.shuffle.partitions", "32")
     .config("spark.ui.enabled", "false")
     .config("spark.driver.memory", "16g")
+    # as session.get_spark: table reads pass explicit paths, no listing job
+    .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
