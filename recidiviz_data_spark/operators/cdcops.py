@@ -78,11 +78,14 @@ def cdc_differ_opcounts(spark, sf_dir):
 
 
 def _workdir(tag: str, params: dict) -> str:
-    """/tmp workdir keyed on (tag, generator params) — code-version-proof:
-    changing ANY gen_changelog argument changes the key, so a stale cached
-    changelog/table from older parameters can never be served silently."""
+    """/tmp workdir keyed on (tag, generator params, table format) —
+    code-version-proof: changing ANY gen_changelog argument or the miniberg
+    manifest format changes the key, so a stale cached changelog/table from
+    older parameters or an older format can never be served silently."""
+    from recidiviz_data_spark.tables.miniberg import FORMAT
+
     sig = json.dumps(params, sort_keys=True)
-    h = hashlib.md5(f"{tag}:{sig}".encode()).hexdigest()[:10]
+    h = hashlib.md5(f"{tag}:{sig}:{FORMAT}".encode()).hexdigest()[:10]
     return os.path.join(tempfile.gettempdir(), f"rds_cdc_{tag}_{h}")
 
 

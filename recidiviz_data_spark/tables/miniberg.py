@@ -30,40 +30,35 @@ staging write and the manifest link) are invisible: the manifest is the sole
 source of truth. ``gc_orphans`` removes them (with a grace window so a racing
 writer's just-staged files survive until its CAS resolves).
 
-TWO-LEVEL MANIFEST (the Iceberg manifest-list analog): ``v{N}.json`` holds
-one summary row per bucket (sidecar path + n_files/rows/bytes) and the file
-entries live in content-addressed, immutable per-bucket sidecars under
-``meta/fm/<md5>.json``. Consequences at lake scale:
+MANIFEST TREE (the Iceberg manifest-list -> manifest analog), one layout
+for every bucket count. The root ``v{N}.json`` holds ``bucket_ranges =
+{size, ranges}``: ``size = isqrt(num_buckets)`` buckets per range, and
+``ranges[lo] = {path, n_buckets, n_files, rows, bytes}`` for every range
+that holds a bucket. Each ``path`` names an immutable, content-addressed
+RANGE manifest under ``meta/fm/<md5>.json`` mapping each of its buckets to
+that bucket's summary (sidecar path + n_files/rows/bytes[/keys]); the
+SIDECAR, also content-addressed under ``meta/fm/``, lists the bucket's file
+entries. Consequences:
 
-- commit is O(buckets): carried buckets re-reference their existing sidecar
-  verbatim (same content -> same hash -> no write); only replaced buckets
-  get new sidecars. The driver never parses the full file list to commit.
-- read is O(touched buckets): bucket pruning prunes the manifest parse too.
-- legacy single-level manifests (a top-level ``files`` list) remain
-  readable; the first commit on top of one migrates it to sidecars.
+- a commit touching k buckets rewrites at most k range manifests, their
+  sidecars and a ~sqrt(B)-entry root; untouched ranges and buckets are
+  carried verbatim (same content -> same hash -> zero writes), so the driver
+  never parses the full file list or the full bucket map to commit.
+- reads resolve bucket -> range -> sidecar, loading only the touched
+  buckets' ranges and sidecars: bucket pruning prunes the manifest parse.
+- the diff of two snapshots loads only ranges whose path differs.
 
-THIRD LEVEL — BUCKET-RANGE MANIFESTS (gated on ``num_buckets >
-RANGE_LAYOUT_MIN_BUCKETS``): past ~10^4 buckets the O(buckets) inline
-``buckets`` map makes ``v{N}.json`` itself the commit bottleneck (13 MiB /
-0.85 s per incremental commit at 10^5 — measured, BENCH/BASELINE.md
-"Manifest metadata scale"). Above the gate the root instead holds ~sqrt(B)
-entries ``bucket_ranges.ranges[lo] = {path, n_files, rows, bytes,
-n_buckets}``, each pointing at an immutable content-addressed RANGE manifest
-(``meta/fm/``, same CAS rules as sidecars) holding that range's per-bucket
-summaries. A commit touching k buckets rewrites k range manifests + a
-KiB-scale root; untouched ranges are carried verbatim (same hash -> zero
-writes). Reads resolve bucket -> range -> sidecar with one extra hop.
-Below the gate nothing changes — the inline two-level layout stays, and a
-``split_buckets`` crossing the gate migrates the layout in that one commit.
+Measured (``tools/manifest_scale_bench.py``, BENCH/BASELINE.md "One
+manifest layout"): a commit touching one bucket takes about 3 ms at 64
+buckets, 4 ms at 10^4 and 9 ms at 10^5, whose root is 53 KiB. A
+``v{N}.json`` of any other ``format`` is refused on read.
 
 LIMITS (documented scale envelope; see maintenance.py for the mitigations):
 
-- **inline v{N}.json is O(buckets)** (~90 bytes/bucket): 10^5 buckets ≈
-  13 MiB per snapshot and 0.85 s per incremental commit (measured —
-  tools/manifest_scale_bench.py) — which is exactly why the third level
-  above kicks in past RANGE_LAYOUT_MIN_BUCKETS. Compaction
-  (``compact``, or ``compact='auto'`` in apply) bounds files at
-  ~``compact_files_per_bucket`` per bucket, so sidecars stay tiny.
+- **a full bootstrap commit is O(buckets)** (one sidecar per bucket; about
+  36 s at 10^5 buckets, one-time). Compaction (``compact``, or
+  ``compact='auto'`` in apply) bounds files at ~``compact_files_per_bucket``
+  per bucket, so sidecars stay tiny.
 - **num_buckets is chosen at creation**, and a COW rewrite touches whole
   buckets — at 100 TB a 16-bucket table would make every merge rewrite
   multi-TB. ``maintenance.split_buckets`` re-buckets N -> factor*N in one
@@ -77,6 +72,7 @@ from __future__ import annotations
 
 import glob
 import hashlib
+import itertools
 import json
 import math
 import os
@@ -91,16 +87,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-FORMAT = "miniberg/1"
+FORMAT = "miniberg/2"
 # _seq: last-applied event_seq (staleness watermark per row)
 # _deleted: tombstone flag — deletes keep the row (payload nulled) so a
 #   later-arriving STALE update cannot resurrect the doc; reads filter these.
 INTERNAL_COLS = ("_seq", "_deleted")
-
-# third-level gate: tables with more buckets than this store per-bucket
-# summaries in bucket-RANGE manifests instead of inline in v{N}.json (see the
-# module docstring; tests monkeypatch this to exercise the layout cheaply)
-RANGE_LAYOUT_MIN_BUCKETS = 10_000
 
 # read_keys: largest key list rendered as an `isin` literal (parquet In
 # pushdown); bigger lists switch to a broadcast semi-join (a 10^5-literal In
@@ -205,13 +196,8 @@ class Miniberg:
             "bucket_expr": f"pmod(xxhash64({key_col}), {num_buckets})",
             "last_applied_batch": -1,
             "props": props or {},
+            "bucket_ranges": {"size": cls._range_size(num_buckets), "ranges": {}},
         }
-        if num_buckets > RANGE_LAYOUT_MIN_BUCKETS:
-            # third level: root holds bucket-RANGE manifest refs, not buckets
-            manifest["bucket_ranges"] = {"size": cls._range_size(num_buckets),
-                                         "ranges": {}}
-        else:
-            manifest["buckets"] = {}  # two-level: bucket -> sidecar summary
         t._write_manifest(0, manifest)
         return t
 
@@ -232,9 +218,18 @@ class Miniberg:
         return max(versions)
 
     def manifest(self, version: int | None = None) -> dict:
+        """Snapshot ``version`` (default: the current one). A manifest of
+        another ``format`` raises ``ValueError``: read with this layout, it
+        would name no files, and GC or expiry would then delete live data."""
         v = self.current_version() if version is None else version
         with open(self._vpath(v)) as f:
-            return json.load(f)
+            m = json.load(f)
+        if m.get("format") != FORMAT:
+            raise ValueError(
+                f"{self._vpath(v)} has manifest format {m.get('format')!r}; "
+                f"this engine reads {FORMAT!r} only"
+            )
+        return m
 
     def versions(self) -> list[int]:
         """Existing (non-expired) snapshot versions, ascending."""
@@ -284,22 +279,13 @@ class Miniberg:
         finally:
             os.unlink(tmp)
 
-    # ------------------------------------------------------- two-level files
-    @staticmethod
-    def _sidecar_payload(entries: list[dict]) -> str:
-        return json.dumps(sorted(entries, key=lambda e: e["path"]), sort_keys=True)
-
-    def _write_sidecar(self, entries: list[dict]) -> str:
-        """Write one bucket's file-entry list as a content-addressed sidecar
-        (``meta/fm/<md5>.json``). Immutable + idempotent: an unchanged bucket
-        re-derives the same hash, so carrying it across snapshots writes
-        nothing; two racing writers of the same content are both correct."""
-        return self._write_blob(self._sidecar_payload(entries))
-
+    # ------------------------------------------------------- manifest tree
     def _write_blob(self, payload: str) -> str:
         """Content-addressed immutable JSON blob under ``meta/fm/`` — THE
-        single write rule shared by bucket sidecars and bucket-range
-        manifests (same hashing, CAS, and GC-grace-refresh semantics)."""
+        single write rule shared by bucket sidecars and range manifests
+        (same hashing, CAS, and GC-grace-refresh semantics). Unchanged
+        content re-derives the same hash, so carrying it writes nothing; two
+        racing writers of the same content are both correct."""
         os.makedirs(self.fm_dir, exist_ok=True)
         h = hashlib.md5(payload.encode()).hexdigest()
         rel = os.path.join("meta", "fm", f"{h}.json")
@@ -328,7 +314,17 @@ class Miniberg:
                 return self._write_blob(payload)
         return rel
 
-    # ---------------------------------------------- third-level range layout
+    def _restore_blobs(self, written: dict[str, str]) -> None:
+        """Close the blob-reuse/GC race after a manifest CAS: a concurrent
+        gc_orphans that read a stale mtime just before ``_write_blob``'s
+        refresh can unlink a REUSED (previously orphaned) blob before the
+        manifest landed. Recreate any missing one from its in-memory payload
+        (content-addressed -> same path). Carried blobs are pinned by the
+        parent manifest, so GC never eats them."""
+        for rel, payload in written.items():
+            if not os.path.exists(os.path.join(self.root, rel)):
+                self._write_blob(payload)
+
     @staticmethod
     def _range_size(num_buckets: int) -> int:
         """Buckets per range manifest: ~sqrt(B) balances root size against
@@ -339,138 +335,91 @@ class Miniberg:
     def _range_lo(bucket: int, size: int) -> str:
         return str((bucket // size) * size)
 
-    def _load_range(self, rel_path: str) -> dict[str, dict]:
-        """A range manifest's {bucket_str: summary-with-path} map."""
+    def _load_blob(self, rel_path: str):
+        """A ``meta/fm/`` blob: a range manifest's {bucket_str:
+        summary-with-path} map or a sidecar's file-entry list."""
         with open(os.path.join(self.root, rel_path)) as f:
             return json.load(f)
 
-    def _bucket_map(self, m: dict) -> dict[str, dict]:
-        """Full {bucket_str: summary-with-path} map regardless of layout —
-        O(buckets); pruned access goes through files()/_iter_bucket_summaries."""
-        if "bucket_ranges" in m:
-            out: dict[str, dict] = {}
-            for rs in m["bucket_ranges"]["ranges"].values():
-                out.update(self._load_range(rs["path"]))
-            return out
-        return dict(m.get("buckets", {}))
-
-    def _iter_bucket_summaries(self, m: dict, buckets: list[int] | None = None):
-        """(bucket_str, summary) pairs, loading ONLY the requested buckets'
-        range manifests under the third-level layout (the read-side hop:
-        bucket -> range -> sidecar)."""
-        if "bucket_ranges" in m:
-            size = m["bucket_ranges"]["size"]
-            ranges = m["bucket_ranges"]["ranges"]
-            if buckets is None:
-                for lo in sorted(ranges, key=int):
-                    yield from sorted(
-                        self._load_range(ranges[lo]["path"]).items(),
-                        key=lambda kv: int(kv[0]),
-                    )
-                return
-            want = {str(b) for b in buckets}
-            for lo in sorted({self._range_lo(int(b), size) for b in want}, key=int):
-                rs = ranges.get(lo)
-                if rs is None:
-                    continue
-                rm = self._load_range(rs["path"])
-                for bk in sorted(want, key=int):
-                    if bk in rm and self._range_lo(int(bk), size) == lo:
-                        yield bk, rm[bk]
-            return
-        bset = None if buckets is None else {str(b) for b in buckets}
-        for bk, s in m.get("buckets", {}).items():
-            if bset is None or bk in bset:
-                yield bk, s
-
-    def _load_sidecar(self, rel_path: str) -> list[dict]:
-        with open(os.path.join(self.root, rel_path)) as f:
-            return json.load(f)
-
-    def bucket_summaries(self_or_m, m: dict | None = None) -> dict[int, dict]:
-        """Per-bucket {n_files, rows, bytes[, path]} — never touches
-        sidecars. Callable both ways: ``table.bucket_summaries(m)`` (works
-        for every layout, including the third-level range layout, which
-        needs filesystem access to load range manifests) and the legacy
-        static form ``Miniberg.bucket_summaries(m)`` (inline layouts only).
-        Legacy single-level manifests are summarized from their inline file
-        list."""
-        table = self_or_m if isinstance(self_or_m, Miniberg) else None
-        if m is None:
-            m = table.manifest() if table is not None else self_or_m
-        if "bucket_ranges" in m:
-            if table is None:
-                raise ValueError(
-                    "range-layout manifest: call table.bucket_summaries(m) "
-                    "(loading range manifests needs the table root)"
-                )
-            return {int(bk): dict(s) for bk, s in table._bucket_map(m).items()}
-        if "buckets" in m:
-            return {int(bk): dict(s) for bk, s in m["buckets"].items()}
-        out: dict[int, dict] = {}
-        for f in m.get("files", []):
-            s = out.setdefault(f["bucket"], {"n_files": 0, "rows": 0, "bytes": 0})
-            s["n_files"] += 1
-            s["rows"] += f.get("rows", 0)
-            s["bytes"] += f.get("bytes", 0)
+    def _bucket_map(self, m: dict, los=None) -> dict[str, dict]:
+        """{bucket_str: summary-with-path} of the ranges ``los`` (default:
+        all of them — O(buckets))."""
+        ranges = m["bucket_ranges"]["ranges"]
+        out: dict[str, dict] = {}
+        for lo in ranges if los is None else los:
+            if lo in ranges:
+                out.update(self._load_blob(ranges[lo]["path"]))
         return out
+
+    def _iter_bucket_summaries(self, m: dict, buckets=None):
+        """(bucket_str, summary) pairs in bucket order, loading ONLY the
+        requested buckets' range manifests."""
+        size = m["bucket_ranges"]["size"]
+        ranges = m["bucket_ranges"]["ranges"]
+        if buckets is None:
+            for lo in sorted(ranges, key=int):
+                yield from sorted(self._load_blob(ranges[lo]["path"]).items(),
+                                  key=lambda kv: int(kv[0]))
+            return
+        want = sorted({int(b) for b in buckets})
+        for lo, group in itertools.groupby(want, key=lambda b: self._range_lo(b, size)):
+            if lo not in ranges:
+                continue
+            rm = self._load_blob(ranges[lo]["path"])
+            for b in group:
+                if str(b) in rm:
+                    yield str(b), rm[str(b)]
+
+    def _changed_bucket_set(self, a: dict, b: dict) -> set[int]:
+        """Buckets whose sidecar path differs between manifests ``a`` and
+        ``b`` — THE single snapshot diff (rebase, publish, changed_buckets).
+        Equal range paths mean equal contents, so with one range size only
+        ranges whose path differs are loaded: O(ranges + changed buckets).
+        Manifests of different bucket functions compare every bucket."""
+        ra, rb = a["bucket_ranges"], b["bucket_ranges"]
+        los = None
+        if ra["size"] == rb["size"]:
+            los = {
+                lo for lo in set(ra["ranges"]) | set(rb["ranges"])
+                if ra["ranges"].get(lo, {}).get("path")
+                != rb["ranges"].get(lo, {}).get("path")
+            }
+        sa, sb = self._bucket_map(a, los), self._bucket_map(b, los)
+        return {
+            int(bk) for bk in set(sa) | set(sb)
+            if sa.get(bk, {}).get("path") != sb.get(bk, {}).get("path")
+        }
+
+    def bucket_summaries(self, m: dict | None = None) -> dict[int, dict]:
+        """Per-bucket {path, n_files, rows, bytes[, keys]} of manifest ``m``
+        (default: the current one) — loads range manifests, never a
+        sidecar."""
+        m = self.manifest() if m is None else m
+        return {int(bk): s for bk, s in self._bucket_map(m).items()}
 
     def files(
         self, version: int | None = None, *, buckets: list[int] | None = None,
         manifest: dict | None = None,
     ) -> list[dict]:
-        """File entries for a snapshot, loading ONLY the sidecars (and, on
-        the range layout, range manifests) of the requested buckets — bucket
-        pruning prunes the manifest parse too."""
+        """File entries for a snapshot, loading ONLY the range manifests and
+        sidecars of the requested buckets — bucket pruning prunes the
+        manifest parse too."""
         m = manifest if manifest is not None else self.manifest(version)
-        if "buckets" not in m and "bucket_ranges" not in m:  # legacy layout
-            fs = m.get("files", [])
-            if buckets is None:
-                return list(fs)
-            bset = set(buckets)
-            return [f for f in fs if f["bucket"] in bset]
-        out: list[dict] = []
-        for _bk, s in self._iter_bucket_summaries(m, buckets):
-            out.extend(self._load_sidecar(s["path"]))
-        return out
-
-    def _bucket_entries_migrated(
-        self, m: dict, exclude: set[int], record: dict | None = None
-    ) -> dict[str, dict]:
-        """Parent manifest's buckets OUTSIDE ``exclude`` as {bucket_str:
-        summary-with-path}. A legacy parent is migrated here: its inline list
-        is grouped per bucket and written out as sidecars ONCE (the first
-        commit on top of a single-level manifest upgrades the layout);
-        excluded (replaced) buckets are never written — their sidecar would
-        be dead on arrival. ``record`` collects {rel: payload} of every blob
-        written, for the post-CAS GC-race re-check."""
-        if "buckets" in m or "bucket_ranges" in m:
-            return {
-                bk: s
-                for bk, s in self._bucket_map(m).items()
-                if int(bk) not in exclude
-            }
-        grouped: dict[str, list[dict]] = {}
-        for f in m.get("files", []):
-            if f["bucket"] in exclude:
-                continue
-            grouped.setdefault(str(f["bucket"]), []).append(f)
-        out: dict[str, dict] = {}
-        for bk, entries in grouped.items():
-            out[bk] = self._bucket_summary(entries, record)
-        return out
+        return [
+            e for _bk, s in self._iter_bucket_summaries(m, buckets)
+            for e in self._load_blob(s["path"])
+        ]
 
     def _bucket_summary(
-        self, entries: list[dict], record: dict | None, keys: int | None = None
+        self, entries: list[dict], record: dict[str, str], keys: int | None = None
     ) -> dict:
-        """Write one bucket's sidecar + return its summary row — THE single
-        add/merge rule shared by the inline and range commit paths. ``keys``
+        """Write one bucket's sidecar + return its summary row. ``keys``
         stamps the bucket's exact logical key count when the writer knows it
-        (see ``commit``)."""
-        payload = self._sidecar_payload(entries)
+        (see ``commit``). ``record`` collects {rel: payload} of every blob
+        written, for the post-CAS ``_restore_blobs``."""
+        payload = json.dumps(sorted(entries, key=lambda e: e["path"]), sort_keys=True)
         rel = self._write_blob(payload)
-        if record is not None:
-            record[rel] = payload
+        record[rel] = payload
         out = {
             "path": rel,
             "n_files": len(entries),
@@ -480,6 +429,38 @@ class Miniberg:
         if keys is not None:
             out["keys"] = keys
         return out
+
+    def _range_summary(self, rmap: dict[str, dict], record: dict[str, str]) -> dict:
+        """Write one range manifest + return its root row."""
+        payload = json.dumps(rmap, sort_keys=True)
+        rel = self._write_blob(payload)
+        record[rel] = payload
+        return {
+            "path": rel,
+            "n_buckets": len(rmap),
+            "n_files": sum(s["n_files"] for s in rmap.values()),
+            "rows": sum(s.get("rows", 0) for s in rmap.values()),
+            "bytes": sum(s.get("bytes", 0) for s in rmap.values()),
+        }
+
+    def _ranges_from_summaries(
+        self, summaries: dict[str, dict], num_buckets: int, record: dict[str, str]
+    ) -> dict:
+        """The ``bucket_ranges`` block of a full {bucket_str: summary} map —
+        for a new bucket function (split) and ``publish_branch``. Range
+        manifests are content-addressed, so a range whose contents did not
+        change is rewritten to the path it already has."""
+        size = self._range_size(num_buckets)
+        grouped: dict[str, dict] = {}
+        for bk, s in summaries.items():
+            grouped.setdefault(self._range_lo(int(bk), size), {})[bk] = s
+        return {
+            "size": size,
+            "ranges": {
+                lo: self._range_summary(rmap, record)
+                for lo, rmap in sorted(grouped.items(), key=lambda kv: int(kv[0]))
+            },
+        }
 
     # ------------------------------------------------------------- schema
     def spark_schema(self, version: int | None = None, *, include_internal: bool = True) -> T.StructType:
@@ -858,7 +839,7 @@ class Miniberg:
         """The rebase admissibility check: None = the conflict is real
         (overlapping buckets / schema or bucket-function change / watermark
         already advanced past ours), else the new parent version to retry
-        against. O(buckets) — compares the two manifests' summary maps."""
+        against. Loads only the ranges the racing commit rewrote."""
         try:
             cur_v = self.current_version()
         except FileNotFoundError:
@@ -877,39 +858,7 @@ class Miniberg:
             and cur_m["last_applied_batch"] >= last_applied_batch
         ):
             return None
-        if ("bucket_ranges" in old_m) != ("bucket_ranges" in cur_m):
-            return None  # layout migrated mid-race — replay
-        if "bucket_ranges" in old_m:
-            obr, cbr = old_m["bucket_ranges"], cur_m["bucket_ranges"]
-            if obr["size"] != cbr["size"]:
-                return None
-            # O(ranges) root diff; only DIFFERING ranges load their manifests
-            touched: set[int] = set()
-            for lo in set(obr["ranges"]) | set(cbr["ranges"]):
-                op = obr["ranges"].get(lo, {}).get("path")
-                cp = cbr["ranges"].get(lo, {}).get("path")
-                if op == cp:
-                    continue
-                om = self._load_range(op) if op else {}
-                cm = self._load_range(cp) if cp else {}
-                touched |= {
-                    int(bk)
-                    for bk in set(om) | set(cm)
-                    if om.get(bk, {}).get("path") != cm.get(bk, {}).get("path")
-                }
-            if touched & our_buckets:
-                return None
-            return cur_v
-        ob = old_m.get("buckets", {})
-        cb = cur_m.get("buckets", {})
-        if "buckets" not in old_m or "buckets" not in cur_m:
-            return None  # legacy layout: no cheap per-bucket diff — replay
-        touched = {
-            int(bk)
-            for bk in set(ob) | set(cb)
-            if ob.get(bk, {}).get("path") != cb.get(bk, {}).get("path")
-        }
-        if touched & our_buckets:
+        if self._changed_bucket_set(old_m, cur_m) & our_buckets:
             return None
         return cur_v
 
@@ -938,35 +887,28 @@ class Miniberg:
         added_by_bucket: dict[str, list[dict]] = {}
         for f in added_files:
             added_by_bucket.setdefault(str(f["bucket"]), []).append(f)
-        target_buckets = num_buckets if num_buckets is not None else m["num_buckets"]
+        keys = {str(b): k for b, k in (bucket_keys or {}).items()}
         if num_buckets is not None and num_buckets != m["num_buckets"]:
             # a manifest may never mix bucket functions: EVERY pre-existing
-            # bucket must be replaced in the same commit
-            leftover = [
-                bk for bk, _s in self._iter_bucket_summaries(m)
-                if int(bk) not in replaced
-            ]
+            # bucket must be replaced in the same commit, so the new map is
+            # the added buckets alone
+            leftover = [bk for bk in self._bucket_map(m) if int(bk) not in replaced]
             if leftover:
                 raise CommitConflict(
                     "num_buckets change requires replacing every existing "
                     f"bucket in the same commit ({len(leftover)} buckets carried)"
                 )
-        keys = {str(b): k for b, k in (bucket_keys or {}).items()}
-        if target_buckets > RANGE_LAYOUT_MIN_BUCKETS:
-            new["bucket_ranges"] = self._commit_ranges(
-                m, replaced, added_by_bucket, written_blobs, target_buckets, keys
+            new["bucket_ranges"] = self._ranges_from_summaries(
+                {
+                    bk: self._bucket_summary(entries, written_blobs, keys.get(bk))
+                    for bk, entries in added_by_bucket.items()
+                },
+                num_buckets, written_blobs,
             )
-            new.pop("buckets", None)
         else:
-            carried = self._bucket_entries_migrated(m, exclude=replaced, record=written_blobs)
-            new_buckets = dict(carried)
-            for bk, entries in added_by_bucket.items():
-                if bk in new_buckets:  # append into a carried bucket (delta path)
-                    entries = self._load_sidecar(new_buckets[bk]["path"]) + entries
-                new_buckets[bk] = self._bucket_summary(entries, written_blobs, keys.get(bk))
-            new["buckets"] = new_buckets
-            new.pop("bucket_ranges", None)
-        new.pop("files", None)  # layout migration: inline list never carried
+            new["bucket_ranges"] = self._commit_ranges(
+                m, replaced, added_by_bucket, written_blobs, keys
+            )
         if schema_fields is not None:
             old_fields = m["schemas"][str(m["schema_id"])]["fields"]
             if schema_fields["fields"] != old_fields:
@@ -991,16 +933,7 @@ class Miniberg:
             new["num_buckets"] = num_buckets
             new["bucket_expr"] = f"pmod(xxhash64({m['key_col']}), {num_buckets})"
         self._write_manifest(new["version"], new)
-        # close the blob-reuse/GC race: a concurrent gc_orphans that read
-        # a stale mtime just before _write_blob's utime refresh can unlink
-        # a REUSED (previously orphaned) sidecar/range manifest before this
-        # CAS landed. Re-check now that the manifest is durable and recreate
-        # from the in-memory payloads (content-addressed -> same path).
-        # Carried blobs are pinned by the parent manifest, so GC never eats
-        # them.
-        for rel, payload in written_blobs.items():
-            if not os.path.exists(os.path.join(self.root, rel)):
-                self._write_blob(payload)
+        self._restore_blobs(written_blobs)
         if lineage_rows:
             lid = last_applied_batch if last_applied_batch is not None else new["version"]
             with open(os.path.join(self.lineage_dir, f"batch-{lid}.json"), "w") as f:
@@ -1013,89 +946,39 @@ class Miniberg:
         replaced: set[int],
         added_by_bucket: dict[str, list[dict]],
         written_blobs: dict[str, str],
-        target_buckets: int,
-        keys: dict[str, int] | None = None,
+        keys: dict[str, int],
     ) -> dict:
-        """Build the new ``bucket_ranges`` block: a same-size parent carries
-        untouched range manifests verbatim (content-addressed — zero writes;
-        the commit round-trips a ~sqrt(B)-entry root plus only the touched
-        ranges) and rewrites only ranges containing replaced/added buckets.
-        A layout migration (inline/legacy parent crossing the gate, or a
-        bucket-function change) rebuilds the range set from the full map
-        once."""
-        size = self._range_size(target_buckets)
-        same = (
-            "bucket_ranges" in m
-            and m["bucket_ranges"]["size"] == size
-            and target_buckets == m["num_buckets"]
-        )
-
-        def _range_summary(rmap: dict[str, dict]) -> dict:
-            payload = json.dumps(rmap, sort_keys=True)
-            rel = self._write_blob(payload)
-            written_blobs[rel] = payload
-            return {
-                "path": rel,
-                "n_buckets": len(rmap),
-                "n_files": sum(s["n_files"] for s in rmap.values()),
-                "rows": sum(s.get("rows", 0) for s in rmap.values()),
-                "bytes": sum(s.get("bytes", 0) for s in rmap.values()),
-            }
-
-        if same:
-            old_ranges = m["bucket_ranges"]["ranges"]
-            touched = {
-                self._range_lo(int(bk), size)
-                for bk in ({str(b) for b in replaced} | set(added_by_bucket))
-            }
-            new_ranges = {
-                lo: dict(rs) for lo, rs in old_ranges.items() if lo not in touched
-            }
-            for lo in sorted(touched, key=int):
-                rmap = (
-                    dict(self._load_range(old_ranges[lo]["path"]))
-                    if lo in old_ranges
-                    else {}
-                )
-                for bk in list(rmap):
-                    if int(bk) in replaced:
-                        del rmap[bk]
-                for bk, entries in added_by_bucket.items():
-                    if self._range_lo(int(bk), size) != lo:
-                        continue
-                    if bk in rmap:  # append into a carried bucket (delta path)
-                        entries = self._load_sidecar(rmap[bk]["path"]) + entries
-                    rmap[bk] = self._bucket_summary(
-                        entries, written_blobs, (keys or {}).get(bk)
-                    )
-                if rmap:
-                    new_ranges[lo] = _range_summary(rmap)
-            return {"size": size, "ranges": new_ranges}
-        # migration / bucket-function change: full parent map minus replaced,
-        # plus added, regrouped into fresh ranges (one-time O(buckets))
-        full = self._bucket_entries_migrated(m, exclude=replaced, record=written_blobs)
+        """The new ``bucket_ranges`` block of a commit that keeps the bucket
+        function: untouched range manifests are carried verbatim, and only
+        ranges holding a replaced or added bucket are loaded and rewritten
+        (the commit round-trips a ~sqrt(B)-entry root plus those ranges)."""
+        size = m["bucket_ranges"]["size"]
+        old_ranges = m["bucket_ranges"]["ranges"]
+        touched: dict[str, dict[str, list[dict]]] = {}  # lo -> added buckets
+        for b in replaced:
+            touched.setdefault(self._range_lo(b, size), {})
         for bk, entries in added_by_bucket.items():
-            if bk in full:
-                entries = self._load_sidecar(full[bk]["path"]) + entries
-            full[bk] = self._bucket_summary(
-                entries, written_blobs, (keys or {}).get(bk)
-            )
-        grouped: dict[str, dict] = {}
-        for bk, s in full.items():
-            grouped.setdefault(self._range_lo(int(bk), size), {})[bk] = s
-        return {
-            "size": size,
-            "ranges": {
-                lo: _range_summary(rmap)
-                for lo, rmap in sorted(grouped.items(), key=lambda kv: int(kv[0]))
-            },
-        }
+            touched.setdefault(self._range_lo(int(bk), size), {})[bk] = entries
+        new_ranges = {lo: rs for lo, rs in old_ranges.items() if lo not in touched}
+        for lo, added in sorted(touched.items(), key=lambda kv: int(kv[0])):
+            rmap = {
+                bk: s for bk, s in self._bucket_map(m, [lo]).items()
+                if int(bk) not in replaced
+            }
+            for bk, entries in added.items():
+                if bk in rmap:  # append into a carried bucket (delta path)
+                    entries = self._load_blob(rmap[bk]["path"]) + entries
+                rmap[bk] = self._bucket_summary(entries, written_blobs, keys.get(bk))
+            if rmap:
+                new_ranges[lo] = self._range_summary(rmap, written_blobs)
+        return {"size": size, "ranges": new_ranges}
 
     def rollback(self, to_version: int) -> int:
         """Restore an earlier snapshot's contents as a NEW version (Iceberg's
         rollback semantics: history is never rewritten — the rollback is one
-        more commit whose buckets re-reference the old version's sidecars,
-        an O(buckets) metadata operation that moves zero data bytes).
+        more commit whose root re-references the old version's range
+        manifests, an O(ranges) metadata operation that moves zero data
+        bytes).
 
         ``last_applied_batch`` reverts too, so re-tailing the changelog
         replays everything after the restored watermark (the time-travel +
@@ -1106,15 +989,9 @@ class Miniberg:
         new = dict(cur)
         new["version"] = parent_v + 1
         new["parent"] = parent_v
-        if "bucket_ranges" in old:
-            # range manifests are content-addressed + immutable: the restored
-            # snapshot re-references them verbatim (still O(ranges) metadata)
-            new["bucket_ranges"] = old["bucket_ranges"]
-            new.pop("buckets", None)
-        else:
-            new["buckets"] = self._bucket_entries_migrated(old, exclude=set())
-            new.pop("bucket_ranges", None)
-        new.pop("files", None)
+        # range manifests are content-addressed + immutable: the restored
+        # snapshot re-references them verbatim (O(ranges) metadata)
+        new["bucket_ranges"] = old["bucket_ranges"]
         # restored state must be read under the schema it was written with
         new["schema_id"] = old["schema_id"]
         new["num_buckets"] = old["num_buckets"]
@@ -1213,40 +1090,6 @@ class Miniberg:
         d = os.path.join(self.root, "meta", "branches", name)
         shutil.rmtree(d, ignore_errors=True)
 
-    def _layout_from_summaries(self, new: dict, summaries: dict[str, dict],
-                               record: dict[str, str] | None = None) -> None:
-        """Install a full {bucket_str: summary-with-path} map into manifest
-        ``new`` under whatever layout its num_buckets calls for. Range
-        manifests are content-addressed, so regrouping rewrites nothing for
-        ranges whose contents did not change. ``record`` collects
-        {rel_path: payload} for every blob written, so the caller can re-check
-        them after its manifest CAS (the blob-reuse/GC race _commit_once
-        closes the same way)."""
-        nb = new["num_buckets"]
-        if nb > RANGE_LAYOUT_MIN_BUCKETS:
-            size = self._range_size(nb)
-            grouped: dict[str, dict] = {}
-            for bk, s in summaries.items():
-                grouped.setdefault(self._range_lo(int(bk), size), {})[bk] = s
-            ranges: dict[str, dict] = {}
-            for lo, rmap in sorted(grouped.items(), key=lambda kv: int(kv[0])):
-                payload = json.dumps(rmap, sort_keys=True)
-                rel = self._write_blob(payload)
-                if record is not None:
-                    record[rel] = payload
-                ranges[lo] = {
-                    "path": rel,
-                    "n_buckets": len(rmap),
-                    "n_files": sum(s["n_files"] for s in rmap.values()),
-                    "rows": sum(s.get("rows", 0) for s in rmap.values()),
-                    "bytes": sum(s.get("bytes", 0) for s in rmap.values()),
-                }
-            new["bucket_ranges"] = {"size": size, "ranges": ranges}
-            new.pop("buckets", None)
-        else:
-            new["buckets"] = dict(summaries)
-            new.pop("bucket_ranges", None)
-
     def publish_branch(self, name: str, *, drop: bool = True,
                        rebase_retries: int = 3) -> int:
         """Merge a branch's state into main as ONE atomic commit — the
@@ -1274,12 +1117,8 @@ class Miniberg:
                 self.drop_branch(name)
             return self.current_version()  # nothing committed on the branch
         fm = self.manifest(fork)
-        b_sum = self._bucket_map(bm)
-        f_sum = self._bucket_map(fm)
-        b_touched = {
-            bk for bk in set(b_sum) | set(f_sum)
-            if b_sum.get(bk, {}).get("path") != f_sum.get(bk, {}).get("path")
-        }
+        b_touched = self._changed_bucket_set(bm, fm)
+        b_sum = dict(self._iter_bucket_summaries(bm, b_touched))
         branch_schema = bm["schema_id"] != fm["schema_id"]
         branch_fn = bm["num_buckets"] != fm["num_buckets"]
         branch_wm = bm["last_applied_batch"] != fm["last_applied_batch"]
@@ -1300,20 +1139,14 @@ class Miniberg:
                         "both main and branch advanced the changelog watermark "
                         "since the fork"
                     )
-                h_sum = self._bucket_map(hm)
-                m_touched = {
-                    bk for bk in set(h_sum) | set(f_sum)
-                    if h_sum.get(bk, {}).get("path") != f_sum.get(bk, {}).get("path")
-                }
-                if b_touched & m_touched:
+                both = b_touched & self._changed_bucket_set(hm, fm)
+                if both:
                     raise CommitConflict(
                         f"branch {name!r} and main both rewrote buckets "
-                        f"{sorted(int(x) for x in (b_touched & m_touched))[:8]}"
+                        f"{sorted(both)[:8]}"
                     )
-            else:
-                h_sum = dict(f_sum)
-            merged = dict(h_sum)
-            for bk in b_touched:
+            merged = self._bucket_map(hm)
+            for bk in map(str, b_touched):
                 if bk in b_sum:
                     merged[bk] = b_sum[bk]
                 else:
@@ -1342,20 +1175,14 @@ class Miniberg:
             new.pop("branch", None)
             new.pop("fork_version", None)
             written_blobs: dict[str, str] = {}
-            self._layout_from_summaries(new, merged, record=written_blobs)
-            new.pop("files", None)
+            new["bucket_ranges"] = self._ranges_from_summaries(
+                merged, new["num_buckets"], written_blobs
+            )
             try:
                 self._write_manifest(new["version"], new)
             except CommitConflict:
                 continue  # main moved: re-read the head and re-merge
-            # close the blob-reuse/GC race exactly as _commit_once does: a
-            # REUSED (previously orphaned) range-manifest blob could have
-            # been unlinked by a concurrent gc_orphans between _write_blob's
-            # mtime refresh and the manifest CAS — recreate from the
-            # in-memory payloads now that the manifest is durable
-            for rel, payload in written_blobs.items():
-                if not os.path.exists(os.path.join(self.root, rel)):
-                    self._write_blob(payload)
+            self._restore_blobs(written_blobs)
             for p in glob.glob(os.path.join(b.lineage_dir, "batch-*.json")):
                 dst = os.path.join(self.lineage_dir, os.path.basename(p))
                 if not os.path.exists(dst):
@@ -1369,11 +1196,11 @@ class Miniberg:
 
     def changed_buckets(self, from_version: int, to_version: int) -> list[int] | None:
         """Buckets whose FILE SETS differ between two snapshots — pure
-        metadata (sidecar-path comparison, no data read). Under the
-        third-level range layout only ranges whose content hash differs are
-        loaded, so the diff is O(ranges + changed buckets). Returns None when
-        bucket identity is not comparable (the bucket function changed
-        between the versions) — i.e. "treat every bucket as changed".
+        metadata (sidecar-path comparison, no data read). Only ranges whose
+        content hash differs are loaded, so the diff is O(ranges + changed
+        buckets). Returns None when bucket identity is not comparable (the
+        bucket function changed between the versions) — i.e. "treat every
+        bucket as changed".
 
         This is the prune ``table_changes`` feeds on: rows in a bucket whose
         file set is identical in both snapshots cannot differ, so a CDF read
@@ -1383,38 +1210,7 @@ class Miniberg:
         tm_ = self.manifest(to_version)
         if fm_["num_buckets"] != tm_["num_buckets"]:
             return None  # bucket function changed: no stable bucket identity
-        if any(
-            "buckets" not in m and "bucket_ranges" not in m for m in (fm_, tm_)
-        ):
-            # legacy single-level manifest: no per-bucket file sets to
-            # compare — _bucket_map would yield {} for BOTH sides and the
-            # diff would read as "nothing changed", silently stamping
-            # downstream index/view syncs current while stale (ADVICE r7).
-            # None = "treat every bucket as changed", the conservative
-            # answer (mirrors the legacy guard in _try_rebase).
-            return None
-        if (
-            "bucket_ranges" in fm_
-            and "bucket_ranges" in tm_
-            and fm_["bucket_ranges"]["size"] == tm_["bucket_ranges"]["size"]
-        ):
-            fr = fm_["bucket_ranges"]["ranges"]
-            tr = tm_["bucket_ranges"]["ranges"]
-            a: dict[str, dict] = {}
-            b: dict[str, dict] = {}
-            for lo in set(fr) | set(tr):
-                if fr.get(lo, {}).get("path") != tr.get(lo, {}).get("path"):
-                    if lo in fr:
-                        a.update(self._load_range(fr[lo]["path"]))
-                    if lo in tr:
-                        b.update(self._load_range(tr[lo]["path"]))
-        else:
-            a = self._bucket_map(fm_)
-            b = self._bucket_map(tm_)
-        return sorted(
-            int(bk) for bk in set(a) | set(b)
-            if a.get(bk, {}).get("path") != b.get(bk, {}).get("path")
-        )
+        return sorted(self._changed_bucket_set(fm_, tm_))
 
     def table_changes(
         self, spark: SparkSession, from_version: int, to_version: int,
@@ -1608,16 +1404,16 @@ def collect_references(table: "Miniberg", versions: list[int]) -> tuple[set, set
     for v in versions:
         try:
             m = table.manifest(v)
-            for s in m.get("buckets", {}).values():
-                keep_sidecars.add(os.path.join(table.root, s["path"]))
-            for rs in m.get("bucket_ranges", {}).get("ranges", {}).values():
-                # third level: keep the range manifest AND the sidecars it
-                # references (both live under meta/fm/)
+            for rs in m["bucket_ranges"]["ranges"].values():
+                # keep the range manifest, its sidecars and their data files
+                # (range manifests and sidecars both live under meta/fm/)
                 keep_sidecars.add(os.path.join(table.root, rs["path"]))
-                for s in table._load_range(rs["path"]).values():
+                for s in table._load_blob(rs["path"]).values():
                     keep_sidecars.add(os.path.join(table.root, s["path"]))
-            for f in table.files(manifest=m):
-                keep_files.add(os.path.join(table.root, f["path"]))
+                    keep_files.update(
+                        os.path.join(table.root, f["path"])
+                        for f in table._load_blob(s["path"])
+                    )
         except FileNotFoundError:
             if os.path.exists(table._vpath(v)):
                 raise

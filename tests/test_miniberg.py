@@ -143,44 +143,42 @@ def test_manifest_is_sole_source_of_truth(tmp_path):
     assert len(paths) == 2
     for p in paths:
         m = json.load(open(p))
-        assert m["format"] == "miniberg/1"
+        assert m["format"] == "miniberg/2"
     assert table.manifest(0)["last_applied_batch"] == -1
     assert table.manifest(1)["last_applied_batch"] == 0
 
 
-def test_legacy_single_level_manifest_migrates(spark, changelog_plain, tmp_path):
-    """Round-2 tables carried the file list INLINE in v{N}.json. A legacy
-    manifest must (a) read correctly as-is, and (b) be migrated to the
-    two-level layout (per-bucket sidecars) by the first commit on top."""
-    d, _ = changelog_plain
+def test_manifest_of_another_format_is_refused(spark, tmp_path):
+    """A root written in an older layout (here a miniberg/1 inline bucket
+    map) holds no ``bucket_ranges``. Read as an empty table, it would let GC
+    delete every live file, so every reader refuses it and GC removes
+    nothing."""
+    from tests.test_tombstones import write_batch
+
+    cl = str(tmp_path / "cl")
+    write_batch(cl, 0, [{"seq": i, "op": "I", "doc": f"d{i}", "tokens": [i]} for i in range(20)])
     table = create_empty_table(str(tmp_path / "t"), V1_PAYLOAD, num_buckets=4)
-    apply_batches(spark, table, d, upto=0)
+    apply_batches(spark, table, cl)
+    for v in table.versions():
+        m = table.manifest(v)
+        old = {k: val for k, val in m.items() if k != "bucket_ranges"}
+        old["format"] = "miniberg/1"
+        old["buckets"] = {str(b): s for b, s in table.bucket_summaries(m).items()}
+        os.unlink(table._vpath(v))
+        with open(table._vpath(v), "w") as f:
+            json.dump(old, f)
 
-    # rewrite the current manifest in the legacy layout: inline "files",
-    # no "buckets" key (exactly what a round-2 writer produced)
-    v = table.current_version()
-    m = table.manifest(v)
-    legacy = dict(m)
-    legacy["files"] = table.files(manifest=m)
-    legacy.pop("buckets")
-    os.unlink(table._vpath(v))
-    with open(table._vpath(v), "w") as f:
-        json.dump(legacy, f)
+    def on_disk():
+        return {p for d in (table.data_dir, table.fm_dir)
+                for p in glob.glob(os.path.join(d, "*"))}
 
-    # (a) reads + summaries work on the legacy layout unchanged
-    assert "buckets" not in table.manifest(v)
-    assert_state_equal(table_state(spark, table), expected_state(d, upto_batch=0))
-    summ = Miniberg.bucket_summaries(table.manifest(v))
-    assert sum(s["n_files"] for s in summ.values()) == len(legacy["files"])
-
-    # (b) the next commit migrates: new manifest is two-level, carries every
-    # carried bucket as a sidecar reference, and state stays oracle-exact
-    apply_batches(spark, table, d)
-    m2 = table.manifest()
-    assert "files" not in m2 and "buckets" in m2
-    for s in m2["buckets"].values():
-        assert os.path.exists(os.path.join(table.root, s["path"]))
-    assert_state_equal(table_state(spark, table), expected_state(d))
+    before = on_disk()
+    assert any(p.endswith(".parquet") for p in before)
+    with pytest.raises(ValueError, match="miniberg/1"):
+        table.gc_orphans(grace_seconds=0)
+    with pytest.raises(ValueError, match="miniberg/1"):
+        table.read(spark)
+    assert on_disk() == before
 
 
 def test_unchanged_buckets_reuse_sidecars(spark, tmp_path):
@@ -194,18 +192,15 @@ def test_unchanged_buckets_reuse_sidecars(spark, tmp_path):
     write_batch(cl, 1, [{"seq": 100, "op": "U", "doc": "d0", "tokens": [9]}])
     table = create_empty_table(str(tmp_path / "t"), V1_PAYLOAD, num_buckets=8)
     apply_batches(spark, table, cl, upto=0)
-    m1 = table.manifest()
+    s1 = table.bucket_summaries(table.manifest())
     apply_batches(spark, table, cl)  # batch 1 touches d0's bucket ONLY
-    m2 = table.manifest()
-    untouched = [
-        bk for bk in m1["buckets"]
-        if bk in m2["buckets"] and m2["buckets"][bk] == m1["buckets"][bk]
-    ]
-    replaced = [bk for bk in m2["buckets"] if m2["buckets"][bk] != m1["buckets"].get(bk)]
+    s2 = table.bucket_summaries(table.manifest())
+    untouched = [bk for bk in s1 if bk in s2 and s2[bk] == s1[bk]]
+    replaced = [bk for bk in s2 if s2[bk] != s1.get(bk)]
     assert len(replaced) == 1, (replaced, untouched)
-    assert len(untouched) == len(m1["buckets"]) - 1
+    assert len(untouched) == len(s1) - 1
     for bk in untouched:
-        assert m2["buckets"][bk]["path"] == m1["buckets"][bk]["path"]
+        assert s2[bk]["path"] == s1[bk]["path"]
 
 
 def test_point_lookup_skips_files_by_key_range(spark, tmp_path):
@@ -277,8 +272,8 @@ def test_rollback_restores_state_and_replays(spark, changelog_small, tmp_path):
         expected_state(d, upto_batch=table.manifest(v_restore)["last_applied_batch"]),
     )
     # rollback moved zero data: its buckets reference v_restore's sidecars
-    assert table.manifest()["buckets"] == Miniberg(table.root)._bucket_entries_migrated(
-        table.manifest(v_restore), exclude=set()
+    assert table.bucket_summaries(table.manifest()) == table.bucket_summaries(
+        table.manifest(v_restore)
     )
 
     # replay forward: re-applies every later batch, converges, and any
@@ -418,3 +413,144 @@ def test_read_keys_on_a_long_key_table(spark, tmp_path):
     got = table.read_keys(spark, want + [10**6]).collect()
     assert sorted(r["vec_id"] for r in got) == want
     assert {r["vec_id"]: r["label"] for r in got} == {i: f"l{i % 3}" for i in want}
+
+
+# ------------------------------------------------------- range manifests
+def test_range_layout_commit_read_and_carry(spark, tmp_path):
+    """The root stores bucket-RANGE manifests: commits round-trip a
+    ~sqrt(B)-entry root, reads resolve bucket -> range -> sidecar, and an
+    incremental commit carries every untouched range verbatim (same
+    content-addressed path — zero writes)."""
+    from tests.test_round4 import _mk_table, _stage_file
+
+    table = _mk_table(tmp_path, "t_ranges", num_buckets=32)
+    m0 = table.manifest()
+    assert m0["bucket_ranges"] == {"size": 5, "ranges": {}}  # isqrt(32)
+
+    added = []
+    for b in (0, 3, 7, 14, 21, 31):
+        added += _stage_file(table, b, [(f"d{b}_{i}", "web", b * 10 + i) for i in range(3)])
+    table.commit(added_files=added, replaced_buckets=set())
+    m1 = table.manifest()
+    # root is O(ranges): 6 buckets spread over ranges {0,5,10,20,30}
+    assert set(m1["bucket_ranges"]["ranges"]) == {"0", "5", "10", "20", "30"}
+    assert table.read(spark).count() == 18
+    # pruned read: one bucket -> one range manifest -> one sidecar
+    fs = table.files(buckets=[14])
+    assert len(fs) == 1 and fs[0]["bucket"] == 14
+    summ = table.bucket_summaries(m1)
+    assert set(summ) == {0, 3, 7, 14, 21, 31}
+    assert all(s["rows"] == 3 for s in summ.values())
+
+    # incremental commit replacing bucket 14: ONLY its range path changes
+    add2 = _stage_file(table, 14, [("d14_new", "web", 999)])
+    table.commit(added_files=add2, replaced_buckets={14})
+    m2 = table.manifest()
+    r1, r2 = m1["bucket_ranges"]["ranges"], m2["bucket_ranges"]["ranges"]
+    assert r2["10"]["path"] != r1["10"]["path"]
+    for lo in ("0", "5", "20", "30"):
+        assert r2[lo]["path"] == r1[lo]["path"]  # carried verbatim
+    assert table.read(spark).count() == 16  # bucket 14 replaced (3 -> 1)
+    # delta-path append into a carried bucket merges its sidecar
+    add3 = _stage_file(table, 7, [("d7_extra", "web", 1000)])
+    table.commit(added_files=add3, replaced_buckets=set())
+    assert len(table.files(buckets=[7])) == 2
+    assert table.read(spark).count() == 17
+
+
+def test_range_layout_rollback_and_timetravel(spark, tmp_path):
+    """Old snapshots stay readable after an incremental commit, and
+    rollback restores an old snapshot as a new version that re-references
+    its range manifests verbatim."""
+    from tests.test_round4 import _mk_table, _stage_file
+
+    table = _mk_table(tmp_path, "t_rollback", num_buckets=32)
+    added = []
+    for b in (1, 9, 30):
+        added += _stage_file(table, b, [(f"a{b}_{i}", "web", i) for i in range(2)])
+    v1 = table.commit(added_files=added, replaced_buckets=set())
+
+    add2 = _stage_file(table, 9, [("a9_new", "web", 50)])
+    v2 = table.commit(added_files=add2, replaced_buckets={9})
+    assert table.read(spark).count() == 5  # 2+2 carried + 1 replacing bucket 9
+    assert table.read(spark, version=v1).count() == 6  # time travel intact
+
+    v3 = table.rollback(v1)
+    assert v3 == v2 + 1
+    assert table.manifest(v3)["bucket_ranges"] == table.manifest(v1)["bucket_ranges"]
+    assert table.read(spark).count() == 6
+
+
+def test_range_layout_rebase_and_conflicts(tmp_path):
+    """Disjoint-bucket optimistic rebase works across range manifests (the
+    root diff loads only DIFFERING ranges); overlapping buckets still
+    conflict."""
+    from tests.test_round4 import _mk_table, _stage_file
+
+    table = _mk_table(tmp_path, "t_rebase", num_buckets=32)
+    base = []
+    for b in (2, 12, 22):
+        base += _stage_file(table, b, [(f"b{b}", "web", 1)])
+    v1 = table.commit(added_files=base, replaced_buckets=set())
+
+    # writer A commits bucket 2 first; writer B (parent=v1) touches bucket 22
+    a = _stage_file(table, 2, [("b2_a", "web", 2)])
+    table.commit(added_files=a, replaced_buckets={2}, expected_parent=v1)
+    b_files = _stage_file(table, 22, [("b22_b", "web", 2)])
+    v3 = table.commit(added_files=b_files, replaced_buckets={22}, expected_parent=v1)
+    assert v3 == v1 + 2  # rebased onto A's commit
+    # overlapping race is a REAL conflict
+    c1 = _stage_file(table, 12, [("b12_c", "web", 3)])
+    table.commit(added_files=c1, replaced_buckets={12})
+    c2 = _stage_file(table, 12, [("b12_d", "web", 3)])
+    with pytest.raises(CommitConflict):
+        table.commit(added_files=c2, replaced_buckets={12}, expected_parent=v3)
+
+
+def test_range_layout_gc_pins_range_manifests(tmp_path):
+    """gc_orphans keeps range manifests and the sidecars they reference
+    (both live under meta/fm/) while removing genuinely orphaned blobs."""
+    from tests.test_round4 import _mk_table, _stage_file
+
+    table = _mk_table(tmp_path, "t_gc", num_buckets=32)
+    added = _stage_file(table, 4, [("g1", "web", 1)])
+    table.commit(added_files=added, replaced_buckets=set())
+    orphan = os.path.join(table.fm_dir, "deadbeefdeadbeefdeadbeefdeadbeef.json")
+    with open(orphan, "w") as f:
+        f.write("[]")
+    os.utime(orphan, (1, 1))
+    removed = table.gc_orphans(grace_seconds=0)
+    assert orphan in removed
+    # every referenced blob survives and the table still reads
+    assert table.files(buckets=[4])
+    live = set(glob.glob(os.path.join(table.fm_dir, "*.json")))
+    assert live and orphan not in live
+
+
+def test_range_layout_full_apply_path(spark, tmp_path):
+    """The real engine path (create -> apply_batch -> read) at 10,001
+    buckets: apply's bucket-pruned MERGE, summaries and lineage all go
+    through the range hop, and the root stays KiB-scale."""
+    from tests.test_round4 import _v1_payload
+
+    table = create_empty_table(str(tmp_path / "t_bigbuckets"), _v1_payload(),
+                               num_buckets=10_001)
+    assert table.manifest()["bucket_ranges"]["size"] == 100
+    rows = [
+        (0, "I", "doc_a", [1, 2, 3], 3, "web"),
+        (1, "I", "doc_b", [4, 5], 2, "web"),
+        (2, "U", "doc_a", [7, 8, 9, 10], 4, "web"),
+        (3, "D", "doc_b", None, None, "web"),
+    ]
+    batch = spark.createDataFrame(
+        rows,
+        "event_seq long, op string, doc_id string, tokens array<int>, "
+        "n_tok int, source string",
+    )
+    apply_batch(spark, table, batch, 0)
+    state = {r["doc_id"]: r for r in table.read(spark).collect()}
+    assert list(state) == ["doc_a"] and state["doc_a"]["tokens"] == [7, 8, 9, 10]
+    # root stays KiB-scale: one range entry per touched range, not per bucket
+    m = table.manifest()
+    assert len(m["bucket_ranges"]["ranges"]) <= 2
+    assert os.path.getsize(table._vpath(m["version"])) < 4096

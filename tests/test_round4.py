@@ -254,12 +254,11 @@ def test_mor_autocompact_folds_deltas(spark, changelog_small, tmp_path):
     Equality must survive the fold."""
     from recidiviz_data_spark.cdc.apply import apply_batches, create_empty_table
     from recidiviz_data_spark.oracle import assert_state_equal, expected_state_with_lang
-    from recidiviz_data_spark.tables.miniberg import Miniberg
 
     d, _ = changelog_small
     table = create_empty_table(str(tmp_path / "t_morc"), _v1_payload(), num_buckets=8)
     apply_batches(spark, table, d, mor=True, compact="auto", compact_files_per_bucket=3)
-    summ = Miniberg.bucket_summaries(table.manifest())
+    summ = table.bucket_summaries(table.manifest())
     assert summ and all(s["n_files"] <= 3 for s in summ.values()), summ
     assert_state_equal(
         _table_state(spark, table, with_lang=True), expected_state_with_lang(d)

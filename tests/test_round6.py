@@ -1,7 +1,7 @@
 """Round-6 additions: ADVICE-r5 fixes (multi-chunk session fold, changelog
 lock takeover + atomic stale-dir claim, atomic artifact publication) and the
 round-6 build items (versioned derived-index artifacts, persisted minhash
-band index, third manifest level)."""
+band index). The range-manifest tests live in tests/test_miniberg.py."""
 
 from __future__ import annotations
 
@@ -341,172 +341,6 @@ def test_band_index_probe_matches_in_session_index(spark):
         for r in _minhash_bands(spark, sf).collect()
     )
     assert got == want
-
-
-# --------------------------------------------- third manifest level (r6 #3)
-def test_range_layout_commit_read_and_carry(spark, tmp_path, monkeypatch):
-    """Above the gate the manifest stores bucket-RANGE manifests: commits
-    round-trip a ~sqrt(B)-entry root, reads resolve bucket -> range ->
-    sidecar, and an incremental commit carries every untouched range
-    verbatim (same content-addressed path — zero writes)."""
-    from recidiviz_data_spark.tables import miniberg
-    from tests.test_round4 import _mk_table, _stage_file
-
-    monkeypatch.setattr(miniberg, "RANGE_LAYOUT_MIN_BUCKETS", 8)
-    table = _mk_table(tmp_path, "t_ranges", num_buckets=32)
-    m0 = table.manifest()
-    assert "bucket_ranges" in m0 and "buckets" not in m0
-    assert m0["bucket_ranges"]["size"] == 5  # isqrt(32)
-
-    added = []
-    for b in (0, 3, 7, 14, 21, 31):
-        added += _stage_file(table, b, [(f"d{b}_{i}", "web", b * 10 + i) for i in range(3)])
-    table.commit(added_files=added, replaced_buckets=set())
-    m1 = table.manifest()
-    # root is O(ranges): 6 buckets spread over ranges {0,5,10,20,30}
-    assert set(m1["bucket_ranges"]["ranges"]) == {"0", "5", "10", "20", "30"}
-    assert table.read(spark).count() == 18
-    # pruned read: one bucket -> one range manifest -> one sidecar
-    fs = table.files(buckets=[14])
-    assert len(fs) == 1 and fs[0]["bucket"] == 14
-    summ = table.bucket_summaries(m1)
-    assert set(summ) == {0, 3, 7, 14, 21, 31}
-    assert all(s["rows"] == 3 for s in summ.values())
-    # the legacy static form refuses the range layout loudly
-    import pytest
-
-    with pytest.raises(ValueError, match="range-layout"):
-        miniberg.Miniberg.bucket_summaries(m1)
-
-    # incremental commit replacing bucket 14: ONLY its range path changes
-    add2 = _stage_file(table, 14, [("d14_new", "web", 999)])
-    table.commit(added_files=add2, replaced_buckets={14})
-    m2 = table.manifest()
-    r1, r2 = m1["bucket_ranges"]["ranges"], m2["bucket_ranges"]["ranges"]
-    assert r2["10"]["path"] != r1["10"]["path"]
-    for lo in ("0", "5", "20", "30"):
-        assert r2[lo]["path"] == r1[lo]["path"]  # carried verbatim
-    assert table.read(spark).count() == 16  # bucket 14 replaced (3 -> 1)
-    # delta-path append into a carried bucket merges its sidecar
-    add3 = _stage_file(table, 7, [("d7_extra", "web", 1000)])
-    table.commit(added_files=add3, replaced_buckets=set())
-    assert len(table.files(buckets=[7])) == 2
-    assert table.read(spark).count() == 17
-
-
-def test_range_layout_migration_rollback_and_timetravel(spark, tmp_path, monkeypatch):
-    """A table created below the gate migrates to the range layout when the
-    gate moves (or a split crosses it) in ONE commit; old snapshots stay
-    readable; rollback restores the inline layout snapshot as a new
-    version."""
-    from recidiviz_data_spark.tables import miniberg
-    from tests.test_round4 import _mk_table, _stage_file
-
-    table = _mk_table(tmp_path, "t_migrate", num_buckets=32)  # inline layout
-    added = []
-    for b in (1, 9, 30):
-        added += _stage_file(table, b, [(f"a{b}_{i}", "web", i) for i in range(2)])
-    v1 = table.commit(added_files=added, replaced_buckets=set())
-    assert "buckets" in table.manifest(v1)
-
-    monkeypatch.setattr(miniberg, "RANGE_LAYOUT_MIN_BUCKETS", 8)
-    add2 = _stage_file(table, 9, [("a9_new", "web", 50)])
-    v2 = table.commit(added_files=add2, replaced_buckets={9})
-    m2 = table.manifest(v2)
-    assert "bucket_ranges" in m2 and "buckets" not in m2
-    assert table.read(spark).count() == 5  # 2+2 carried + 1 replacing bucket 9
-    assert table.read(spark, version=v1).count() == 6  # time travel intact
-
-    v3 = table.rollback(v1)
-    m3 = table.manifest(v3)
-    assert "buckets" in m3 and "bucket_ranges" not in m3  # old layout restored
-    assert table.read(spark).count() == 6
-
-
-def test_range_layout_rebase_and_conflicts(tmp_path, monkeypatch):
-    """Disjoint-bucket optimistic rebase works across range manifests (the
-    root diff loads only DIFFERING ranges); overlapping buckets still
-    conflict."""
-    import pytest
-
-    from recidiviz_data_spark.tables import miniberg
-    from tests.test_round4 import _mk_table, _stage_file
-
-    monkeypatch.setattr(miniberg, "RANGE_LAYOUT_MIN_BUCKETS", 8)
-    table = _mk_table(tmp_path, "t_rebase", num_buckets=32)
-    base = []
-    for b in (2, 12, 22):
-        base += _stage_file(table, b, [(f"b{b}", "web", 1)])
-    v1 = table.commit(added_files=base, replaced_buckets=set())
-
-    # writer A commits bucket 2 first; writer B (parent=v1) touches bucket 22
-    a = _stage_file(table, 2, [("b2_a", "web", 2)])
-    table.commit(added_files=a, replaced_buckets={2}, expected_parent=v1)
-    b_files = _stage_file(table, 22, [("b22_b", "web", 2)])
-    v3 = table.commit(added_files=b_files, replaced_buckets={22}, expected_parent=v1)
-    assert v3 == v1 + 2  # rebased onto A's commit
-    # overlapping race is a REAL conflict
-    c1 = _stage_file(table, 12, [("b12_c", "web", 3)])
-    table.commit(added_files=c1, replaced_buckets={12})
-    c2 = _stage_file(table, 12, [("b12_d", "web", 3)])
-    with pytest.raises(miniberg.CommitConflict):
-        table.commit(added_files=c2, replaced_buckets={12}, expected_parent=v3)
-
-
-def test_range_layout_gc_pins_range_manifests(tmp_path, monkeypatch):
-    """gc_orphans keeps range manifests and the sidecars they reference
-    (both live under meta/fm/) while removing genuinely orphaned blobs."""
-    import glob as _glob
-
-    from recidiviz_data_spark.tables import miniberg
-    from tests.test_round4 import _mk_table, _stage_file
-
-    monkeypatch.setattr(miniberg, "RANGE_LAYOUT_MIN_BUCKETS", 8)
-    table = _mk_table(tmp_path, "t_gc", num_buckets=32)
-    added = _stage_file(table, 4, [("g1", "web", 1)])
-    table.commit(added_files=added, replaced_buckets=set())
-    orphan = os.path.join(table.fm_dir, "deadbeefdeadbeefdeadbeefdeadbeef.json")
-    with open(orphan, "w") as f:
-        f.write("[]")
-    past = (1, 1)
-    os.utime(orphan, past)
-    removed = table.gc_orphans(grace_seconds=0)
-    assert orphan in removed
-    # every referenced blob survives and the table still reads
-    assert table.files(buckets=[4])
-    live = set(_glob.glob(os.path.join(table.fm_dir, "*.json")))
-    assert live and orphan not in live
-
-
-def test_range_layout_full_apply_path(spark, tmp_path):
-    """The real engine path (create above the TRUE gate -> apply_batch ->
-    read) works unmodified on the third-level layout: apply's bucket-pruned
-    MERGE, summaries, and lineage all go through the range hop."""
-    from recidiviz_data_spark.cdc.apply import apply_batch, create_empty_table
-    from tests.test_round4 import _v1_payload
-
-    table = create_empty_table(str(tmp_path / "t_bigbuckets"), _v1_payload(),
-                               num_buckets=10_001)
-    m = table.manifest()
-    assert "bucket_ranges" in m and m["bucket_ranges"]["size"] == 100
-    rows = [
-        (0, "I", "doc_a", [1, 2, 3], 3, "web"),
-        (1, "I", "doc_b", [4, 5], 2, "web"),
-        (2, "U", "doc_a", [7, 8, 9, 10], 4, "web"),
-        (3, "D", "doc_b", None, None, "web"),
-    ]
-    batch = spark.createDataFrame(
-        rows,
-        "event_seq long, op string, doc_id string, tokens array<int>, "
-        "n_tok int, source string",
-    )
-    apply_batch(spark, table, batch, 0)
-    state = {r["doc_id"]: r for r in table.read(spark).collect()}
-    assert list(state) == ["doc_a"] and state["doc_a"]["tokens"] == [7, 8, 9, 10]
-    # root stays KiB-scale: one range entry per touched range, not per bucket
-    m = table.manifest()
-    assert len(m["bucket_ranges"]["ranges"]) <= 2
-    assert os.path.getsize(table._vpath(m["version"])) < 4096
 
 
 # ------------------------------------ exact per-bucket key stamps (r6 MOR fix)

@@ -225,7 +225,6 @@ def test_publish_branch_recreates_gcd_range_blob(spark, tmp_path, monkeypatch):
     from recidiviz_data_spark.cdc.apply import apply_batch, bootstrap_table
     from recidiviz_data_spark.tables import miniberg as mb
 
-    monkeypatch.setattr(mb, "RANGE_LAYOUT_MIN_BUCKETS", 4)
     df = spark.createDataFrame(
         [(f"d{i}", [1], 1) for i in range(40)],
         "doc_id string, tokens array<int>, n_tok int",

@@ -146,43 +146,8 @@ def test_minhash_signature_single_exchange(spark):
 
 
 # ---------------------------------------------------------------------------
-# ADVICE r7 fixes (the round's only non-optimization changes — a latent
-# staleness hazard and two silent-full-rebuild perf bugs)
-
-
-def test_changed_buckets_legacy_manifest_returns_none(spark, tmp_path):
-    """A legacy single-level manifest has no per-bucket file sets:
-    changed_buckets must return None ('every bucket changed'), never []
-    ('nothing changed') — [] silently stamps index/view syncs current
-    while stale (ADVICE r7, medium)."""
-    import glob as _glob
-    import json
-    import os
-
-    from pyspark.sql import types as T
-
-    from recidiviz_data_spark.cdc.apply import bootstrap_table
-
-    rows = [(f"doc_{i}", [i], 1) for i in range(20)]
-    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>, n_tok int")
-    table = bootstrap_table(spark, str(tmp_path / "t_leg"), df, num_buckets=4)
-
-    v = table.current_version()
-    m = table.manifest(v)
-    legacy = dict(m)
-    legacy["files"] = table.files(manifest=m)
-    legacy.pop("buckets")
-    os.unlink(table._vpath(v))
-    with open(table._vpath(v), "w") as f:
-        json.dump(legacy, f)
-
-    # next commit migrates to the two-level layout -> v+1 is modern
-    table.commit(added_files=[], expected_parent=v)
-    assert "buckets" in table.manifest(v + 1)
-
-    # legacy on either side of the diff -> None, not []
-    assert table.changed_buckets(v, v + 1) is None
-    assert table.changed_buckets(v, v) is None
+# ADVICE r7 fixes (the round's only non-optimization changes — two
+# silent-full-rebuild perf bugs)
 
 
 def test_distinct_view_conflict_retry_keeps_fraction(spark, tmp_path, monkeypatch):

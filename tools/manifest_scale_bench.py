@@ -1,7 +1,7 @@
-"""Metadata-scale benchmark for the two-level manifest (round-4 verdict
-item 6): measure commit / summary-parse / single-bucket-read time as the
-bucket count approaches the documented ~10^5 ceiling, to size WHEN a third
-manifest level (manifest-list of bucket-range manifests) becomes necessary.
+"""Metadata-scale benchmark for the miniberg manifest tree (root ->
+bucket-range manifests -> per-bucket sidecars): measure commit /
+summary-parse / single-bucket-read time as the bucket count grows toward
+the documented ~10^5 envelope.
 
 Metadata-only: file entries are synthesized (commit never opens data files),
 so the numbers isolate the manifest path itself. Run:
@@ -9,12 +9,14 @@ so the numbers isolate the manifest path itself. Run:
     python tools/manifest_scale_bench.py [n_buckets ...]
 
 Prints one JSON line per bucket count with:
-  full_commit_sec       initial commit writing every bucket's sidecar
+  full_commit_sec       initial commit writing every bucket's sidecar and
+                        every range manifest
   incr_commit_sec       a later commit touching ONE bucket (the apply shape:
-                        carried buckets re-reference sidecars verbatim)
-  summaries_sec         Miniberg.bucket_summaries() over the manifest
-  one_bucket_read_sec   files(buckets=[k]) — manifest parse + one sidecar
-  manifest_bytes        size of v{N}.json (the O(buckets) term)
+                        untouched ranges are carried verbatim, one range
+                        manifest and the root are rewritten)
+  summaries_sec         table.bucket_summaries(m) (loads every range manifest)
+  one_bucket_read_sec   files(buckets=[k]) — one range manifest + one sidecar
+  manifest_bytes        size of the root v{N}.json (~sqrt(B) range rows)
 """
 
 from __future__ import annotations
