@@ -17,9 +17,10 @@ Scale design (10^10 events / 1000 executors):
   Default strategy ``agg`` = ``max(struct(event_seq, op, payload))`` — partial
   aggregation (map-side combine) collapses duplicates/hot keys before the
   shuffle, so Zipf skew never concentrates raw events on one reducer.
-  ``window`` (the spec-named row_number form) and ``salted_window``
-  (two-phase: per-salt partial row_number, then global) are provided and
-  tested equivalent; see bench for the comparison.
+  ``argmax`` (key-only shuffle), ``window`` (the spec-named row_number
+  form) and ``salted_window`` (two-phase: per-salt partial row_number, then
+  global) are provided and tested equivalent; see bench for the comparison.
+  All four are one function, ``dedup_lww``, with one result contract.
 - Target I/O is bucket-pruned: only manifest files whose bucket intersects
   the batch's buckets are read/rewritten (Iceberg COW MERGE re-expressed).
 - The decision pass reads ONLY (doc_id, _seq) from the target — column
@@ -32,8 +33,12 @@ Scale design (10^10 events / 1000 executors):
   along with a normal write instead of being a separate job).
 - Winners are persisted (MEMORY_AND_DISK) — they are one row per doc touched,
   orders of magnitude smaller than the raw event stream.
-- The batch is scanned ONCE: the agg dedup fuses LWW winner selection with
-  the per-bucket input metrics (struct-max with map-side combine).
+- Every dedup strategy fuses LWW winner selection with the per-doc input
+  metrics (event and invalid counts), so no second pass over the batch
+  computes them.
+- Bucketing and the staged partitioned write are the table's
+  (``Miniberg.bucket_expr``, ``Miniberg.write_staged``): every writer
+  buckets rows and stages files the same way.
 """
 
 from __future__ import annotations
@@ -70,6 +75,10 @@ DELETED = "_deleted"
 # round-trip. At lake scale this always prunes; small tables skip the job.
 DECISION_PRUNE_MIN_BYTES = 1 << 30
 
+# salted_window's phase-1 fan-out: a hot doc's events split over this many
+# (doc_id, salt) window partitions before the per-doc pass
+SALT_PARTITIONS = 16
+
 
 class InvalidBatchError(Exception):
     """Batch rejected by the invalid-event threshold gate (no commit)."""
@@ -77,67 +86,97 @@ class InvalidBatchError(Exception):
 
 # --------------------------------------------------------------------- dedup
 def dedup_lww(
-    valid: DataFrame,
+    raw: DataFrame,
     payload_cols: list[str],
     *,
     strategy: str = "agg",
-    salt_partitions: int = 16,
 ) -> DataFrame:
-    """One winner row per doc_id: the max-event_seq event (LWW).
+    """LWW dedup of a bucketed batch that carries the ``_valid`` flag (NULL
+    counts as invalid): one row per (bucket, doc_id) with ``_n_events``,
+    ``_n_invalid`` and the winner — the max (event_seq, op, *payload) among
+    the doc's VALID events, a lexicographic total order, so equal event_seqs
+    break deterministically. A doc with only invalid events gets event_seq,
+    op and payload NULL (a metrics-only row). Every strategy takes the
+    counts from the pass that picks the winner.
 
     agg           groupBy(bucket, doc_id).max(struct(event_seq, op, payload)) —
                   partial agg absorbs skew map-side; the shuffle moves ≤1 row
-                  per (doc, partition).
+                  per (doc, partition). Struct-max, not max_by: max_by's tie
+                  resolution depends on physical row order.
+    argmax        key-only shuffle: pass 1 aggregates (bucket, doc_id) -> max
+                  valid event_seq + metrics (~24 bytes per doc); pass 2 joins
+                  the VALID events back on (doc_id, event_seq) — AQE
+                  broadcasts the key set, so the payload is filtered in place
+                  — and collapses copies of a winner with a winner-sized
+                  group-by. One extra batch scan for far fewer shuffle bytes
+                  when docs carry several events.
     window        row_number() OVER (PARTITION BY doc_id ORDER BY seq DESC)=1
                   (the BASELINE.json-named form); full event shuffle + sort.
+                  The counts come from the same window, whole-frame.
     salted_window two-phase window for hot keys: partition (doc_id, salt)
-                  first, then (doc_id) over the ≤salt_partitions survivors.
+                  first, then (doc_id) over the ≤``SALT_PARTITIONS``
+                  survivors, summing the per-salt counts.
     """
-    cols = [BUCKET, "doc_id", "event_seq", "op", *payload_cols]
-    # total-order tiebreak for the row_number strategies, mirroring the agg
-    # strategy's max(struct(event_seq, op, *payload)) lexicographic order
-    # (struct-max treats a null field as lowest; DESC NULLS LAST matches).
-    # The generator only emits bit-identical duplicate (doc_id, event_seq)
-    # events, but LWW must not DEPEND on that — distinct same-seq payloads
-    # (e.g. two differ outputs sharing a snapshot_seq) need a deterministic,
-    # strategy-independent winner.
-    tiebreak = [
+    n_events = F.count("*")
+    n_invalid = F.sum(F.when(F.col("_valid"), 0).otherwise(1))
+    if strategy == "agg":
+        w = F.struct("event_seq", "op", *payload_cols)
+        g = raw.groupBy(BUCKET, "doc_id").agg(
+            F.max(F.when(F.col("_valid"), w)).alias("_w"),
+            n_events.alias("_n_events"),
+            n_invalid.alias("_n_invalid"),
+        )
+        return g.select(BUCKET, "doc_id", "_n_events", "_n_invalid", "_w.*")
+    if strategy == "argmax":
+        keys = raw.groupBy(BUCKET, "doc_id").agg(
+            F.max(F.when(F.col("_valid"), F.col("event_seq"))).alias("event_seq"),
+            n_events.alias("_n_events"),
+            n_invalid.alias("_n_invalid"),
+        )
+        wrows = (
+            # join only VALID rows back: an invalid event sharing the winner's
+            # (doc_id, event_seq) must never supply the applied payload
+            raw.filter("_valid")
+            .join(keys.select("doc_id", "event_seq"), ["doc_id", "event_seq"], "inner")
+            .groupBy("doc_id", "event_seq")
+            .agg(F.max(F.struct("op", *payload_cols)).alias("_w"))
+        )
+        return keys.join(wrows, ["doc_id", "event_seq"], "left").select(
+            BUCKET, "doc_id", "_n_events", "_n_invalid", "event_seq", "_w.*"
+        )
+    # the row_number forms rank valid events first, then mirror the struct-max
+    # order (struct-max treats a null field as lowest; DESC NULLS LAST matches)
+    order = [
+        F.desc_nulls_last("_valid"),
         F.desc("event_seq"),
         F.desc_nulls_last("op"),
         *[F.desc_nulls_last(c) for c in payload_cols],
     ]
-    if strategy == "agg":
-        # struct-max, NOT max_by: max_by's tie resolution on equal event_seq
-        # depends on physical row/partition order, so two distinct payloads
-        # sharing (doc_id, event_seq) could pick different winners between
-        # bootstrap replay and incremental apply. max(struct(...)) is a
-        # lexicographic total order — same tiebreak as the window strategies
-        # and _dedup_agg_fused.
-        w = F.struct("event_seq", "op", *payload_cols)
-        g = valid.groupBy(BUCKET, "doc_id").agg(F.max(w).alias("_w"))
-        return g.select(BUCKET, "doc_id", "_w.*")
+
+    def top(df: DataFrame, keys: list[str], n_events, n_invalid) -> DataFrame:
+        w = Window.partitionBy(*keys).orderBy(*order)
+        whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        return (
+            df.withColumn("_rn", F.row_number().over(w))
+            .withColumn("_n_events", n_events.over(whole))
+            .withColumn("_n_invalid", n_invalid.over(whole))
+            .filter(F.col("_rn") == 1)
+        )
+
     if strategy == "window":
-        w = Window.partitionBy("doc_id").orderBy(*tiebreak)
-        return (
-            valid.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(*cols)
-        )
-    if strategy == "salted_window":
-        salt = F.pmod(F.xxhash64("event_seq"), F.lit(salt_partitions))
-        w1 = Window.partitionBy("doc_id", "_salt").orderBy(*tiebreak)
-        partial = (
-            valid.withColumn("_salt", salt)
-            .withColumn("_rn", F.row_number().over(w1))
-            .filter(F.col("_rn") == 1)
-        )
-        w2 = Window.partitionBy("doc_id").orderBy(*tiebreak)
-        return (
-            partial.withColumn("_rn2", F.row_number().over(w2))
-            .filter(F.col("_rn2") == 1)
-            .select(*cols)
-        )
-    raise ValueError(f"unknown dedup strategy {strategy!r}")
+        best = top(raw, ["doc_id"], n_events, n_invalid)
+    elif strategy == "salted_window":
+        salt = F.pmod(F.xxhash64("event_seq"), F.lit(SALT_PARTITIONS))
+        partial = top(raw.withColumn("_salt", salt), ["doc_id", "_salt"],
+                      n_events, n_invalid)
+        best = top(partial, ["doc_id"], F.sum("_n_events"), F.sum("_n_invalid"))
+    else:
+        raise ValueError(f"unknown dedup strategy {strategy!r}")
+    return best.select(
+        BUCKET, "doc_id", "_n_events", "_n_invalid",
+        *[F.when(F.col("_valid"), F.col(c)).alias(c)
+          for c in ("event_seq", "op", *payload_cols)],
+    )
 
 
 # ------------------------------------------------------------------ helpers
@@ -156,59 +195,6 @@ def _validity(df: DataFrame) -> F.Column:
 
 
 # -------------------------------------------------------------------- apply
-def _dedup_agg_fused(raw: DataFrame, payload_cols: list[str]) -> DataFrame:
-    """ONE scan of the batch: per-(bucket, doc) LWW winner AND input metrics.
-
-    Winner = max over valid events of struct(event_seq, op, payload) — struct
-    ordering is lexicographic, so max event_seq wins and ties (exact duplicate
-    events) break deterministically on identical payload. max() ignores nulls,
-    so invalid events never win; a doc with only invalid events keeps
-    event_seq NULL (metrics-only row, excluded from the merge).
-    Partial aggregation (map-side combine) collapses hot keys per partition
-    BEFORE the shuffle — this is the skew story at 10^10 events.
-    """
-    w = F.struct("event_seq", "op", *payload_cols)
-    g = raw.groupBy(BUCKET, "doc_id").agg(
-        F.max(F.when(F.col("_valid"), w)).alias("_w"),
-        F.count("*").alias("_n_events"),
-        F.sum(F.when(F.col("_valid"), 0).otherwise(1)).alias("_n_invalid"),
-    )
-    return g.select(BUCKET, "doc_id", "_n_events", "_n_invalid", "_w.*")
-
-
-def _dedup_argmax_fused(raw: DataFrame, payload_cols: list[str]) -> DataFrame:
-    """Bandwidth-lean LWW: the heavy token payload NEVER rides the wide
-    shuffle.
-
-    Pass 1 aggregates only (bucket, doc_id) -> max valid event_seq + metrics —
-    a pure-long HashAggregate whose shuffle moves ~24 bytes per doc.
-    Pass 2 re-scans the batch and inner-joins it against that key set on
-    (doc_id, event_seq): only WINNER rows survive (AQE broadcasts the key set
-    when it fits, so the payload is filtered in place, not shuffled); exact
-    duplicate copies of a winner collapse via a winner-sized group-by.
-
-    Trade vs ``agg``: one extra scan of the batch (cheap on cached/columnar
-    storage) for ~an-order-of-magnitude less shuffle traffic whenever events
-    per doc > 1. Same fused metrics contract as _dedup_agg_fused.
-    """
-    keys = raw.groupBy(BUCKET, "doc_id").agg(
-        F.max(F.when(F.col("_valid"), F.col("event_seq"))).alias("event_seq"),
-        F.count("*").alias("_n_events"),
-        F.sum(F.when(F.col("_valid"), 0).otherwise(1)).alias("_n_invalid"),
-    )
-    wrows = (
-        # join only VALID rows back: an invalid event sharing the winner's
-        # (doc_id, event_seq) must never supply the applied payload
-        raw.filter("_valid")
-        .join(keys.select("doc_id", "event_seq"), ["doc_id", "event_seq"], "inner")
-        .groupBy("doc_id", "event_seq")
-        .agg(F.max(F.struct("op", *payload_cols)).alias("_w"))
-    )
-    return keys.join(wrows, ["doc_id", "event_seq"], "left").select(
-        BUCKET, "doc_id", "_n_events", "_n_invalid", "event_seq", "_w.*"
-    )
-
-
 def apply_batch(
     spark: SparkSession,
     table: Miniberg,
@@ -216,14 +202,10 @@ def apply_batch(
     batch_id: int,
     *,
     dedup_strategy: str = "agg",
-    salt_partitions: int = 16,
-    normalize: bool = True,
     compact: str | bool = "auto",
     compact_files_per_bucket: int = 4,
-    cache: bool = True,
     max_invalid_ratio: float | None = None,
     commit_props: dict | None = None,
-    decision_prune: bool | str = "auto",
     mor: bool | str = "auto",
     mor_max_changed_fraction: float = 0.05,
     bloom_ndv: int | str | None = None,
@@ -231,11 +213,14 @@ def apply_batch(
     """MERGE one changelog batch into the table. Exactly-once: a batch_id at
     or below the committed watermark is a no-op. Returns lineage rows.
 
-    Per batch this runs ONE wide shuffle over the events (the LWW dedup; the
-    upsert rows are re-shuffled once more, but that set is winners-only), two
-    target reads (a 2-column decision read + the rewrite read — both
-    bucket-pruned, the decision read adaptively per ``decision_prune``),
-    and one partitioned write. ``compact='auto'`` re-buckets the whole rewrite
+    Per batch this runs ONE wide shuffle over the events (the LWW dedup,
+    ``dedup_lww`` with ``dedup_strategy``, which also yields the per-doc
+    input metrics; the upsert rows are re-shuffled once more, but that set is
+    winners-only), two target reads (a 2-column decision read + the rewrite
+    read — both bucket-pruned, the decision read only once the target
+    reaches ``DECISION_PRUNE_MIN_BYTES``), and one partitioned write.
+    Winners are token-normalized (``normalize_tokens_native``) after the
+    dedup. ``compact='auto'`` re-buckets the whole rewrite
     only when a bucket's file count exceeds ``compact_files_per_bucket``,
     otherwise target rows stream through the broadcast anti-join unshuffled.
     ``mor`` ('auto'/True/False) writes merge-on-read DELTA files instead of
@@ -266,7 +251,7 @@ def apply_batch(
         raise ValueError(
             f"apply_batch merges on 'doc_id' but table key_col={m['key_col']!r}"
         )
-    bucket_expr = F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets)).cast("int")
+    bucket = Miniberg.bucket_expr("doc_id", num_buckets)
     payload_cols = [c for c in payload_columns(batch_df) if c != "doc_id"]
     clashes = [c for c in batch_df.columns if c.startswith("_")]
     if clashes:
@@ -274,7 +259,7 @@ def apply_batch(
             f"changelog columns {clashes} collide with the engine's internal "
             "underscore-prefixed columns (_seq/_deleted/_bucket/...)"
         )
-    raw = batch_df.withColumn(BUCKET, bucket_expr).withColumn(
+    raw = batch_df.withColumn(BUCKET, bucket).withColumn(
         "_valid", _validity(batch_df)
     )
 
@@ -291,27 +276,11 @@ def apply_batch(
         ]
     )
 
-    # ---- pass 1: LWW winners (+ fused input metrics on the agg paths)
-    if dedup_strategy == "agg":
-        winners = _dedup_agg_fused(raw, payload_cols)
-    elif dedup_strategy == "argmax":
-        winners = _dedup_argmax_fused(raw, payload_cols)
-    else:
-        in_metrics_df = raw.groupBy(BUCKET).agg(
-            F.count("*").alias("_n_events"),
-            F.sum(F.when(F.col("_valid"), 0).otherwise(1)).alias("_n_invalid"),
-        )
-        in_rows = {r[BUCKET]: r for r in in_metrics_df.collect()}
-        winners = dedup_lww(
-            raw.filter("_valid").drop("_valid"),
-            payload_cols,
-            strategy=dedup_strategy,
-            salt_partitions=salt_partitions,
-        ).withColumn("_n_events", F.lit(None).cast("long")).withColumn(
-            "_n_invalid", F.lit(None).cast("long")
-        )
-    if normalize:
-        winners = normalize_tokens_native(winners)  # winners only — cheap
+    # ---- pass 1: LWW winners + per-doc input metrics (normalizing winners
+    # only is cheap)
+    winners = normalize_tokens_native(
+        dedup_lww(raw, payload_cols, strategy=dedup_strategy)
+    )
 
     # buckets any winner touches: prunes the DECISION read (stale checks need
     # the target's _seq for every winner doc). The rewrite prunes further, to
@@ -324,9 +293,7 @@ def apply_batch(
     # buckets' sidecars)
     bucket_summ = table.bucket_summaries(m)
     total_target_bytes = sum(s.get("bytes", 0) for s in bucket_summ.values())
-    prune = decision_prune is True or (
-        decision_prune == "auto" and total_target_bytes >= DECISION_PRUNE_MIN_BYTES
-    )
+    prune = total_target_bytes >= DECISION_PRUNE_MIN_BYTES
     persisted: list[DataFrame] = []
     try:
         if not bucket_summ:
@@ -335,9 +302,8 @@ def apply_batch(
             # pruning gives winners TWO consumers (this collect + the decision
             # join) — persist; the unpruned path consumes winners exactly once
             # (inside the decisions persist), so caching them would be waste
-            if cache:
-                winners = winners.persist(StorageLevel.MEMORY_AND_DISK)
-                persisted.append(winners)
+            winners = winners.persist(StorageLevel.MEMORY_AND_DISK)
+            persisted.append(winners)
             affected = sorted(
                 (r[BUCKET] for r in winners.select(BUCKET).distinct().collect()),
                 key=lambda b: (b is None, b),
@@ -368,10 +334,8 @@ def apply_batch(
             .when(F.col("op") == "D", F.lit("deleted"))
             .otherwise(F.lit("applied"))
         )
-        decisions = matched.withColumn("_cls", cls)
-        if cache:
-            decisions = decisions.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(decisions)
+        decisions = matched.withColumn("_cls", cls).persist(StorageLevel.MEMORY_AND_DISK)
+        persisted.append(decisions)
         dec_metrics = {
             r[BUCKET]: r.asDict()
             for r in decisions.groupBy(BUCKET)
@@ -396,17 +360,6 @@ def apply_batch(
             )
             .collect()
         }
-        if dedup_strategy not in ("agg", "argmax"):
-            # window paths carry metrics in a separate raw-side pass; buckets
-            # whose events were ALL invalid have no winner rows, so add them
-            # here too — otherwise their invalid counts vanish and the gate
-            # undercounts
-            for b, ir in in_rows.items():
-                d = dec_metrics.setdefault(
-                    b, {"winners": 0, "applied": 0, "deleted": 0, "stale_winners": 0}
-                )
-                d["events_in"] = ir["_n_events"]
-                d["invalid"] = ir["_n_invalid"]
 
         # error-threshold gate (the reference aborts the persistence write when
         # the scrape's error rate is too high — SURVEY.md §4.1): too many
@@ -502,7 +455,7 @@ def apply_batch(
                 target_schema,
             )
             kept = target_full.join(changed_docs, "doc_id", "left_anti").withColumn(
-                BUCKET, bucket_expr
+                BUCKET, bucket
             )
             # applied -> live row; deleted -> tombstone (payload nulled, _seq kept)
             tombstoned = changed
@@ -515,7 +468,7 @@ def apply_batch(
                     DELETED, F.col("_cls") == "deleted"
                 ),
                 target_schema,
-            ).withColumn(BUCKET, bucket_expr)
+            ).withColumn(BUCKET, bucket)
 
             n_out = max(len(changed_buckets), 1)
             if need_compact:
@@ -525,8 +478,6 @@ def apply_batch(
                 # cheap path: target rows stream through the broadcast anti-join
                 # unshuffled (their files are bucket-pure); only winners shuffle
                 rewrite = kept.unionByName(upserts.repartition(n_out, BUCKET))
-            staging = table.staging_dir()
-            writer = rewrite.write
             if bloom_ndv == "auto":
                 # size the filter from metadata already in hand: the largest
                 # output file holds at most (bucket's current rows + its
@@ -546,21 +497,15 @@ def apply_batch(
                         default=0,
                     ),
                 )
-            if bloom_ndv:
-                # parquet-native bloom filter on the key column — row-group
-                # skipping for point lookups whose key falls inside a file's
-                # wide min/max range (hash-distributed keys overlap ranges on
-                # uncompacted buckets). Off by default: a bloom sized for
-                # ``bloom_ndv`` distinct keys costs ~1.2 bytes/key per file,
-                # which only pays once files carry ~10^5+ rows (the lake
-                # shape, not the demo shape). ``'auto'`` sizes ndv from the
-                # per-bucket row counts above; an int overrides.
-                writer = writer.option(
-                    "parquet.bloom.filter.enabled#doc_id", "true"
-                ).option("parquet.bloom.filter.expected.ndv#doc_id", str(bloom_ndv))
-            writer.partitionBy(BUCKET).parquet(staging)
-            schema_id = m["schema_id"] + (1 if schema_changed else 0)
-            added = table.collect_staged_files(staging, schema_id)
+            # a key-column bloom (off by default) skips row groups for point
+            # lookups whose key falls inside a file's wide min/max range; it
+            # costs ~1.2 bytes/key per file, which only pays once files carry
+            # ~10^5+ rows (the lake shape, not the demo shape)
+            added = table.write_staged(
+                rewrite,
+                m["schema_id"] + (1 if schema_changed else 0),
+                bloom_ndv=bloom_ndv,
+            )
             for e in added:
                 if e["bucket"] in mor_buckets:
                     e["kind"] = "delta"
@@ -644,19 +589,17 @@ def apply_full_log(
     *,
     num_buckets: int = 16,
     dedup_strategy: str = "agg",
-    normalize: bool = True,
 ) -> Miniberg:
     """M1 naive replay: the whole log in one commit (bulk-bootstrap path —
-    equivalent final state to batch-by-batch apply; used as the baseline)."""
+    equivalent final state to batch-by-batch apply; used as the baseline).
+    Same dedup and winner normalization as ``apply_batch``."""
     log = read_range(spark, changelog_dir, normalize=True)
     payload_cols = [c for c in payload_columns(log) if c != "doc_id"]
-    raw = log.withColumn(
-        BUCKET, F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets)).cast("int")
-    )
-    valid = raw.filter(_validity(log))
-    if normalize:
-        valid = normalize_tokens_native(valid)
-    winners = dedup_lww(valid, payload_cols, strategy=dedup_strategy)
+    bucket = Miniberg.bucket_expr("doc_id", num_buckets)
+    raw = log.withColumn(BUCKET, bucket).withColumn("_valid", _validity(log))
+    winners = normalize_tokens_native(
+        dedup_lww(raw, payload_cols, strategy=dedup_strategy)
+    ).filter(F.col("event_seq").isNotNull())  # docs with only invalid events
     # keep delete winners as tombstones (payload nulled) so later incremental
     # applies on top of this table stay stale-safe
     final = winners.withColumn(SEQ, F.col("event_seq")).withColumn(
@@ -672,12 +615,8 @@ def apply_full_log(
         + [T.StructField(SEQ, T.LongType(), True), T.StructField(DELETED, T.BooleanType(), True)]
     )
     table = Miniberg.create(table_root, schema, num_buckets=num_buckets)
-    staging = table.staging_dir()
-    out = _align(final, table.spark_schema()).withColumn(
-        BUCKET, F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets)).cast("int")
-    )
-    out.repartition(num_buckets, BUCKET).write.partitionBy(BUCKET).parquet(staging)
-    added = table.collect_staged_files(staging, table.manifest()["schema_id"])
+    out = _align(final, table.spark_schema()).withColumn(BUCKET, bucket)
+    added = table.write_staged(out.repartition(num_buckets, BUCKET), 0)
     last = max(list_batches(changelog_dir))
     table.commit(added_files=added, replaced_buckets=set(range(num_buckets)),
                  last_applied_batch=last, bucket_keys=keys_from_entries(added))
@@ -714,12 +653,10 @@ def bootstrap_table(
         + [T.StructField(SEQ, T.LongType(), True), T.StructField(DELETED, T.BooleanType(), True)]
     )
     table = Miniberg.create(root, schema, num_buckets=num_buckets)
-    staging = table.staging_dir()
     out = df.withColumn(SEQ, F.lit(-1).cast("long")).withColumn(DELETED, F.lit(False)).withColumn(
-        BUCKET, F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets)).cast("int")
+        BUCKET, Miniberg.bucket_expr("doc_id", num_buckets)
     )
-    out.repartition(num_buckets, BUCKET).write.partitionBy(BUCKET).parquet(staging)
-    added = table.collect_staged_files(staging, 0)
+    added = table.write_staged(out.repartition(num_buckets, BUCKET), 0)
     table.commit(added_files=added, replaced_buckets=set(range(num_buckets)),
                  bucket_keys=keys_from_entries(added))
     return table

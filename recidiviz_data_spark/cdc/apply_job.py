@@ -5,7 +5,7 @@ table (the production surface the north rule names:
 Usage:
     spark-submit [--master local[N]] --py-files engine.zip \
         apply_job.py --changelog DIR --table DIR \
-        [--num-buckets 64] [--upto N] [--dedup agg|window|salted_window] \
+        [--num-buckets 64] [--upto N] [--dedup agg|argmax|window|salted_window] \
         [--bootstrap PARQUET] [--split-buckets-factor K] [--compact-after] \
         [--expire-keep-last K] [--gc]
 

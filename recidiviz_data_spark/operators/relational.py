@@ -889,7 +889,7 @@ def a5_lww_state(spark, sf_dir):
     DESC/DESC order with event_id as the total-order tiebreak), so the
     winner row is identical while the row_number window pass becomes a
     partial+final SortAggregate above the one keyed exchange — the same LWW
-    shape the CDC apply path uses (cdc/apply.py::_dedup_agg_fused)."""
+    shape the CDC apply path uses (cdc/apply.py::dedup_lww, strategy agg)."""
     e = load(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
     ).repartition(spark.sparkContext.defaultParallelism, "user_id")

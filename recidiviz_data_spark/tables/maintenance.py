@@ -69,14 +69,10 @@ def compact(
             ~(F.coalesce(F.col("_deleted"), F.lit(False)) & (F.col("_seq") <= tombstone_horizon))
         )
     out = df.withColumn(
-        "_bucket", F.pmod(F.xxhash64(m["key_col"]), F.lit(m["num_buckets"])).cast("int")
+        "_bucket", Miniberg.bucket_expr(m["key_col"], m["num_buckets"])
     ).repartition(len(todo), "_bucket")
     if sort:
         out = out.sortWithinPartitions("_bucket", m["key_col"])
-    staging = table.staging_dir()
-    writer = out.write
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
     if bloom_ndv == "auto":
         # rows-per-output-file from the manifest summaries (compaction writes
         # one file per bucket unless max_records_per_file splits it) — the
@@ -89,16 +85,11 @@ def compact(
         if max_records_per_file:
             rows_max = min(rows_max, max_records_per_file)
         bloom_ndv = max(1024, rows_max)
-    if bloom_ndv:
-        # key-column bloom on compacted files (see apply.py for sizing) —
-        # compaction is where files get big enough for blooms to pay
-        writer = writer.option(
-            "parquet.bloom.filter.enabled#" + m["key_col"], "true"
-        ).option(
-            "parquet.bloom.filter.expected.ndv#" + m["key_col"], str(bloom_ndv)
-        )
-    writer.partitionBy("_bucket").parquet(staging)
-    added = table.collect_staged_files(staging, m["schema_id"])
+    # compaction is where files get big enough for a key bloom to pay
+    added = table.write_staged(
+        out, m["schema_id"], bloom_ndv=bloom_ndv,
+        max_records_per_file=max_records_per_file,
+    )
     return table.commit(
         added_files=added,
         replaced_buckets=set(todo),
@@ -221,7 +212,7 @@ def split_buckets(
     COW rewrite of one bucket grows with it; splitting restores bucket-sized
     rewrites without re-creating the table.
 
-    SHUFFLE-FREE by construction: with bucket = pmod(xxhash64(key), N), every
+    SHUFFLE-FREE by construction: with bucket = pmod(hash(key), N), every
     row of old bucket b lands in {b, b + N, b + 2N, ...} under the new
     function — each (bucket-pure) input file fans out into at most ``factor``
     output files locally, so the rewrite is a map-only write (no Exchange).
@@ -232,13 +223,11 @@ def split_buckets(
     m = table.manifest()
     n_new = m["num_buckets"] * factor
     df = table.read(spark, include_internal=True)
-    out = df.withColumn(
-        "_bucket", F.pmod(F.xxhash64(m["key_col"]), F.lit(n_new)).cast("int")
-    )
-    staging = table.staging_dir()
     # NOTE: no repartition — bucket-pure inputs split locally (map-only)
-    out.write.partitionBy("_bucket").parquet(staging)
-    added = table.collect_staged_files(staging, m["schema_id"])
+    added = table.write_staged(
+        df.withColumn("_bucket", Miniberg.bucket_expr(m["key_col"], n_new)),
+        m["schema_id"],
+    )
     return table.commit(
         added_files=added,
         replaced_buckets=set(range(m["num_buckets"])),

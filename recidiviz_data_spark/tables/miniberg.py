@@ -93,6 +93,11 @@ FORMAT = "miniberg/2"
 #   later-arriving STALE update cannot resurrect the doc; reads filter these.
 INTERNAL_COLS = ("_seq", "_deleted")
 
+# the table's bucket function, as the manifest records it (``bucket_expr``);
+# ``Miniberg.bucket_expr`` is its Spark column, ``Miniberg.key_bucket`` its
+# driver twin
+BUCKET_SQL = "pmod(xxhash64({key}), {n})"
+
 # read_keys: largest key list rendered as an `isin` literal (parquet In
 # pushdown); bigger lists switch to a broadcast semi-join (a 10^5-literal In
 # bloats the plan/task binaries faster than it helps the scan)
@@ -193,7 +198,7 @@ class Miniberg:
             "schemas": {"0": {"fields": fields}},
             "num_buckets": num_buckets,
             "key_col": key_col,
-            "bucket_expr": f"pmod(xxhash64({key_col}), {num_buckets})",
+            "bucket_expr": BUCKET_SQL.format(key=key_col, n=num_buckets),
             "last_applied_batch": -1,
             "props": props or {},
             "bucket_ranges": {"size": cls._range_size(num_buckets), "ranges": {}},
@@ -719,6 +724,32 @@ class Miniberg:
         return [os.path.join(self.root, f["path"]) for f in fs]
 
     # ------------------------------------------------------------- write path
+    def write_staged(
+        self,
+        df: DataFrame,
+        schema_id: int,
+        *,
+        bloom_ndv: int | None = None,
+        max_records_per_file: int | None = None,
+    ) -> list[dict]:
+        """Write ``df`` (it carries ``_bucket``) as ``_bucket``-partitioned
+        parquet into a fresh staging dir and return the staged files' entries
+        (``collect_staged_files``) for a commit: every table writer's one
+        write. ``bloom_ndv`` adds a parquet bloom filter on the key column,
+        sized for that many distinct keys per file; ``max_records_per_file``
+        caps the rows of each output file."""
+        writer = df.write
+        if max_records_per_file:
+            writer = writer.option("maxRecordsPerFile", max_records_per_file)
+        if bloom_ndv:
+            key_col = self.manifest()["key_col"]
+            writer = writer.option(
+                "parquet.bloom.filter.enabled#" + key_col, "true"
+            ).option("parquet.bloom.filter.expected.ndv#" + key_col, str(bloom_ndv))
+        staging = self.staging_dir()
+        writer.partitionBy("_bucket").parquet(staging)
+        return self.collect_staged_files(staging, schema_id)
+
     def staging_dir(self) -> str:
         os.makedirs(os.path.join(self.root, "tmp"), exist_ok=True)
         return os.path.join(self.root, "tmp", f"stage-{uuid.uuid4().hex}")
@@ -931,7 +962,7 @@ class Miniberg:
             new["props"] = {**m.get("props", {}), **(props or {}), **late}
         if num_buckets is not None and num_buckets != m["num_buckets"]:
             new["num_buckets"] = num_buckets
-            new["bucket_expr"] = f"pmod(xxhash64({m['key_col']}), {num_buckets})"
+            new["bucket_expr"] = BUCKET_SQL.format(key=m["key_col"], n=num_buckets)
         self._write_manifest(new["version"], new)
         self._restore_blobs(written_blobs)
         if lineage_rows:
@@ -1248,12 +1279,18 @@ class Miniberg:
     # ------------------------------------------------------------- utilities
     def bucket_col(self) -> F.Column:
         m = self.manifest()
-        return F.pmod(F.xxhash64(F.col(m["key_col"])), F.lit(m["num_buckets"])).cast("int")
+        return self.bucket_expr(m["key_col"], m["num_buckets"])
+
+    @staticmethod
+    def bucket_expr(key_col: str, num_buckets: int) -> F.Column:
+        """The bucket of each row as a Spark column: ``BUCKET_SQL``, the one
+        bucket function every writer, reader and manifest uses."""
+        return F.expr(BUCKET_SQL.format(key=key_col, n=num_buckets)).cast("int")
 
     @staticmethod
     def key_bucket(key, data_type: T.DataType, num_buckets: int) -> int:
         """``pmod(xxhash64(key), num_buckets)`` computed on the driver: the
-        bucket ``bucket_col`` gives a key of ``data_type``, with no Spark job.
+        bucket ``bucket_expr`` gives a key of ``data_type``, with no Spark job.
         Hashes the bytes Spark's ``XxHash64`` hashes for the type: UTF-8 for
         strings, 4 little-endian bytes for byte/short/int/date, 8 for
         long/timestamp (the value's internal form, as ``createDataFrame``

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -10,6 +11,9 @@ from recidiviz_data_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
+    # the session factory's 48g default lets the test JVM grow past a small
+    # host's memory (lazy GC); the suite's data needs a fraction of this
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "4g")
     s = get_spark("local[8]", shuffle_partitions=8, app_name="rds-tests")
     yield s
 

@@ -41,8 +41,10 @@ def test_dedup_strategies_agree_on_same_seq_distinct_payloads(spark):
         df = spark.createDataFrame(
             ordered,
             "event_seq long, op string, doc_id string, tokens array<int>, n_tok int, source string",
-        ).withColumn(BUCKET, F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int"))
-        for strat in ("agg", "window", "salted_window"):
+        ).withColumn(BUCKET, F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int")).withColumn(
+            "_valid", F.lit(True)
+        )
+        for strat in ("agg", "argmax", "window", "salted_window"):
             got = {
                 r["doc_id"]: (r["event_seq"], r["op"], tuple(r["tokens"]), r["n_tok"], r["source"])
                 for r in dedup_lww(df, payload, strategy=strat).collect()

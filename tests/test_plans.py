@@ -54,13 +54,14 @@ def test_lww_agg_dedup_has_map_side_combine(spark, changelog_plain):
     """The headline scale property: the agg dedup strategy must show a
     partial (map-side) aggregation phase before the shuffle, so hot keys are
     collapsed per-partition instead of concentrating on one reducer."""
-    from recidiviz_data_spark.cdc.apply import dedup_lww
+    from recidiviz_data_spark.cdc.apply import _validity, dedup_lww
     from recidiviz_data_spark.sources.changelog import read_range
 
     d, _ = changelog_plain
     log = read_range(spark, d).withColumn(
         "_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int")
     )
+    log = log.withColumn("_valid", _validity(log))
     winners = dedup_lww(log, ["tokens", "n_tok", "source", "lang"], strategy="agg")
     plan = plan_string(winners, mode="simple")
     # array-typed agg buffers use SortAggregate, but the partial (map-side)

@@ -8,7 +8,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import types as T
 
+from recidiviz_data_spark.cdc import apply
 from recidiviz_data_spark.cdc.apply import (
+    DECISION_PRUNE_MIN_BYTES,
     apply_batches,
     apply_full_log,
     create_empty_table,
@@ -84,11 +86,78 @@ def test_metrics_reconcile(spark, changelog_small, tmp_path):
     assert table.lineage() == lineage
 
 
-@pytest.mark.parametrize("mode", [True, False, "auto"])
-def test_decision_prune_modes_equivalent(spark, changelog_plain, tmp_path, mode):
-    """decision_prune only changes WHICH jobs run (prune-collect vs unpruned
-    2-column read) — the final state must be identical in every mode."""
+@pytest.mark.parametrize("min_bytes", [0, DECISION_PRUNE_MIN_BYTES])
+def test_decision_prune_modes_equivalent(spark, changelog_plain, tmp_path,
+                                         monkeypatch, min_bytes):
+    """The decision-prune size rule only changes WHICH jobs run (prune-collect
+    vs unpruned 2-column read) — the final state must be identical either
+    way. A 0-byte threshold prunes every batch; the default prunes none of
+    these small ones."""
     d, _ = changelog_plain
-    table = create_empty_table(str(tmp_path / f"t_{mode}"), V1_PAYLOAD, num_buckets=4)
-    apply_batches(spark, table, d, decision_prune=mode)
+    monkeypatch.setattr(apply, "DECISION_PRUNE_MIN_BYTES", min_bytes)
+    table = create_empty_table(str(tmp_path / f"t_{min_bytes}"), V1_PAYLOAD, num_buckets=4)
+    apply_batches(spark, table, d)
     assert_state_equal(table_state(spark, table), expected_state(d))
+
+
+def _write_batch(d, batch_id, rows):
+    """One hand-written changelog batch of (event_seq, op, doc_id, tokens, n_tok)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    seq, op, doc, tok, n = zip(*rows)
+    os.makedirs(os.path.join(d, f"batch_id={batch_id}"), exist_ok=True)
+    pq.write_table(
+        pa.table({
+            "event_seq": pa.array(seq, pa.int64()),
+            "op": pa.array(op, pa.string()),
+            "doc_id": pa.array(doc, pa.string()),
+            "tokens": pa.array(tok, pa.list_(pa.int32())),
+            "n_tok": pa.array(n, pa.int32()),
+            "source": pa.array(["web"] * len(rows), pa.string()),
+            "ts": pa.array([0] * len(rows), pa.timestamp("us")),
+            "schema_ver": pa.array([1] * len(rows), pa.int32()),
+        }),
+        os.path.join(d, f"batch_id={batch_id}", "part-0.parquet"),
+    )
+
+
+def test_strategies_agree_on_lineage_and_state(spark, tmp_path):
+    """All four dedup strategies share one contract: on a batch holding every
+    edge case, their lineage rows and final states are equal."""
+    d = str(tmp_path / "cl")
+    _write_batch(d, 0, [
+        (1, "I", "a", [1, 2], 2), (1, "I", "a", [1, 2], 2),  # exact duplicate
+        (3, "U", "a", [5], 1),
+        (4, "U", "b", [7], 1), (4, "U", "b", [8], 1),  # same-seq tie
+        (6, "I", "c", [3, 4], 2), (6, "U", "c", [9], 7),  # invalid twin of winner
+        (7, "I", "d", [2], 1), (8, None, "d", [1], 1),  # op NULL: _valid NULL
+        (9, "X", "e", [1], 1), (10, "I", "e", [1, 2], 5),  # only invalid events
+        (11, "I", None, [1], 1),  # NULL doc_id
+        (2, "I", "f", [1], 1), (12, "D", "f", None, None),
+    ])
+    _write_batch(d, 1, [
+        (2, "U", "a", [6], 1),  # stale against a's seq 3
+        (13, "D", "b", None, None),
+        (14, "I", "g", [4], 1), (15, None, "g", [5], 1),
+        (16, "X", "e", [1], 1),
+    ])
+    lineages, states = {}, {}
+    for strat in ("agg", "argmax", "window", "salted_window"):
+        t = create_empty_table(str(tmp_path / f"t_{strat}"), V1_PAYLOAD, num_buckets=4)
+        lineages[strat] = [
+            {k: v for k, v in r.items() if k != "wall_ms"}
+            for r in apply_batches(spark, t, d, dedup_strategy=strat)
+        ]
+        states[strat] = table_state(spark, t).sort_values("doc_id").reset_index(drop=True)
+    for strat in ("argmax", "window", "salted_window"):
+        assert lineages[strat] == lineages["agg"], strat
+        assert_state_equal(states[strat], states["agg"])
+    got = {r.doc_id: list(r.tokens) for r in states["agg"].itertuples()}
+    assert got == {"a": [5], "c": [3, 4], "d": [2], "g": [4]}
+    assert sum(r["invalid"] for r in lineages["agg"]) == 7
+    assert sum(r["events_in"] for r in lineages["agg"]) == 19
+    # losers (a's duplicate and older event, b's tie loser, f's insert) + a's stale replay
+    assert sum(r["skipped_stale"] for r in lineages["agg"]) == 5

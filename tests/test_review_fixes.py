@@ -68,7 +68,7 @@ def test_argmax_rejects_invalid_twin_of_winner(spark, tmp_path):
         }
     )
     pq.write_table(tbl, os.path.join(d, "batch_id=0", "part-0.parquet"))
-    for strat in ("agg", "argmax"):
+    for strat in ("agg", "argmax", "window", "salted_window"):
         t = create_empty_table(str(tmp_path / f"t_{strat}"), V1_PAYLOAD, num_buckets=2)
         apply_batches(spark, t, d, dedup_strategy=strat)
         rows = t.read(spark).collect()

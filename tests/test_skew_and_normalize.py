@@ -31,8 +31,7 @@ def test_zipf_hot_keys_correct(spark, zipf_changelog, tmp_path, strategy):
     """Zipf(1.5) doc skew: hottest docs get ~1000s of events; both the
     map-side-combine agg and the two-phase salted window stay correct."""
     table = create_empty_table(str(tmp_path / f"t_{strategy}"), V1_PAYLOAD, num_buckets=4)
-    apply_batches(spark, table, zipf_changelog, dedup_strategy=strategy,
-                  salt_partitions=8)
+    apply_batches(spark, table, zipf_changelog, dedup_strategy=strategy)
     assert_state_equal(table_state(spark, table), expected_state(zipf_changelog))
 
 
@@ -71,7 +70,8 @@ def test_native_and_arrow_normalizers_agree(spark):
     assert a["c"] == (None, None)
 
 
-def test_invalid_events_counted_and_excluded(spark, tmp_path):
+@pytest.mark.parametrize("strategy", ["agg", "argmax", "window", "salted_window"])
+def test_invalid_events_counted_and_excluded(spark, tmp_path, strategy):
     """Rows failing validation (bad op, n_tok mismatch) are side-channelled
     into the invalid metric, not applied (reference's error-threshold analog)."""
     import os
@@ -92,7 +92,7 @@ def test_invalid_events_counted_and_excluded(spark, tmp_path):
     )
     pq.write_table(tbl, os.path.join(d, "batch_id=0", "part-0.parquet"))
     table = create_empty_table(str(tmp_path / "t"), V1_PAYLOAD, num_buckets=2)
-    lineage = apply_batches(spark, table, d)
+    lineage = apply_batches(spark, table, d, dedup_strategy=strategy)
     assert sum(r["invalid"] for r in lineage) == 3
     assert sum(r["applied"] for r in lineage) == 1
     assert {r["doc_id"] for r in table.read(spark).collect()} == {"a"}
