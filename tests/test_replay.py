@@ -86,16 +86,22 @@ def test_metrics_reconcile(spark, changelog_small, tmp_path):
     assert table.lineage() == lineage
 
 
-@pytest.mark.parametrize("min_bytes", [0, DECISION_PRUNE_MIN_BYTES])
+@pytest.mark.parametrize("min_bytes", [
+    pytest.param(0, id="True"),
+    pytest.param(float("inf"), id="False"),
+    pytest.param(DECISION_PRUNE_MIN_BYTES, id="auto"),
+])
 def test_decision_prune_modes_equivalent(spark, changelog_plain, tmp_path,
-                                         monkeypatch, min_bytes):
+                                         monkeypatch, request, min_bytes):
     """The decision-prune size rule only changes WHICH jobs run (prune-collect
     vs unpruned 2-column read) — the final state must be identical either
-    way. A 0-byte threshold prunes every batch; the default prunes none of
-    these small ones."""
+    way. A 0-byte threshold always prunes ("True"), an infinite one never
+    prunes ("False"), and the default size rule ("auto") prunes none of
+    these small tables."""
     d, _ = changelog_plain
     monkeypatch.setattr(apply, "DECISION_PRUNE_MIN_BYTES", min_bytes)
-    table = create_empty_table(str(tmp_path / f"t_{min_bytes}"), V1_PAYLOAD, num_buckets=4)
+    mode = request.node.callspec.id
+    table = create_empty_table(str(tmp_path / f"t_{mode}"), V1_PAYLOAD, num_buckets=4)
     apply_batches(spark, table, d)
     assert_state_equal(table_state(spark, table), expected_state(d))
 
