@@ -23,12 +23,8 @@ How a sync stays exact:
   group's gained min/max and its lost values; a group is recomputed only
   when a lost value equals its stored min or max. Every other group merges
   with ``least``/``greatest`` and stays exact, because its stored extremum
-  survives. The recompute runs at most once per sync: in the default
-  ``minmax="scan"`` mode one scan of the current snapshot semi-joined to
-  the recompute set; with ``minmax="partials"`` a fold of a persisted
-  per-(group, bucket) min/max PARTIAL TREE (partitioned by bucket,
-  hardlink-carried like the distinct support, refreshed for the changed
-  buckets), so no sync reads the whole table.
+  survives. The recompute runs at most once per sync: one scan of the
+  current snapshot semi-joined to the recompute set.
 
 Sums are maintained in DECIMAL(28,4) (values cast to DECIMAL(18,4) before
 the first SUM): decimal add/subtract is exact, so incremental deltas never
@@ -61,9 +57,9 @@ def agg_view_path(table, group_col: str, value_col: str) -> str:
 
 
 def _aggs(df, group_col: str, value_col: str):
-    """The view's aggregate shape — used by full rebuilds AND by the two
-    changed-bucket partials (Spark plans both with a map-side partial
-    aggregate, so the shuffle carries one row per (task, group))."""
+    """The view's aggregate shape over a full read — what a rebuild stores
+    (Spark plans it with a map-side partial aggregate, so the shuffle
+    carries one row per (task, group))."""
     return df.groupBy(group_col).agg(
         F.count("*").alias("n_rows"),
         F.sum(F.col(value_col).cast(_VAL_T)).cast(_SUM_T).alias("sum_val"),
@@ -84,11 +80,10 @@ def agg_view_read(spark, path: str):
 def agg_view_sync(spark, table, path: str | None = None, *,
                   group_col: str, value_col: str,
                   rebuild_changed_fraction: float = 0.5,
-                  minmax: str = "scan",
                   changes=None, from_version: int | None = None,
                   to_version: int | None = None) -> dict:
     """Advance the materialized aggregate view to the table's current
-    version. First call (or spec/table/mode mismatch, or a version the view
+    version. First call (or spec/table mismatch, or a version the view
     is ahead of, or lost bucket identity) rebuilds from a full scan; after
     that every sync is incremental AND exact — see the module docstring.
 
@@ -97,19 +92,6 @@ def agg_view_sync(spark, table, path: str | None = None, *,
     ``index_sync_hook`` shares it between views. It is folded only when it
     spans the view's stored version to the table's current one; otherwise
     the sync diffs the changed buckets itself.
-
-    ``minmax`` selects what a group whose stored extremum was lost is
-    recomputed from:
-
-    - ``"scan"`` (default): one scan of the current snapshot semi-joined to
-      those groups. Zero extra storage.
-    - ``"partials"``: the view also persists a per-(group, BUCKET) min/max
-      partial tree (``minmax/`` partitioned by bucket), refreshed for the
-      changed buckets from one current-version read of them; the rest
-      hardlink-carry, and the groups fold from the partial table. It holds
-      one row per (group, bucket) pair with data — use when
-      group_cardinality × num_buckets ≪ row count (the usual case for
-      metric views), stay on "scan" for pathological group cardinalities.
 
     ``rebuild_changed_fraction``: when MORE than this fraction of buckets
     moved since the last sync, rebuild instead — the diff reads the changed
@@ -120,44 +102,29 @@ def agg_view_sync(spark, table, path: str | None = None, *,
     lives: batches touching a small fraction of a large bucket count.
     Returns {action, version, groups, recomputed_groups}."""
     call = dict(locals())  # every bound argument, for the conflict re-entry
-    if minmax not in ("scan", "partials"):
-        raise ValueError(f"minmax must be 'scan' or 'partials': {minmax!r}")
     base = path or agg_view_path(table, group_col, value_col)
     g, v = group_col, value_col
     uid = artifacts.table_uid(table)
-    ident = {"table_uuid": uid, "group_col": g, "value_col": v,
-             "minmax": minmax, "kind": "agg"}
+    ident = {"table_uuid": uid, "group_col": g, "value_col": v, "kind": "agg"}
 
-    def _partials_of(df):
-        return df.groupBy(g, table.bucket_col().alias("bucket")).agg(
-            F.min(v).alias("mn"), F.max(v).alias("mx")
-        )
-
-    def _write(stage: str, view_df, meta: dict, partials=None) -> None:
+    def _write(stage: str, view_df, meta: dict) -> None:
         os.makedirs(stage)
         view_df.write.parquet(os.path.join(stage, "view"))
-        if partials is not None:
-            _write_partitioned(partials, os.path.join(stage, "minmax"), "bucket")
         artifacts.write_sync_meta(stage, meta)
 
     def _rebuild(cur_v: int) -> dict:
         view = materialize(_aggs(table.read(spark), g, v))
         n_groups = view.count()
-        partials = (
-            materialize(_partials_of(table.read(spark)))
-            if minmax == "partials" else None
-        )
         meta = {**ident, "version": cur_v, "n_groups": n_groups}
         artifacts.ensure(
-            base, f"miniberg:{uid}:v{cur_v}:agg:{g}:{v}:{minmax}",
-            lambda stage: _write(stage, view, meta, partials),
+            base, f"miniberg:{uid}:v{cur_v}:agg:{g}:{v}",
+            lambda stage: _write(stage, view, meta),
         )
         return {"action": "rebuild", "version": cur_v, "groups": n_groups,
                 "recomputed_groups": 0}
 
     def _advance(r0, meta, cur_v: int, changes) -> dict:
-        cb = _changed_buckets(table, meta, cur_v, rebuild_changed_fraction)
-        if cb is None:
+        if _changed_buckets(table, meta, cur_v, rebuild_changed_fraction) is None:
             return _rebuild(cur_v)
         rows = _signed_rows(spark, table, meta["version"], cur_v, g, v, changes)
         sv, gained = F.col(v).cast(_VAL_T), F.col("sign") > 0
@@ -172,7 +139,7 @@ def agg_view_sync(spark, table, path: str | None = None, *,
         view = _read_state(spark, os.path.join(r0[0], "view"))
         # all group-key joins are NULL-SAFE: a null group is a real group
         # under GROUP BY semantics, and plain equi-joins would never match it
-        # (the stored null-group row and its partials would drift apart as
+        # (the stored null-group row and its delta would drift apart as
         # duplicates)
         merged = materialize(
             view.alias("v")
@@ -197,33 +164,13 @@ def agg_view_sync(spark, table, path: str | None = None, *,
         n_out, n_rec = merged.agg(
             F.count("*"), F.count(F.when(F.col("_rescan"), 1))
         ).first()
-
-        new_partials = None
-        if minmax == "partials":
-            # partials for the changed buckets; unchanged buckets' partials
-            # hardlink-carry at publish below
-            key = table.manifest(cur_v)["key_col"]
-            new_partials = materialize(_partials_of(
-                table.read(spark, version=cur_v, buckets=cb).select(key, g, v)
-            ))
         out = merged
         if n_rec:
-            if minmax == "partials":
-                # fold recomputed groups' extrema from the PARTIAL table:
-                # carried partials for unchanged buckets + the fresh
-                # changed-bucket ones
-                old_partials = _read_state(spark, os.path.join(r0[0], "minmax"))
-                fold_src = old_partials.filter(
-                    ~F.col("bucket").isin(cb)
-                ).unionByName(new_partials)
-                lo, hi = "mn", "mx"
-            else:
-                fold_src, lo, hi = table.read(spark, version=cur_v), v, v
             rx = (
-                fold_src.alias("t")
+                table.read(spark, version=cur_v).alias("t")
                 .join(merged.filter("_rescan").alias("r"),
                       F.col(f"t.{g}").eqNullSafe(F.col(f"r.{g}")), "left_semi")
-                .groupBy(g).agg(F.min(lo).alias("r_min"), F.max(hi).alias("r_max"))
+                .groupBy(g).agg(F.min(v).alias("r_min"), F.max(v).alias("r_max"))
             )
             # r_min/r_max may be legitimately null when the group's surviving
             # values are all null — pick by _rescan, never by coalesce
@@ -244,16 +191,9 @@ def agg_view_sync(spark, table, path: str | None = None, *,
             F.when(F.col("min_val").isNotNull(), F.col("sum_val")).alias("sum_val"),
             "min_val", "max_val",
         )
-
-        def _build(stage: str) -> None:
-            _write(stage, out, {**ident, "version": cur_v, "n_groups": n_out})
-            if minmax == "partials":
-                _carry_parts(os.path.join(r0[0], "minmax"),
-                             os.path.join(stage, "minmax"), cb)
-                _write_partitioned(new_partials, os.path.join(stage, "minmax"),
-                                   "bucket")
-
-        artifacts.publish(base, artifacts.mutated_key(r0[1]), _build,
+        new_meta = {**ident, "version": cur_v, "n_groups": n_out}
+        artifacts.publish(base, artifacts.mutated_key(r0[1]),
+                          lambda stage: _write(stage, out, new_meta),
                           expected_seq=r0[2])
         return {"action": "incremental", "version": cur_v, "groups": n_out,
                 "recomputed_groups": n_rec}
@@ -660,13 +600,13 @@ def x_distinct_view_sync(spark, sf_dir):
 # A materialized "top k rows by value per group" (the w1_topk_per_group
 # shape) maintained from the change feed.
 #
-# The partial tree does the heavy lifting, exactly as minmax="partials":
-# per (group, BUCKET) the top-k rows are persisted (at most k rows per
-# group per bucket, partitioned by bucket, hardlink-carried). The global
-# top-k per group is always a subset of the union of its per-bucket top-k
-# (any row beating a global top-k row beats its bucket's k-th row too), so
-# a sync only has to (a) recompute partials for the CHANGED buckets from
-# the read it already holds, and (b) re-fold the view rows of groups whose
+# A partial tree does the heavy lifting: per (group, BUCKET) the top-k rows
+# are persisted (at most k rows per group per bucket, partitioned by bucket,
+# hardlink-carried like the distinct support). The global top-k per group
+# is always a subset of the union of its per-bucket top-k (any row beating
+# a global top-k row beats its bucket's k-th row too), so a sync only has
+# to (a) recompute partials for the CHANGED buckets from the read it
+# already holds, and (b) re-fold the view rows of groups whose
 # changed-bucket partials differ — a delete of a top-k member refills from
 # the carried partials of untouched buckets, never from the data table.
 # Fully bucket-bounded, exact, no recompute scan.

@@ -4,9 +4,8 @@ guard, publish_branch blob re-check) and the round-7 build items (the
 split-verify cap bounding the shrunk-cluster blast radius, WAP delta audits
 over bucket-pruned table_changes, cross-artifact consistency stamps,
 artifact reader pins + per-call GC grace, read_keys broadcast threshold,
-bucket+column-pruned index-sync diffs, and the incremental materialized
-aggregate view: exact IVM from changed-bucket partial re-aggregation, with
-null-safe group keys and the index_sync_hook streaming tie-in)."""
+bucket+column-pruned index-sync diffs). The round's view-sync tests live in
+tests/test_aggview.py."""
 
 from __future__ import annotations
 
@@ -744,494 +743,3 @@ def test_index_sync_diff_is_bucket_and_column_pruned(spark, tmp_path):
     bands = band_index_bands(spark, bpath)
     assert bands.filter(F.col("doc_id") == "doc_200").count() > 0
     assert band_index_sync(spark, table, bpath)["action"] == "noop"
-
-# ------------------------------------------------- incremental aggregate view
-
-
-def _av_table(spark, tmp_path, n=60, buckets=8):
-    from recidiviz_data_spark.cdc.apply import bootstrap_table
-
-    rows = [(f"doc_{i:03d}", [1], 1, f"s{i % 5}", (i * 7) % 100) for i in range(n)]
-    df = spark.createDataFrame(
-        rows, "doc_id string, tokens array<int>, n_tok int, source string, val int")
-    return bootstrap_table(spark, str(tmp_path / "t_av"), df, num_buckets=buckets)
-
-
-def _av_full(spark, table):
-    from recidiviz_data_spark.operators.aggview import _aggs
-
-    return {
-        tuple(r) for r in _aggs(table.read(spark), "source", "val")
-        .withColumn("sum_val", F.col("sum_val").cast("double")).collect()
-    }
-
-
-def _av_view(spark, path):
-    from recidiviz_data_spark.operators.aggview import agg_view_read
-
-    return {
-        tuple(r) for r in agg_view_read(spark, path)
-        .select("source", "n_rows", F.col("sum_val").cast("double"),
-                "min_val", "max_val").collect()
-    }
-
-
-def test_agg_view_sync_exact_across_iud(spark, tmp_path):
-    """Every sync — insert-only, update-heavy, delete-of-extremum, group
-    emptied — leaves the view byte-equal to a full recompute; insert-only
-    batches skip the min/max recompute scan entirely."""
-    from recidiviz_data_spark.cdc.apply import apply_batch
-    from recidiviz_data_spark.operators.aggview import agg_view_sync
-
-    table = _av_table(spark, tmp_path)
-    path = str(tmp_path / "av")
-    res = agg_view_sync(spark, table, path, group_col="source", value_col="val")
-    assert res["action"] == "rebuild" and res["groups"] == 5
-    assert _av_view(spark, path) == _av_full(spark, table)
-    assert agg_view_sync(spark, table, path, group_col="source",
-                         value_col="val")["action"] == "noop"
-
-    ev_schema = ("event_seq long, op string, doc_id string, tokens array<int>, "
-                 "n_tok int, source string, val int")
-
-    # insert-only: monotone merge, NO recompute scan
-    ins = spark.createDataFrame(
-        [(1, "I", "doc_900", [1], 1, "s0", 999),
-         (2, "I", "doc_901", [1], 1, "s9", -5)], ev_schema)
-    apply_batch(spark, table, ins, 0, compact=False)
-    res = agg_view_sync(spark, table, path, group_col="source", value_col="val")
-    assert res["action"] == "incremental" and res["recomputed_groups"] == 0
-    assert res["groups"] == 6  # new group s9
-    assert _av_view(spark, path) == _av_full(spark, table)
-
-    # delete the max of s0 (doc_900, 999) + update another doc's value:
-    # affected groups get the exact recompute, others don't
-    upd = spark.createDataFrame(
-        [(3, "D", "doc_900", None, None, None, None),
-         (4, "U", "doc_000", [1], 1, "s0", -777)], ev_schema)
-    apply_batch(spark, table, upd, 1, compact=False)
-    res = agg_view_sync(spark, table, path, group_col="source", value_col="val")
-    assert res["action"] == "incremental" and res["recomputed_groups"] >= 1
-    got = _av_view(spark, path)
-    assert got == _av_full(spark, table)
-    # s0: 12 original docs, doc_900 inserted then deleted, doc_000's val
-    # 0 -> -777 (the group min), max recomputed over the survivors
-    assert ("s0", 12, sum((i * 7) % 100 for i in range(0, 60, 5)) - 0 + (-777),
-            -777, max((i * 7) % 100 for i in range(5, 60, 5))) in got
-
-    # empty a whole group: s9 leaves the view
-    rm = spark.createDataFrame(
-        [(5, "D", "doc_901", None, None, None, None)], ev_schema)
-    apply_batch(spark, table, rm, 2, compact=False)
-    agg_view_sync(spark, table, path, group_col="source", value_col="val")
-    got = _av_view(spark, path)
-    assert got == _av_full(spark, table)
-    assert not any(r[0] == "s9" for r in got)
-
-
-def test_agg_view_spec_change_and_version_regression_rebuild(spark, tmp_path):
-    """A different (group_col, value_col) spec — or a view ahead of the
-    table (time travel) — rebuilds instead of merging mismatched state."""
-    from recidiviz_data_spark.operators.aggview import agg_view_sync
-
-    table = _av_table(spark, tmp_path, n=20, buckets=2)
-    path = str(tmp_path / "av2")
-    agg_view_sync(spark, table, path, group_col="source", value_col="val")
-    res = agg_view_sync(spark, table, path, group_col="source", value_col="n_tok")
-    assert res["action"] == "rebuild"
-    view = _av_view(spark, path)  # now the n_tok view
-    assert all(r[2] == r[1] * 1.0 for r in view)  # n_tok==1 per doc: sum==n
-
-def test_agg_view_null_group_handling(spark, tmp_path):
-    """NULL is a real group under GROUP BY — every group-key join in the
-    sync is null-safe, so the null group merges, recomputes, and empties
-    exactly like any other (plain equi-joins would duplicate it forever)."""
-    from recidiviz_data_spark.cdc.apply import apply_batch
-    from recidiviz_data_spark.operators.aggview import agg_view_sync
-
-    table = _av_table(spark, tmp_path, n=20, buckets=2)
-    path = str(tmp_path / "avn")
-    agg_view_sync(spark, table, path, group_col="source", value_col="val")
-
-    ev_schema = ("event_seq long, op string, doc_id string, tokens array<int>, "
-                 "n_tok int, source string, val int")
-    ins = spark.createDataFrame(
-        [(1, "I", "doc_800", [1], 1, None, 50),
-         (2, "I", "doc_801", [1], 1, None, 7)], ev_schema)
-    apply_batch(spark, table, ins, 0, compact=False)
-    # 2-bucket fixture: disable the changed-fraction rebuild guard so the
-    # incremental path itself is what this test exercises
-    res = agg_view_sync(spark, table, path, group_col="source", value_col="val",
-                        rebuild_changed_fraction=1.0)
-    assert res["recomputed_groups"] == 0  # insert-only, even for null group
-    got = _av_view(spark, path)
-    assert got == _av_full(spark, table)
-    assert (None, 2, 57.0, 7, 50) in got
-
-    # delete the null group's max: null-safe recompute, no duplicate rows
-    rm = spark.createDataFrame([(3, "D", "doc_800", None, None, None, None)],
-                               ev_schema)
-    apply_batch(spark, table, rm, 1, compact=False)
-    res = agg_view_sync(spark, table, path, group_col="source", value_col="val",
-                        rebuild_changed_fraction=1.0)
-    assert res["recomputed_groups"] >= 1
-    got = _av_view(spark, path)
-    assert got == _av_full(spark, table)
-    assert (None, 1, 7.0, 7, 7) in got
-    assert sum(1 for r in got if r[0] is None) == 1
-
-def test_agg_view_follows_stream(spark, tmp_path):
-    """index_sync_hook(agg_views=...): every committed micro-batch advances
-    the materialized aggregate view — rebuild on epoch 1, exact incremental
-    syncs after — and the final view equals a full recompute over the final
-    snapshot (the streaming half of IVM)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import types as T
-
-    from recidiviz_data_spark.cdc.apply import create_empty_table
-    from recidiviz_data_spark.operators.aggview import _aggs
-    from recidiviz_data_spark.streaming.microbatch import (
-        index_sync_hook,
-        stream_apply_available_now,
-    )
-
-    # the file stream source orders files by mtime (millisecond grain), so
-    # each batch file gets its own increasing mtime: base + bid seconds
-    base = time.time() - 60
-
-    def write_batch(bid, rows):
-        # rows: (event_seq, op, doc_id, source|None, val|None)
-        bdir = tmp_path / "cl" / f"batch_id={bid}"
-        bdir.mkdir(parents=True, exist_ok=True)
-        path = str(bdir / "part-0.parquet")
-        pq.write_table(
-            pa.table({
-                "event_seq": pa.array([r[0] for r in rows], pa.int64()),
-                "op": pa.array([r[1] for r in rows], pa.string()),
-                "doc_id": pa.array([r[2] for r in rows], pa.string()),
-                "tokens": pa.array(
-                    [None if r[1] == "D" else [1] for r in rows],
-                    pa.list_(pa.int32())),
-                "n_tok": pa.array(
-                    [None if r[1] == "D" else 1 for r in rows], pa.int32()),
-                "source": pa.array([r[3] for r in rows], pa.string()),
-                "val": pa.array([r[4] for r in rows], pa.int32()),
-            }),
-            path,
-        )
-        os.utime(path, (base + bid, base + bid))
-
-    write_batch(0, [(i + 1, "I", f"doc_{i:02d}", f"s{i % 3}", i * 10)
-                    for i in range(12)])
-    write_batch(1, [(13, "I", "doc_90", "s0", 999),
-                    (14, "D", "doc_00", None, None)])
-    write_batch(2, [(15, "U", "doc_90", "s1", -4),   # group move
-                    (16, "D", "doc_04", None, None)])
-
-    schema = T.StructType([
-        T.StructField("event_seq", T.LongType(), False),
-        T.StructField("op", T.StringType(), False),
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("tokens", T.ArrayType(T.IntegerType()), True),
-        T.StructField("n_tok", T.IntegerType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("val", T.IntegerType(), True),
-    ])
-    payload = T.StructType([f for f in schema.fields
-                            if f.name not in ("event_seq", "op")])
-    table = create_empty_table(str(tmp_path / "t_avs"), payload, num_buckets=4)
-    vpath = str(tmp_path / "avstream")
-    dpath = str(tmp_path / "dvstream")
-    tpath = str(tmp_path / "tkstream")
-    rs: list[dict] = []
-    hook = index_sync_hook(spark, agg_views=[(vpath, "source", "val")],
-                           distinct_views=[(dpath, "source", "val")],
-                           topk_views=[(tpath, "source", "val", 2)],
-                           results=rs)
-    stream_apply_available_now(spark, table, str(tmp_path / "cl"),
-                               str(tmp_path / "ck"), max_files_per_trigger=1,
-                               schema=schema, post_batch=hook, compact=False)
-
-    # 3 epochs x 3 views, epoch 1 builds, the rest advance incrementally
-    assert [r["kind"] for r in rs] == [
-        "aggview:source:val", "distinctview:source:val", "topkview:source:val:2",
-    ] * 3
-    assert all(r["action"] == "rebuild" for r in rs[:3])
-    assert all(r["action"] == "incremental" for r in rs[3:])
-    assert _av_view(spark, vpath) == {
-        tuple(r) for r in _aggs(table.read(spark), "source", "val")
-        .withColumn("sum_val", F.col("sum_val").cast("double")).collect()
-    }
-    from recidiviz_data_spark.operators.aggview import (
-        distinct_view_read,
-        topk_view_read,
-    )
-
-    assert {tuple(r) for r in distinct_view_read(spark, dpath).collect()} == {
-        tuple(r) for r in table.read(spark).groupBy("source")
-        .agg(F.count_distinct("val").alias("n_distinct")).collect()
-    }
-    assert {
-        tuple(r) for r in topk_view_read(spark, tpath)
-        .select("source", "rnk", "doc_id", "val").collect()
-    } == _topk_full(spark, table, k=2)
-
-def test_distinct_view_sync_exact_and_partition_carry(spark, tmp_path):
-    """COUNT(DISTINCT) IVM: the support multiset keeps every sync exact
-    under I/U/D with NO recompute scan; only support partitions holding
-    changed groups are rewritten (unchanged partitions hardlink-carry —
-    same inode); null values are ignored per SQL semantics."""
-    from recidiviz_data_spark.cdc.apply import apply_batch, bootstrap_table
-    from recidiviz_data_spark.operators.aggview import (
-        distinct_view_read,
-        distinct_view_support,
-        distinct_view_sync,
-    )
-    from recidiviz_data_spark.tables import artifacts
-
-    # 40 groups spread over the 32 support partitions; duplicate values
-    rows = [(f"doc_{i:03d}", [1], 1, f"g{i % 40}", (i // 40) * 10)
-            for i in range(120)]  # each group holds values {0,10,20}
-    df = spark.createDataFrame(
-        rows, "doc_id string, tokens array<int>, n_tok int, source string, val int")
-    table = bootstrap_table(spark, str(tmp_path / "t_dv"), df, num_buckets=4)
-    path = str(tmp_path / "dv")
-
-    def full():
-        return {
-            tuple(r) for r in table.read(spark).groupBy("source")
-            .agg(F.count_distinct("val").alias("n_distinct")).collect()
-        }
-
-    def view():
-        return {tuple(r) for r in distinct_view_read(spark, path).collect()}
-
-    res = distinct_view_sync(spark, table, path, group_col="source", value_col="val")
-    assert res["action"] == "rebuild" and res["groups"] == 40
-    assert view() == full() and ("g0", 3) in view()
-    assert distinct_view_sync(spark, table, path, group_col="source",
-                              value_col="val")["action"] == "noop"
-    p_v1 = artifacts.resolve(path)[0]
-
-    ev_schema = ("event_seq long, op string, doc_id string, tokens array<int>, "
-                 "n_tok int, source string, val int")
-    # one batch touching ONLY g0: duplicate value (no distinct change), a new
-    # value, and a NULL value (ignored)
-    ev = spark.createDataFrame(
-        [(1, "I", "doc_900", [1], 1, "g0", 10),    # dup of existing value
-         (2, "I", "doc_901", [1], 1, "g0", 77),    # new value
-         (3, "I", "doc_902", [1], 1, "g0", None)], # null: ignored
-        ev_schema)
-    apply_batch(spark, table, ev, 0, compact=False)
-    res = distinct_view_sync(spark, table, path, group_col="source", value_col="val",
-                             rebuild_changed_fraction=1.0)
-    assert res["action"] == "incremental"
-    assert 0 < res["changed_parts"] < 32
-    assert view() == full() and ("g0", 4) in view()
-
-    # unchanged support partitions are HARDLINK-carried (same inode)
-    p_v2 = artifacts.resolve(path)[0]
-    carried = None
-    for d in sorted(os.listdir(os.path.join(p_v1, "support"))):
-        a = os.path.join(p_v1, "support", d)
-        b = os.path.join(p_v2, "support", d)
-        if os.path.isdir(a) and os.path.isdir(b):
-            fa = sorted(f for f in os.listdir(a) if f.endswith(".parquet"))
-            fb = sorted(f for f in os.listdir(b) if f.endswith(".parquet"))
-            if fa and fa == fb and os.stat(os.path.join(a, fa[0])).st_ino == \
-                    os.stat(os.path.join(b, fb[0])).st_ino:
-                carried = d
-                break
-    assert carried is not None
-
-    # delete one of two copies of (g0, 10): distinct count unchanged; then
-    # the last copy: it drops; support row dies
-    ev2 = spark.createDataFrame(
-        [(4, "D", "doc_900", None, None, None, None)], ev_schema)
-    apply_batch(spark, table, ev2, 1, compact=False)
-    distinct_view_sync(spark, table, path, group_col="source", value_col="val",
-                       rebuild_changed_fraction=1.0)
-    assert view() == full() and ("g0", 4) in view()
-
-    ev3 = spark.createDataFrame(
-        [(5, "D", "doc_040", None, None, None, None),  # g0's LAST val-10 doc
-         (6, "U", "doc_001", [1], 1, "g1", 500)],      # g1: 0 -> 500
-        ev_schema)
-    apply_batch(spark, table, ev3, 2, compact=False)
-    distinct_view_sync(spark, table, path, group_col="source", value_col="val",
-                       rebuild_changed_fraction=1.0)
-    assert view() == full() and ("g0", 3) in view()  # {0, 20, 77}
-    sup = {
-        (r["source"], r["val"]): r["cnt"]
-        for r in distinct_view_support(spark, path).collect()
-    }
-    assert ("g0", 10) not in sup  # multiset emptied at value grain
-    assert sup[("g1", 500)] == 1 and ("g1", 0) not in sup
-
-def test_agg_view_fraction_guard_rebuilds(spark, tmp_path):
-    """A batch scattered over more than rebuild_changed_fraction of the
-    buckets makes the incremental path strictly worse than one full scan
-    (two changed-bucket scans + merges vs one) — the sync detects it from
-    changed_buckets (pure metadata) and rebuilds instead."""
-    from recidiviz_data_spark.cdc.apply import apply_batch
-    from recidiviz_data_spark.operators.aggview import agg_view_sync
-
-    table = _av_table(spark, tmp_path, n=40, buckets=4)
-    path = str(tmp_path / "avg_guard")
-    agg_view_sync(spark, table, path, group_col="source", value_col="val")
-
-    ev_schema = ("event_seq long, op string, doc_id string, tokens array<int>, "
-                 "n_tok int, source string, val int")
-    scattered = spark.createDataFrame(
-        [(i + 1, "I", f"doc_{800 + i}", [1], 1, f"s{i % 5}", i) for i in range(40)],
-        ev_schema)
-    apply_batch(spark, table, scattered, 0, compact=False)
-    res = agg_view_sync(spark, table, path, group_col="source", value_col="val")
-    assert res["action"] == "rebuild"  # 40 keys over 4 buckets: all moved
-    assert _av_view(spark, path) == _av_full(spark, table)
-
-def test_agg_view_minmax_partials_mode(spark, tmp_path):
-    """minmax="partials": extrema survive deletes via the per-(group, bucket)
-    partial tree — the fold reads partials, not the data table, and the new
-    max can live in an UNCHANGED bucket (carried partials must supply it).
-    Byte-parity with full recompute throughout; unchanged partial partitions
-    hardlink-carry."""
-    from recidiviz_data_spark.cdc.apply import apply_batch
-    from recidiviz_data_spark.operators.aggview import agg_view_sync
-    from recidiviz_data_spark.tables import artifacts
-
-    table = _av_table(spark, tmp_path, n=60, buckets=8)
-    path = str(tmp_path / "avp")
-    kw = dict(group_col="source", value_col="val", minmax="partials",
-              rebuild_changed_fraction=1.0)
-    res = agg_view_sync(spark, table, path, **kw)
-    assert res["action"] == "rebuild"
-    assert _av_view(spark, path) == _av_full(spark, table)
-    p_v1 = artifacts.resolve(path)[0]
-    assert os.path.isdir(os.path.join(p_v1, "minmax"))
-    # mode mismatch rebuilds (scan-mode view has no partial tree)
-    assert agg_view_sync(spark, table, path, group_col="source",
-                         value_col="val")["action"] == "rebuild"
-    agg_view_sync(spark, table, path, **kw)  # back to partials mode
-    p_v1 = artifacts.resolve(path)[0]
-
-    ev_schema = ("event_seq long, op string, doc_id string, tokens array<int>, "
-                 "n_tok int, source string, val int")
-    # insert a new global max for s0, then delete it: the fold must restore
-    # the old max from partials of buckets the delete batch never touched
-    ins = spark.createDataFrame(
-        [(1, "I", "doc_990", [1], 1, "s0", 9999)], ev_schema)
-    apply_batch(spark, table, ins, 0, compact=False)
-    res = agg_view_sync(spark, table, path, **kw)
-    assert res["action"] == "incremental" and res["recomputed_groups"] == 0
-    got = _av_view(spark, path)
-    assert got == _av_full(spark, table)
-    assert any(r[0] == "s0" and r[4] == 9999 for r in got)
-
-    rm = spark.createDataFrame(
-        [(2, "D", "doc_990", None, None, None, None)], ev_schema)
-    apply_batch(spark, table, rm, 1, compact=False)
-    res = agg_view_sync(spark, table, path, **kw)
-    assert res["action"] == "incremental" and res["recomputed_groups"] == 1
-    got = _av_view(spark, path)
-    assert got == _av_full(spark, table)
-    s0_max = max((i * 7) % 100 for i in range(0, 60, 5))
-    assert any(r[0] == "s0" and r[4] == s0_max for r in got)
-
-    # unchanged bucket partial partitions are hardlink-carried (same inode)
-    p_v3 = artifacts.resolve(path)[0]
-    carried = False
-    for d in sorted(os.listdir(os.path.join(p_v1, "minmax"))):
-        a, b = (os.path.join(p, "minmax", d) for p in (p_v1, p_v3))
-        if os.path.isdir(a) and os.path.isdir(b):
-            fa = sorted(f for f in os.listdir(a) if f.endswith(".parquet"))
-            fb = sorted(f for f in os.listdir(b) if f.endswith(".parquet"))
-            if fa and fa == fb and os.stat(os.path.join(a, fa[0])).st_ino == \
-                    os.stat(os.path.join(b, fb[0])).st_ino:
-                carried = True
-                break
-    assert carried
-
-def _topk_full(spark, table, k=3):
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("source").orderBy(F.col("val").desc(), F.col("doc_id"))
-    return {
-        tuple(r) for r in table.read(spark).filter("val IS NOT NULL")
-        .withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
-        .select("source", "rnk", "doc_id", "val").collect()
-    }
-
-
-def test_topk_view_sync_exact_and_bucket_bounded(spark, tmp_path):
-    """Top-k IVM: per-(group, bucket) top-k partials make every sync exact
-    and bucket-bounded — a deleted top-1's replacement refills from CARRIED
-    partials of untouched buckets; groups with unchanged partials keep their
-    view rows verbatim; ties break on doc_id; unchanged partial partitions
-    hardlink-carry."""
-    from recidiviz_data_spark.cdc.apply import apply_batch
-    from recidiviz_data_spark.operators.aggview import (
-        topk_view_read,
-        topk_view_sync,
-    )
-    from recidiviz_data_spark.tables import artifacts
-
-    table = _av_table(spark, tmp_path, n=60, buckets=8)
-    path = str(tmp_path / "topk")
-    kw = dict(group_col="source", value_col="val", k=3,
-              rebuild_changed_fraction=1.0)
-
-    def view():
-        return {
-            tuple(r) for r in topk_view_read(spark, path)
-            .select("source", "rnk", "doc_id", "val").collect()
-        }
-
-    res = topk_view_sync(spark, table, path, **kw)
-    assert res["action"] == "rebuild" and res["groups"] == 5
-    assert view() == _topk_full(spark, table)
-    assert topk_view_sync(spark, table, path, **kw)["action"] == "noop"
-    p_v1 = artifacts.resolve(path)[0]
-
-    ev_schema = ("event_seq long, op string, doc_id string, tokens array<int>, "
-                 "n_tok int, source string, val int")
-    # new global top-1 for s0, plus a TIE with an existing value in s1
-    # (doc_id decides); s2..s4 untouched -> not refolded
-    ins = spark.createDataFrame(
-        [(1, "I", "doc_900", [1], 1, "s0", 5000),
-         (2, "I", "doc_000a", [1], 1, "s1", (31 * 7) % 100)], ev_schema)
-    apply_batch(spark, table, ins, 0, compact=False)
-    res = topk_view_sync(spark, table, path, **kw)
-    assert res["action"] == "incremental"
-    assert 0 < res["refolded_groups"] <= 2
-    got = view()
-    assert got == _topk_full(spark, table)
-    assert ("s0", 1, "doc_900", 5000) in got
-
-    # delete the inserted top-1: the refill (old max) lives in buckets the
-    # delete batch never touched — it must come from carried partials
-    rm = spark.createDataFrame(
-        [(3, "D", "doc_900", None, None, None, None)], ev_schema)
-    apply_batch(spark, table, rm, 1, compact=False)
-    res = topk_view_sync(spark, table, path, **kw)
-    assert res["action"] == "incremental" and res["refolded_groups"] >= 1
-    got = view()
-    assert got == _topk_full(spark, table)
-    assert not any(r[2] == "doc_900" for r in got)
-    s0_best = max((i * 7) % 100 for i in range(0, 60, 5))
-    assert any(r[0] == "s0" and r[1] == 1 and r[3] == s0_best for r in got)
-
-    # unchanged partial partitions hardlink-carry across versions
-    p_v3 = artifacts.resolve(path)[0]
-    carried = False
-    for d in sorted(os.listdir(os.path.join(p_v1, "parts"))):
-        a, b = (os.path.join(p, "parts", d) for p in (p_v1, p_v3))
-        if os.path.isdir(a) and os.path.isdir(b):
-            fa = sorted(f for f in os.listdir(a) if f.endswith(".parquet"))
-            fb = sorted(f for f in os.listdir(b) if f.endswith(".parquet"))
-            if fa and fa == fb and os.stat(os.path.join(a, fa[0])).st_ino == \
-                    os.stat(os.path.join(b, fb[0])).st_ino:
-                carried = True
-                break
-    assert carried

@@ -144,105 +144,3 @@ def test_minhash_signature_single_exchange(spark):
     # one repartition exchange; the distinct's aggregate must NOT add another
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
-
-# ---------------------------------------------------------------------------
-# ADVICE r7 fixes (the round's only non-optimization changes — two
-# silent-full-rebuild perf bugs)
-
-
-def test_distinct_view_conflict_retry_keeps_fraction(spark, tmp_path, monkeypatch):
-    """The ArtifactConflict re-entry of distinct_view_sync must forward the
-    caller's rebuild_changed_fraction (ADVICE r7: it reverted to the 0.5
-    default, silently full-rebuilding few-bucket tables on conflict)."""
-    from recidiviz_data_spark.cdc.apply import bootstrap_table
-    from recidiviz_data_spark.operators import aggview
-    from recidiviz_data_spark.tables import artifacts
-
-    rows = [(f"doc_{i}", [i], 1, f"g{i % 3}", i % 5) for i in range(30)]
-    df = spark.createDataFrame(
-        rows, "doc_id string, tokens array<int>, n_tok int, source string, val int")
-    table = bootstrap_table(spark, str(tmp_path / "t_dvc"), df, num_buckets=2)
-    path = str(tmp_path / "dvc")
-
-    # initial build (no conflict path involved)
-    aggview.distinct_view_sync(spark, table, path, group_col="source",
-                               value_col="val", rebuild_changed_fraction=1.0)
-
-    real_publish = artifacts.publish
-    real_sync = aggview.distinct_view_sync
-    seen: list[dict] = []
-    fails = {"n": 1}
-
-    def flaky_publish(*a, **kw):
-        if fails["n"]:
-            fails["n"] -= 1
-            raise artifacts.ArtifactConflict("simulated concurrent flip")
-        return real_publish(*a, **kw)
-
-    def recording_sync(*a, **kw):
-        seen.append(dict(kw))
-        return real_sync(*a, **kw)
-
-    monkeypatch.setattr(artifacts, "publish", flaky_publish)
-    monkeypatch.setattr(aggview, "distinct_view_sync", recording_sync)
-
-    # advance the table so the sync has work, then sync with a conflict
-    from recidiviz_data_spark.tables.miniberg import keys_from_entries  # noqa: F401
-    from tests.test_tombstones import write_batch
-
-    cl = str(tmp_path / "cl_dvc")
-    write_batch(cl, 0, [{"seq": 100 + i, "op": "U", "doc": f"doc_{i}",
-                         "tokens": [i], "source": f"g{i % 3}", "val": 7}
-                        for i in range(3)])
-    from recidiviz_data_spark.cdc.apply import apply_batches
-
-    apply_batches(spark, table, cl)
-    res = real_sync(spark, table, path, group_col="source", value_col="val",
-                    rebuild_changed_fraction=1.0)
-    assert res["action"] in ("incremental", "rebuild", "noop")
-    # the re-entry (triggered by the simulated conflict) carried the guard
-    assert seen, "conflict re-entry never happened (publish not retried?)"
-    assert all(kw.get("rebuild_changed_fraction") == 1.0 for kw in seen), seen
-
-
-def test_index_sync_hook_forwards_view_sync_kw(spark, tmp_path, monkeypatch):
-    """index_sync_hook's view_sync_kw must reach all three view syncs
-    (ADVICE r7: sync_kw only reached band/IVF/cluster syncs; view syncs on
-    few-bucket streams silently full-rebuilt every micro-batch)."""
-    from recidiviz_data_spark.cdc.apply import bootstrap_table
-    from recidiviz_data_spark.operators import aggview
-    from recidiviz_data_spark.streaming.microbatch import index_sync_hook
-
-    rows = [(f"doc_{i}", [i], 1, f"g{i % 3}", i) for i in range(12)]
-    df = spark.createDataFrame(
-        rows, "doc_id string, tokens array<int>, n_tok int, source string, val int")
-    table = bootstrap_table(spark, str(tmp_path / "t_hook"), df, num_buckets=2)
-
-    calls: dict[str, dict] = {}
-
-    def spy(name, real):
-        def f(*a, **kw):
-            calls[name] = dict(kw)
-            return real(*a, **kw)
-        return f
-
-    monkeypatch.setattr(aggview, "agg_view_sync", spy("agg", aggview.agg_view_sync))
-    monkeypatch.setattr(aggview, "distinct_view_sync",
-                        spy("distinct", aggview.distinct_view_sync))
-    monkeypatch.setattr(aggview, "topk_view_sync",
-                        spy("topk", aggview.topk_view_sync))
-
-    results: list = []
-    hook = index_sync_hook(
-        spark,
-        agg_views=[(str(tmp_path / "av"), "source", "val")],
-        distinct_views=[(str(tmp_path / "dv"), "source", "val")],
-        topk_views=[(str(tmp_path / "tv"), "source", "val", 2)],
-        view_sync_kw={"rebuild_changed_fraction": 1.0},
-        results=results,
-    )
-    hook(table, batch_id=0)
-    assert set(calls) == {"agg", "distinct", "topk"}
-    for name, kw in calls.items():
-        assert kw.get("rebuild_changed_fraction") == 1.0, (name, kw)
-    assert len(results) == 3

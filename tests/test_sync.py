@@ -190,7 +190,7 @@ CONFLICT_CASES = {
             dict(rebuild_stale_fraction=0.9, lloyd_iters=2)),
     "clusters": ("dedup", "neardup_clusters_sync",
                  dict(rebuild_stale_fraction=0.9, split_verify_cap=64)),
-    "agg": ("aggview", "agg_view_sync", dict(VIEW, minmax="partials")),
+    "agg": ("aggview", "agg_view_sync", dict(VIEW)),
     "distinct": ("aggview", "distinct_view_sync", dict(VIEW)),
     "topk": ("aggview", "topk_view_sync", dict(VIEW, k=2)),
 }

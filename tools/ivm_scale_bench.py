@@ -16,6 +16,10 @@ across the two batch shapes that matter:
   removed (``clustered_agg_recomputed_groups``); every other group, and
   every group of the insert-only clustered phase, merges its extrema with
   no scan.
+- LOST-EXTREMUM batch (deletes the stored max row of 10 groups): every
+  touched group lost its stored max, so the agg sync pays its one
+  recompute scan of the current snapshot for those groups
+  (``lostmax_agg_recomputed_groups`` = 10).
 
 Run:  python tools/ivm_scale_bench.py [n_rows]
 Prints one JSON line; wall numbers are from THIS host and only same-run
@@ -79,15 +83,11 @@ t0 = time.time()
 table = bootstrap_table(spark, os.path.join(root, "t"), df, num_buckets=N_BUCKETS)
 out["bootstrap_s"] = round(time.time() - t0, 3)
 
-ap, ap2, dp = (os.path.join(root, n) for n in ("agg", "aggp", "dist"))
+ap, dp = (os.path.join(root, n) for n in ("agg", "dist"))
 t0 = time.time()
 r = agg_view_sync(spark, table, ap, group_col="source", value_col="val")
 out["agg_rebuild_s"] = round(time.time() - t0, 3)
 assert r["action"] == "rebuild" and r["groups"] == N_GROUPS
-t0 = time.time()
-agg_view_sync(spark, table, ap2, group_col="source", value_col="val",
-              minmax="partials")
-out["aggp_rebuild_s"] = round(time.time() - t0, 3)
 t0 = time.time()
 distinct_view_sync(spark, table, dp, group_col="source", value_col="val")
 out["dist_rebuild_s"] = round(time.time() - t0, 3)
@@ -107,8 +107,6 @@ t0 = time.time()
 r = agg_view_sync(spark, table, ap, group_col="source", value_col="val")
 out["scattered_agg_s"] = round(time.time() - t0, 3)
 out["scattered_agg_action"] = r["action"]  # expect: rebuild (guard)
-agg_view_sync(spark, table, ap2, group_col="source", value_col="val",
-              minmax="partials")  # keep the partials view current too
 t0 = time.time()
 r = distinct_view_sync(spark, table, dp, group_col="source", value_col="val")
 out["scattered_dist_s"] = round(time.time() - t0, 3)
@@ -137,11 +135,6 @@ out["clustered_agg_s"] = round(time.time() - t0, 3)
 out["clustered_agg_action"] = r["action"]
 out["clustered_agg_recomputed_groups"] = r["recomputed_groups"]
 t0 = time.time()
-r = agg_view_sync(spark, table, ap2, group_col="source", value_col="val",
-                  minmax="partials")
-out["clustered_aggp_s"] = round(time.time() - t0, 3)  # bucket-bounded fold
-out["clustered_aggp_action"] = r["action"]
-t0 = time.time()
 r = distinct_view_sync(spark, table, dp, group_col="source", value_col="val")
 out["clustered_dist_s"] = round(time.time() - t0, 3)
 out["clustered_dist_changed_parts"] = r["changed_parts"]
@@ -166,13 +159,27 @@ r = agg_view_sync(spark, table, ap, group_col="source", value_col="val")
 out["insert_agg_s"] = round(time.time() - t0, 3)
 out["insert_agg_recomputed_groups"] = r["recomputed_groups"]  # expect 0
 t0 = time.time()
-agg_view_sync(spark, table, ap2, group_col="source", value_col="val",
-              minmax="partials")
-out["insert_aggp_s"] = round(time.time() - t0, 3)
-t0 = time.time()
 r = distinct_view_sync(spark, table, dp, group_col="source", value_col="val")
 out["insert_dist_s"] = round(time.time() - t0, 3)
 out["insert_dist_changed_parts"] = r["changed_parts"]
+
+# ---- phase 4: LOST-EXTREMUM batch — delete the stored max row of 10 groups
+# (phase 1 gave g0010..g0019 one unique max each, 999_999): every touched
+# group loses its stored max, so the agg sync recomputes all 10 extrema
+v0 = table.current_version()
+lost = [(4000 + i, "D", f"doc_{900_000_000 + i:09d}", None, None, None, None)
+        for i in range(10, 20)]
+apply_batch(spark, table, spark.createDataFrame(lost, EV), 3, compact=False)
+out["lostmax_changed_buckets"] = len(
+    table.changed_buckets(v0, table.current_version()))
+t0 = time.time()
+r = agg_view_sync(spark, table, ap, group_col="source", value_col="val")
+out["lostmax_agg_s"] = round(time.time() - t0, 3)
+out["lostmax_agg_action"] = r["action"]
+out["lostmax_agg_recomputed_groups"] = r["recomputed_groups"]  # expect 10
+t0 = time.time()
+distinct_view_sync(spark, table, dp, group_col="source", value_col="val")
+out["lostmax_dist_s"] = round(time.time() - t0, 3)
 
 # correctness at this scale: both views == full recompute after all phases
 full = {
@@ -188,12 +195,6 @@ got = {
         "min_val", "max_val").collect()
 }
 assert got == full, "agg view drifted from full recompute"
-gotp = {
-    tuple(x) for x in agg_view_read(spark, ap2).select(
-        "source", "n_rows", F.col("sum_val").cast("double"),
-        "min_val", "max_val").collect()
-}
-assert gotp == full, "partials-mode agg view drifted from full recompute"
 fulld = {
     tuple(x) for x in table.read(spark).groupBy("source").agg(
         F.count_distinct("val").alias("nd")).collect()
@@ -205,8 +206,6 @@ out["clustered_dist_speedup_vs_rebuild"] = round(
     out["dist_rebuild_s"] / out["clustered_dist_s"], 2)
 out["insert_agg_speedup_vs_rebuild"] = round(
     out["agg_rebuild_s"] / out["insert_agg_s"], 2)
-out["clustered_aggp_speedup_vs_scan_mode"] = round(
-    out["clustered_agg_s"] / out["clustered_aggp_s"], 2)
 
 print(json.dumps(out))
 shutil.rmtree(root, ignore_errors=True)
