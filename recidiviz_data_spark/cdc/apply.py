@@ -218,7 +218,8 @@ def apply_batch(
     input metrics; the upsert rows are re-shuffled once more, but that set is
     winners-only), two target reads (a 2-column decision read + the rewrite
     read — both bucket-pruned, the decision read only once the target
-    reaches ``DECISION_PRUNE_MIN_BYTES``), and one partitioned write.
+    reaches ``DECISION_PRUNE_MIN_BYTES``, the rewrite read only when a
+    changed bucket is rewritten copy-on-write), and one partitioned write.
     Winners are token-normalized (``normalize_tokens_native``) after the
     dedup. ``compact='auto'`` re-buckets the whole rewrite
     only when a bucket's file count exceeds ``compact_files_per_bucket``,
@@ -233,9 +234,10 @@ def apply_batch(
     share one aggregation; the decision-prune collect is skipped below
     ``DECISION_PRUNE_MIN_BYTES``), and planning the target reads starts no
     Spark job. Counted as Spark jobs, AQE sub-jobs included, that is about
-    11.5 per batch (``cdc.spark_jobs_per_batch`` in the perfbench
-    ``stream_tail`` trace: 12-event batches into a 32-bucket table) — the
-    serial term that bounds scaling at high executor counts.
+    11 per batch (``cdc.spark_jobs_per_batch`` in the perfbench
+    ``stream_tail`` trace: 12-event batches into a 32-bucket table, one
+    merge-on-read and one compacting batch) — the serial term that bounds
+    scaling at high executor counts.
     """
     t0 = time.monotonic()
     m = table.manifest()
@@ -449,14 +451,6 @@ def apply_batch(
                     ):
                         mor_buckets.add(b)
             cow_buckets = changed_buckets - mor_buckets
-            changed_docs = changed.select("doc_id")
-            target_full = _align(
-                table.read(spark, buckets=sorted(cow_buckets), include_internal=True),
-                target_schema,
-            )
-            kept = target_full.join(changed_docs, "doc_id", "left_anti").withColumn(
-                BUCKET, bucket
-            )
             # applied -> live row; deleted -> tombstone (payload nulled, _seq kept)
             tombstoned = changed
             for c in payload_cols:
@@ -471,13 +465,28 @@ def apply_batch(
             ).withColumn(BUCKET, bucket)
 
             n_out = max(len(changed_buckets), 1)
-            if need_compact:
-                # full re-bucket: one file per bucket after this commit
-                rewrite = kept.unionByName(upserts).repartition(n_out, BUCKET)
+            if not cow_buckets:
+                # every changed bucket is merge-on-read: the write is the
+                # winners alone, with no target read, anti-join or union
+                rewrite = upserts.repartition(n_out, BUCKET)
             else:
-                # cheap path: target rows stream through the broadcast anti-join
-                # unshuffled (their files are bucket-pure); only winners shuffle
-                rewrite = kept.unionByName(upserts.repartition(n_out, BUCKET))
+                kept = (
+                    _align(
+                        table.read(spark, buckets=sorted(cow_buckets),
+                                   include_internal=True),
+                        target_schema,
+                    )
+                    .join(changed.select("doc_id"), "doc_id", "left_anti")
+                    .withColumn(BUCKET, bucket)
+                )
+                if need_compact:
+                    # full re-bucket: one file per bucket after this commit
+                    rewrite = kept.unionByName(upserts).repartition(n_out, BUCKET)
+                else:
+                    # cheap path: target rows stream through the broadcast
+                    # anti-join unshuffled (their files are bucket-pure); only
+                    # winners shuffle
+                    rewrite = kept.unionByName(upserts.repartition(n_out, BUCKET))
             if bloom_ndv == "auto":
                 # size the filter from metadata already in hand: the largest
                 # output file holds at most (bucket's current rows + its

@@ -342,8 +342,10 @@ def _nearest_cents(iv, cents, n: int = 1):
     rows = sorted(cents.select("cent_id", "cv", "cn2").collect(),
                   key=lambda r: r["cent_id"])
     if not rows:  # no centroids: the old cross join yielded no rows either
-        return iv.sparkSession.createDataFrame(
-            [], "vec_id long, cent_id long, dist2 double, rn int"
+        from recidiviz_data_spark.tables.miniberg import Miniberg
+
+        return Miniberg.empty_frame(
+            iv.sparkSession, "vec_id long, cent_id long, dist2 double, rn int"
         )
     C = np.array([r["cv"] for r in rows], dtype=np.int64)
     cn2 = np.array([int(r["cn2"]) for r in rows], dtype=np.int64)
@@ -778,6 +780,7 @@ def ivf_index_sync(spark, table, path: str | None = None, *,
 
     from recidiviz_data_spark.operators.dedup import index_delta
     from recidiviz_data_spark.tables import artifacts
+    from recidiviz_data_spark.tables.miniberg import Miniberg
 
     base = path or table_ivf_index_path(table)
     uid = artifacts.table_uid(table)
@@ -800,7 +803,7 @@ def ivf_index_sync(spark, table, path: str | None = None, *,
             )
             out.write.partitionBy("cell").parquet(os.path.join(stage, "vectors"))
             cents.write.parquet(os.path.join(stage, "centroids"))
-            spark.createDataFrame([], dead_schema).write.parquet(
+            Miniberg.empty_frame(spark, dead_schema).write.parquet(
                 os.path.join(stage, "dead")
             )
             artifacts.write_sync_meta(stage, meta)

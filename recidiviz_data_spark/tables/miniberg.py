@@ -544,6 +544,22 @@ class Miniberg:
         return out if include_internal else self._public_view(m, out)
 
     @staticmethod
+    def empty_frame(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
+        """An empty DataFrame of exactly ``schema`` (a ``StructType``, names,
+        types and nullability kept, or a DDL string), planned as an empty
+        ``LocalRelation`` built in the JVM: the optimizer folds it out of a
+        union, and no task of it starts a Python worker.
+        ``spark.createDataFrame([], schema)`` plans a Python-backed RDD leg
+        instead, whose empty tasks each start one — engine code uses this
+        helper for every empty relation."""
+        jvm = spark._jvm
+        types = jvm.org.apache.spark.sql.types
+        jschema = (types.StructType.fromDDL(schema) if isinstance(schema, str)
+                   else types.DataType.fromJson(schema.json()))
+        jdf = spark._jsparkSession.createDataFrame(jvm.java.util.ArrayList(), jschema)
+        return DataFrame(jdf, spark)
+
+    @staticmethod
     def files_for_stats(files: list[dict], stats_filter: dict) -> list[dict]:
         """Drop files whose recorded per-column min/max exclude every value
         in the requested ranges. Conservative on every uncertainty: missing
@@ -577,7 +593,7 @@ class Miniberg:
         """Union the given file entries, aligning each schema-id group onto
         ``full`` (null-fill added columns, widen-cast old physical types)."""
         if not files:
-            return spark.createDataFrame([], full)
+            return self.empty_frame(spark, full)
         by_schema: dict[int, list[str]] = {}
         for f in files:
             by_schema.setdefault(f["schema_id"], []).append(os.path.join(self.root, f["path"]))
@@ -606,7 +622,7 @@ class Miniberg:
         full = self._schema_struct(m, m["schema_id"], include_internal=True)
         user = self._schema_struct(m, m["schema_id"], include_internal=False)
         if not files:
-            return spark.createDataFrame([], full if include_internal else user)
+            return self.empty_frame(spark, full if include_internal else user)
         base = [f for f in files if f.get("kind") != "delta"]
         deltas = [f for f in files if f.get("kind") == "delta"]
         out = self._union_aligned(spark, m, base, full)

@@ -379,8 +379,8 @@ def test_agg_view_sync_exact_across_iud(spark, tmp_path):
 
 
 def test_agg_view_spec_change_and_version_regression_rebuild(spark, tmp_path):
-    """A different (group_col, value_col) spec — or a view ahead of the
-    table (time travel) — rebuilds instead of merging mismatched state."""
+    """A different (group_col, value_col) spec rebuilds instead of merging
+    mismatched state. (A view ahead of its table: the two tests below.)"""
     from recidiviz_data_spark.operators.aggview import agg_view_sync
 
     table = _table(spark, str(tmp_path / "t_av"), _av_state(20), buckets=2)
@@ -390,6 +390,63 @@ def test_agg_view_spec_change_and_version_regression_rebuild(spark, tmp_path):
     assert res["action"] == "rebuild"
     view = _agg_view(spark, path)  # now the n_tok view
     assert all(r[2] == r[1] * 1.0 for r in view)  # n_tok==1 per doc: sum==n
+
+
+def test_agg_view_ahead_of_the_table_rebuilds(spark, tmp_path):
+    """A view synced past the table's current version rebuilds: the table
+    opened here is a copy taken before its last commit, so its uuid matches
+    the view's record and its version is lower. The rebuild equals a fresh
+    one."""
+    import shutil
+
+    from recidiviz_data_spark.operators.aggview import agg_view_sync
+    from recidiviz_data_spark.tables.miniberg import Miniberg
+
+    state = _av_state(20)
+    root, copy = str(tmp_path / "t_av"), str(tmp_path / "t_av_before")
+    table = _table(spark, root, state, buckets=2)
+    path = str(tmp_path / "av")
+    assert agg_view_sync(spark, table, path, **KW)["action"] == "rebuild"
+    shutil.copytree(root, copy)
+    _apply(spark, table, state, [("U", "doc_003", "s1", 500),
+                                 ("D", "doc_004", None, None),
+                                 ("I", "doc_900", "s9", 5)], 0)
+    assert agg_view_sync(spark, table, path, **KW)["action"] == "incremental"
+
+    before = Miniberg(copy)
+    assert before.manifest()["table_uuid"] == table.manifest()["table_uuid"]
+    assert before.current_version() < table.current_version()
+    res = agg_view_sync(spark, before, path, **KW)
+    assert res["action"] == "rebuild" and res["version"] == before.current_version()
+    fresh = str(tmp_path / "av_fresh")
+    assert agg_view_sync(spark, before, fresh, **KW)["action"] == "rebuild"
+    assert _agg_view(spark, path) == _agg_view(spark, fresh) == _agg_full(spark, before)
+
+
+def test_agg_view_sync_after_rollback_equals_rebuild(spark, tmp_path):
+    """``Miniberg.rollback`` commits the restored snapshot as a new, higher
+    version, so a view synced past the rolled-back commit advances to the
+    restored contents (no rebuild) and equals a fresh rebuild."""
+    from recidiviz_data_spark.operators.aggview import agg_view_sync
+
+    state = _av_state(20)
+    table = _table(spark, str(tmp_path / "t_av"), state, buckets=2)
+    v0 = table.current_version()
+    path = str(tmp_path / "av")
+    assert agg_view_sync(spark, table, path, **KW)["action"] == "rebuild"
+    restored = _agg_view(spark, path)
+    _apply(spark, table, state, [("U", "doc_003", "s1", 500),
+                                 ("D", "doc_004", None, None),
+                                 ("I", "doc_900", "s9", 5)], 0)
+    assert agg_view_sync(spark, table, path, **KW)["action"] == "incremental"
+    assert _agg_view(spark, path) != restored
+
+    v2 = table.rollback(v0)
+    res = agg_view_sync(spark, table, path, **KW)
+    assert res["action"] == "incremental" and res["version"] == v2
+    fresh = str(tmp_path / "av_fresh")
+    assert agg_view_sync(spark, table, fresh, **KW)["action"] == "rebuild"
+    assert _agg_view(spark, path) == _agg_view(spark, fresh) == restored
 
 
 def test_agg_view_null_group_handling(spark, tmp_path):

@@ -1,20 +1,61 @@
 """miniberg table-format tests (SURVEY.md §5.2 #2-4): atomic commits,
-exactly-once idempotency, time travel, orphan invisibility, schema evolution."""
+exactly-once idempotency, time travel, orphan invisibility, schema evolution,
+disjoint-bucket rebase, stats and key-range skipping, merge-on-read deltas
+and the plan and Spark-job budget of the tail apply."""
 
 from __future__ import annotations
 
 import glob
 import json
 import os
+import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from recidiviz_data_spark.cdc.apply import apply_batch, apply_batches, create_empty_table
+from recidiviz_data_spark.gen import gen_changelog
 from recidiviz_data_spark.oracle import assert_state_equal, expected_state, expected_state_with_lang
+from recidiviz_data_spark.plans.checks import assert_no_row_python, plan_string
 from recidiviz_data_spark.sources.changelog import read_batch
+from recidiviz_data_spark.tables.maintenance import compact, split_buckets
 from recidiviz_data_spark.tables.miniberg import CommitConflict, Miniberg
 from tests.test_replay import V1_PAYLOAD, table_state
+
+
+def _mk_table(tmp_path, name, num_buckets=4):
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.StringType(), False),
+            T.StructField("source", T.StringType(), True),
+            T.StructField("_seq", T.LongType(), True),
+            T.StructField("_deleted", T.BooleanType(), True),
+        ]
+    )
+    return Miniberg.create(str(tmp_path / name), schema, num_buckets=num_buckets)
+
+
+def _stage_file(table, bucket, rows):
+    """Stage one parquet file of (doc_id, source, _seq, _deleted) rows into
+    ``bucket`` and return its collected entries (footer stats recorded)."""
+    staging = table.staging_dir()
+    bdir = os.path.join(staging, f"_bucket={bucket}")
+    os.makedirs(bdir)
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([r[0] for r in rows]),
+                "source": pa.array([r[1] for r in rows]),
+                "_seq": pa.array([r[2] for r in rows], type=pa.int64()),
+                "_deleted": pa.array([False] * len(rows)),
+            }
+        ),
+        os.path.join(bdir, "part-0.parquet"),
+    )
+    return table.collect_staged_files(staging, 0)
 
 
 def test_time_travel_matches_oracle_per_batch(spark, changelog_plain, tmp_path):
@@ -421,8 +462,6 @@ def test_range_layout_commit_read_and_carry(spark, tmp_path):
     ~sqrt(B)-entry root, reads resolve bucket -> range -> sidecar, and an
     incremental commit carries every untouched range verbatim (same
     content-addressed path — zero writes)."""
-    from tests.test_round4 import _mk_table, _stage_file
-
     table = _mk_table(tmp_path, "t_ranges", num_buckets=32)
     m0 = table.manifest()
     assert m0["bucket_ranges"] == {"size": 5, "ranges": {}}  # isqrt(32)
@@ -462,8 +501,6 @@ def test_range_layout_rollback_and_timetravel(spark, tmp_path):
     """Old snapshots stay readable after an incremental commit, and
     rollback restores an old snapshot as a new version that re-references
     its range manifests verbatim."""
-    from tests.test_round4 import _mk_table, _stage_file
-
     table = _mk_table(tmp_path, "t_rollback", num_buckets=32)
     added = []
     for b in (1, 9, 30):
@@ -485,8 +522,6 @@ def test_range_layout_rebase_and_conflicts(tmp_path):
     """Disjoint-bucket optimistic rebase works across range manifests (the
     root diff loads only DIFFERING ranges); overlapping buckets still
     conflict."""
-    from tests.test_round4 import _mk_table, _stage_file
-
     table = _mk_table(tmp_path, "t_rebase", num_buckets=32)
     base = []
     for b in (2, 12, 22):
@@ -510,8 +545,6 @@ def test_range_layout_rebase_and_conflicts(tmp_path):
 def test_range_layout_gc_pins_range_manifests(tmp_path):
     """gc_orphans keeps range manifests and the sidecars they reference
     (both live under meta/fm/) while removing genuinely orphaned blobs."""
-    from tests.test_round4 import _mk_table, _stage_file
-
     table = _mk_table(tmp_path, "t_gc", num_buckets=32)
     added = _stage_file(table, 4, [("g1", "web", 1)])
     table.commit(added_files=added, replaced_buckets=set())
@@ -531,9 +564,7 @@ def test_range_layout_full_apply_path(spark, tmp_path):
     """The real engine path (create -> apply_batch -> read) at 10,001
     buckets: apply's bucket-pruned MERGE, summaries and lineage all go
     through the range hop, and the root stays KiB-scale."""
-    from tests.test_round4 import _v1_payload
-
-    table = create_empty_table(str(tmp_path / "t_bigbuckets"), _v1_payload(),
+    table = create_empty_table(str(tmp_path / "t_bigbuckets"), V1_PAYLOAD,
                                num_buckets=10_001)
     assert table.manifest()["bucket_ranges"]["size"] == 100
     rows = [
@@ -554,3 +585,301 @@ def test_range_layout_full_apply_path(spark, tmp_path):
     m = table.manifest()
     assert len(m["bucket_ranges"]["ranges"]) <= 2
     assert os.path.getsize(table._vpath(m["version"])) < 4096
+
+
+# ------------------------------------- commit rebase, stats and key skipping
+def test_disjoint_bucket_commit_rebase(tmp_path):
+    """Two writers committing to DISJOINT buckets from the same parent both
+    land (the loser auto-rebases); overlapping buckets and watermark
+    movement still conflict."""
+    table = _mk_table(tmp_path, "t_rebase")
+    v0 = table.current_version()
+    e_b0 = _stage_file(table, 0, [("a", "web", 1)])
+    e_b1 = _stage_file(table, 1, [("b", "web", 1)])
+    assert table.commit(added_files=e_b0, replaced_buckets={0}, expected_parent=v0) == 1
+    # stale parent, disjoint bucket: rebases internally, no caller replay
+    assert table.commit(added_files=e_b1, replaced_buckets={1}, expected_parent=v0) == 2
+    paths = {f["path"] for f in table.files()}
+    assert {e["path"] for e in e_b0 + e_b1} <= paths
+    # overlap: bucket 1 was just touched -> a stale-parent commit to it raises
+    e_b1b = _stage_file(table, 1, [("c", "web", 2)])
+    with pytest.raises(CommitConflict):
+        table.commit(added_files=e_b1b, replaced_buckets={1}, expected_parent=v0)
+    # watermark: once batch 3 is applied, a stale-parent batch-3 commit raises
+    e_b2 = _stage_file(table, 2, [("d", "web", 3)])
+    v3 = table.commit(added_files=e_b2, replaced_buckets={2}, last_applied_batch=3)
+    e_b3 = _stage_file(table, 3, [("e", "web", 4)])
+    with pytest.raises(CommitConflict):
+        table.commit(added_files=e_b3, replaced_buckets={3},
+                     last_applied_batch=3, expected_parent=v3 - 1)
+
+
+def test_secondary_stats_skipping(spark, tmp_path):
+    """Files whose recorded footer min/max exclude the predicate range are
+    not opened: a source='code' read over a table whose 'web' rows live in
+    other files prunes those files at the manifest level AND returns the
+    exact rows."""
+    table = _mk_table(tmp_path, "t_stats")
+    added = []
+    added += _stage_file(table, 0, [(f"w{i}", "web", i) for i in range(5)])
+    added += _stage_file(table, 1, [(f"c{i}", "code", 10 + i) for i in range(5)])
+    added += _stage_file(table, 2, [(f"b{i}", "books", 20 + i) for i in range(5)])
+    table.commit(added_files=added, replaced_buckets=set())
+    files = table.files()
+    assert all("stats" in f and "source" in f["stats"] for f in files)
+
+    kept = table.files_for_stats(files, {"source": ("code", "code")})
+    assert len(kept) == 1 and kept[0]["stats"]["source"] == ["code", "code"]
+    rows = table.read(spark, stats_filter={"source": ("code", "code")}).collect()
+    assert sorted(r["doc_id"] for r in rows) == [f"c{i}" for i in range(5)]
+    # range predicate on _seq: only the middle file survives
+    kept_seq = table.files_for_stats(files, {"_seq": (10, 14)})
+    assert len(kept_seq) == 1
+    # unbounded side + type-mismatch bounds are conservative (no crash)
+    assert len(table.files_for_stats(files, {"source": (None, "code")})) == 2
+    assert len(table.files_for_stats(files, {"source": (5, 7)})) == 3
+
+    # a bucket with delta files is never pruned (MOR resolution needs base)
+    files_d = [dict(f) for f in files]
+    files_d[0]["kind"] = "delta"
+    assert len(table.files_for_stats(files_d, {"source": ("code", "code")})) == 2
+
+
+def test_read_keys_with_stats_filter(spark, tmp_path):
+    """Point lookup + secondary predicate: key skipping and stats skipping
+    compose, and the residual filter is exact."""
+    table = _mk_table(tmp_path, "t_rks")
+    added = _stage_file(table, 0, [("a", "web", 1), ("b", "code", 2)])
+    added += _stage_file(table, 1, [("c", "books", 3)])
+    table.commit(added_files=added, replaced_buckets=set())
+    got = table.read_keys(spark, ["a", "b"], stats_filter={"source": ("code", "code")})
+    assert [r["doc_id"] for r in got.collect()] == ["b"]
+
+
+# ------------------------------------------------------- merge-on-read (MOR)
+def test_mor_forced_replay_equality(spark, changelog_small, tmp_path):
+    """Forced merge-on-read (every eligible bucket writes deltas, never a
+    rewrite) must reproduce the LWW-fold oracle exactly — deletes become
+    delta tombstones, stale replays stay dead, the mid-log schema bump
+    lands in delta files read against older base files."""
+    d, _ = changelog_small
+    table = create_empty_table(str(tmp_path / "t_mor"), V1_PAYLOAD, num_buckets=8)
+    apply_batches(spark, table, d, mor=True, compact=False)
+    kinds = [f.get("kind") for f in table.files()]
+    assert "delta" in kinds, "forced MOR produced no delta entries"
+    assert_state_equal(
+        table_state(spark, table, with_lang=True), expected_state_with_lang(d)
+    )
+
+
+def test_mor_autocompact_folds_deltas(spark, changelog_small, tmp_path):
+    """With compact='auto', delta depth is bounded: once a bucket hits the
+    file threshold the next write COWs it, folding deltas into base files.
+    Equality must survive the fold."""
+    d, _ = changelog_small
+    table = create_empty_table(str(tmp_path / "t_morc"), V1_PAYLOAD, num_buckets=8)
+    apply_batches(spark, table, d, mor=True, compact="auto", compact_files_per_bucket=3)
+    summ = table.bucket_summaries(table.manifest())
+    assert summ and all(s["n_files"] <= 3 for s in summ.values()), summ
+    assert_state_equal(
+        table_state(spark, table, with_lang=True), expected_state_with_lang(d)
+    )
+
+
+def test_mor_point_lookup_and_tombstone(spark, changelog_plain, tmp_path):
+    """read_keys on a MOR table resolves deltas: an updated key returns its
+    newest payload, a deleted key disappears (tombstone delta wins over the
+    live base row)."""
+    d, _ = changelog_plain
+    table = create_empty_table(str(tmp_path / "t_morp"), V1_PAYLOAD, num_buckets=4)
+    apply_batches(spark, table, d)
+    live = table.read(spark).select("doc_id").limit(2).collect()
+    k_upd, k_del = live[0][0], live[1][0]
+    batch = spark.createDataFrame(
+        [
+            (10_000_000, "U", k_upd, [7, 7, 7], 3, "web"),
+            (10_000_001, "D", k_del, None, None, None),
+        ],
+        "event_seq long, op string, doc_id string, tokens array<int>, "
+        "n_tok int, source string",
+    )
+    apply_batch(spark, table, batch, table.manifest()["last_applied_batch"] + 1,
+                mor=True, compact=False)
+    assert any(f.get("kind") == "delta" for f in table.files())
+    got = {r["doc_id"]: r for r in table.read_keys(spark, [k_upd, k_del]).collect()}
+    assert list(got) == [k_upd] and got[k_upd]["tokens"] == [7, 7, 7]
+    # stale replay AFTER the tombstone must not resurrect the doc
+    stale = spark.createDataFrame(
+        [(1, "U", k_del, [9], 1, "web")],
+        "event_seq long, op string, doc_id string, tokens array<int>, "
+        "n_tok int, source string",
+    )
+    apply_batch(spark, table, stale, table.manifest()["last_applied_batch"] + 1,
+                mor=True, compact=False)
+    assert table.read(spark).filter(F.col("doc_id") == k_del).count() == 0
+    # the MOR-resolved read plan stays JVM-side and join-sane
+    resolved = table.read(spark)
+    p = plan_string(resolved)
+    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
+    assert_no_row_python(resolved)
+
+
+def test_split_buckets_folds_mor_deltas(spark, changelog_plain, tmp_path):
+    """Bucket split reads through MOR resolution and replaces every bucket,
+    so delta files fold away and state is preserved across the re-bucket."""
+    d, _ = changelog_plain
+    table = create_empty_table(str(tmp_path / "t_split"), V1_PAYLOAD, num_buckets=4)
+    apply_batches(spark, table, d, mor=True, compact=False)
+    assert any(f.get("kind") == "delta" for f in table.files())
+    before = table_state(spark, table).sort_values("doc_id").reset_index(drop=True)
+    split_buckets(spark, table, factor=2)
+    assert table.manifest()["num_buckets"] == 8
+    assert not any(f.get("kind") == "delta" for f in table.files())
+    after = table_state(spark, table).sort_values("doc_id").reset_index(drop=True)
+    assert before.drop(columns=["tokens"]).equals(after.drop(columns=["tokens"]))
+    assert (before.tokens.map(tuple) == after.tokens.map(tuple)).all()
+
+
+def test_mor_write_amplification(spark, tmp_path):
+    """A 1%-change dribble batch under MOR writes < 10% of the bytes the
+    copy-on-write rewrite would, and both modes read back identically."""
+    cl = str(tmp_path / "cl")
+    gen_changelog(cl, n_docs=4000, n_events=4000, n_batches=1, delete_rate=0.0)
+    base_root = str(tmp_path / "t_base")
+    table = create_empty_table(base_root, V1_PAYLOAD, num_buckets=8)
+    apply_batches(spark, table, cl)
+    cow_root = str(tmp_path / "t_cow")
+    shutil.copytree(base_root, cow_root)
+
+    batch = spark.createDataFrame(
+        [
+            (1_000_000 + i, "U", f"doc_{i:08d}", [1, 2, 3], 3, "web")
+            for i in range(0, 4000, 100)  # 40 docs = 1%
+        ],
+        "event_seq long, op string, doc_id string, tokens array<int>, "
+        "n_tok int, source string",
+    )
+
+    def added_bytes(t, **kw):
+        before = {f["path"] for f in t.files()}
+        apply_batch(spark, t, batch, t.manifest()["last_applied_batch"] + 1,
+                    compact=False, **kw)
+        return sum(f["bytes"] for f in t.files() if f["path"] not in before)
+
+    mor_b = added_bytes(table, mor="auto")
+    cow_b = added_bytes(Miniberg(cow_root), mor=False)
+    assert any(f.get("kind") == "delta" for f in table.files()), "auto MOR did not fire"
+    assert mor_b < 0.1 * cow_b, (mor_b, cow_b)
+    a = table_state(spark, table).sort_values("doc_id").reset_index(drop=True)
+    b = table_state(spark, Miniberg(cow_root)).sort_values("doc_id").reset_index(drop=True)
+    assert a.drop(columns=["tokens"]).equals(b.drop(columns=["tokens"]))
+    assert (a.tokens.map(tuple) == b.tokens.map(tuple)).all()
+
+
+def test_bloom_filter_written_and_reads_exact(spark, tmp_path):
+    """bloom_ndv writes a parquet-native bloom on the key column (file grows
+    by the bloom bytes); point lookups stay exact. Compaction can add blooms
+    too."""
+    batch = spark.createDataFrame(
+        [(i, "I", f"doc_{i:08d}", [1, 2], 2, "web") for i in range(2000)],
+        "event_seq long, op string, doc_id string, tokens array<int>, "
+        "n_tok int, source string",
+    )
+    t1 = create_empty_table(str(tmp_path / "t_bloom"), V1_PAYLOAD, num_buckets=2)
+    t2 = create_empty_table(str(tmp_path / "t_plain"), V1_PAYLOAD, num_buckets=2)
+    apply_batch(spark, t1, batch, 0, bloom_ndv=2000)
+    apply_batch(spark, t2, batch, 0)
+    b1 = sum(f["bytes"] for f in t1.files())
+    b2 = sum(f["bytes"] for f in t2.files())
+    assert b1 > b2 + 1000, (b1, b2)  # bloom bytes actually landed
+    got = t1.read_keys(spark, ["doc_00000042"]).collect()
+    assert len(got) == 1 and got[0]["n_tok"] == 2
+    assert compact(spark, t2, min_files=1, bloom_ndv=2000) is not None
+    b2c = sum(f["bytes"] for f in t2.files())
+    assert b2c > b2 + 1000, (b2c, b2)
+    assert t2.read_keys(spark, ["doc_00000042"]).count() == 1
+
+
+# ---------------------------------------------- the all-merge-on-read apply
+# Spark jobs of one all-merge-on-read apply_batch below (measured at
+# local[8]; the apply that still read an empty copy-on-write side, through a
+# Python-backed empty relation, ran 8)
+ALL_MOR_APPLY_JOB_BUDGET = 7
+
+
+def _all_mor_batch(spark, tmp_path):
+    """A 4-bucket table of 400 docs (one base file per bucket) and batch 1
+    of its changelog, read from parquet as a tail reads it: two updates,
+    under the 5% merge-on-read threshold of their buckets, so every changed
+    bucket gets a delta file and none is rewritten copy-on-write."""
+    cl = str(tmp_path / "cl")
+
+    def write(batch_id, rows):
+        bdir = os.path.join(cl, f"batch_id={batch_id}")
+        os.makedirs(bdir)
+        pq.write_table(pa.table({
+            "event_seq": pa.array([r[0] for r in rows], pa.int64()),
+            "op": [r[1] for r in rows],
+            "doc_id": [r[2] for r in rows],
+            "tokens": pa.array([r[3] for r in rows], pa.list_(pa.int32())),
+            "n_tok": pa.array([r[4] for r in rows], pa.int32()),
+            "source": [r[5] for r in rows],
+        }), os.path.join(bdir, "part-0.parquet"))
+
+    write(0, [(i, "I", f"doc_{i:04d}", [i], 1, "web") for i in range(400)])
+    write(1, [(1000, "U", "doc_0007", [7, 7], 2, "code"),
+              (1001, "U", "doc_0123", [1], 1, "books")])
+    table = create_empty_table(str(tmp_path / "t_allmor"), V1_PAYLOAD, num_buckets=4)
+    apply_batch(spark, table, read_batch(spark, cl, 0), 0)
+    return table, read_batch(spark, cl, 1)
+
+
+def _python_legs(df) -> list[str]:
+    """Nodes of ``df``'s optimized and physical plans that move rows across
+    the Python/JVM boundary: a ``LogicalRDD``/``ExistingRDD`` leaf (what
+    ``spark.createDataFrame`` of local rows plans; each of its tasks starts
+    a Python worker) or any Python evaluation node."""
+    qe = df._jdf.queryExecution()
+    plans = qe.optimizedPlan().toString() + qe.sparkPlan().toString()
+    return [n for n in ("LogicalRDD", "ExistingRDD", "Python") if n in plans]
+
+
+def test_empty_reads_and_all_mor_write_plan_have_no_python_leg(
+    spark, tmp_path, monkeypatch
+):
+    """An empty read is a JVM-only empty relation with the table's exact
+    user or internal schema (nullability included), and the DataFrame an
+    all-merge-on-read apply writes holds no Python-backed leg: the apply
+    reads no copy-on-write side when no changed bucket is copy-on-write."""
+    table, batch = _all_mor_batch(spark, tmp_path)
+    for internal in (False, True):
+        empty = table.read(spark, buckets=[], include_internal=internal)
+        assert empty.schema == table.spark_schema(include_internal=internal)
+        assert _python_legs(empty) == []
+        assert empty.count() == 0
+
+    written = []
+    real = Miniberg.write_staged
+
+    def record(self, df, *a, **kw):
+        written.append(df)
+        return real(self, df, *a, **kw)
+
+    monkeypatch.setattr(Miniberg, "write_staged", record)
+    lineage = apply_batch(spark, table, batch, 1)
+    assert [r["write_mode"] for r in lineage if "write_mode" in r] == ["mor"] * 2
+    assert len(written) == 1 and _python_legs(written[0]) == []
+    got = {r["doc_id"]: r["source"] for r in
+           table.read_keys(spark, ["doc_0007", "doc_0123", "doc_0008"]).collect()}
+    assert got == {"doc_0007": "code", "doc_0123": "books", "doc_0008": "web"}
+
+
+def test_all_mor_apply_spark_job_budget(spark, tmp_path):
+    """One all-merge-on-read apply_batch runs at most the measured number of
+    Spark jobs (counted by the DAG scheduler's next job id)."""
+    table, batch = _all_mor_batch(spark, tmp_path)
+    before = _next_job_id(spark)
+    lineage = apply_batch(spark, table, batch, 1)
+    n_jobs = _next_job_id(spark) - before
+    assert {r.get("write_mode") for r in lineage} == {"mor"}
+    assert n_jobs <= ALL_MOR_APPLY_JOB_BUDGET, n_jobs

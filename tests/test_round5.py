@@ -123,7 +123,7 @@ def test_stats_filter_on_internal_seq(spark, tmp_path):
     """A stats_filter on ``_seq`` (recorded in per-file stats) must work
     under the default include_internal=False — the residual predicate runs
     BEFORE internal columns are dropped (ADVICE r4)."""
-    from tests.test_round4 import _mk_table, _stage_file
+    from tests.test_miniberg import _mk_table, _stage_file
 
     table = _mk_table(tmp_path, "t_seqstats", num_buckets=2)
     added = _stage_file(table, 0, [(f"a{i}", "web", i) for i in range(5)])
@@ -143,7 +143,7 @@ def test_commit_props_fn_survives_rebase(tmp_path):
     """props_fn stamps the version the commit ACTUALLY lands at: after a
     disjoint-bucket rebase the recorded version matches the returned one
     (ADVICE r4: compact's precomputed m.version+1 went stale)."""
-    from tests.test_round4 import _mk_table, _stage_file
+    from tests.test_miniberg import _mk_table, _stage_file
 
     table = _mk_table(tmp_path, "t_propsfn")
     v0 = table.current_version()
@@ -162,7 +162,7 @@ def test_commit_props_fn_survives_rebase(tmp_path):
 def test_compact_records_actual_version(spark, tmp_path):
     """compact()'s last_compaction_version prop equals the version compact
     returned."""
-    from tests.test_round4 import _mk_table, _stage_file
+    from tests.test_miniberg import _mk_table, _stage_file
     from recidiviz_data_spark.tables.maintenance import compact
 
     table = _mk_table(tmp_path, "t_compactv", num_buckets=2)
@@ -179,7 +179,7 @@ def test_mor_threshold_uses_base_rows_only(spark, tmp_path):
     base+delta: with 400 base rows and 20 existing delta rows, a 21-doc
     change (> 5% of 400, but <= 5% of 420) must go copy-on-write."""
     from recidiviz_data_spark.cdc.apply import apply_batch, create_empty_table
-    from tests.test_round4 import _v1_payload
+    from tests.test_replay import V1_PAYLOAD
 
     def batch(seq0, ids):
         return spark.createDataFrame(
@@ -189,7 +189,7 @@ def test_mor_threshold_uses_base_rows_only(spark, tmp_path):
             "n_tok int, source string",
         )
 
-    table = create_empty_table(str(tmp_path / "t_mden"), _v1_payload(), num_buckets=1)
+    table = create_empty_table(str(tmp_path / "t_mden"), V1_PAYLOAD, num_buckets=1)
     apply_batch(spark, table, batch(0, range(400)), 0, mor="auto", compact=False)
     # dribble: 20 docs -> 20 <= 0.05*400 -> MOR (bucket now has base + delta)
     lin1 = apply_batch(spark, table, batch(1000, range(20)), 1, mor="auto", compact=False)
@@ -209,15 +209,15 @@ def test_bloom_auto_ndv(spark, tmp_path):
     lookups stay exact (ADVICE r4 / verdict item 2)."""
     from recidiviz_data_spark.cdc.apply import apply_batch, create_empty_table
     from recidiviz_data_spark.tables.maintenance import compact
-    from tests.test_round4 import _v1_payload
+    from tests.test_replay import V1_PAYLOAD
 
     batch = spark.createDataFrame(
         [(i, "I", f"doc_{i:08d}", [1, 2], 2, "web") for i in range(2000)],
         "event_seq long, op string, doc_id string, tokens array<int>, "
         "n_tok int, source string",
     )
-    t1 = create_empty_table(str(tmp_path / "t_ba"), _v1_payload(), num_buckets=2)
-    t2 = create_empty_table(str(tmp_path / "t_bp"), _v1_payload(), num_buckets=2)
+    t1 = create_empty_table(str(tmp_path / "t_ba"), V1_PAYLOAD, num_buckets=2)
+    t2 = create_empty_table(str(tmp_path / "t_bp"), V1_PAYLOAD, num_buckets=2)
     apply_batch(spark, t1, batch, 0, bloom_ndv="auto")
     apply_batch(spark, t2, batch, 0)
     b1 = sum(f["bytes"] for f in t1.files())
@@ -294,7 +294,7 @@ def test_scrub_engine_payload_end_to_end(spark, tmp_path):
     while untouched docs keep every token."""
     from recidiviz_data_spark.cdc.apply import apply_batch, create_empty_table
     from recidiviz_data_spark.operators.pipeline import scrub_token_spans
-    from tests.test_round4 import _v1_payload
+    from tests.test_replay import V1_PAYLOAD
 
     span = list(range(900, 908))  # the planted 8-token duplicate run
     rows = [
@@ -307,7 +307,7 @@ def test_scrub_engine_payload_end_to_end(spark, tmp_path):
         "event_seq long, op string, doc_id string, tokens array<int>, "
         "n_tok int, source string",
     )
-    table = create_empty_table(str(tmp_path / "t_scrub"), _v1_payload(), num_buckets=2)
+    table = create_empty_table(str(tmp_path / "t_scrub"), V1_PAYLOAD, num_buckets=2)
     apply_batch(spark, table, batch, 0)
     state = table.read(spark).select("doc_id", "tokens")
     sc = {

@@ -359,9 +359,9 @@ def test_keys_stamp_tracks_mor_added_keys(spark, tmp_path):
     uses it: 100 delta-added keys move the 5% line from 20 to 25, so a 23-doc
     dribble goes MOR where the old base-rows denominator forced COW."""
     from recidiviz_data_spark.cdc.apply import apply_batch, create_empty_table
-    from tests.test_round4 import _v1_payload
+    from tests.test_replay import V1_PAYLOAD
 
-    table = create_empty_table(str(tmp_path / "t_keys"), _v1_payload(), num_buckets=1)
+    table = create_empty_table(str(tmp_path / "t_keys"), V1_PAYLOAD, num_buckets=1)
     apply_batch(spark, table, _kv_batch(spark, 0, range(400)), 0,
                 mor="auto", compact=False)
     assert table.bucket_summaries(table.manifest())[0]["keys"] == 400
@@ -396,9 +396,9 @@ def test_keys_stamp_inexact_fallback_and_compaction_restamp(spark, tmp_path):
     tombstone purge is reflected in it."""
     from recidiviz_data_spark.cdc.apply import apply_batch, create_empty_table
     from recidiviz_data_spark.tables.maintenance import compact
-    from tests.test_round4 import _v1_payload
+    from tests.test_replay import V1_PAYLOAD
 
-    table = create_empty_table(str(tmp_path / "t_pre"), _v1_payload(), num_buckets=1)
+    table = create_empty_table(str(tmp_path / "t_pre"), V1_PAYLOAD, num_buckets=1)
     apply_batch(spark, table, _kv_batch(spark, 0, range(100)), 0,
                 mor="auto", compact=False)
     apply_batch(spark, table, _kv_batch(spark, 1000, range(100, 110)), 1,
@@ -438,9 +438,9 @@ def test_keys_stamp_survives_split_and_carry(spark, tmp_path):
     commits."""
     from recidiviz_data_spark.cdc.apply import apply_batch, create_empty_table
     from recidiviz_data_spark.tables.maintenance import split_buckets
-    from tests.test_round4 import _v1_payload
+    from tests.test_replay import V1_PAYLOAD
 
-    table = create_empty_table(str(tmp_path / "t_spl"), _v1_payload(), num_buckets=2)
+    table = create_empty_table(str(tmp_path / "t_spl"), V1_PAYLOAD, num_buckets=2)
     apply_batch(spark, table, _kv_batch(spark, 0, range(200)), 0,
                 mor="auto", compact=False)
     split_buckets(spark, table, factor=2)
@@ -583,6 +583,10 @@ def test_ivf_index_sync_deletes_affect_topk(spark, tmp_path):
 
     r1 = ivf_index_sync(spark, table, idx)
     assert r1["action"] == "rebuild" and r1["live_docs"] == 150
+    # the rebuild's empty dead list reads back with its schema
+    dead = spark.read.parquet(os.path.join(artifacts.resolve(idx)[0], "dead"))
+    assert dead.schema.simpleString() == "struct<vec_id:bigint,dead_gen:int>"
+    assert dead.count() == 0
     q = table_vectors(
         table.read(spark).filter("doc_id = 'doc_007'").select("doc_id", "embedding"))
     top = ivf_index_search(spark, idx, q, k=2, nprobe=4).collect()

@@ -114,6 +114,11 @@ def test_nearest_cents_matches_window_reference(spark):
         got = _sorted_rows(_nearest_cents(iv, cents, n))
         want = _sorted_rows(reference(n))
         assert got == want, f"n={n}: {got} != {want}"
+    # no centroids: no rows (as the cross join gives), in the same schema
+    none = _nearest_cents(iv, cents.limit(0), 1)
+    assert none.schema.simpleString() == (
+        "struct<vec_id:bigint,cent_id:bigint,dist2:double,rn:int>")
+    assert none.count() == 0
 
 
 def test_banded_levenshtein_matches_plain(spark):
