@@ -84,29 +84,6 @@ def _shingles(spark, sf_dir, docs=None):
     return _shingles_raw(spark, sf_dir, docs=docs).distinct()
 
 
-def _shingles_capped(spark, sf_dir, docs=None):
-    """_shingles minus hot shingles (doc frequency > DF_CAP_NUM/DF_CAP_DEN of
-    the corpus). The hot list is computed with one groupBy and removed with a
-    broadcast LEFT ANTI join — the corpus-side rows never shuffle for the
-    cap, and the pair-join downstream can no longer go quadratic on a Zipf
-    head shingle.
-
-    The shingle set is materialized ONCE (localCheckpoint): the hot-list
-    aggregation and the anti-join both consume it, and the plain DAG
-    re-runs the whole split/explode/distinct pipeline per consumer
-    (downstream self-joins like d_ngram_jaccard's add a third and fourth
-    pass — measured 2.6 -> 1.9 s minhash, 3.0 -> 1.8 s jaccard at sf0.1).
-    At lake scale this materialization is the same order as the shuffle
-    files distinct() already writes; a production corpus would additionally
-    maintain the hot list as a sampled side artifact instead of a full
-    aggregation."""
-    sh = materialize(_shingles(spark, sf_dir, docs=docs))
-    n_docs = (docs if docs is not None else load(spark, sf_dir, "documents")).select(
-        F.countDistinct("doc_id").alias("nd")
-    )
-    return sh.join(F.broadcast(_hot_shingles(sh, n_docs)), "shingle", "left_anti")
-
-
 def _shingles_hashed(spark, sf_dir, docs=None):
     """Distinct (doc_id, h) where h = phash(shingle): the shingle string is
     hashed IMMEDIATELY after the explode, BEFORE the cross-row distinct —
@@ -134,10 +111,18 @@ def _shingles_hashed(spark, sf_dir, docs=None):
 
 
 def _shingles_capped_hashed(spark, sf_dir, docs=None):
-    """_shingles_hashed minus hot shingle hashes — the hashed mirror of
-    _shingles_capped (same DF_CAP_* threshold, same broadcast anti-join,
-    same single materialization shared by the hot-list aggregate and the
-    anti-join consumer)."""
+    """_shingles_hashed minus hot shingle hashes (doc frequency >
+    DF_CAP_NUM/DF_CAP_DEN of the corpus). The hot list is computed with one
+    groupBy and removed with a broadcast LEFT ANTI join — the corpus-side
+    rows never shuffle for the cap, and the pair-join downstream can no
+    longer go quadratic on a Zipf head shingle.
+
+    The shingle set is materialized ONCE: the hot-list aggregation and the
+    anti-join both consume it, and the plain DAG would re-run the whole
+    split/explode/distinct pipeline per consumer. A production corpus would
+    maintain the hot list as a sampled side artifact instead of a full
+    aggregation (the persisted band index freezes its own, see
+    ``band_index_build``)."""
     shh = materialize(_shingles_hashed(spark, sf_dir, docs=docs))
     n_docs = (docs if docs is not None else load(spark, sf_dir, "documents")).select(
         F.countDistinct("doc_id").alias("nd")
@@ -154,9 +139,10 @@ def _shingles_capped_hashed(spark, sf_dir, docs=None):
 
 def _hot_shingles(sh, n_docs):
     """Shingles whose document frequency exceeds DF_CAP_NUM/DF_CAP_DEN of the
-    corpus — THE hot list (one groupBy; provably tiny, see DF_CAP_* above).
-    Shared by the in-session capped set and the persisted band index, which
-    FREEZES this list as a side artifact so incremental appends reuse it."""
+    corpus — THE hot list (one groupBy; provably tiny, see DF_CAP_* above)
+    over shingle strings. The persisted band index FREEZES this list as a
+    side artifact so incremental appends reuse it; the in-session pipeline
+    caps its hashed shingles the same way (``_shingles_capped_hashed``)."""
     return (
         sh.groupBy("shingle")
         .agg(F.count("*").alias("df"))
@@ -173,7 +159,7 @@ _SHINGLES_SQL = """
          FROM words, UNNEST(generate_series(1, greatest(len(w)-2, 0))) t(i))
 """
 
-# sh minus hot shingles — the oracle mirror of _shingles_capped
+# sh minus hot shingles — the oracle mirror of _shingles_capped_hashed
 _SHINGLES_CAPPED_SQL = (
     _SHINGLES_SQL
     + f""",
@@ -413,9 +399,10 @@ def x_incremental_neardup(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # persisted minhash band index (round-5 verdict item 4): the band rows as an
-# on-disk incremental artifact with the same build/append lifecycle the IVF
-# index got — published through the versioned artifact store, so appends and
-# rebuilds are atomic version flips a racing prober can never half-observe.
+# on-disk incremental artifact — built from parquet by band_index_build, and
+# for a CDC table built and appended by band_index_sync alone — published
+# through the versioned artifact store, so appends and rebuilds are atomic
+# version flips a racing prober can never half-observe.
 #
 # Layout per version: bands/   UNCAPPED (doc_id, band, h_lo, h_hi) rows,
 #                              partitioned by band (at lake scale: bucketed
@@ -425,7 +412,7 @@ def x_incremental_neardup(spark, sf_dir):
 #                              sizes, so it stays exact across appends;
 #                     hot/     the FROZEN hot-shingle list the index was
 #                              built with — appends reuse it (the sampled
-#                              side-artifact shape _shingles_capped's
+#                              side-artifact shape _shingles_capped_hashed's
 #                              docstring promises for production).
 
 
@@ -480,81 +467,66 @@ def band_index_build(spark, sf_dir, path: str | None = None, *,
     return base
 
 
-def band_index_append(spark, path: str, new_docs, *,
-                      meta: dict | None = None,
-                      expected_seq="auto") -> int:
-    """Incremental ingest: compute band rows for the NEW batch only (its
-    shingles filtered by the index's FROZEN hot list — no corpus re-scan,
-    the exact analog of ivf_index_append's assign-to-existing-centroids),
-    then publish a new index version: unchanged band files carried as
-    hardlinks, appended rows added, sizes merged. Atomic flip — a racing
-    prober sees the whole old or whole new index; the publish is a CAS, so
-    a CONCURRENT append loses the flip, recomputes against the winner's
-    version, and lands too (no lost update). Returns appended rows.
-    ``meta`` replaces the payload's ``sync.json`` (never hardlink-carried —
-    each version's sync record is its own). ``expected_seq``: "auto"
-    retries internally (each attempt recomputes from the then-current
-    version — right for independent batches); an explicit seq from
-    ``resolve_full`` propagates ``ArtifactConflict`` to the caller instead
-    (``artifacts.sync`` re-enters the whole sync: a blind retry would
-    re-append rows the conflicting sync already landed)."""
+def band_index_append(spark, path: str, new_docs, *, expected_seq: int,
+                      meta: dict | None = None) -> int:
+    """The band-index sync's append step: compute band rows for the NEW
+    batch only (its shingles filtered by the index's FROZEN hot list — no
+    corpus re-scan), then publish a new index version: unchanged band files
+    carried as hardlinks, appended rows added, sizes merged. Atomic flip — a
+    racing prober sees the whole old or whole new index. The publish is a
+    CAS on ``expected_seq``, the seq of the version the caller planned from
+    (``resolve_full``): if the index is missing or has moved since, nothing
+    lands and ``ArtifactConflict`` raises, so ``artifacts.sync`` re-enters
+    the whole sync (a blind retry would re-append rows the conflicting sync
+    already landed). Returns appended rows. ``meta`` replaces the payload's
+    ``sync.json`` (never hardlink-carried — each version's sync record is
+    its own)."""
     import os
 
     from recidiviz_data_spark.tables import artifacts
 
-    while True:
-        r = artifacts.resolve_full(path)
-        payload, old_key, seq = (r if r is not None else (path, "raw", None))
-        if expected_seq != "auto":
-            payload_seq = seq
-            seq = expected_seq
-            if payload_seq != expected_seq:
-                # the index moved between the caller's resolve and ours —
-                # same outcome as losing the flip
-                raise artifacts.ArtifactConflict(
-                    f"artifact under {path} moved: seq {payload_seq} != "
-                    f"expected {expected_seq}"
-                )
-        hot = spark.read.parquet(os.path.join(payload, "hot"))
-        sh_new = _shingles(spark, None, docs=new_docs).join(
-            F.broadcast(hot), "shingle", "left_anti"
+    r = artifacts.resolve_full(path)
+    seq = None if r is None else r[2]
+    if seq != expected_seq:
+        raise artifacts.ArtifactConflict(
+            f"artifact under {path} moved: seq {seq} != expected {expected_seq}"
         )
-        new_bands = _band_rows(sh_new).localCheckpoint()  # written + size-merged
-        n = new_bands.count()
-        old_sizes = spark.read.parquet(os.path.join(payload, "sizes"))
-        merged = (
-            old_sizes.withColumnRenamed("n", "n_old")
-            .join(
-                new_bands.groupBy("band", "h_lo", "h_hi").agg(F.count("*").alias("n_new")),
-                ["band", "h_lo", "h_hi"],
-                "full_outer",
-            )
-            .select(
-                "band", "h_lo", "h_hi",
-                (F.coalesce("n_old", F.lit(0)) + F.coalesce("n_new", F.lit(0))).alias("n"),
-            )
-            .localCheckpoint()  # sizes must be computed BEFORE staging links them
+    payload, old_key, _ = r
+    hot = spark.read.parquet(os.path.join(payload, "hot"))
+    sh_new = _shingles(spark, None, docs=new_docs).join(
+        F.broadcast(hot), "shingle", "left_anti"
+    )
+    new_bands = _band_rows(sh_new).localCheckpoint()  # written + size-merged
+    n = new_bands.count()
+    old_sizes = spark.read.parquet(os.path.join(payload, "sizes"))
+    merged = (
+        old_sizes.withColumnRenamed("n", "n_old")
+        .join(
+            new_bands.groupBy("band", "h_lo", "h_hi").agg(F.count("*").alias("n_new")),
+            ["band", "h_lo", "h_hi"],
+            "full_outer",
         )
+        .select(
+            "band", "h_lo", "h_hi",
+            (F.coalesce("n_old", F.lit(0)) + F.coalesce("n_new", F.lit(0))).alias("n"),
+        )
+        .localCheckpoint()  # sizes must be computed BEFORE staging links them
+    )
 
-        def _build(stage: str) -> None:
-            os.makedirs(stage)
-            artifacts.link_tree(os.path.join(payload, "bands"), os.path.join(stage, "bands"))
-            artifacts.link_tree(os.path.join(payload, "hot"), os.path.join(stage, "hot"))
-            new_bands.write.mode("append").partitionBy("band").parquet(
-                os.path.join(stage, "bands")
-            )
-            merged.write.parquet(os.path.join(stage, "sizes"))
-            if meta is not None:
-                artifacts.write_sync_meta(stage, meta)
+    def _build(stage: str) -> None:
+        os.makedirs(stage)
+        artifacts.link_tree(os.path.join(payload, "bands"), os.path.join(stage, "bands"))
+        artifacts.link_tree(os.path.join(payload, "hot"), os.path.join(stage, "hot"))
+        new_bands.write.mode("append").partitionBy("band").parquet(
+            os.path.join(stage, "bands")
+        )
+        merged.write.parquet(os.path.join(stage, "sizes"))
+        if meta is not None:
+            artifacts.write_sync_meta(stage, meta)
 
-        try:
-            artifacts.publish(path, artifacts.mutated_key(old_key), _build,
-                              expected_seq=seq)
-            return n
-        except artifacts.ArtifactConflict:
-            if expected_seq != "auto":
-                raise  # the caller owns the conflict (sync re-entry)
-            continue  # a concurrent mutation won: recompute against it
+    artifacts.publish(path, artifacts.mutated_key(old_key), _build,
+                      expected_seq=expected_seq)
+    return n
 
 
 def band_index_bands(spark, path: str, *, band_cap=MINHASH_BAND_CAP, live=None):
@@ -636,8 +608,8 @@ def band_index_sync(spark, table, path: str | None = None, *,
     version would re-append rows it already landed from a wider diff
     (inflating merged bucket sizes past the band cap), and a diff that ends
     before a newer commit would stamp a stale index current. Every
-    publication is an atomic artifact-store flip; run ONE sync writer per
-    index (the store's standard mutating-lifecycle contract).
+    publication is an atomic artifact-store flip, and an append is a CAS: a
+    racing sync that loses it re-enters and finds the index current.
 
     Returns {action, version, live_docs, stale_docs, appended_docs,
     appended_rows}."""

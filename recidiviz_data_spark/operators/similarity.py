@@ -562,9 +562,9 @@ def ivf_index_path(sf_dir: str) -> str:
 
 def _ivf_payload(base: str) -> str:
     """The immutable payload dir holding ``vectors/`` + ``centroids/``:
-    the artifact store's CURRENT version when the index is versioned, else
-    the dir itself (a raw layout — e.g. a test-constructed index; its first
-    append/refresh upgrades it to the versioned form)."""
+    the artifact store's CURRENT version of an artifact base, else ``base``
+    itself — a version payload a pinned reader resolved already (see
+    ``artifacts.pinned``)."""
     from recidiviz_data_spark.tables import artifacts
 
     r = artifacts.resolve(base)
@@ -582,8 +582,10 @@ def ivf_index_build(spark, sf_dir, path: str | None = None, *,
     ``key=artifacts.miniberg_source_key(table)`` to key an index on a CDC
     table's snapshot version (a commit then invalidates it by
     construction); the default keys on the embeddings parquet's identity.
-    At lake scale this is the nightly index build; ``ivf_index_append``
-    ingests incrementally without re-training."""
+    At lake scale this is the nightly index build. An index that follows a
+    CDC table is built and mutated by ``ivf_index_sync`` alone, which appends
+    against the stored centroids and re-trains in its stale-fraction
+    rebuild."""
     from recidiviz_data_spark.operators.relational import _roundtrip_cache_tag
     from recidiviz_data_spark.tables import artifacts
 
@@ -604,120 +606,6 @@ def ivf_index_build(spark, sf_dir, path: str | None = None, *,
 
     artifacts.ensure(base, key, _build)
     return base
-
-
-def _refuse_sync_managed(payload: str, op: str) -> None:
-    """Raw append/refresh lifecycles know nothing about generation stamps or
-    dead lists — running them on a CDC-sync-managed payload would corrupt the
-    bookkeeping (gen-less rows hidden by the dead filter, stale sync.json,
-    resurrected deletes). Such indexes mutate through ``ivf_index_sync``
-    only (its stale-fraction rebuild is the re-train path)."""
-    import os
-
-    if os.path.exists(os.path.join(payload, "sync.json")) or os.path.isdir(
-        os.path.join(payload, "dead")
-    ):
-        raise ValueError(
-            f"{op} on a CDC-sync-managed IVF index: use ivf_index_sync "
-            "(raw appends lack gen stamps and would carry stale sync.json)"
-        )
-
-
-def ivf_index_append(spark, path: str, new_vectors) -> int:
-    """Incremental ingest into the MATERIALIZED index: assign new vectors
-    (``vec_id, label, v, n2``) to the EXISTING persisted centroids (no
-    re-train — the standard IVF ingest contract; periodic rebuilds re-train)
-    and publish a NEW index version whose unchanged cell files are hardlinks
-    to the previous version's (no data copy) plus the appended rows. The
-    flip is atomic: a racing searcher reads the whole old version or the
-    whole new one, never a cell-partial append; the publish is a CAS, so a
-    CONCURRENT append/refresh loses the flip, recomputes against the
-    winner's version, and lands too (no lost update). At lake scale the
-    batch is small, the centroid table broadcasts, and only the touched
-    cell directories gain files. Returns the number of vectors appended.
-
-    Refuses a CDC-SYNC-managed index (payload carrying ``sync.json`` or a
-    ``dead/`` list): rows appended here carry no ``gen`` column, so the
-    search-time dead-list filter (``coalesce(gen, 0) < dead_gen``) would make
-    them invisible for any doc with a tombstone entry, and a hardlink-carried
-    ``sync.json`` would make the next ``ivf_index_sync`` re-diff from a stale
-    version and double-append — ingest into a synced index goes through
-    ``ivf_index_sync(changes=...)`` instead."""
-    import os
-
-    from recidiviz_data_spark.tables import artifacts
-
-    while True:
-        r = artifacts.resolve_full(path)
-        payload, old_key, seq = (r if r is not None else (path, "raw", None))
-        _refuse_sync_managed(payload, "ivf_index_append")
-        cents = spark.read.parquet(os.path.join(payload, "centroids"))
-        assigned = new_vectors.select("vec_id", "label", "v", "n2").join(
-            _nearest_cent(new_vectors, cents).select("vec_id", "cent_id"), "vec_id"
-        ).select("vec_id", "label", "v", "n2", F.col("cent_id").alias("cell"))
-        n = assigned.count()
-
-        def _build(stage: str) -> None:
-            # link the data subtrees ONLY (mirror band_index_append): a
-            # whole-payload link_tree would carry the previous version's
-            # sync.json/dead/ bookkeeping into a version it does not describe
-            os.makedirs(stage)
-            artifacts.link_tree(os.path.join(payload, "vectors"),
-                                os.path.join(stage, "vectors"))
-            artifacts.link_tree(os.path.join(payload, "centroids"),
-                                os.path.join(stage, "centroids"))
-            assigned.write.mode("append").partitionBy("cell").parquet(
-                os.path.join(stage, "vectors")
-            )
-
-        try:
-            artifacts.publish(path, artifacts.mutated_key(old_key), _build,
-                              expected_seq=seq)
-            return n
-        except artifacts.ArtifactConflict:
-            continue  # a concurrent mutation won: recompute against it
-
-
-def ivf_index_refresh(spark, path: str) -> str:
-    """Periodic re-train: one Lloyd refinement over the index's CURRENT
-    contents (appended vectors included), then re-assign and publish the new
-    layout as a fresh immutable version behind the atomic CURRENT flip — a
-    concurrent searcher resolves the old version (complete, untouched) or
-    the new one, NEVER new centroids against old cells (the round-5 verdict
-    `weak`, closed by the artifact store). CAS publish: a refresh racing an
-    append recomputes over the append's rows instead of silently dropping
-    them. Refuses a CDC-sync-managed index (see ``_refuse_sync_managed`` —
-    a raw refresh would resurrect dead-listed rows and drop the sync
-    bookkeeping; the sync's stale-fraction rebuild is its re-train path)."""
-    import os
-
-    from recidiviz_data_spark.tables import artifacts
-
-    while True:
-        r = artifacts.resolve_full(path)
-        payload, old_key, seq = (r if r is not None else (path, "raw", None))
-        _refuse_sync_managed(payload, "ivf_index_refresh")
-        vecs = spark.read.parquet(os.path.join(payload, "vectors")).select(
-            "vec_id", "label", "v", "n2", F.col("cell").alias("cent_id")
-        )
-        # consumed by the Lloyd step, the re-assign, and the join — materialize once
-        iv = vecs.select("vec_id", "label", "v", "n2").localCheckpoint()
-        cents = _lloyd_step(iv, vecs.select("vec_id", "cent_id")).localCheckpoint()
-        assign = _nearest_cent(iv, cents)
-        out = iv.join(assign.select("vec_id", "cent_id"), "vec_id").select(
-            "vec_id", "label", "v", "n2", F.col("cent_id").alias("cell")
-        )
-
-        def _build(stage: str) -> None:
-            out.write.partitionBy("cell").parquet(os.path.join(stage, "vectors"))
-            cents.write.parquet(os.path.join(stage, "centroids"))
-
-        try:
-            artifacts.publish(path, artifacts.mutated_key(old_key), _build,
-                              expected_seq=seq)
-            return path
-        except artifacts.ArtifactConflict:
-            continue  # a concurrent mutation won: recompute against it
 
 
 def table_ivf_index_path(table) -> str:
@@ -764,8 +652,9 @@ def ivf_index_sync(spark, table, path: str | None = None, *,
     out-generation the tombstone naturally. Once stale vectors exceed
     ``rebuild_stale_fraction`` of live ones, sync re-trains and rewrites the
     layout (folding the dead list away) — the FAISS remove-list + periodic
-    rebuild contract. Every publication is an atomic artifact-store flip;
-    run ONE sync writer per index.
+    rebuild contract. Every publication is an atomic artifact-store flip,
+    and an append is a CAS: a racing sync that loses it re-enters and finds
+    the index current.
 
     ``changes`` (op/doc_id/embedding) skips the version diff when the caller
     already holds the CDC events; it must come with ``from_version`` /
@@ -880,7 +769,8 @@ def ivf_index_search(spark, path: str, query_df, *, k: int = 3, nprobe: int = 1)
 
     The payload is resolved ONCE through the artifact store's CURRENT
     pointer, so centroids and vectors come from the same immutable version
-    even if an append/refresh flips the index mid-search."""
+    even if a sync flips the index mid-search. ``path`` may also be a
+    version payload itself (a pinned reader's)."""
     import os
 
     path = _ivf_payload(path)

@@ -21,19 +21,20 @@ miniberg manifest gives data files:
   artifact was derived from — for a miniberg source that is
   ``miniberg:<table_uuid>:v<version>`` (``miniberg_source_key``), so
   committing to the source table invalidates the artifact by construction;
-  for raw parquet sources it is the file-identity tag. Mutating lifecycles
-  (append / refresh) stamp a derived key, so the pure build cache can never
-  serve a mutated index as if freshly derived.
+  for raw parquet sources it is the file-identity tag. A sync's incremental
+  step stamps a derived key, so the pure build cache can never serve a
+  mutated index as if freshly derived.
 
 Concurrency: two racing builders both publish complete versions; the last
 pointer flip wins and both contents are valid (artifacts here are
-deterministic functions of their key). MUTATING lifecycles (append/refresh/
-sync) are **compare-and-swap**: the pointer carries a monotonic ``seq``,
-and a mutator publishes with ``expected_seq`` = the seq of the version it
-built FROM — if another mutation landed in between, the publish raises
-``ArtifactConflict`` and the caller recomputes against the new current
-version (every mutating lifecycle in-repo retries this way), so concurrent
-appends BOTH land instead of one silently vanishing under last-flip-wins.
+deterministic functions of their key). The only MUTATORS are the syncs
+(``sync`` below), and their incremental publish is **compare-and-swap**:
+the pointer carries a monotonic ``seq``, and a sync publishes with
+``expected_seq`` = the seq of the version it planned FROM — if another
+publication landed in between, the publish raises ``ArtifactConflict`` and
+``sync`` re-enters the whole sync, which re-plans against the new current
+version (and finds it current when a racing sync of the same table won),
+so no change is lost or applied twice under last-flip-wins.
 The CAS lock is held only across the microsecond pointer flip — never
 across a Spark job — and is taken over by age if a holder crashes.
 Readers need no coordination. Superseded versions are garbage-collected
@@ -44,8 +45,8 @@ GC contract for readers: a superseded version survives at least
 ``DEFAULT_GRACE_SECS`` (600 s) past the flip that superseded it. A reader
 that may hold a version LONGER than that — a long Spark job scanning a big
 index, a driver keeping a lazy DataFrame over the payload — must either
-(a) pass a larger ``grace_seconds`` to the mutating call sites
-(``publish`` and every sync/append lifecycle plumb it through), or
+(a) publish with a larger ``grace_seconds`` (``publish`` takes it; the
+syncs publish with the default), or
 (b) PIN the version: ``with pinned(base) as payload: ...`` resolves the
 current version and drops a TTL'd reader-pin file that every
 ``gc_versions`` pass respects regardless of grace (``pin_version`` /
@@ -89,7 +90,7 @@ class ArtifactConflict(Exception):
 def resolve(base: str) -> tuple[str, str] | None:
     """(payload_dir, key) of the current version, or None if nothing is
     published. The pointer read and the rename that replaces it are both
-    atomic, so a racing refresh can never yield a torn pointer."""
+    atomic, so a racing publish can never yield a torn pointer."""
     r = resolve_full(base)
     return None if r is None else (r[0], r[1])
 
@@ -250,7 +251,7 @@ def pin_version(base: str, payload: str, *,
                 ttl_seconds: float = DEFAULT_PIN_TTL_SECS) -> str:
     """Reader pin: keep ``payload`` (a ``v-*`` dir under ``base``) alive past
     the GC grace window for up to ``ttl_seconds`` — the lease a long-running
-    reader takes so a refresh landing mid-job cannot delete the version it is
+    reader takes so a sync landing mid-job cannot delete the version it is
     scanning. Returns the pin path for ``unpin``; an expired pin is swept by
     the next GC pass, so a crashed reader never pins forever."""
     d = os.path.join(base, _PIN_DIR)
@@ -342,7 +343,7 @@ def gc_versions(base: str, *, grace_seconds: float = DEFAULT_GRACE_SECS) -> list
 def link_tree(src: str, dst: str) -> None:
     """Recreate ``src``'s directory tree under ``dst`` with HARDLINKS to its
     files — the no-copy carry of an immutable version's payload into the next
-    version (append lifecycles link the unchanged files, then add new ones)."""
+    version (a sync's append links the unchanged files, then adds new ones)."""
     for root, _dirs, files in os.walk(src):
         rel = os.path.relpath(root, src)
         out = os.path.join(dst, rel) if rel != "." else dst
@@ -379,9 +380,9 @@ def write_sync_meta(stage: str, meta: dict) -> None:
 
 
 def mutated_key(key: str) -> str:
-    """Key stamped on a version produced by a MUTATING lifecycle step
-    (append/refresh): distinct from every pure-build key, so ``ensure`` with
-    a source key never serves a mutated index as the cached pure build."""
+    """Key stamped on a version produced by a sync's incremental step:
+    distinct from every pure-build key, so ``ensure`` with a source key
+    never serves a mutated index as the cached pure build."""
     return f"{key}#mut-{uuid.uuid4().hex[:8]}"
 
 

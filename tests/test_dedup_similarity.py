@@ -32,9 +32,10 @@ def test_hot_shingle_df_cap_bounds_candidates(spark):
     from recidiviz_data_spark.operators.dedup import (
         d_minhash_lsh,
         d_ngram_jaccard,
-        _shingles,
-        _shingles_capped,
+        _shingles_capped_hashed,
+        _shingles_hashed,
     )
+    from recidiviz_data_spark.operators.textops import phash
 
     n = 40
     rows = [
@@ -47,12 +48,15 @@ def test_hot_shingle_df_cap_bounds_candidates(spark):
     rows += [("dup_a", dup_body), ("dup_b", dup_body)]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
 
-    sh_all = _shingles(spark, None, docs=docs)
-    sh_cap = _shingles_capped(spark, None, docs=docs)
+    sh_all = _shingles_hashed(spark, None, docs=docs)
+    sh_cap = _shingles_capped_hashed(spark, None, docs=docs)
     # the planted header shingles are hot (df = 42 > 42/10) and get dropped
-    hot = {"terms of service", "of service apply"}
-    kept = {r["shingle"] for r in sh_cap.select("shingle").distinct().collect()}
-    assert hot & {r["shingle"] for r in sh_all.select("shingle").distinct().collect()} == hot
+    hot = set(spark.range(1).select(
+        phash(F.lit("terms of service")), phash(F.lit("of service apply"))
+    ).first())
+    assert len(hot) == 2
+    kept = {r["h"] for r in sh_cap.select("h").distinct().collect()}
+    assert hot & {r["h"] for r in sh_all.select("h").distinct().collect()} == hot
     assert not hot & kept
 
     jac = d_ngram_jaccard(spark, None, docs=docs).collect()

@@ -146,9 +146,9 @@ def test_df_cap_hot_list_is_broadcast_anti_join(spark):
     """The hot-shingle cap must remove hot shingles with a BROADCAST left
     anti join (the hot list is provably tiny) — if it ever degrades to a
     shuffled join, the corpus-side rows pay a full exchange just for the cap."""
-    from recidiviz_data_spark.operators.dedup import _shingles_capped
+    from recidiviz_data_spark.operators.dedup import _shingles_capped_hashed
 
-    df = _shingles_capped(spark, SF)
+    df = _shingles_capped_hashed(spark, SF)
     plan = plan_string(df)
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
     assert_no_row_python(df)

@@ -1,7 +1,6 @@
 """Round-4 additions: param-keyed cdc workdir caches, near-dup clustering,
-key-stats type guard, change-feed reads across schema evolution, size-capped
-compaction, banded-join candidate budget. (The round's other Miniberg and
-merge-on-read tests live in test_miniberg.py.)"""
+change-feed reads across schema evolution, banded-join candidate budget.
+(The round's Miniberg and merge-on-read tests live in test_miniberg.py.)"""
 
 from __future__ import annotations
 
@@ -33,22 +32,6 @@ def test_cdc_workdir_keyed_on_generator_params():
     c2 = ensure_changelog("stream", {**p1, "n_docs": 50, "n_events": 200})
     assert c2 != c1
     assert os.path.exists(os.path.join(c2, "_GEN_SUCCESS"))
-
-
-# ------------------------------------------------------ key-stats type guard
-def test_files_for_keys_type_guard(tmp_path):
-    """Mismatched key type vs recorded stats raises a clear ValueError
-    instead of a bare TypeError mid-comparison."""
-    import pytest
-
-    from recidiviz_data_spark.tables.miniberg import Miniberg
-    from tests.test_miniberg import _mk_table, _stage_file
-
-    table = _mk_table(tmp_path, "t_guard")
-    added = _stage_file(table, 0, [("a", "web", 1)])
-    table.commit(added_files=added, replaced_buckets=set())
-    with pytest.raises(ValueError, match="recorded stats type"):
-        Miniberg.files_for_keys(table.files(), [42])
 
 
 # ------------------------------------------------ change feed across schemas
@@ -139,42 +122,6 @@ def test_span_scrub_planted(spark):
     assert rows[2]["clean_text"] == "xx yy" and rows[2]["n_removed"] == 9
     assert rows[3]["clean_text"] == "unique words with odd spacing"
     assert rows[3]["n_removed"] == 0
-
-
-def test_compact_sized_files_disjoint_key_ranges(spark, tmp_path):
-    """compact(max_records_per_file=N, sort=True) splits a bucket into
-    size-capped files whose key ranges are DISJOINT — a point lookup then
-    opens exactly one file of the bucket."""
-    from recidiviz_data_spark.cdc.apply import apply_batch, create_empty_table
-    from recidiviz_data_spark.tables.maintenance import compact
-    from recidiviz_data_spark.tables.miniberg import Miniberg
-    from tests.test_replay import V1_PAYLOAD
-
-    table = create_empty_table(str(tmp_path / "t_sized"), V1_PAYLOAD, num_buckets=2)
-    batch = spark.createDataFrame(
-        [(i, "I", f"doc_{i:08d}", [1], 1, "web") for i in range(1200)],
-        "event_seq long, op string, doc_id string, tokens array<int>, "
-        "n_tok int, source string",
-    )
-    apply_batch(spark, table, batch, 0)
-    assert compact(spark, table, min_files=1, max_records_per_file=200) is not None
-    by_bucket: dict[int, list] = {}
-    for f in table.files():
-        by_bucket.setdefault(f["bucket"], []).append(f)
-    for b, fs in by_bucket.items():
-        assert len(fs) >= 2, (b, fs)  # the size cap actually split
-        ranges = sorted((f["key_min"], f["key_max"]) for f in fs)
-        for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-            assert hi1 < lo2, (b, ranges)  # disjoint
-    # point lookup prunes to ONE file of the key's bucket
-    key = "doc_00000042"
-    m = table.manifest()
-    bucket = spark.createDataFrame([(key,)], "doc_id string").selectExpr(
-        f"CAST(pmod(xxhash64(doc_id), {m['num_buckets']}) AS INT) b"
-    ).collect()[0]["b"]
-    kept = Miniberg.files_for_keys(table.files(buckets=[bucket]), [key])
-    assert len(kept) == 1
-    assert table.read_keys(spark, [key]).count() == 1
 
 
 def test_band_cap_bounds_identical_signature_flood(spark):

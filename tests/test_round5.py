@@ -352,86 +352,70 @@ def test_ivf_index_search_matches_inmemory(spark):
     assert_partition_filter(ivf_index_search(spark, path, q, k=3, nprobe=1), "cell")
 
 
-def test_ivf_index_refresh_retrains(spark, tmp_path):
-    """Refreshing a built index (one more Lloyd pass over its contents +
-    re-assign) serves the SAME top-k as the in-memory pipeline run with one
-    extra refinement iteration — the periodic re-train path after many
-    appends."""
-    import shutil
-
-    from recidiviz_data_spark.operators.similarity import (
-        _scaled,
-        ivf_index_build,
-        ivf_index_refresh,
-        ivf_index_search,
-        ivf_search,
-    )
-
-    cached = ivf_index_build(spark, SF_DIR)  # built once per source identity
-    path = str(tmp_path / "ivfidx_refresh")
-    shutil.copytree(cached, path)  # refresh rewrites — never touch the cache
-    ivf_index_refresh(spark, path)
-    q = _scaled(spark, SF_DIR).filter("vec_id < 10")
-    got = sorted(
-        (r["query_id"], r["neighbor_id"], r["cosine"])
-        for r in ivf_index_search(spark, path, q, k=3, nprobe=1).collect()
-    )
-    want = sorted(
-        (r["query_id"], r["neighbor_id"], r["cosine"])
-        for r in ivf_search(spark, SF_DIR, k=3, nprobe=1, lloyd_iters=2).collect()
-    )
-    assert got == want
-
-
 def test_ivf_index_append_incremental(spark, tmp_path):
-    """Incremental cell-append: an index built from part of the corpus and
-    appended with the rest serves IDENTICAL searches to assigning the full
-    corpus against the same (part-trained) centroids in memory — corpus-side
-    work never re-runs on ingest."""
+    """Incremental cell-append through ivf_index_sync: a table bootstrapped
+    from part of the corpus and sent the rest as one insert batch syncs by
+    APPENDING. Every vector the append wrote is assigned to the index's
+    STORED (part-trained) centroids, and searches serve IDENTICAL results to
+    assigning the full corpus against those centroids in memory —
+    corpus-side work never re-runs on ingest."""
+    from recidiviz_data_spark.cdc.apply import apply_batch, bootstrap_table
+    from recidiviz_data_spark.operators.relational import load
     from recidiviz_data_spark.operators.similarity import (
         _dot,
         _nearest_cent,
-        _scaled,
+        _nearest_cents,
         ivf_index_search,
+        ivf_index_sync,
+        table_vectors,
     )
-    from pyspark.sql import functions as F
+    from recidiviz_data_spark.tables import artifacts
     from pyspark.sql.window import Window
 
-    iv = _scaled(spark, SF_DIR)
-    part, rest = iv.filter("vec_id % 3 != 0"), iv.filter("vec_id % 3 = 0")
-
-    # build from `part` only (same construction as ivf_index_build, but on
-    # the subset — centroids are trained on what has been ingested so far)
-    from recidiviz_data_spark.operators.similarity import _lloyd_step
-
-    cents = part.filter("vec_id % 31 = 0").select(
-        F.col("vec_id").alias("cent_id"), F.col("v").alias("cv"), F.col("n2").alias("cn2")
+    e = load(spark, SF_DIR, "embeddings").select(
+        "vec_id",
+        F.format_string("v%04d", "vec_id").alias("doc_id"),
+        F.array(F.lit(1)).cast("array<int>").alias("tokens"),
+        F.lit(1).alias("n_tok"),
+        "embedding",
     )
-    assign = _nearest_cent(part, cents)
-    cents = _lloyd_step(part, assign)
-    assign = _nearest_cent(part, cents)
+    part, rest = e.filter("vec_id % 3 != 0"), e.filter("vec_id % 3 = 0")
+    table = bootstrap_table(spark, str(tmp_path / "t_emb"), part.drop("vec_id"),
+                            num_buckets=2)
     path = str(tmp_path / "ivfidx")
-    import os
+    # centroids are trained on what has been ingested so far
+    assert ivf_index_sync(spark, table, path)["action"] == "rebuild"
+    n_rest = rest.count()
+    apply_batch(
+        spark, table,
+        rest.select(F.col("vec_id").alias("event_seq"), F.lit("I").alias("op"),
+                    "doc_id", "tokens", "n_tok", "embedding"),
+        0, compact=False,
+    )
+    r = ivf_index_sync(spark, table, path)
+    assert r["action"] == "append" and r["appended_docs"] == n_rest
 
-    part.join(assign.select("vec_id", "cent_id"), "vec_id").select(
-        "vec_id", "label", "v", "n2", F.col("cent_id").alias("cell")
-    ).write.partitionBy("cell").parquet(os.path.join(path, "vectors"))
-    cents.write.parquet(os.path.join(path, "centroids"))
+    payload = artifacts.resolve(path)[0]
+    cents = spark.read.parquet(os.path.join(payload, "centroids"))
+    appended = spark.read.parquet(os.path.join(payload, "vectors")).filter(
+        F.col("gen") == r["version"]
+    )
+    nearest = _nearest_cent(appended, cents).select(
+        "vec_id", F.col("cent_id").alias("want")
+    )
+    assert appended.count() == n_rest
+    assert appended.join(nearest, "vec_id", "left").filter(
+        ~F.col("cell").eqNullSafe(F.col("want"))
+    ).count() == 0
 
-    from recidiviz_data_spark.operators.similarity import ivf_index_append
-
-    assert ivf_index_append(spark, path, rest) == rest.count()
-
-    q = iv.filter("vec_id < 10")
+    iv = table_vectors(table.read(spark).select("doc_id", "embedding"))
+    q = iv.filter(F.col("label") < "v0010")
     got = sorted(
         (r["query_id"], r["neighbor_id"], r["cosine"])
         for r in ivf_index_search(spark, path, q, k=3, nprobe=2).collect()
     )
-    # expected: the full corpus assigned to the SAME part-trained centroids
+    # expected: the full corpus assigned to the SAME stored centroids
     full_assign = _nearest_cent(iv, cents).select("vec_id", "cent_id")
-    probes = q.select(F.col("vec_id").alias("query_id"), "v", "n2")
-    from recidiviz_data_spark.operators.similarity import _nearest_cents
-
     pr = _nearest_cents(q, cents, 2).select(
         F.col("vec_id").alias("query_id"), "cent_id"
     )
@@ -453,7 +437,7 @@ def test_ivf_index_append_incremental(spark, tmp_path):
         .filter("rn <= 3")
         .collect()
     )
-    assert got == want
+    assert got and got == want
 
 
 def test_stream_sessions_match_batch(spark):

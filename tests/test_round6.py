@@ -180,21 +180,25 @@ def test_artifact_store_atomic_flip_under_concurrent_publishes(tmp_path):
 
 
 def test_ivf_refresh_is_atomic_for_inflight_readers(spark, tmp_path):
-    """An in-flight reader that resolved the index BEFORE a refresh keeps a
-    complete immutable payload; a reader resolving AFTER sees the new one.
-    No state ever mixes new centroids with old cells (round-5 verdict
-    `weak`)."""
-    import shutil
-
-    from recidiviz_data_spark.operators.similarity import (
-        ivf_index_build,
-        ivf_index_refresh,
-    )
+    """An in-flight reader that resolved the index BEFORE a re-training sync
+    keeps a complete immutable payload; a reader resolving AFTER sees the
+    new one. No state ever mixes new centroids with old cells (round-5
+    verdict `weak`)."""
+    from recidiviz_data_spark.cdc.apply import apply_batch, bootstrap_table
+    from recidiviz_data_spark.operators.similarity import ivf_index_sync
     from recidiviz_data_spark.tables import artifacts
 
-    cached = ivf_index_build(spark, SF_DIR)
+    schema = "doc_id string, tokens array<int>, n_tok int, embedding array<float>"
+
+    def _row(i, k):
+        return (f"doc_{i:03d}", [1], 1, [float(10 + k), 1.0, float(k % 7 + 2), 3.0])
+
+    # 150 ids so the every-31st-hash centroid seeding finds seeds
+    table = bootstrap_table(
+        spark, str(tmp_path / "t_ivf"),
+        spark.createDataFrame([_row(i, i) for i in range(150)], schema), num_buckets=2)
     base = str(tmp_path / "ivf_atomic")
-    shutil.copytree(cached, base)
+    assert ivf_index_sync(spark, table, base)["action"] == "rebuild"
     p_old, _ = artifacts.resolve(base)
 
     def _listing(p):
@@ -206,7 +210,14 @@ def test_ivf_refresh_is_atomic_for_inflight_readers(spark, tmp_path):
         return sorted(out)
 
     before = _listing(p_old)
-    ivf_index_refresh(spark, base)
+    # 60 of 150 docs updated: stale 0.4 > 0.25 of live, so the sync re-trains
+    apply_batch(
+        spark, table,
+        spark.createDataFrame([(i, "U", *_row(i, 500 + i)) for i in range(60)],
+                              "event_seq long, op string, " + schema),
+        0, compact=False,
+    )
+    assert ivf_index_sync(spark, table, base)["action"] == "rebuild"
     p_new, _ = artifacts.resolve(base)
     assert p_new != p_old
     # the old version is untouched — an in-flight reader finishes cleanly
@@ -285,7 +296,8 @@ def test_band_index_append_matches_frozen_hot_rebuild(spark, tmp_path):
     base = str(tmp_path / "bandidx")
     band_index_build(spark, sf, base, docs=part, key="part-v0")
     p_before, _ = artifacts.resolve(base)
-    n = band_index_append(spark, base, rest)
+    n = band_index_append(spark, base, rest,
+                          expected_seq=artifacts.resolve_full(base)[2])
     assert n > 0
     p_after, k_after = artifacts.resolve(base)
     assert p_after != p_before and k_after != "part-v0"  # mutated key
@@ -937,11 +949,10 @@ def test_artifact_publish_cas(tmp_path):
     assert not os.path.exists(os.path.join(base, ".ptr.lock"))
 
 
-def test_band_append_retries_after_conflict(spark, tmp_path, monkeypatch):
-    """band_index_append in auto mode survives losing the CAS: it recomputes
-    against the winning version and lands on retry (the injected conflict
-    simulates a concurrent mutation flipping the pointer first). With an
-    EXPLICIT expected_seq (the sync lifecycles) the conflict propagates."""
+def test_band_append_refuses_a_stale_seq(spark, tmp_path):
+    """band_index_append is the band sync's CAS step: a stale or missing
+    expected_seq raises ArtifactConflict and lands no rows (the sync
+    re-enters on it — tests/test_sync.py)."""
     import pytest
 
     from recidiviz_data_spark.operators.dedup import (
@@ -955,125 +966,13 @@ def test_band_append_retries_after_conflict(spark, tmp_path, monkeypatch):
     )
     idx = str(tmp_path / "bandidx")
     band_index_build(spark, None, idx, docs=docs, key="test:v0")
-
-    real = artifacts.publish
-    calls = {"conflicts": 0}
-
-    def flaky(base, key, build_fn, **kw):
-        if calls["conflicts"] == 0:
-            calls["conflicts"] += 1
-            raise artifacts.ArtifactConflict("injected: a racer flipped first")
-        return real(base, key, build_fn, **kw)
-
-    monkeypatch.setattr(artifacts, "publish", flaky)
-    new = spark.createDataFrame(
-        [("n1", "x1 x2 x3 x4")], "doc_id string, text string")
-    n = band_index_append(spark, idx, new)
-    assert n > 0 and calls["conflicts"] == 1
-    got = band_index_bands(spark, idx)
-    assert got.filter(F.col("doc_id") == "n1").count() > 0
-
-    # explicit expected_seq (sync mode): a stale seq raises to the caller
-    monkeypatch.setattr(artifacts, "publish", real)
+    new = spark.createDataFrame([("n2", "y1 y2 y3 y4")], "doc_id string, text string")
     stale_seq = artifacts.resolve_full(idx)[2] - 1
     with pytest.raises(artifacts.ArtifactConflict):
-        band_index_append(
-            spark, idx,
-            spark.createDataFrame([("n2", "y1 y2 y3 y4")],
-                                  "doc_id string, text string"),
-            expected_seq=stale_seq,
-        )
+        band_index_append(spark, idx, new, expected_seq=stale_seq)
     assert band_index_bands(spark, idx).filter(F.col("doc_id") == "n2").count() == 0
-
-
-def test_concurrent_index_appends_both_land(spark, tmp_path):
-    """Two UNCOORDINATED writers appending to the same persisted index
-    concurrently both land (the round-5 store documented 'run ONE writer;
-    one append's rows are absent from the winner' — the CAS closes that):
-    each compute takes long enough that the resolve/publish windows overlap,
-    the loser recomputes against the winner, and the merged sizes stay
-    exactly the recount of the merged band rows."""
-    import threading
-
-    from recidiviz_data_spark.operators.dedup import (
-        band_index_append, band_index_bands, band_index_build)
-    from recidiviz_data_spark.operators.similarity import (
-        _ivf_payload, ivf_index_append, ivf_index_build)
-    from recidiviz_data_spark.tables import artifacts
-
-    # ---- band index
-    # 24 docs keeps every shingle's df (1) under the hot cap (df > nd/10)
-    docs = spark.createDataFrame(
-        [(f"d{i}", f"a{i} b{i} c{i} d{i}") for i in range(24)],
-        "doc_id string, text string",
-    )
-    idx = str(tmp_path / "bandidx")
-    band_index_build(spark, None, idx, docs=docs, key="test:v0")
-    errs: list = []
-
-    def _append_band(tag):
-        try:
-            band_index_append(
-                spark, idx,
-                spark.createDataFrame([(f"{tag}", f"{tag}1 {tag}2 {tag}3 {tag}4")],
-                                      "doc_id string, text string"),
-            )
-        except Exception as e:  # surfaced below — a thread must not die silently
-            errs.append(e)
-
-    ts = [threading.Thread(target=_append_band, args=(t,)) for t in ("pa", "pb")]
-    [t.start() for t in ts]
-    [t.join() for t in ts]
-    assert errs == []
-    bands = band_index_bands(spark, idx, band_cap=10**9)
-    got = {r["doc_id"] for r in bands.select("doc_id").distinct().collect()}
-    assert {"pa", "pb"} <= got  # NO lost update
-    payload = artifacts.resolve_full(idx)[0]
-    import os as _os
-    recount = (
-        spark.read.parquet(_os.path.join(payload, "bands"))
-        .groupBy("band", "h_lo", "h_hi").agg(F.count("*").alias("rc"))
-    )
-    sizes = spark.read.parquet(_os.path.join(payload, "sizes"))
-    assert sizes.join(
-        recount, ["band", "h_lo", "h_hi"], "full_outer"
-    ).filter(
-        F.coalesce("n", F.lit(-1)) != F.coalesce("rc", F.lit(-2))
-    ).count() == 0  # merged sizes == exact recount after both appends
-
-    # ---- IVF index
-    vecs = spark.createDataFrame(
-        [(i, f"v{i}", [i + 1, 93 - i], float((i + 1) ** 2 + (93 - i) ** 2))
-         for i in range(40)],
-        "vec_id long, label string, v array<long>, n2 double",
-    )
-    ivf = str(tmp_path / "ivfidx")
-    ivf_index_build(spark, None, ivf, vectors=vecs, key="test:v0")
-
-    def _append_ivf(ids):
-        try:
-            ivf_index_append(
-                spark, ivf,
-                spark.createDataFrame(
-                    [(i, f"v{i}", [i + 1, 93 - i],
-                      float((i + 1) ** 2 + (93 - i) ** 2)) for i in ids],
-                    "vec_id long, label string, v array<long>, n2 double",
-                ),
-            )
-        except Exception as e:
-            errs.append(e)
-
-    ts = [threading.Thread(target=_append_ivf, args=(ids,))
-          for ids in ((100, 101), (200, 201))]
-    [t.start() for t in ts]
-    [t.join() for t in ts]
-    assert errs == []
-    vids = {
-        r["vec_id"]
-        for r in spark.read.parquet(_os.path.join(_ivf_payload(ivf), "vectors"))
-        .select("vec_id").collect()
-    }
-    assert {100, 101, 200, 201} <= vids  # NO lost update
+    with pytest.raises(artifacts.ArtifactConflict):
+        band_index_append(spark, str(tmp_path / "missing"), new, expected_seq=1)
 
 
 def test_history_and_age_based_expiry(spark, tmp_path, monkeypatch):

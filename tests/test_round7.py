@@ -1,5 +1,5 @@
 """Round-7 additions: ADVICE-r6 fixes (branch-handle GC guard, rename-steal
-flip lock, ivf append/refresh refusal on sync-managed indexes, band-sync span
+flip lock, IVF sync appends linking only data subtrees, band-sync span
 guard, publish_branch blob re-check) and the round-7 build items (the
 split-verify cap bounding the shrunk-cluster blast radius, WAP delta audits
 over bucket-pruned table_changes, cross-artifact consistency stamps,
@@ -96,67 +96,42 @@ def test_flip_lock_stale_rename_steal(tmp_path):
     assert artifacts.resolve_full(base)[2] == 3
 
 
-def test_ivf_append_refresh_refuse_sync_managed(spark, tmp_path):
-    """Raw append/refresh on a CDC-sync-managed IVF index (ADVICE r6 medium):
-    gen-less appended rows would be invisible under the dead-list filter and
-    a hardlink-carried sync.json would double-append at the next sync —
-    both lifecycles refuse and point at ivf_index_sync."""
-    from recidiviz_data_spark.cdc.apply import bootstrap_table
-    from recidiviz_data_spark.operators.similarity import (
-        ivf_index_append,
-        ivf_index_refresh,
-        ivf_index_sync,
-        table_vectors,
-    )
-
-    # 150 ids so the every-31st-hash centroid seeding finds seeds
-    rows = [
-        (f"doc_{i:03d}", [1], 1,
-         [float(10 + i), 1.0, float((i * 3) % 11 + 2), float((i * 5) % 13 + 2)])
-        for i in range(150)
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id string, tokens array<int>, n_tok int, embedding array<float>")
-    table = bootstrap_table(spark, str(tmp_path / "t_ivf"), df, num_buckets=2)
-    idx = str(tmp_path / "ivfidx")
-    assert ivf_index_sync(spark, table, idx)["action"] == "rebuild"
-
-    new = table_vectors(
-        spark.createDataFrame(
-            [("doc_100", [2000.0, 1.0, 2.0, 2.0])], "doc_id string, embedding array<float>"
-        )
-    )
-    with pytest.raises(ValueError, match="ivf_index_sync"):
-        ivf_index_append(spark, idx, new)
-    with pytest.raises(ValueError, match="ivf_index_sync"):
-        ivf_index_refresh(spark, idx)
-
-
 def test_ivf_append_links_only_data_subtrees(spark, tmp_path):
-    """A raw (non-synced) append publishes a version holding ONLY the data
-    subtrees — no stray files hardlink-carried from the previous payload."""
-    from recidiviz_data_spark.operators.similarity import (
-        ivf_index_append,
-        ivf_index_build,
-        table_vectors,
-    )
+    """An ivf_index_sync append publishes a version holding only the data
+    subtrees plus its own dead list and sync record — a stray file in the
+    previous payload is not hardlink-carried — and assigns the vector it
+    appends to the STORED centroids."""
+    from recidiviz_data_spark.cdc.apply import apply_batch, bootstrap_table
+    from recidiviz_data_spark.operators.similarity import _nearest_cent, ivf_index_sync
     from recidiviz_data_spark.tables import artifacts
 
+    schema = "doc_id string, tokens array<int>, n_tok int, embedding array<float>"
     # 150 ids so the every-31st-hash centroid seeding finds seeds
-    rows = [(f"doc_{i:03d}", [float(10 + i), 1.0, float(i % 7 + 2), 3.0])
+    rows = [(f"doc_{i:03d}", [1], 1, [float(10 + i), 1.0, float(i % 7 + 2), 3.0])
             for i in range(150)]
-    vecs = table_vectors(
-        spark.createDataFrame(rows, "doc_id string, embedding array<float>"))
-    idx = str(tmp_path / "rawivf")
-    ivf_index_build(spark, None, idx, vectors=vecs, key="k-raw")
-    new = table_vectors(
-        spark.createDataFrame(
-            [("doc_100", [2000.0, 1.0, 2.0, 2.0])], "doc_id string, embedding array<float>"
-        )
+    table = bootstrap_table(spark, str(tmp_path / "t_ivf"),
+                            spark.createDataFrame(rows, schema), num_buckets=2)
+    idx = str(tmp_path / "ivfidx")
+    assert ivf_index_sync(spark, table, idx)["action"] == "rebuild"
+    with open(os.path.join(artifacts.resolve(idx)[0], "stray.txt"), "w") as f:
+        f.write("not index data")
+    apply_batch(
+        spark, table,
+        spark.createDataFrame([(1, "I", "doc_150", [1], 1, [2000.0, 1.0, 2.0, 2.0])],
+                              "event_seq long, op string, " + schema),
+        0, compact=False,
     )
-    assert ivf_index_append(spark, idx, new) == 1
+    r = ivf_index_sync(spark, table, idx)
+    assert r["action"] == "append" and r["appended_docs"] == 1
     payload = artifacts.resolve(idx)[0]
-    assert sorted(os.listdir(payload)) == ["centroids", "vectors"]
+    assert sorted(os.listdir(payload)) == ["centroids", "dead", "sync.json", "vectors"]
+    cents = spark.read.parquet(os.path.join(payload, "centroids"))
+    appended = spark.read.parquet(os.path.join(payload, "vectors")).filter(
+        F.col("gen") == r["version"]
+    )
+    got = {(v["vec_id"], v["cell"]) for v in appended.collect()}
+    want = {(v["vec_id"], v["cent_id"]) for v in _nearest_cent(appended, cents).collect()}
+    assert len(got) == 1 and got == want
 
 
 def test_band_sync_span_guard(spark, tmp_path):

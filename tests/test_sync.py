@@ -1,8 +1,9 @@
 """The one sync lifecycle (``artifacts.sync``) every table-derived artifact
 follows — band and IVF indexes, the near-dup cluster table and the agg,
-distinct and top-k views: the two-ended span rule for a caller's diff, the
-cluster sync's forwarded stale fraction, branch-scoped default paths, and
-the conflict re-entry keeping the caller's arguments."""
+distinct and top-k views: the two-ended span rule for a caller's diff,
+racing index syncs converging, the cluster sync's forwarded stale
+fraction, branch-scoped default paths, and the conflict re-entry keeping
+the caller's arguments."""
 
 import collections
 import importlib
@@ -125,6 +126,59 @@ def test_index_sync_ignores_a_diff_that_ends_early(spark, tmp_path, name):
     rkw = {"band_path": path + "_rb_bands"} if name == "clusters" else {}
     assert sync(spark, table, path + "_rb", **rkw)["action"] == "rebuild"
     assert state(spark, table, path) == state(spark, table, path + "_rb")
+
+
+@pytest.mark.parametrize("name", ["band", "ivf"])
+def test_racing_index_syncs_converge(spark, tmp_path, monkeypatch, name):
+    """Two threads run the same index sync after one commit, both planning
+    from the same index version: neither raises, one appends, and the
+    other loses the CAS, re-enters and finds the index current. The index
+    then equals a fresh rebuild."""
+    import threading
+
+    from recidiviz_data_spark.tables import artifacts
+
+    sync, state = _index_sync(name)
+    table = _table(spark, str(tmp_path / "t"))
+    path = str(tmp_path / "idx")
+    assert sync(spark, table, path)["action"] == "rebuild"
+    _apply(spark, table, [("I", 150, 2), ("I", 151, 3)], 0)
+
+    # each racer's first resolve of the index waits for the other's, so
+    # both plan from the same seq and exactly one CAS publish can land
+    real_resolve = artifacts.resolve_full
+    planned = threading.Barrier(2, timeout=120)
+    racers_planned = set()
+
+    def resolve_full(base):
+        r = real_resolve(base)
+        me = threading.current_thread().name
+        if base == path and me.startswith("racer") and me not in racers_planned:
+            racers_planned.add(me)
+            planned.wait()
+        return r
+
+    results, errs = [], []
+
+    def race():
+        try:
+            results.append(sync(spark, table, path))
+        except Exception as e:  # surfaced below: a thread must not die silently
+            errs.append(e)
+
+    monkeypatch.setattr(artifacts, "resolve_full", resolve_full)
+    ts = [threading.Thread(target=race, name=f"racer{i}") for i in range(2)]
+    [t.start() for t in ts]
+    [t.join(timeout=600) for t in ts]
+    monkeypatch.setattr(artifacts, "resolve_full", real_resolve)
+
+    assert not any(t.is_alive() for t in ts)
+    assert errs == []
+    assert sorted(r["action"] for r in results) == ["append", "noop"]
+    assert sync(spark, table, path + "_rb")["action"] == "rebuild"
+    assert state(spark, table, path) == state(spark, table, path + "_rb")
+    if name == "band":  # merged bucket sizes too: nothing landed twice
+        assert _artifact(spark, path) == _artifact(spark, path + "_rb")
 
 
 def test_cluster_sync_forwards_stale_fraction_to_band_index(spark, tmp_path):
