@@ -648,6 +648,15 @@ def create_empty_table(
     return Miniberg.create(root, schema, num_buckets=num_buckets)
 
 
+def _nullable(t: T.DataType) -> T.DataType:
+    """``t`` with every nested element and field nullable."""
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType))
+    if isinstance(t, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType)) for f in t.fields])
+    return t
+
+
 def bootstrap_table(
     spark: SparkSession,
     root: str,
@@ -656,9 +665,11 @@ def bootstrap_table(
     num_buckets: int = 16,
 ) -> Miniberg:
     """Create a table from an initial (non-CDC) snapshot; rows get _seq=-1 so
-    any changelog event (seq>=0) supersedes them."""
+    any changelog event (seq>=0) supersedes them. Nested types are stored
+    nullable: a ``containsNull=false`` array (``F.array(F.lit(1))``) would
+    make the align-cast of every later batch and read illegal."""
     schema = T.StructType(
-        list(df.schema.fields)
+        [T.StructField(f.name, _nullable(f.dataType), f.nullable) for f in df.schema.fields]
         + [T.StructField(SEQ, T.LongType(), True), T.StructField(DELETED, T.BooleanType(), True)]
     )
     table = Miniberg.create(root, schema, num_buckets=num_buckets)

@@ -3,6 +3,10 @@ insert/update/delete change events — the relational re-expression of the
 reference's ``update_historical_snapshots`` compare-before-write (a scrape
 session's roster snapshot vs the open snapshots in the DB).
 
+``row_images`` diffs two DataFrames; ``Miniberg.row_images`` diffs two
+snapshots of a miniberg table in ONE read of their files, and every table
+diff — views, index syncs, ``Miniberg.table_changes`` — is that scan.
+
 ``differ ∘ apply = identity``: applying the emitted events to the old
 snapshot must reproduce the new one (tested in test_differ.py).
 
@@ -15,6 +19,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def moved(cols: list[str]):
+    """An image row whose key is on one side only, or whose ``cols`` differ."""
+    moved = F.col("_in_old").isNull() | F.col("_in_new").isNull()
+    for c in cols:
+        moved = moved | ~F.col(c).eqNullSafe(F.col(f"_o_{c}"))
+    return moved
 
 
 def row_images(
@@ -30,17 +42,59 @@ def row_images(
     ``_in_new`` are true on the side the key is present and null on the
     other, so a side whose payload is all-null still reads as present.
     Unchanged keys are dropped, so the result is sized by the change, not by
-    the snapshots. ``snapshot_diff`` and the view syncs both fold this."""
+    the snapshots."""
     o = old.select(key, F.lit(True).alias("_in_old"),
                    *[F.col(c).alias(f"_o_{c}") for c in cols])
     # the join key is never duplicated: a ``cols`` entry naming it reads the
     # joined key on the new side
     n = new.select(key, F.lit(True).alias("_in_new"),
                    *[c for c in cols if c != key])
-    moved = F.col("_in_old").isNull() | F.col("_in_new").isNull()
-    for c in cols:
-        moved = moved | ~F.col(c).eqNullSafe(F.col(f"_o_{c}"))
-    return o.join(n, key, "full_outer").filter(moved)
+    return o.join(n, key, "full_outer").filter(moved(cols))
+
+
+def table_row_images(
+    spark,
+    table,
+    from_version: int,
+    to_version: int,
+    *,
+    cols: list[str],
+) -> DataFrame:
+    """``Miniberg.row_images`` (one read of the files) of only the buckets
+    whose file sets moved (``changed_buckets``, pure metadata; every bucket
+    when the bucket function changed) — the keyed changed-row diff the
+    views fold."""
+    return table.row_images(spark, from_version, to_version, cols=cols,
+                            buckets=table.changed_buckets(from_version, to_version))
+
+
+def image_events(
+    images: DataFrame,
+    *,
+    key: str,
+    payload_cols: list[str],
+    snapshot_seq: int = 0,
+    ts=None,
+) -> DataFrame:
+    """Row images -> changelog events (event_seq, op, <key>, <payload...>,
+    ts, schema_ver) — the engine's changelog schema."""
+    op = (
+        F.when(F.col("_in_old").isNull(), "I")
+        .when(F.col("_in_new").isNull(), "D")
+        .otherwise("U")
+    )
+    return images.withColumn("op", op).select(
+        F.lit(snapshot_seq).cast("long").alias("event_seq"),
+        "op",
+        key,
+        *[F.when(F.col("op") != "D", F.col(c)).alias(c) for c in payload_cols],
+        # NTZ: the changelog contract's ts type (parquet timestamp[us] loads
+        # as NTZ; CHANGELOG_V1_SCHEMA declares NTZ) — an LTZ column here
+        # would skew through the session timezone when unioned/tailed
+        # alongside generated batches
+        F.lit(ts).cast("timestamp_ntz").alias("ts"),
+        F.lit(1).cast("int").alias("schema_ver"),
+    )
 
 
 def snapshot_diff(
@@ -52,38 +106,12 @@ def snapshot_diff(
     snapshot_seq: int = 0,
     ts=None,
 ) -> DataFrame:
-    """Emit changelog events turning ``old`` into ``new``.
-
-    Returns (event_seq, op, <key>, <payload...>, ts, schema_ver) — the engine's
-    changelog schema. Unchanged rows emit nothing (the reference's
-    skip-unchanged-snapshot optimization).
-    """
+    """Emit changelog events turning ``old`` into ``new``. Unchanged rows
+    emit nothing (the reference's skip-unchanged-snapshot optimization)."""
     payload_cols = payload_cols or [c for c in new.columns if c != key]
-    j = row_images(old, new, key=key, cols=payload_cols)
-    op = (
-        F.when(F.col("_in_old").isNull(), "I")
-        .when(F.col("_in_new").isNull(), "D")
-        .otherwise("U")
-    )
-    out = (
-        j.withColumn("op", op)
-        .select(
-            F.lit(snapshot_seq).cast("long").alias("event_seq"),
-            "op",
-            key,
-            *[
-                F.when(F.col("op") != "D", F.col(c)).alias(c)
-                for c in payload_cols
-            ],
-            # NTZ: the changelog contract's ts type (parquet timestamp[us]
-            # loads as NTZ; CHANGELOG_V1_SCHEMA declares NTZ) — an LTZ column
-            # here would skew through the session timezone when unioned/tailed
-            # alongside generated batches
-            F.lit(ts).cast("timestamp_ntz").alias("ts"),
-            F.lit(1).cast("int").alias("schema_ver"),
-        )
-    )
-    return out
+    return image_events(row_images(old, new, key=key, cols=payload_cols),
+                        key=key, payload_cols=payload_cols,
+                        snapshot_seq=snapshot_seq, ts=ts)
 
 
 def table_changes_pruned(
@@ -94,43 +122,10 @@ def table_changes_pruned(
     *,
     cols: list[str],
 ) -> DataFrame:
-    """Column-pruned, BUCKET-pruned change feed between two snapshots of a
-    miniberg table — the diff the index syncs run every advance.
-
-    Buckets whose file sets are identical in both snapshots hold identical
-    rows and so contribute no events; ``changed_buckets`` (pure metadata —
-    sidecar-path comparison, range-level under the third manifest layout)
-    restricts BOTH snapshot reads to the buckets that moved. At lake scale
-    this turns an index sync over a small commit from two full table scans
-    into a few bucket reads. ``cols`` prunes the payload to what the index
-    ingests (text / embedding), so column pruning reaches the parquet scan
-    too. Falls back to full reads when bucket identity is not comparable
-    (``changed_buckets`` returns None: the bucket function changed)."""
-    key, old, new = _pruned_pair(spark, table, from_version, to_version, cols)
-    return snapshot_diff(old, new, key=key, payload_cols=list(cols))
-
-
-def table_row_images(
-    spark,
-    table,
-    from_version: int,
-    to_version: int,
-    *,
-    cols: list[str],
-) -> DataFrame:
-    """``row_images`` between two snapshots of a miniberg table, with the
-    same bucket and column prune as ``table_changes_pruned`` — the keyed
-    changed-row diff the materialized views fold."""
-    key, old, new = _pruned_pair(spark, table, from_version, to_version, cols)
-    return row_images(old, new, key=key, cols=list(cols))
-
-
-def _pruned_pair(spark, table, from_version, to_version, cols):
-    key = table.manifest(to_version)["key_col"]
-    buckets = table.changed_buckets(from_version, to_version)
-    old, new = (
-        table.read(spark, version=v, buckets=buckets)
-        .select(key, *[c for c in cols if c != key])
-        for v in (from_version, to_version)
+    """The events of ``table_row_images`` over ``cols`` (what an index
+    ingests: text / embedding) — the diff the index syncs run every
+    advance."""
+    return image_events(
+        table_row_images(spark, table, from_version, to_version, cols=cols),
+        key=table.manifest(to_version)["key_col"], payload_cols=list(cols),
     )
-    return key, old, new

@@ -12,19 +12,24 @@ How a sync stays exact:
 
 - Every incremental sync folds one keyed changed-row diff
   (``cdc.differ.table_row_images``): the pre- and post-image (group, value)
-  of each key whose (group, value) moved, read from the changed buckets
-  only. As a signed multiset (−1 per removed pre-image, +1 per added
-  post-image) it is the exact delta of every view here: count/sum add it,
-  the distinct support adds it at the (group, value) grain. Untouched
-  buckets are never read; keys whose (group, value) did not move, and the
-  groups they sit in, contribute nothing.
+  of each key whose (group, value) moved. It is one read of the changed
+  buckets' files — a file both snapshots hold is scanned once — and one
+  group-by on the key resolves both sides. As a signed multiset (−1 per
+  removed pre-image, +1 per added post-image) it is the exact delta of
+  every view here: count/sum add it, the distinct support adds it at the
+  (group, value) grain. Untouched buckets are never read; keys whose
+  (group, value) did not move, and the groups they sit in, contribute
+  nothing.
 - min/max are not self-maintainable under delete/update (the removed row
   may BE the extremum). The same aggregate over the diff yields each
   group's gained min/max and its lost values; a group is recomputed only
   when a lost value equals its stored min or max. Every other group merges
-  with ``least``/``greatest`` and stays exact, because its stored extremum
-  survives. The recompute runs at most once per sync: one scan of the
-  current snapshot semi-joined to the recompute set.
+  its stored extremum with the gained values and stays exact, because its
+  stored extremum survives. The recompute runs at most once per sync: one
+  scan of the current snapshot filtered to the recompute set.
+- A sync runs no job only to count: the group count comes from the written
+  view's parquet footers, and the recompute set from a plain collect of
+  the merge's flagged groups.
 
 Sums are maintained in DECIMAL(28,4) (values cast to DECIMAL(18,4) before
 the first SUM): decimal add/subtract is exact, so incremental deltas never
@@ -45,7 +50,7 @@ import os
 from pyspark.sql import functions as F
 
 from recidiviz_data_spark.operators.base import _qx
-from recidiviz_data_spark.session import materialize
+from recidiviz_data_spark.session import materialize, materialize_lazily
 from recidiviz_data_spark.tables import artifacts
 
 _VAL_T = "decimal(18,4)"   # cast-before-SUM type (repo exactness rule)
@@ -94,12 +99,14 @@ def agg_view_sync(spark, table, path: str | None = None, *,
     the sync diffs the changed buckets itself.
 
     ``rebuild_changed_fraction``: when MORE than this fraction of buckets
-    moved since the last sync, rebuild instead — the diff reads the changed
-    buckets at both versions, so past roughly half the table it costs more
-    than the one full scan a rebuild pays (measured: a batch scattered over
-    60/64 buckets synced 3.4× SLOWER than its rebuild —
-    tools/ivm_scale_bench.py). The incremental win lives where web-scale CDC
-    lives: batches touching a small fraction of a large bucket count.
+    moved since the last sync, rebuild instead — the diff reads every file
+    the changed buckets hold at either version and shuffles those rows by
+    key, so past roughly half the table it costs more than the one full
+    scan and partial aggregate a rebuild pays (measured with the two-read
+    diff: a batch scattered over 60/64 buckets synced 3.4× SLOWER than its
+    rebuild — tools/ivm_scale_bench.py). The incremental win lives where
+    web-scale CDC lives: batches touching a small fraction of a large
+    bucket count.
     Returns {action, version, groups, recomputed_groups}."""
     call = dict(locals())  # every bound argument, for the conflict re-entry
     base = path or agg_view_path(table, group_col, value_col)
@@ -108,8 +115,11 @@ def agg_view_sync(spark, table, path: str | None = None, *,
     ident = {"table_uuid": uid, "group_col": g, "value_col": v, "kind": "agg"}
 
     def _write(stage: str, view_df, meta: dict) -> None:
+        """A ``meta`` without ``n_groups`` takes it from the view's footers."""
         os.makedirs(stage)
         view_df.write.parquet(os.path.join(stage, "view"))
+        if "n_groups" not in meta:
+            meta["n_groups"] = _rows_written(os.path.join(stage, "view"))
         artifacts.write_sync_meta(stage, meta)
 
     def _rebuild(cur_v: int) -> dict:
@@ -127,49 +137,40 @@ def agg_view_sync(spark, table, path: str | None = None, *,
         if _changed_buckets(table, meta, cur_v, rebuild_changed_fraction) is None:
             return _rebuild(cur_v)
         rows = _signed_rows(spark, table, meta["version"], cur_v, g, v, changes)
-        sv, gained = F.col(v).cast(_VAL_T), F.col("sign") > 0
-        delta = rows.groupBy(g).agg(
-            F.sum("sign").alias("dn"),
-            F.sum(F.when(gained, sv).otherwise(-sv)).cast(_SUM_T).alias("ds"),
-            F.min(F.when(gained, F.col(v))).alias("g_min"),
-            F.max(F.when(gained, F.col(v))).alias("g_max"),
-            F.min(F.when(~gained, F.col(v))).alias("l_min"),
-            F.max(F.when(~gained, F.col(v))).alias("l_max"),
-        )
+        gained, sv = F.col("sign") > 0, F.col(v).cast(_VAL_T).cast(_SUM_T)
         view = _read_state(spark, os.path.join(r0[0], "view"))
-        # all group-key joins are NULL-SAFE: a null group is a real group
-        # under GROUP BY semantics, and plain equi-joins would never match it
-        # (the stored null-group row and its delta would drift apart as
-        # duplicates)
-        merged = materialize(
-            view.alias("v")
-            .join(delta.alias("d"),
-                  F.col(f"v.{g}").eqNullSafe(F.col(f"d.{g}")), "full_outer")
-            .select(
-                F.coalesce(f"v.{g}", f"d.{g}").alias(g),
-                (F.coalesce("n_rows", F.lit(0)) + F.coalesce("dn", F.lit(0)))
-                .cast("long").alias("n_rows"),
-                (F.coalesce("sum_val", F.lit(0)) + F.coalesce("ds", F.lit(0)))
-                .cast(_SUM_T).alias("sum_val"),
-                F.least("min_val", "g_min").alias("min_val"),
-                F.greatest("max_val", "g_max").alias("max_val"),
+        stored = view.select(g, F.col("n_rows").alias("n"), F.col("sum_val").alias("s"),
+                             F.col("min_val").alias("s_min"), F.col("max_val").alias("s_max"))
+        signed = rows.select(g, F.col("sign").alias("n"),
+                             F.when(gained, sv).otherwise(-sv).alias("s"),
+                             F.when(gained, F.col(v)).alias("gained"),
+                             F.when(~gained, F.col(v)).alias("lost"))
+        # the stored rows and the diff's signed rows fold in ONE group-by: a
+        # null group is a real group under GROUP BY, as in the view itself
+        merged = materialize_lazily(
+            stored.unionByName(signed, allowMissingColumns=True).groupBy(g).agg(
+                F.sum("n").cast("long").alias("n_rows"),
+                F.sum("s").cast(_SUM_T).alias("sum_val"),
+                F.least(F.min("s_min"), F.min("gained")).alias("min_val"),
+                F.greatest(F.max("s_max"), F.max("gained")).alias("max_val"),
                 # a lost value at the stored extremum may have been its last
                 # copy
-                (F.coalesce(F.col("l_min") <= F.col("min_val"), F.lit(False))
-                 | F.coalesce(F.col("l_max") >= F.col("max_val"), F.lit(False)))
+                (F.coalesce(F.min("lost") <= F.min("s_min"), F.lit(False))
+                 | F.coalesce(F.max("lost") >= F.max("s_max"), F.lit(False)))
                 .alias("_rescan"),
             )
             .filter(F.col("n_rows") > 0)  # emptied groups leave the view
         )
-        n_out, n_rec = merged.agg(
-            F.count("*"), F.count(F.when(F.col("_rescan"), 1))
-        ).first()
+        # the few groups whose stored extremum the diff removed: a filter of
+        # the merge, no aggregate
+        rescan = [r[0] for r in merged.filter("_rescan").select(g).collect()]
         out = merged
-        if n_rec:
+        if rescan:
+            hit = F.col(g).isin([x for x in rescan if x is not None])
+            if None in rescan:
+                hit = hit | F.col(g).isNull()
             rx = (
-                table.read(spark, version=cur_v).alias("t")
-                .join(merged.filter("_rescan").alias("r"),
-                      F.col(f"t.{g}").eqNullSafe(F.col(f"r.{g}")), "left_semi")
+                table.read(spark, version=cur_v).filter(hit)
                 .groupBy(g).agg(F.min(v).alias("r_min"), F.max(v).alias("r_max"))
             )
             # r_min/r_max may be legitimately null when the group's surviving
@@ -191,12 +192,12 @@ def agg_view_sync(spark, table, path: str | None = None, *,
             F.when(F.col("min_val").isNotNull(), F.col("sum_val")).alias("sum_val"),
             "min_val", "max_val",
         )
-        new_meta = {**ident, "version": cur_v, "n_groups": n_out}
+        new_meta = {**ident, "version": cur_v}
         artifacts.publish(base, artifacts.mutated_key(r0[1]),
                           lambda stage: _write(stage, out, new_meta),
                           expected_seq=r0[2])
-        return {"action": "incremental", "version": cur_v, "groups": n_out,
-                "recomputed_groups": n_rec}
+        return {"action": "incremental", "version": cur_v,
+                "groups": new_meta["n_groups"], "recomputed_groups": len(rescan)}
 
     return artifacts.sync(
         base, table, ident, rebuild=_rebuild, advance=_advance,
@@ -210,7 +211,7 @@ def _changed_buckets(table, meta: dict, cur_v: int, fraction: float):
     """Buckets whose files moved since the view's stored version, or None
     when the view should rebuild instead: bucket identity changed, or more
     than ``fraction`` of the buckets moved (one full scan is then cheaper
-    than reading the changed buckets at both versions)."""
+    than diffing the changed buckets' files by key)."""
     cb = table.changed_buckets(meta["version"], cur_v)
     if cb is None or len(cb) > fraction * table.manifest(cur_v)["num_buckets"]:
         return None
@@ -234,11 +235,15 @@ def _signed_rows(spark, table, from_v: int, to_v: int, g: str, v: str,
     in_old, in_new = F.col("_in_old").isNotNull(), F.col("_in_new").isNotNull()
     moved = (~in_old | ~in_new | ~F.col(g).eqNullSafe(F.col(f"_o_{g}"))
              | ~F.col(v).eqNullSafe(F.col(f"_o_{v}")))
-    d = changes.filter(moved)
-    return d.filter(in_old).select(
-        F.col(f"_o_{g}").alias(g), F.col(f"_o_{v}").alias(v),
-        F.lit(-1).alias("sign"),
-    ).unionByName(d.filter(in_new).select(g, v, F.lit(1).alias("sign")))
+    # one pass over the diff (a union of two filters would read it twice)
+    sides = F.array(*[
+        F.struct(F.col(gc).alias(g), F.col(vc).alias(v),
+                 F.lit(sign).alias("sign"), present.alias("_in"))
+        for gc, vc, sign, present in ((f"_o_{g}", f"_o_{v}", -1, in_old),
+                                      (g, v, 1, in_new))
+    ])
+    return (changes.filter(moved).select(F.explode(sides).alias("_r"))
+            .select("_r.*").filter("_in").drop("_in"))
 
 
 def _events_cte() -> str:
@@ -477,17 +482,15 @@ def distinct_view_sync(spark, table, path: str | None = None, *,
             return _rebuild(cur_v)
         payload = r0[0]
         # delta multiset at the (group, value) grain: the diff's signed rows
-        delta = materialize(
+        delta = materialize_lazily(
             _signed_rows(spark, table, meta["version"], cur_v, g, v, changes)
             .filter(F.col(v).isNotNull())  # COUNT(DISTINCT) ignores nulls
             .groupBy(g, v)
-            .agg(F.sum("sign").cast("long").alias("d"))
-            .filter(F.col("d") != 0)
+            .agg(F.sum("sign").cast("long").alias("cnt"))
+            .filter(F.col("cnt") != 0)
             .withColumn("part", _part_of(g))
         )
-        changed_parts = sorted(
-            r["part"] for r in delta.select("part").distinct().collect()
-        )
+        changed_parts = sorted({r["part"] for r in delta.select("part").collect()})
         if not changed_parts:  # file sets moved (compaction) but values didn't
             n_groups = meta["n_groups"]
 
@@ -506,53 +509,24 @@ def distinct_view_sync(spark, table, path: str | None = None, *,
                     "groups": n_groups, "changed_parts": 0}
 
         # merge the delta into ONLY the touched support partitions
-        # (partition pruning on part); keep dead rows long enough to compute
-        # the summary delta (a value dropping to multiplicity 0 decrements
-        # n_distinct)
+        # (partition pruning on part)
         old_sup = _read_state(spark, os.path.join(payload, "support")).filter(
             F.col("part").isin(changed_parts)
         )
-        merged = materialize(
-            old_sup.alias("s")
-            .join(
-                delta.alias("d"),
-                F.col(f"s.{g}").eqNullSafe(F.col(f"d.{g}"))
-                & (F.col(f"s.{v}") == F.col(f"d.{v}")),
-                "full_outer",
-            )
-            .select(
-                F.coalesce(f"s.{g}", f"d.{g}").alias(g),
-                F.coalesce(f"s.{v}", f"d.{v}").alias(v),
-                (F.coalesce("s.cnt", F.lit(0)) + F.coalesce("d.d", F.lit(0)))
-                .cast("long").alias("cnt"),
-                F.coalesce("s.part", "d.part").alias("part"),
-                F.col("s.cnt").isNotNull().alias("was_live"),
-            )
-        )
-        new_support = merged.filter(F.col("cnt") > 0).select(g, v, "cnt", "part")
-        sum_delta = (
-            merged.withColumn(
-                "dd",
-                F.when(~F.col("was_live") & (F.col("cnt") > 0), 1)
-                .when(F.col("was_live") & (F.col("cnt") <= 0), -1)
-                .otherwise(0),
-            )
-            .groupBy(g).agg(F.sum("dd").cast("long").alias("dd"))
-            .filter(F.col("dd") != 0)
-        )
-        old_view = _read_state(spark, os.path.join(payload, "view"))
-        new_view = (
-            old_view.alias("o")
-            .join(sum_delta.alias("x"),
-                  F.col(f"o.{g}").eqNullSafe(F.col(f"x.{g}")), "full_outer")
-            .select(
-                F.coalesce(f"o.{g}", f"x.{g}").alias(g),
-                (F.coalesce("o.n_distinct", F.lit(0))
-                 + F.coalesce("x.dd", F.lit(0))).cast("long").alias("n_distinct"),
-            )
-            .filter(F.col("n_distinct") > 0)
+        new_support = materialize_lazily(
+            old_sup.select(g, v, "cnt", "part").unionByName(delta)
+            .groupBy(g, v, "part").agg(F.sum("cnt").cast("long").alias("cnt"))
+            .filter(F.col("cnt") > 0)
+            .select(g, v, "cnt", "part")
         )
         n_groups = None
+        # a group's whole support lives in its own part, so the rewritten
+        # parts' summary rows are recounted from their new support, and
+        # every other summary row carries over
+        old_view = _read_state(spark, os.path.join(payload, "view"))
+        new_view = old_view.filter(~_part_of(g).isin(changed_parts)).unionByName(
+            new_support.groupBy(g).agg(F.count("*").cast("long").alias("n_distinct"))
+        )
 
         def _build(stage: str) -> None:
             nonlocal n_groups

@@ -77,3 +77,10 @@ def materialize(df):
     whole derivation per consumer (AQE's join reshaping defeats exchange
     reuse)."""
     return df.localCheckpoint()
+
+
+def materialize_lazily(df):
+    """``materialize`` without its own job: the shuffle stages run now, the
+    last stage inside the first action that reads the result, which keeps
+    it for every later consumer."""
+    return df.localCheckpoint(eager=False)

@@ -182,14 +182,16 @@ def _shared_view_diff(spark, table: Miniberg, views: list[tuple[str, str, str]])
     """(diff, from_version, to_version) for one ``index_sync_hook`` call:
     the changed-row diff (``table_row_images``) over every column of
     ``views`` — (path, group_col, value_col) — from the version most of them
-    last synced to, up to the current one. It is persisted lazily, so the
-    first view sync that folds it computes it and the rest read it back; a
-    view stored at another version (or a sync that sees a newer commit)
-    diffs for itself. (None, None, None) when no view of this table is
-    behind. The caller unpersists it when the call ends."""
+    last synced to, up to the current one: one read of the changed buckets'
+    files and one exchange. It is checkpointed lazily (its exchange runs
+    here, its last stage inside the first view sync that folds it, which
+    keeps it for the rest); a view stored at another version (or a sync
+    that sees a newer commit) diffs for itself. (None, None, None) when no
+    view of this table is behind."""
     from collections import Counter
 
     from recidiviz_data_spark.cdc.differ import table_row_images
+    from recidiviz_data_spark.session import materialize_lazily
     from recidiviz_data_spark.tables import artifacts
 
     cur_v, uid = table.current_version(), artifacts.table_uid(table)
@@ -203,7 +205,7 @@ def _shared_view_diff(spark, table: Miniberg, views: list[tuple[str, str, str]])
     from_v = behind.most_common(1)[0][0]
     cols = sorted({c for _p, g, v in views for c in (g, v)})
     diff = table_row_images(spark, table, from_v, cur_v, cols=cols)
-    return diff.persist(), from_v, cur_v
+    return materialize_lazily(diff), from_v, cur_v
 
 
 def index_sync_hook(
@@ -239,7 +241,10 @@ def index_sync_hook(
     diff over the agg and distinct views' columns, from the version most of
     them last synced to, and hands it to each of their syncs with its
     ``from_version`` / ``to_version``; a view stored at another version
-    diffs for itself.
+    diffs for itself. The diff reads each file of the changed buckets once
+    (both snapshots' sides resolve in one group-by), and neither sync runs
+    a job only to count, so an agg plus a distinct view advance in about a
+    dozen Spark jobs (``tests/test_aggview.py::HOOK_JOB_BUDGET``).
     The diff lives only for this call. An agg view recomputes a group's
     min/max only when the diff removed a value equal to its stored
     extremum. Top-k views read their changed buckets themselves (their
@@ -277,20 +282,16 @@ def index_sync_hook(
             )
         changes, from_v, to_v = _shared_view_diff(
             spark, table, [*(agg_views or []), *(distinct_views or [])])
-        try:
-            for kind, vsync, specs in (("aggview", aggview.agg_view_sync, agg_views),
-                                       ("distinctview", aggview.distinct_view_sync,
-                                        distinct_views)):
-                for vpath, g, v in specs or []:
-                    outs.append(
-                        (f"{kind}:{g}:{v}",
-                         vsync(spark, table, vpath, group_col=g, value_col=v,
-                               changes=changes, from_version=from_v,
-                               to_version=to_v, **vkw))
-                    )
-        finally:
-            if changes is not None:
-                changes.unpersist()
+        for kind, vsync, specs in (("aggview", aggview.agg_view_sync, agg_views),
+                                   ("distinctview", aggview.distinct_view_sync,
+                                    distinct_views)):
+            for vpath, g, v in specs or []:
+                outs.append(
+                    (f"{kind}:{g}:{v}",
+                     vsync(spark, table, vpath, group_col=g, value_col=v,
+                           changes=changes, from_version=from_v,
+                           to_version=to_v, **vkw))
+                )
         for vpath, g, v, k in topk_views or []:
             outs.append(
                 (f"topkview:{g}:{v}:{k}",

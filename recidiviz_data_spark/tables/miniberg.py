@@ -70,6 +70,7 @@ LIMITS (documented scale envelope; see maintenance.py for the mitigations):
 
 from __future__ import annotations
 
+import functools
 import glob
 import hashlib
 import itertools
@@ -640,6 +641,50 @@ class Miniberg:
         if include_internal:
             return out
         return self._public_view(m, out)
+
+    def row_images(
+        self, spark: SparkSession, from_version: int, to_version: int, *,
+        cols: list[str], buckets: list[int] | None = None,
+    ) -> DataFrame:
+        """``differ.row_images`` of two snapshots in ``buckets`` (None: all),
+        from ONE read of their files — THE table diff. A file both snapshots
+        hold is scanned once (Iceberg's changelog scan): each file group is
+        tagged (in the old set? in the new set? delta?) and aligned to
+        ``to_version``'s schema (a column added in between reads as null on
+        the old side), and one ``groupBy(key)`` takes each side's newest row
+        (delta before base, then ``_seq``: ``_read_files``' resolution) in
+        one exchange. A key whose winner is a tombstone is absent there."""
+        from recidiviz_data_spark.cdc.differ import moved
+
+        ms = [self.manifest(from_version), self.manifest(to_version)]
+        key = ms[1]["key_col"]
+        full = self._schema_struct(ms[1], ms[1]["schema_id"], include_internal=True)
+        tagged: dict[str, tuple[dict, list[bool]]] = {}
+        for side, m in enumerate(ms):
+            for f in self.files(buckets=buckets, manifest=m):
+                tagged.setdefault(f["path"], (f, [False, False]))[1][side] = True
+        groups: dict[tuple, list[dict]] = {}
+        for f, (in_old, in_new) in tagged.values():
+            groups.setdefault((in_old, in_new, f.get("kind") == "delta"), []).append(f)
+        # a file only the old snapshot holds is described by its schemas
+        rows = functools.reduce(DataFrame.unionByName, [
+            self._union_aligned(spark, ms[tag[1]], fs, full).select(
+                "*", *[F.lit(b).alias(t) for t, b in zip(("_f_old", "_f_new", "_f_delta"), tag)])
+            for tag, fs in (groups or {(False, False, False): []}).items()
+        ])
+        row = F.struct("_f_delta", "_seq", F.coalesce(F.col("_deleted"), F.lit(False)).alias("_dead"),
+                       *[c for c in cols if c != key])
+        live = {s: F.when(~F.col(f"_{s}._dead"), True) for s in ("old", "new")}
+
+        def val(s: str, c: str):
+            return F.when(live[s], F.col(key) if c == key else F.col(f"_{s}.{c}"))
+
+        return rows.groupBy(key).agg(*[
+            F.max(F.when(F.col(f"_f_{s}"), row)).alias(f"_{s}") for s in ("old", "new")
+        ]).select(
+            key, live["old"].alias("_in_old"), *[val("old", c).alias(f"_o_{c}") for c in cols],
+            live["new"].alias("_in_new"), *[val("new", c).alias(c) for c in cols if c != key],
+        ).filter(F.coalesce("_in_old", "_in_new").isNotNull() & moved(cols))
 
     def _public_view(self, m: dict, out: DataFrame) -> DataFrame:
         """Internal-resolved rows -> the user-facing view: drop tombstones,
@@ -1265,30 +1310,22 @@ class Miniberg:
     ) -> DataFrame:
         """Change-data-feed read: the I/U/D events that turn snapshot
         ``from_version`` into ``to_version`` (Delta's table_changes /
-        Iceberg's changelog scan, re-expressed through the snapshot differ —
-        ``differ ∘ apply = identity`` is the tested contract).
+        Iceberg's changelog scan), the one-read ``row_images`` over every
+        user column of ``to_version`` — ``differ ∘ apply = identity`` is the
+        tested contract.
 
-        ``buckets`` restricts BOTH snapshot reads — pass
-        ``changed_buckets(from_version, to_version)`` to scan only buckets
-        whose file sets moved (identical buckets yield no events by
-        definition); at lake scale that turns the delta of a small commit
-        from two table scans into a few bucket reads."""
-        from recidiviz_data_spark.cdc.differ import snapshot_diff
+        ``buckets`` restricts the scan — pass ``changed_buckets(from_version,
+        to_version)`` to read only buckets whose file sets moved (identical
+        buckets yield no events by definition); at lake scale that turns the
+        delta of a small commit from a table scan into a few bucket reads."""
+        from recidiviz_data_spark.cdc.differ import image_events
 
-        # the old snapshot is read under ITS schema, then aligned to
-        # to_version's user schema (null-filling later-added columns) — a
-        # CDF read spanning a schema-evolution boundary must not fail on
-        # the old side lacking the added column
-        new_m = self.manifest(to_version)
-        new_user = self._schema_struct(new_m, new_m["schema_id"], include_internal=False)
-        old = align_to_schema(
-            self.read(spark, version=from_version, buckets=buckets), new_user
-        )
-        new = self.read(spark, version=to_version, buckets=buckets)
-        key = new_m["key_col"]
-        payload = [c for c in new.columns if c != key]
-        return snapshot_diff(
-            old, new, key=key, payload_cols=payload,
+        key = self.manifest(to_version)["key_col"]
+        payload = [c for c in self.spark_schema(to_version, include_internal=False).fieldNames()
+                   if c != key]
+        return image_events(
+            self.row_images(spark, from_version, to_version, cols=payload, buckets=buckets),
+            key=key, payload_cols=payload,
             snapshot_seq=to_version if snapshot_seq is None else snapshot_seq,
         )
 

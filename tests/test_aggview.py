@@ -239,15 +239,18 @@ def test_extremum_rescan_only_when_lost(spark, tmp_path, monkeypatch):
     agg_view_sync(spark, table, path, **KW)
 
     reads: list = []
-    raw_read = table.read
 
-    def recording_read(spark_, *a, **kw):
-        reads.append(kw.get("buckets"))
-        return raw_read(spark_, *a, **kw)
+    def recording(raw):
+        def read(spark_, *a, **kw):
+            reads.append(kw.get("buckets"))
+            return raw(spark_, *a, **kw)
+        return read
 
     # g1 holds 1, 5, ..., 37: 17 is neither its min nor its max
     _apply(spark, table, state, [("D", "doc_017", None, None)], 0)
-    monkeypatch.setattr(table, "read", recording_read)
+    # the diff reads through row_images, the min/max rescan through read
+    for name in ("read", "row_images"):
+        monkeypatch.setattr(table, name, recording(getattr(table, name)))
     res = agg_view_sync(spark, table, path, **KW)
     assert res["action"] == "incremental" and res["recomputed_groups"] == 0
     assert reads and all(b is not None for b in reads)
@@ -300,15 +303,31 @@ def test_distinct_view_of_the_key_column(spark, tmp_path):
         ("g0", 9), ("g1", 7), ("g2", 8)}
 
 
-# Spark jobs one incremental hook call runs below (measured at local[8]; the
-# per-view diff design it replaced ran 43 at local[4])
-HOOK_JOB_BUDGET = 23
+# Spark jobs one incremental hook call, and one standalone incremental
+# distinct sync, run below (measured at local[8]; the per-view diff design
+# ran 43 at local[4], the two-read diff with count round trips 23 and 14)
+HOOK_JOB_BUDGET = 10
+DISTINCT_SYNC_JOB_BUDGET = 7
+
+
+def _jobs_of(spark, group: str, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_hook_spark_job_budget(spark, tmp_path):
     """One incremental ``index_sync_hook`` call advancing an agg and a
-    distinct view over a small multi-bucket table runs at most the measured
-    number of Spark jobs (counted through a job group)."""
+    distinct view over a small multi-bucket table, and one standalone
+    ``distinct_view_sync`` over the same batch, each run at most the
+    measured number of Spark jobs."""
+    from recidiviz_data_spark.operators.aggview import distinct_view_sync
     from recidiviz_data_spark.streaming.microbatch import index_sync_hook
 
     state = {f"doc_{i:03d}": (f"g{i % 3}", i % 17) for i in range(64)}
@@ -319,19 +338,19 @@ def test_hook_spark_job_budget(spark, tmp_path):
         distinct_views=[(str(tmp_path / "d"), "source", "val")],
         results=results)
     hook(table, -1)
+    alone = dict(group_col="source", value_col="val")
+    distinct_view_sync(spark, table, str(tmp_path / "sd"), **alone)
     _apply(spark, table, state,
            [("U", "doc_001", "g2", 40), ("D", "doc_010", None, None),
             ("I", "doc_900", "g0", 3)], 0)
-    sc = spark.sparkContext
-    sc.setJobGroup("view_hook_budget", "one incremental hook call")
-    try:
-        hook(table, 0)
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(prop, None)
+    n_jobs = _jobs_of(spark, "view_hook_budget", lambda: hook(table, 0))
     assert [r["action"] for r in results[-2:]] == ["incremental"] * 2
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("view_hook_budget"))
     assert n_jobs <= HOOK_JOB_BUDGET, n_jobs
+    res = []
+    n_jobs = _jobs_of(spark, "distinct_sync_budget", lambda: res.append(
+        distinct_view_sync(spark, table, str(tmp_path / "sd"), **alone)))
+    assert res[0]["action"] == "incremental"
+    assert n_jobs <= DISTINCT_SYNC_JOB_BUDGET, n_jobs
 
 
 def test_agg_view_sync_exact_across_iud(spark, tmp_path):

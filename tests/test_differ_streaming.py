@@ -163,3 +163,145 @@ def test_structured_streaming_apply(spark, tmp_path):
     assert table.current_version() == v  # checkpoint replay adds nothing
     assert_state_equal(table_state(spark, table), expected_state(cl))
     assert os.path.isdir(ckpt)
+
+
+def _img_rows(df):
+    return {tuple(tuple(x) if isinstance(x, list) else x for x in r)
+            for r in df.collect()}
+
+
+def test_one_read_diff_equals_two_read_images(spark, tmp_path):
+    """The one-read table diff (``table_row_images``) equals ``row_images``
+    of the two snapshots' public reads of the changed buckets, over a random
+    history: merge-on-read deltas stacked 1-3 deep, a compacting commit,
+    copy-on-write commits, tombstones, delete-then-reinsert, NULL groups and
+    values, a column added inside the span, and spans of several commits.
+    ``Miniberg.table_changes`` over the whole history, forwards and
+    backwards, equals ``snapshot_diff`` of the two full reads."""
+    import random
+
+    from recidiviz_data_spark.cdc.apply import bootstrap_table
+    from recidiviz_data_spark.cdc.differ import row_images, table_row_images
+    from recidiviz_data_spark.tables.maintenance import compact
+    from recidiviz_data_spark.tables.miniberg import align_to_schema
+
+    rng = random.Random(20261020)
+
+    def payload():
+        return ([rng.randrange(3)] * rng.randrange(1, 3),
+                None if rng.random() < 0.2 else rng.randrange(5),
+                rng.choice(["a", "b", None]))
+
+    live = {f"doc_{i:02d}": payload() for i in range(40)}
+    base = spark.createDataFrame(
+        [(k, *p) for k, p in sorted(live.items())],
+        "doc_id string, tokens array<int>, n_tok int, source string")
+    table = bootstrap_table(spark, str(tmp_path / "t"), base, num_buckets=4)
+    versions, deleted, seq = [table.current_version()], [], 0
+    ev_schema = ("event_seq long, op string, doc_id string, tokens array<int>, "
+                 "n_tok int, source string")
+    script = ["mor", "mor", "mor", "compact", "cow", "mor", "lang", "mor",
+              "reinsert", "mor", "mor"]
+    for i, step in enumerate(script):
+        if step == "compact":
+            assert compact(spark, table, min_files=1) is not None
+            versions.append(table.current_version())
+            continue
+        if step == "lang":
+            ev_schema += ", lang string"
+        events = []
+        for k in rng.sample(sorted(live), 3):
+            seq += 1
+            if rng.random() < 0.4:
+                events.append((seq, "D", k, None, None, None))
+                del live[k]
+                deleted.append(k)
+            else:
+                live[k] = payload()
+                events.append((seq, "U", k, *live[k]))
+        back = deleted[:2] if step == "reinsert" else []
+        for k in back + [f"doc_{100 + i}"]:
+            seq += 1
+            live[k] = payload()
+            events.append((seq, "I", k, *live[k]))
+        deleted = [k for k in deleted if k not in back]
+        if "lang" in ev_schema:
+            events = [(*e, rng.choice(["en", None])) for e in events]
+        apply_batch(spark, table, spark.createDataFrame(events, ev_schema), i,
+                    mor=step != "cow", compact=False)
+        versions.append(table.current_version())
+    depth = max(sum(f.get("kind") == "delta" for f in table.files(buckets=[b]))
+                for b in range(4))
+    assert 2 <= depth <= 3, depth
+
+    def reference(f, t, cols):
+        cb = table.changed_buckets(f, t)
+        user = table.spark_schema(t, include_internal=False)
+        old = align_to_schema(table.read(spark, version=f, buckets=cb), user)
+        new = table.read(spark, version=t, buckets=cb)
+        return row_images(old, new, key="doc_id", cols=cols)
+
+    spans = list(zip(versions, versions[1:])) + [
+        (versions[0], versions[-1]), (versions[2], versions[7]),
+        (versions[4], versions[9]), (versions[1], versions[-1])]
+    col_sets = [["source", "n_tok"], ["tokens"], ["doc_id", "source"],
+                ["lang", "n_tok"]]
+    for j, (f, t) in enumerate(spans):
+        cols = col_sets[j % len(col_sets)]
+        if "lang" not in table.spark_schema(t).fieldNames():
+            cols = col_sets[0]
+        got = table_row_images(spark, table, f, t, cols=cols)
+        want = reference(f, t, cols)
+        assert got.columns == want.columns, (f, t)
+        assert _img_rows(got) == _img_rows(want), (f, t, cols)
+
+    # forwards over the whole history, and backwards across the added column
+    for f, t in ((versions[0], versions[-1]), (versions[-1], versions[0])):
+        user = table.spark_schema(t, include_internal=False)
+        want = snapshot_diff(
+            align_to_schema(table.read(spark, version=f), user),
+            table.read(spark, version=t), snapshot_seq=t)
+        assert _img_rows(table.table_changes(spark, f, t)) == _img_rows(want), (f, t)
+
+
+def test_one_read_diff_plan_scans_each_file_once(spark, tmp_path):
+    """The one-read diff's plan reads each data file of the two snapshots'
+    changed buckets in exactly one FileScan, and runs exactly one Exchange
+    (its group-by on the key)."""
+    from collections import Counter
+
+    from recidiviz_data_spark.cdc.apply import bootstrap_table
+    from recidiviz_data_spark.cdc.differ import table_row_images
+
+    base = _tokens_df(spark, [(f"doc_{i:02d}", [i], 1, "web") for i in range(40)])
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", 4)
+    try:
+        table = bootstrap_table(spark, str(tmp_path / "t"), base, num_buckets=4)
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    v0 = table.current_version()
+    ev = ("event_seq long, op string, doc_id string, tokens array<int>, "
+          "n_tok int, source string")
+    for i, (op, k) in enumerate([("U", "doc_01"), ("D", "doc_02"), ("I", "doc_77")]):
+        apply_batch(spark, table, spark.createDataFrame(
+            [(i + 1, op, k, [9], 1, "api")], ev), i, mor=True, compact=False)
+    v1 = table.current_version()
+    cb = table.changed_buckets(v0, v1)
+    files = {os.path.join(table.root, f["path"])
+             for v in (v0, v1) for f in table.files(v, buckets=cb)}
+    assert any(f.get("kind") == "delta" for f in table.files(v1, buckets=cb))
+
+    images = table_row_images(spark, table, v0, v1, cols=["source", "n_tok"])
+    plan = images._jdf.queryExecution().executedPlan().initialPlan()
+    scanned: Counter = Counter()
+    leaves = plan.collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        assert leaf.getClass().getSimpleName() == "FileSourceScanExec", leaf.nodeName()
+        paths = leaf.relation().location().rootPaths().iterator()
+        while paths.hasNext():
+            scanned[paths.next().toUri().getPath()] += 1
+    assert set(scanned) == files and set(scanned.values()) == {1}, scanned
+    nodes = [ln.lstrip(" :+-") for ln in plan.treeString().splitlines()]
+    assert sum(n.split(" ")[0].endswith("Exchange") for n in nodes) == 1, nodes
+    assert {r["doc_id"] for r in images.collect()} == {"doc_01", "doc_02", "doc_77"}
