@@ -39,11 +39,16 @@ Scale design (10^10 events / 1000 executors):
 - Bucketing and the staged partitioned write are the table's
   (``Miniberg.bucket_expr``, ``Miniberg.write_staged``): every writer
   buckets rows and stages files the same way.
+
+``apply_batch`` runs the transaction as five phases over one ``_Plan``
+record: ``_plan`` -> ``_decide`` (match + compare) -> ``_choose_writes``
+-> ``_rewrite_and_stage`` (write) -> ``_commit``.
 """
 
 from __future__ import annotations
 
 import time
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,9 +65,9 @@ from recidiviz_data_spark.sources.changelog import (
 )
 from recidiviz_data_spark.tables.miniberg import (
     Miniberg,
+    _nullable,
     _type_from_json,
     align_to_schema as _align,
-    keys_from_entries,
 )
 
 BUCKET = "_bucket"
@@ -194,7 +199,351 @@ def _validity(df: DataFrame) -> F.Column:
     return op_ok & F.col("doc_id").isNotNull() & payload_ok
 
 
+def _table_schema(fields: list[T.StructField]) -> T.StructType:
+    """``fields`` with nested types nullable (``_nullable``), plus the
+    internal ``_seq`` (per-row staleness watermark) and ``_deleted``
+    (tombstone flag) columns the merge relies on."""
+    return T.StructType(
+        [T.StructField(f.name, _nullable(f.dataType), f.nullable) for f in fields]
+        + [T.StructField(SEQ, T.LongType(), True), T.StructField(DELETED, T.BooleanType(), True)]
+    )
+
+
+def _table_rows(winners: DataFrame, payload_cols: list[str], deleted: F.Column) -> DataFrame:
+    """LWW winners as table rows: ``_seq`` = event_seq, and a ``deleted``
+    winner becomes a tombstone (payload nulled, ``_seq`` kept) so a stale
+    event that arrives later cannot resurrect the doc."""
+    out = winners.withColumn(SEQ, F.col("event_seq")).withColumn(DELETED, deleted)
+    for c in payload_cols:
+        out = out.withColumn(c, F.when(F.col(DELETED), F.lit(None)).otherwise(F.col(c)))
+    return out
+
+
 # -------------------------------------------------------------------- apply
+@dataclass(frozen=True)
+class _Writes:
+    """What an apply writes (``_choose_writes``)."""
+
+    changed: dict[int, int]        # bucket -> changed (applied + deleted) rows
+    cow: set[int]                  # rewritten copy-on-write (replaced)
+    mor: set[int]                  # given a merge-on-read delta file
+    compacting: bool               # the copy-on-write rewrite re-buckets fully
+    bucket_keys: dict[int, int]    # the merge-on-read buckets' key stamps
+    bloom_ndv: int | str | None
+
+
+@dataclass
+class _Plan:
+    """One apply's plan record: ``_plan`` fills the fields without a
+    default, and each later phase sets its own."""
+
+    batch_id: int
+    started: float                 # monotonic clock at the start of the apply
+    manifest: dict                 # the parent snapshot the commit CASes on
+    summaries: dict[int, dict]     # its per-bucket summaries
+    payload_cols: list[str]
+    raw: DataFrame                 # the bucketed batch with its _valid flag
+    fields: dict                   # the table schema after this batch
+    schema_changed: bool
+    persisted: list[DataFrame] = field(default_factory=list)
+    decisions: DataFrame | None = None   # winners classified vs the target
+    metrics: dict = field(default_factory=dict)  # bucket -> decision counts
+    writes: _Writes | None = None
+    added: list[dict] = field(default_factory=list)  # staged file entries
+
+
+def _plan(table: Miniberg, batch_df: DataFrame, batch_id: int) -> _Plan | None:
+    """Phase 1, plan: the parent manifest and its bucket summaries, the
+    replay check (``None`` = batch already applied), the schema the table
+    evolves to for this batch's payload, and the bucketed batch with its
+    validity flag. Starts no Spark job."""
+    started = time.monotonic()
+    m = table.manifest()
+    if batch_id <= m["last_applied_batch"]:
+        return None
+    # the merge logic (joins, changed-doc sets, validity) is written against
+    # the changelog's fixed key column name; a table created with a different
+    # key_col would silently bucket/prune inconsistently with maintenance ops
+    # (which honor key_col) — refuse instead
+    if m.get("key_col", "doc_id") != "doc_id":
+        raise ValueError(
+            f"apply_batch merges on 'doc_id' but table key_col={m['key_col']!r}"
+        )
+    payload_cols = [c for c in payload_columns(batch_df) if c != "doc_id"]
+    clashes = [c for c in batch_df.columns if c.startswith("_")]
+    if clashes:
+        raise ValueError(
+            f"changelog columns {clashes} collide with the engine's internal "
+            "underscore-prefixed columns (_seq/_deleted/_bucket/...)"
+        )
+    fields, schema_changed = table.evolve_schema(_table_schema(
+        [f for f in batch_df.schema.fields if f.name in {"doc_id", *payload_cols}]
+    ))
+    raw = batch_df.withColumn(
+        BUCKET, Miniberg.bucket_expr("doc_id", m["num_buckets"])
+    ).withColumn("_valid", _validity(batch_df))
+    # O(buckets) summaries — the two-level manifest means the driver never
+    # parses the file list on the apply path (reads load only touched
+    # buckets' sidecars)
+    return _Plan(batch_id, started, m, table.bucket_summaries(m), payload_cols,
+                 raw, fields, schema_changed)
+
+
+def _decide(
+    spark: SparkSession,
+    table: Miniberg,
+    plan: _Plan,
+    *,
+    dedup_strategy: str,
+    max_invalid_ratio: float | None,
+) -> None:
+    """Phase 2, decide: the batch's LWW winners classified against the
+    target's ``_seq`` (``plan.decisions``, persisted) and their per-bucket
+    counts, in one collect (``plan.metrics``); then the invalid-ratio
+    gate."""
+    winners = normalize_tokens_native(
+        dedup_lww(plan.raw, plan.payload_cols, strategy=dedup_strategy)
+    )
+    # buckets any winner touches: prunes the DECISION read (stale checks need
+    # the target's _seq for every winner doc). The rewrite prunes further, to
+    # buckets with actual changes. Empty table -> nothing to prune, skip the
+    # extra job entirely (bootstrap/first-batch fast path). On a small target
+    # ("auto" below DECISION_PRUNE_MIN_BYTES) the distinct-bucket collect job
+    # costs more than the unpruned 2-column scan it would save — skip it.
+    if not plan.summaries:
+        # bootstrap fast path: an empty table means no row can be stale —
+        # skip the join (and its AQE stages) entirely
+        matched = winners.withColumn("_t_seq", F.lit(None).cast("long"))
+    else:
+        affected: list[int] | None = None  # decision read covers all buckets
+        if sum(s.get("bytes", 0) for s in plan.summaries.values()) >= DECISION_PRUNE_MIN_BYTES:
+            # pruning gives winners TWO consumers (this collect + the decision
+            # join) — persist; the unpruned path consumes winners exactly once
+            # (inside the decisions persist), so caching them would be waste
+            winners = winners.persist(StorageLevel.MEMORY_AND_DISK)
+            plan.persisted.append(winners)
+            affected = sorted(
+                (r[BUCKET] for r in winners.select(BUCKET).distinct().collect()),
+                key=lambda b: (b is None, b),
+            )
+        # winners vs target (doc_id, _seq) ONLY
+        target_min = (
+            table.read(spark, buckets=affected, include_internal=True)
+            .select("doc_id", F.col(SEQ).alias("_t_seq"))
+        )
+        matched = winners.join(target_min, "doc_id", "left")
+    # staleness compares against the row's _seq watermark, INCLUDING
+    # tombstone rows — that is why deletes must leave a tombstone: a stale
+    # update that arrives after a delete would otherwise resurrect the doc.
+    cls = (
+        F.when(F.col("event_seq").isNull(), F.lit("invalid_only"))
+        .when(
+            F.col("_t_seq").isNotNull() & (F.col("event_seq") <= F.col("_t_seq")),
+            F.lit("stale"),
+        )
+        .when(F.col("op") == "D", F.lit("deleted"))
+        .otherwise(F.lit("applied"))
+    )
+    plan.decisions = matched.withColumn("_cls", cls).persist(StorageLevel.MEMORY_AND_DISK)
+    plan.persisted.append(plan.decisions)
+    plan.metrics = {
+        r[BUCKET]: r.asDict()
+        for r in plan.decisions.groupBy(BUCKET)
+        .agg(
+            F.sum("_n_events").alias("events_in"),
+            F.sum("_n_invalid").alias("invalid"),
+            F.count(F.col("event_seq")).alias("winners"),
+            F.sum(F.when(F.col("_cls") == "applied", 1).otherwise(0)).alias("applied"),
+            F.sum(F.when(F.col("_cls") == "deleted", 1).otherwise(0)).alias("deleted"),
+            F.sum(F.when(F.col("_cls") == "stale", 1).otherwise(0)).alias("stale_winners"),
+            # brand-new keys this batch: winners whose doc has NO row in
+            # the target (tombstones count as rows) — feeds the exact
+            # per-bucket logical key count of a merge-on-read bucket
+            # (winners are LWW-unique per doc, so count = distinct docs)
+            F.sum(
+                F.when(
+                    F.col("_t_seq").isNull()
+                    & F.col("_cls").isin("applied", "deleted"),
+                    1,
+                ).otherwise(0)
+            ).alias("new_keys"),
+        )
+        .collect()
+    }
+
+    # error-threshold gate (the reference aborts the persistence write when
+    # the scrape's error rate is too high — SURVEY.md §4.1): too many
+    # invalid events means the upstream is broken; abort BEFORE any file is
+    # written, leaving the table untouched (no commit, watermark unchanged).
+    if max_invalid_ratio is not None:
+        tot = sum((r["events_in"] or 0) for r in plan.metrics.values())
+        bad = sum((r["invalid"] or 0) for r in plan.metrics.values())
+        if tot and bad / tot > max_invalid_ratio:
+            raise InvalidBatchError(
+                f"batch {plan.batch_id}: invalid ratio {bad}/{tot} exceeds "
+                f"{max_invalid_ratio}; aborting before write"
+            )
+
+
+def _choose_writes(
+    metrics: dict,
+    summaries: dict[int, dict],
+    *,
+    compact: str | bool,
+    compact_files_per_bucket: int,
+    mor: bool | str,
+    mor_max_changed_fraction: float,
+    bloom_ndv: int | str | None,
+) -> _Writes:
+    """Phase 3, choose writes (driver code only, from the per-bucket
+    decision counts and the parent's bucket summaries). Only buckets with
+    applied or deleted rows are written: a stale-heavy replay batch may
+    touch every bucket yet change none. A merge-on-read delta (winner rows
+    only) makes a 0.1%-dribble batch write ~0.1% of the bytes a rewrite
+    would, and reads none of the bucket's base files; a compacting batch
+    writes every changed bucket copy-on-write (the rewrite is already
+    full-bucket), which bounds delta depth."""
+    changed = {}
+    for b, r in metrics.items():
+        n = (r.get("applied") or 0) + (r.get("deleted") or 0)
+        if n:
+            changed[b] = n
+    compacting = compact is True or (
+        compact == "auto"
+        and any(
+            summaries.get(b, {}).get("n_files", 0) >= compact_files_per_bucket
+            for b in changed
+        )
+    )
+    # a summary without a stamp (written before every commit stamped its
+    # buckets) counts as no base rows: the bucket is rewritten copy-on-write
+    # and that commit stamps it
+    keys_before = {b: summaries.get(b, {}).get("keys", 0) for b in changed}
+    mor_buckets = {
+        b for b, n in changed.items()
+        if mor and not compacting
+        and keys_before[b]  # no base rows: the "delta" would be the base
+        and (mor is True or n <= mor_max_changed_fraction * keys_before[b])
+    }
+    if bloom_ndv == "auto":
+        # size the filter from metadata already in hand: the largest output
+        # file holds at most (bucket's current rows + its changed winners)
+        # keys — parquet blooms must be configured BEFORE the write, so this
+        # manifest-summary estimate stands in for the exact footer counts (an
+        # over-sized bloom only costs ~1.2 bytes/key; an under-sized one
+        # loses precision). The floor keeps degenerate demo batches from a
+        # useless filter.
+        bloom_ndv = max(1024, max(
+            (summaries.get(b, {}).get("rows", 0) + n for b, n in changed.items()),
+            default=0,
+        ))
+    return _Writes(
+        changed=changed,
+        cow=set(changed) - mor_buckets,
+        mor=mor_buckets,
+        compacting=compacting,
+        # a delta adds to its bucket's keys rather than replacing them:
+        # keys_before + brand-new winners (copy-on-write buckets need no
+        # stamp; the commit counts their rows, one per key)
+        bucket_keys={
+            b: keys_before[b] + int(metrics[b].get("new_keys") or 0)
+            for b in mor_buckets
+        },
+        bloom_ndv=bloom_ndv,
+    )
+
+
+def _rewrite_and_stage(spark: SparkSession, table: Miniberg, plan: _Plan) -> list[dict]:
+    """Phase 4, rewrite and stage: the winners as table rows, plus the
+    copy-on-write buckets' unchanged target rows, in one partitioned write.
+    Returns the staged entries, merge-on-read ones ``kind="delta"``."""
+    w, m = plan.writes, plan.manifest
+    if not w.changed:
+        return []
+    target_schema = T.StructType([
+        T.StructField(f["name"], _type_from_json(f["type"]), f["nullable"])
+        for f in plan.fields["fields"]
+    ])
+    bucket = Miniberg.bucket_expr("doc_id", m["num_buckets"])
+    changed = plan.decisions.filter(F.col("_cls").isin("applied", "deleted"))
+    upserts = _align(
+        _table_rows(changed, plan.payload_cols, F.col("_cls") == "deleted"),
+        target_schema,
+    ).withColumn(BUCKET, bucket)
+    n_out = max(len(w.changed), 1)
+    if not w.cow:
+        # every changed bucket is merge-on-read: the write is the winners
+        # alone, with no target read, anti-join or union
+        rewrite = upserts.repartition(n_out, BUCKET)
+    else:
+        kept = (
+            _align(
+                table.read(spark, buckets=sorted(w.cow), include_internal=True),
+                target_schema,
+            )
+            .join(changed.select("doc_id"), "doc_id", "left_anti")
+            .withColumn(BUCKET, bucket)
+        )
+        if w.compacting:
+            # full re-bucket: one file per bucket after this commit
+            rewrite = kept.unionByName(upserts).repartition(n_out, BUCKET)
+        else:
+            # cheap path: target rows stream through the broadcast anti-join
+            # unshuffled (their files are bucket-pure); only winners shuffle
+            rewrite = kept.unionByName(upserts.repartition(n_out, BUCKET))
+    # a key-column bloom (off by default) skips row groups for point lookups
+    # whose key falls inside a file's wide min/max range; it costs ~1.2
+    # bytes/key per file, which only pays once files carry ~10^5+ rows (the
+    # lake shape, not the demo shape)
+    added = table.write_staged(
+        rewrite,
+        m["schema_id"] + (1 if plan.schema_changed else 0),
+        bloom_ndv=w.bloom_ndv,
+    )
+    for e in added:
+        if e["bucket"] in w.mor:
+            e["kind"] = "delta"
+    return added
+
+
+def _commit(table: Miniberg, plan: _Plan, commit_props: dict | None) -> list[dict]:
+    """Phase 5, commit: lineage rows (FIXTURES.md §A5 reconciliation
+    invariant) and the CAS commit on the parent. Returns the lineage."""
+    w = plan.writes
+    wall_ms = int((time.monotonic() - plan.started) * 1000)
+    lineage = []
+    for b in sorted(plan.metrics, key=lambda x: (x is None, x)):
+        r = plan.metrics[b]
+        g = lambda k: r.get(k) or 0
+        losers = g("events_in") - g("invalid") - g("winners")
+        row = {
+            "batch_id": plan.batch_id,
+            "bucket": b,
+            "events_in": int(g("events_in")),
+            "applied": int(g("applied")),
+            "deleted": int(g("deleted")),
+            "skipped_stale": int(g("stale_winners") + losers),
+            "invalid": int(g("invalid")),
+            "wall_ms": wall_ms,
+        }
+        if b in w.changed:  # write-mode observability (delta depth audits)
+            row["write_mode"] = "mor" if b in w.mor else "cow"
+        lineage.append(row)
+    table.commit(
+        added_files=plan.added,
+        # MOR buckets are NOT replaced: their delta entries append into
+        # the carried sidecar; only copy-on-write buckets swap wholesale
+        replaced_buckets=w.cow,
+        schema_fields=plan.fields if plan.schema_changed else None,
+        last_applied_batch=plan.batch_id,
+        lineage_rows=lineage,
+        expected_parent=plan.manifest["version"],
+        props=commit_props,
+        bucket_keys=w.bucket_keys or None,
+    )
+    return lineage
+
+
 def apply_batch(
     spark: SparkSession,
     table: Miniberg,
@@ -213,25 +562,18 @@ def apply_batch(
     """MERGE one changelog batch into the table. Exactly-once: a batch_id at
     or below the committed watermark is a no-op. Returns lineage rows.
 
-    Per batch this runs ONE wide shuffle over the events (the LWW dedup,
-    ``dedup_lww`` with ``dedup_strategy``, which also yields the per-doc
-    input metrics; the upsert rows are re-shuffled once more, but that set is
-    winners-only), two target reads (a 2-column decision read + the rewrite
-    read — both bucket-pruned, the decision read only once the target
-    reaches ``DECISION_PRUNE_MIN_BYTES``, the rewrite read only when a
-    changed bucket is rewritten copy-on-write), and one partitioned write.
-    Winners are token-normalized (``normalize_tokens_native``) after the
-    dedup. ``compact='auto'`` re-buckets the whole rewrite
-    only when a bucket's file count exceeds ``compact_files_per_bucket``,
-    otherwise target rows stream through the broadcast anti-join unshuffled.
+    Five phases pass one plan record (``_Plan``): ``_plan`` (manifest,
+    replay check, schema evolution, validity), ``_decide`` (the dedup,
+    ``dedup_lww`` with ``dedup_strategy``; the decision read; the metrics
+    collect; the ``max_invalid_ratio`` gate), ``_choose_writes`` (write
+    modes, key stamps, bloom size), ``_rewrite_and_stage`` and ``_commit``.
     ``mor`` ('auto'/True/False) writes merge-on-read DELTA files instead of
-    rewriting buckets whose changed fraction is below
-    ``mor_max_changed_fraction`` — the write-amplification fix for dribble
-    batches at lake scale; auto-compaction bounds delta depth.
+    rewriting buckets whose changed fraction is at most
+    ``mor_max_changed_fraction``; ``compact='auto'`` re-buckets the whole
+    rewrite once a changed bucket holds ``compact_files_per_bucket`` files.
 
-    Driver-synchronous work is kept to the minimum: two collects and one
-    write per batch on the common path (metrics/changed-bucket selection
-    share one aggregation; the decision-prune collect is skipped below
+    Driver-synchronous work is two collects and one write per batch on the
+    common path (the decision-prune collect is skipped below
     ``DECISION_PRUNE_MIN_BYTES``), and planning the target reads starts no
     Spark job. Counted as Spark jobs, AQE sub-jobs included, that is about
     11 per batch (``cdc.spark_jobs_per_batch`` in the perfbench
@@ -239,335 +581,24 @@ def apply_batch(
     merge-on-read and one compacting batch) — the serial term that bounds
     scaling at high executor counts.
     """
-    t0 = time.monotonic()
-    m = table.manifest()
-    if batch_id <= m["last_applied_batch"]:
+    plan = _plan(table, batch_df, batch_id)
+    if plan is None:
         return []  # idempotent replay
-
-    num_buckets = m["num_buckets"]
-    # the merge logic (joins, changed-doc sets, validity) is written against
-    # the changelog's fixed key column name; a table created with a different
-    # key_col would silently bucket/prune inconsistently with maintenance ops
-    # (which honor key_col) — refuse instead
-    if m.get("key_col", "doc_id") != "doc_id":
-        raise ValueError(
-            f"apply_batch merges on 'doc_id' but table key_col={m['key_col']!r}"
-        )
-    bucket = Miniberg.bucket_expr("doc_id", num_buckets)
-    payload_cols = [c for c in payload_columns(batch_df) if c != "doc_id"]
-    clashes = [c for c in batch_df.columns if c.startswith("_")]
-    if clashes:
-        raise ValueError(
-            f"changelog columns {clashes} collide with the engine's internal "
-            "underscore-prefixed columns (_seq/_deleted/_bucket/...)"
-        )
-    raw = batch_df.withColumn(BUCKET, bucket).withColumn(
-        "_valid", _validity(batch_df)
-    )
-
-    # ---- schema evolution: table schema grows to cover this batch's payload
-    batch_payload_schema = T.StructType(
-        [f for f in batch_df.schema.fields if f.name in {"doc_id", *payload_cols}]
-        + [T.StructField(SEQ, T.LongType(), True), T.StructField(DELETED, T.BooleanType(), True)]
-    )
-    new_fields, schema_changed = table.evolve_schema(batch_payload_schema)
-    target_schema = T.StructType(
-        [
-            T.StructField(f["name"], _type_from_json(f["type"]), f["nullable"])
-            for f in new_fields["fields"]
-        ]
-    )
-
-    # ---- pass 1: LWW winners + per-doc input metrics (normalizing winners
-    # only is cheap)
-    winners = normalize_tokens_native(
-        dedup_lww(raw, payload_cols, strategy=dedup_strategy)
-    )
-
-    # buckets any winner touches: prunes the DECISION read (stale checks need
-    # the target's _seq for every winner doc). The rewrite prunes further, to
-    # buckets with actual changes. Empty table -> nothing to prune, skip the
-    # extra job entirely (bootstrap/first-batch fast path). On a small target
-    # ("auto" below DECISION_PRUNE_MIN_BYTES) the distinct-bucket collect job
-    # costs more than the unpruned 2-column scan it would save — skip it.
-    # O(buckets) summaries — the two-level manifest means the driver never
-    # parses the file list on the apply path (reads load only touched
-    # buckets' sidecars)
-    bucket_summ = table.bucket_summaries(m)
-    total_target_bytes = sum(s.get("bytes", 0) for s in bucket_summ.values())
-    prune = total_target_bytes >= DECISION_PRUNE_MIN_BYTES
-    persisted: list[DataFrame] = []
     try:
-        if not bucket_summ:
-            affected: list[int] | None = []
-        elif prune:
-            # pruning gives winners TWO consumers (this collect + the decision
-            # join) — persist; the unpruned path consumes winners exactly once
-            # (inside the decisions persist), so caching them would be waste
-            winners = winners.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(winners)
-            affected = sorted(
-                (r[BUCKET] for r in winners.select(BUCKET).distinct().collect()),
-                key=lambda b: (b is None, b),
-            )
-        else:
-            affected = None  # decision read covers all buckets
-
-        # ---- pass 2: decisions — winners vs target (doc_id, _seq) ONLY.
-        # Bootstrap fast path: an empty table means no row can be stale —
-        # skip the join (and its AQE stages) entirely.
-        if not bucket_summ:
-            matched = winners.withColumn("_t_seq", F.lit(None).cast("long"))
-        else:
-            target_min = (
-                table.read(spark, buckets=affected, include_internal=True)
-                .select("doc_id", F.col(SEQ).alias("_t_seq"))
-            )
-            matched = winners.join(target_min, "doc_id", "left")
-        # staleness compares against the row's _seq watermark, INCLUDING
-        # tombstone rows — that is why deletes must leave a tombstone: a stale
-        # update that arrives after a delete would otherwise resurrect the doc.
-        cls = (
-            F.when(F.col("event_seq").isNull(), F.lit("invalid_only"))
-            .when(
-                F.col("_t_seq").isNotNull() & (F.col("event_seq") <= F.col("_t_seq")),
-                F.lit("stale"),
-            )
-            .when(F.col("op") == "D", F.lit("deleted"))
-            .otherwise(F.lit("applied"))
+        _decide(spark, table, plan, dedup_strategy=dedup_strategy,
+                max_invalid_ratio=max_invalid_ratio)
+        plan.writes = _choose_writes(
+            plan.metrics, plan.summaries, compact=compact,
+            compact_files_per_bucket=compact_files_per_bucket, mor=mor,
+            mor_max_changed_fraction=mor_max_changed_fraction, bloom_ndv=bloom_ndv,
         )
-        decisions = matched.withColumn("_cls", cls).persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(decisions)
-        dec_metrics = {
-            r[BUCKET]: r.asDict()
-            for r in decisions.groupBy(BUCKET)
-            .agg(
-                F.sum("_n_events").alias("events_in"),
-                F.sum("_n_invalid").alias("invalid"),
-                F.count(F.col("event_seq")).alias("winners"),
-                F.sum(F.when(F.col("_cls") == "applied", 1).otherwise(0)).alias("applied"),
-                F.sum(F.when(F.col("_cls") == "deleted", 1).otherwise(0)).alias("deleted"),
-                F.sum(F.when(F.col("_cls") == "stale", 1).otherwise(0)).alias("stale_winners"),
-                # brand-new keys this batch: winners whose doc has NO row in
-                # the target (tombstones count as rows) — feeds the exact
-                # per-bucket logical key count stamped into the manifest
-                # (winners are LWW-unique per doc, so count = distinct docs)
-                F.sum(
-                    F.when(
-                        F.col("_t_seq").isNull()
-                        & F.col("_cls").isin("applied", "deleted"),
-                        1,
-                    ).otherwise(0)
-                ).alias("new_keys"),
-            )
-            .collect()
-        }
-
-        # error-threshold gate (the reference aborts the persistence write when
-        # the scrape's error rate is too high — SURVEY.md §4.1): too many
-        # invalid events means the upstream is broken; abort BEFORE any file is
-        # written, leaving the table untouched (no commit, watermark unchanged).
-        if max_invalid_ratio is not None:
-            tot = sum((r["events_in"] or 0) for r in dec_metrics.values())
-            bad = sum((r["invalid"] or 0) for r in dec_metrics.values())
-            if tot and bad / tot > max_invalid_ratio:
-                raise InvalidBatchError(
-                    f"batch {batch_id}: invalid ratio {bad}/{tot} exceeds "
-                    f"{max_invalid_ratio}; aborting before write"
-                )
-
-        n_changed = sum(
-            (r["applied"] or 0) + (r["deleted"] or 0) for r in dec_metrics.values()
-        )
-
-        added: list[dict] = []
-        changed_buckets: set[int] = set()
-        cow_buckets: set[int] = set()
-        mor_buckets: set[int] = set()
-        inexact_keys: set[int] = set()
-        if n_changed:
-            # ---- pass 3: copy-on-write rewrite — ONLY buckets that actually
-            # changed (a stale-heavy replay batch may touch every bucket with
-            # winners yet change none of them; rewriting those would be pure
-            # write amplification). The changed-bucket set falls out of the
-            # per-bucket metrics already collected — no extra Spark job.
-            changed = decisions.filter(F.col("_cls").isin("applied", "deleted"))
-            changed_per_bucket = {
-                b: (r.get("applied") or 0) + (r.get("deleted") or 0)
-                for b, r in dec_metrics.items()
-            }
-            changed_buckets = {b for b, n in changed_per_bucket.items() if n > 0}
-            files_per_bucket = {b: s["n_files"] for b, s in bucket_summ.items()}
-            need_compact = compact is True or (
-                compact == "auto"
-                and any(
-                    files_per_bucket.get(b, 0) >= compact_files_per_bucket
-                    for b in changed_buckets
-                )
-            )
-            # ---- merge-on-read: buckets whose changed-row fraction is below
-            # the threshold get a DELTA file (winner rows only) instead of a
-            # copy-on-write rewrite — at 100 TB a 0.1%-dribble batch then
-            # writes ~0.1% of the bytes COW would, and the bucket's base
-            # files are not even read for rewrite. Reads resolve deltas via
-            # a broadcast anti-join (miniberg._read_files); auto-compaction
-            # (file count >= compact_files_per_bucket) folds them back into
-            # base files, bounding delta depth. A compacting batch writes
-            # everything COW (the rewrite is already full-bucket).
-            # exact logical size per changed bucket (distinct doc_ids incl.
-            # tombstones): the manifest's `keys` stamp when present — exact
-            # even with merge-on-read deltas that added new keys — else
-            # BASE-file rows (pre-stamp tables; exact when the bucket has no
-            # deltas, under-counts delta-added keys — the drift the stamp
-            # fixes). The fallback needs those buckets' sidecars: O(changed
-            # buckets) metadata the rewrite read loads anyway. Feeds BOTH the
-            # merge-on-read threshold denominator and the `keys` stamp this
-            # commit writes (keys_before + brand-new winners).
-            logical_rows: dict[int, int] = {}
-            need_scan: list[int] = []
-            for b in changed_buckets:
-                s = bucket_summ.get(b, {})
-                if s.get("keys") is not None:
-                    logical_rows[b] = s["keys"]
-                elif s.get("rows"):
-                    need_scan.append(b)
-            for e in table.files(buckets=need_scan, manifest=m) if need_scan else []:
-                if e.get("kind") != "delta":
-                    logical_rows[e["bucket"]] = (
-                        logical_rows.get(e["bucket"], 0) + e.get("rows", 0)
-                    )
-                else:
-                    # unstamped bucket WITH deltas: base rows under-count any
-                    # delta-added keys, so the count is a lower bound — usable
-                    # as a threshold denominator, never re-stamped as exact
-                    inexact_keys.add(e["bucket"])
-            if mor and not need_compact:
-                for b in changed_buckets:
-                    if not logical_rows.get(b):
-                        continue  # no base rows: the "delta" would be the base
-                    if mor is True or (
-                        changed_per_bucket[b]
-                        <= mor_max_changed_fraction * logical_rows[b]
-                    ):
-                        mor_buckets.add(b)
-            cow_buckets = changed_buckets - mor_buckets
-            # applied -> live row; deleted -> tombstone (payload nulled, _seq kept)
-            tombstoned = changed
-            for c in payload_cols:
-                tombstoned = tombstoned.withColumn(
-                    c, F.when(F.col("_cls") == "deleted", F.lit(None)).otherwise(F.col(c))
-                )
-            upserts = _align(
-                tombstoned.withColumn(SEQ, F.col("event_seq")).withColumn(
-                    DELETED, F.col("_cls") == "deleted"
-                ),
-                target_schema,
-            ).withColumn(BUCKET, bucket)
-
-            n_out = max(len(changed_buckets), 1)
-            if not cow_buckets:
-                # every changed bucket is merge-on-read: the write is the
-                # winners alone, with no target read, anti-join or union
-                rewrite = upserts.repartition(n_out, BUCKET)
-            else:
-                kept = (
-                    _align(
-                        table.read(spark, buckets=sorted(cow_buckets),
-                                   include_internal=True),
-                        target_schema,
-                    )
-                    .join(changed.select("doc_id"), "doc_id", "left_anti")
-                    .withColumn(BUCKET, bucket)
-                )
-                if need_compact:
-                    # full re-bucket: one file per bucket after this commit
-                    rewrite = kept.unionByName(upserts).repartition(n_out, BUCKET)
-                else:
-                    # cheap path: target rows stream through the broadcast
-                    # anti-join unshuffled (their files are bucket-pure); only
-                    # winners shuffle
-                    rewrite = kept.unionByName(upserts.repartition(n_out, BUCKET))
-            if bloom_ndv == "auto":
-                # size the filter from metadata already in hand: the largest
-                # output file holds at most (bucket's current rows + its
-                # applied winners) keys — parquet blooms must be configured
-                # BEFORE the write, so this manifest-summary estimate stands
-                # in for the exact footer counts (an over-sized bloom only
-                # costs ~1.2 bytes/key; an under-sized one loses precision).
-                # Floor keeps degenerate demo batches from a useless filter.
-                bloom_ndv = max(
-                    1024,
-                    max(
-                        (
-                            bucket_summ.get(b, {}).get("rows", 0)
-                            + changed_per_bucket.get(b, 0)
-                            for b in changed_buckets
-                        ),
-                        default=0,
-                    ),
-                )
-            # a key-column bloom (off by default) skips row groups for point
-            # lookups whose key falls inside a file's wide min/max range; it
-            # costs ~1.2 bytes/key per file, which only pays once files carry
-            # ~10^5+ rows (the lake shape, not the demo shape)
-            added = table.write_staged(
-                rewrite,
-                m["schema_id"] + (1 if schema_changed else 0),
-                bloom_ndv=bloom_ndv,
-            )
-            for e in added:
-                if e["bucket"] in mor_buckets:
-                    e["kind"] = "delta"
-
-        # ---- lineage rows (FIXTURES.md §A5 reconciliation invariant)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        lineage = []
-        for b in sorted(dec_metrics, key=lambda x: (x is None, x)):
-            r = dec_metrics[b]
-            g = lambda k: r.get(k) or 0
-            losers = g("events_in") - g("invalid") - g("winners")
-            row = {
-                "batch_id": batch_id,
-                "bucket": b,
-                "events_in": int(g("events_in")),
-                "applied": int(g("applied")),
-                "deleted": int(g("deleted")),
-                "skipped_stale": int(g("stale_winners") + losers),
-                "invalid": int(g("invalid")),
-                "wall_ms": wall_ms,
-            }
-            if b in changed_buckets:  # write-mode observability (delta depth
-                row["write_mode"] = "mor" if b in mor_buckets else "cow"  # audits)
-            lineage.append(row)
-
-        # exact logical key count after this batch: keys_before (stamped or
-        # derived above) + brand-new winners. A bucket whose keys_before was
-        # only a lower bound (unstamped + existing deltas) is NOT stamped —
-        # it becomes exact again at its next compaction, which stamps rows
-        # (= keys, one row per key by construction).
-        bucket_keys = {
-            b: logical_rows.get(b, 0) + int(dec_metrics[b].get("new_keys") or 0)
-            for b in changed_buckets
-            if b not in inexact_keys
-        }
-        table.commit(
-            added_files=added,
-            # MOR buckets are NOT replaced: their delta entries append into
-            # the carried sidecar; only copy-on-write buckets swap wholesale
-            replaced_buckets=cow_buckets,
-            schema_fields=new_fields if schema_changed else None,
-            last_applied_batch=batch_id,
-            lineage_rows=lineage,
-            expected_parent=m["version"],
-            props=commit_props,
-            bucket_keys=bucket_keys or None,
-        )
+        plan.added = _rewrite_and_stage(spark, table, plan)
+        return _commit(table, plan, commit_props)
     finally:
         # unpersist on EVERY exit path (success, gate abort, write failure,
         # commit conflict) — a leaked persist lives for the session lifetime
-        for df in persisted:
+        for df in plan.persisted:
             df.unpersist()
-    return lineage
 
 
 def apply_batches(
@@ -591,6 +622,20 @@ def apply_batches(
     return lineage
 
 
+def _load_table(root: str, fields: list[T.StructField], rows: DataFrame,
+                num_buckets: int, last_applied_batch: int | None = None) -> Miniberg:
+    """Create a table of ``fields`` and load ``rows`` (one per key) as its
+    first snapshot: create, align, stage, commit."""
+    table = Miniberg.create(root, _table_schema(fields), num_buckets=num_buckets)
+    out = _align(rows, table.spark_schema()).withColumn(
+        BUCKET, Miniberg.bucket_expr("doc_id", num_buckets)
+    )
+    added = table.write_staged(out.repartition(num_buckets, BUCKET), 0)
+    table.commit(added_files=added, replaced_buckets=set(range(num_buckets)),
+                 last_applied_batch=last_applied_batch)
+    return table
+
+
 def apply_full_log(
     spark: SparkSession,
     table_root: str,
@@ -601,35 +646,24 @@ def apply_full_log(
 ) -> Miniberg:
     """M1 naive replay: the whole log in one commit (bulk-bootstrap path —
     equivalent final state to batch-by-batch apply; used as the baseline).
-    Same dedup and winner normalization as ``apply_batch``."""
+    Same dedup and winner normalization as ``apply_batch``; delete winners
+    are kept as tombstones, so later incremental applies on top of this
+    table stay stale-safe."""
     log = read_range(spark, changelog_dir, normalize=True)
     payload_cols = [c for c in payload_columns(log) if c != "doc_id"]
-    bucket = Miniberg.bucket_expr("doc_id", num_buckets)
-    raw = log.withColumn(BUCKET, bucket).withColumn("_valid", _validity(log))
+    raw = log.withColumn(BUCKET, Miniberg.bucket_expr("doc_id", num_buckets)).withColumn(
+        "_valid", _validity(log)
+    )
     winners = normalize_tokens_native(
         dedup_lww(raw, payload_cols, strategy=dedup_strategy)
     ).filter(F.col("event_seq").isNotNull())  # docs with only invalid events
-    # keep delete winners as tombstones (payload nulled) so later incremental
-    # applies on top of this table stay stale-safe
-    final = winners.withColumn(SEQ, F.col("event_seq")).withColumn(
-        DELETED, F.col("op") == "D"
+    return _load_table(
+        table_root,
+        [f for f in log.schema.fields if f.name in {"doc_id", *payload_cols}],
+        _table_rows(winners, payload_cols, F.col("op") == "D"),
+        num_buckets,
+        last_applied_batch=max(list_batches(changelog_dir)),
     )
-    for c in payload_cols:
-        final = final.withColumn(
-            c, F.when(F.col(DELETED), F.lit(None)).otherwise(F.col(c))
-        )
-
-    schema = T.StructType(
-        [f for f in log.schema.fields if f.name in {"doc_id", *payload_cols}]
-        + [T.StructField(SEQ, T.LongType(), True), T.StructField(DELETED, T.BooleanType(), True)]
-    )
-    table = Miniberg.create(table_root, schema, num_buckets=num_buckets)
-    out = _align(final, table.spark_schema()).withColumn(BUCKET, bucket)
-    added = table.write_staged(out.repartition(num_buckets, BUCKET), 0)
-    last = max(list_batches(changelog_dir))
-    table.commit(added_files=added, replaced_buckets=set(range(num_buckets)),
-                 last_applied_batch=last, bucket_keys=keys_from_entries(added))
-    return table
 
 
 def create_empty_table(
@@ -638,23 +672,9 @@ def create_empty_table(
     *,
     num_buckets: int = 16,
 ) -> Miniberg:
-    """Create an empty target table whose schema is the payload + the internal
-    ``_seq`` (per-row staleness watermark) and ``_deleted`` (tombstone flag)
-    columns the merge relies on."""
-    schema = T.StructType(
-        list(payload_schema.fields)
-        + [T.StructField(SEQ, T.LongType(), True), T.StructField(DELETED, T.BooleanType(), True)]
-    )
-    return Miniberg.create(root, schema, num_buckets=num_buckets)
-
-
-def _nullable(t: T.DataType) -> T.DataType:
-    """``t`` with every nested element and field nullable."""
-    if isinstance(t, T.ArrayType):
-        return T.ArrayType(_nullable(t.elementType))
-    if isinstance(t, T.StructType):
-        return T.StructType([T.StructField(f.name, _nullable(f.dataType)) for f in t.fields])
-    return t
+    """Create an empty target table of ``payload_schema`` (``_table_schema``)."""
+    return Miniberg.create(root, _table_schema(payload_schema.fields),
+                           num_buckets=num_buckets)
 
 
 def bootstrap_table(
@@ -665,18 +685,6 @@ def bootstrap_table(
     num_buckets: int = 16,
 ) -> Miniberg:
     """Create a table from an initial (non-CDC) snapshot; rows get _seq=-1 so
-    any changelog event (seq>=0) supersedes them. Nested types are stored
-    nullable: a ``containsNull=false`` array (``F.array(F.lit(1))``) would
-    make the align-cast of every later batch and read illegal."""
-    schema = T.StructType(
-        [T.StructField(f.name, _nullable(f.dataType), f.nullable) for f in df.schema.fields]
-        + [T.StructField(SEQ, T.LongType(), True), T.StructField(DELETED, T.BooleanType(), True)]
-    )
-    table = Miniberg.create(root, schema, num_buckets=num_buckets)
-    out = df.withColumn(SEQ, F.lit(-1).cast("long")).withColumn(DELETED, F.lit(False)).withColumn(
-        BUCKET, Miniberg.bucket_expr("doc_id", num_buckets)
-    )
-    added = table.write_staged(out.repartition(num_buckets, BUCKET), 0)
-    table.commit(added_files=added, replaced_buckets=set(range(num_buckets)),
-                 bucket_keys=keys_from_entries(added))
-    return table
+    any changelog event (seq>=0) supersedes them."""
+    rows = df.withColumn(SEQ, F.lit(-1).cast("long")).withColumn(DELETED, F.lit(False))
+    return _load_table(root, df.schema.fields, rows, num_buckets)

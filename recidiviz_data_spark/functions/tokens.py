@@ -59,14 +59,3 @@ def normalize_tokens_arrow(df: DataFrame) -> DataFrame:
         "n_tok",
         F.when(F.col("tokens").isNotNull(), F.size("tokens").cast(n_tok_t)),
     )
-
-
-def token_stats(df: DataFrame) -> DataFrame:
-    """Corpus-level token statistics, all native aggregates."""
-    return df.select(
-        F.count("*").alias("docs"),
-        F.sum("n_tok").alias("total_tokens"),
-        F.avg("n_tok").alias("avg_tokens"),
-        F.max("n_tok").alias("max_tokens"),
-        F.min("n_tok").alias("min_tokens"),
-    )

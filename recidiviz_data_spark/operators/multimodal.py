@@ -96,16 +96,11 @@ def mm_frame_sample(spark, sf_dir):
 RESIZE_SCHEMA = "doc_id bigint, width bigint, height bigint, out_w bigint, out_h bigint"
 
 
-def fake_resize(w: int, h: int, target: int = 224) -> tuple[int, int]:
-    """Deterministic aspect-preserving 'resize' on the fake-decoded dims —
-    pure integer arithmetic so the SQL oracle reproduces it exactly.
-    (A real implementation calls PIL.Image.thumbnail here; the container has
-    no image libs, so the geometry math stands in for the pixel work.)"""
-    m = max(w, h, 1)
-    return (w * target) // m, (h * target) // m
-
-
 def _resize_batches(it):
+    """Deterministic aspect-preserving 'resize' of the fake-decoded dims to
+    a 224 bounding box — integer arithmetic, so the SQL oracle reproduces it
+    exactly (the project depends on no image library; the geometry stands in
+    for the pixel work)."""
     for pdf in it:
         meta = [fake_decode_meta(b) for b in pdf["payload"]]
         w = pd.Series([m[2] for m in meta], dtype="int64")

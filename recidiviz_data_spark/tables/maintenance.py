@@ -24,7 +24,7 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from recidiviz_data_spark.tables.miniberg import Miniberg, keys_from_entries
+from recidiviz_data_spark.tables.miniberg import Miniberg
 
 
 def compact(
@@ -97,9 +97,6 @@ def compact(
         # props_fn: stamped with the version the commit ACTUALLY lands at —
         # a disjoint-bucket rebase would make a precomputed m.version+1 stale
         props_fn=lambda v: {"last_compaction_version": v},
-        # the MOR-resolved (and optionally tombstone-purged) rewrite holds one
-        # row per key — compaction is where an inexact bucket regains its stamp
-        bucket_keys=keys_from_entries(added),
     )
 
 
@@ -234,7 +231,6 @@ def split_buckets(
         expected_parent=m["version"],
         num_buckets=n_new,
         props_fn=lambda v: {"last_bucket_split_version": v},
-        bucket_keys=keys_from_entries(added),
     )
 
 

@@ -117,18 +117,6 @@ class CommitConflict(Exception):
     """Another writer committed this version first (CAS failure)."""
 
 
-def keys_from_entries(entries: list[dict]) -> dict[int, int]:
-    """bucket -> summed file row counts — the exact logical key-count stamp
-    for writers whose output holds ONE row per key by construction (bulk
-    bootstrap, compaction, bucket split). Pass the result as ``commit``'s
-    ``bucket_keys``. NOT valid for merge-on-read delta writes (delta rows
-    supersede base rows rather than adding to them)."""
-    out: dict[int, int] = {}
-    for e in entries:
-        out[e["bucket"]] = out.get(e["bucket"], 0) + e.get("rows", 0)
-    return out
-
-
 def align_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Project df onto schema: missing column -> null, narrower physical type
     -> widen-cast. THE single alignment rule — shared by the snapshot reader
@@ -142,6 +130,16 @@ def align_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
         for f in schema.fields
     ]
     return df.select(cols)
+
+
+def _nullable(t: T.DataType) -> T.DataType:
+    """``t`` with every nested element and field nullable: how a table stores
+    a nested type, so ``align_to_schema`` can cast any incoming one to it."""
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType))
+    if isinstance(t, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType)) for f in t.fields])
+    return t
 
 
 class Miniberg:
@@ -419,22 +417,24 @@ class Miniberg:
     def _bucket_summary(
         self, entries: list[dict], record: dict[str, str], keys: int | None = None
     ) -> dict:
-        """Write one bucket's sidecar + return its summary row. ``keys``
-        stamps the bucket's exact logical key count when the writer knows it
-        (see ``commit``). ``record`` collects {rel: payload} of every blob
-        written, for the post-CAS ``_restore_blobs``."""
+        """Write one bucket's sidecar + return its summary row, stamped with
+        ``keys`` or, for all-base entries, their rows (see ``commit``).
+        ``record`` collects {rel: payload} of every blob written, for the
+        post-CAS ``_restore_blobs``."""
+        rows = sum(e.get("rows", 0) for e in entries)
+        if keys is None and any(e.get("kind") == "delta" for e in entries):
+            raise ValueError(f"bucket {entries[0]['bucket']} holds delta files: "
+                             "its commit must stamp it in bucket_keys")
         payload = json.dumps(sorted(entries, key=lambda e: e["path"]), sort_keys=True)
         rel = self._write_blob(payload)
         record[rel] = payload
-        out = {
+        return {
             "path": rel,
             "n_files": len(entries),
-            "rows": sum(e.get("rows", 0) for e in entries),
+            "rows": rows,
             "bytes": sum(e.get("bytes", 0) for e in entries),
+            "keys": rows if keys is None else keys,
         }
-        if keys is not None:
-            out["keys"] = keys
-        return out
 
     def _range_summary(self, rmap: dict[str, dict], record: dict[str, str]) -> dict:
         """Write one range manifest + return its root row."""
@@ -488,13 +488,14 @@ class Miniberg:
         """Merge new_schema into the current one (adds + widens). Returns
         (fields-json, changed). Drops/renames are rejected — same rules the
         reference implicitly follows (columns only ever added / widened,
-        SURVEY.md §1.1(2))."""
+        SURVEY.md §1.1(2)). A nested type is stored ``_nullable`` and never
+        widens."""
         m = self.manifest()
         cur = {f["name"]: dict(f) for f in m["schemas"][str(m["schema_id"])]["fields"]}
         next_id = max(f["id"] for f in cur.values()) + 1 if cur else 1
         changed = False
         for f in new_schema.fields:
-            j = f.dataType.jsonValue()
+            j = _nullable(f.dataType).jsonValue()
             if f.name not in cur:
                 cur[f.name] = {"id": next_id, "name": f.name, "type": j, "nullable": True}
                 next_id += 1
@@ -502,10 +503,12 @@ class Miniberg:
             else:
                 old = cur[f.name]["type"]
                 if old != j:
-                    if _WIDEN.get((old, j)):
+                    # nested types (JSON dicts) only ever match exactly
+                    atomic = isinstance(old, str) and isinstance(j, str)
+                    if atomic and _WIDEN.get((old, j)):
                         cur[f.name]["type"] = j
                         changed = True
-                    elif _WIDEN.get((j, old)):
+                    elif atomic and _WIDEN.get((j, old)):
                         pass  # incoming is narrower; current schema already covers it
                     else:
                         raise ValueError(f"incompatible type change for {f.name}: {old} -> {j}")
@@ -889,13 +892,17 @@ class Miniberg:
         this commit (bucket-split maintenance): EVERY pre-existing bucket must
         be in ``replaced_buckets`` — a manifest may never mix bucket functions.
 
-        ``bucket_keys[bucket] = n`` stamps the bucket's summary with its exact
-        LOGICAL key count (distinct doc_ids incl. tombstones) — not derivable
-        from file entries once merge-on-read deltas add new keys, so writers
-        that know it (apply: keys_before + brand-new winners; compact/split:
-        one row per key by construction) pass it through. Untouched buckets
-        carry their stamp verbatim; a bucket rewritten WITHOUT a stamp loses
-        it (readers fall back to base-file rows, the pre-stamp behavior)."""
+        Every bucket this commit writes is stamped with its exact LOGICAL
+        key count (``keys``: distinct doc_ids incl. tombstones): the
+        caller's ``bucket_keys[bucket]``, else the rows of its entries when
+        all are base files (base files hold one row per key). A bucket with
+        merge-on-read deltas must be stamped by its writer (apply:
+        keys_before + brand-new winners): a commit adding an unstamped delta
+        entry raises ``ValueError`` before any blob is written. Untouched
+        buckets carry their stamp verbatim."""
+        if any(f.get("kind") == "delta" and f["bucket"] not in (bucket_keys or {})
+               for f in added_files):
+            raise ValueError("a commit adding delta entries must stamp their buckets")
         parent_v = self.current_version() if expected_parent is None else expected_parent
         our_buckets = set(replaced_buckets or set()) | {f["bucket"] for f in added_files}
         for _ in range(max(rebase_retries, 0) + 1):

@@ -361,16 +361,20 @@ def _next_job_id(spark) -> int:
 def _commit_bucketed(spark, table, schema, rows, *, n_files, kind=None):
     """Commit ``rows`` as files bucketed by Spark's own ``bucket_col`` (not
     the driver hash under test): ``n_files`` write tasks each emit one file
-    per bucket they hold. ``kind="delta"`` marks them merge-on-read deltas."""
+    per bucket they hold. ``kind="delta"`` marks them merge-on-read deltas,
+    which update existing keys (each bucket keeps its ``keys`` stamp)."""
     staging = table.staging_dir()
     (spark.createDataFrame(rows, schema).repartition(n_files)
      .withColumn("_bucket", table.bucket_col())
      .write.partitionBy("_bucket").parquet(staging))
     added = table.collect_staged_files(staging, table.manifest()["schema_id"])
+    keys = None
     if kind:
         for e in added:
             e["kind"] = kind
-    table.commit(added_files=added, replaced_buckets=set())
+        summ = table.bucket_summaries()
+        keys = {e["bucket"]: summ[e["bucket"]]["keys"] for e in added}
+    table.commit(added_files=added, replaced_buckets=set(), bucket_keys=keys)
 
 
 def test_table_reads_start_no_spark_job(spark, tmp_path):
@@ -844,10 +848,12 @@ def test_compact_sized_files_disjoint_key_ranges(spark, tmp_path):
 
 
 # ---------------------------------------------- the all-merge-on-read apply
-# Spark jobs of one all-merge-on-read apply_batch below (measured at
-# local[8]; the apply that still read an empty copy-on-write side, through a
-# Python-backed empty relation, ran 8)
+# Spark jobs of one apply_batch of ``_all_mor_batch`` per write mode,
+# measured at local[8] (the all-MOR apply that still read an empty
+# copy-on-write side, through a Python-backed empty relation, ran 8)
 ALL_MOR_APPLY_JOB_BUDGET = 7
+COW_APPLY_JOB_BUDGET = 8
+COMPACTING_APPLY_JOB_BUDGET = 8
 
 
 def _all_mor_batch(spark, tmp_path):
@@ -917,15 +923,24 @@ def test_empty_reads_and_all_mor_write_plan_have_no_python_leg(
     assert got == {"doc_0007": "code", "doc_0123": "books", "doc_0008": "web"}
 
 
-def test_all_mor_apply_spark_job_budget(spark, tmp_path):
-    """One all-merge-on-read apply_batch runs at most the measured number of
-    Spark jobs (counted by the DAG scheduler's next job id)."""
+@pytest.mark.parametrize("kw,mode,budget", [
+    ({}, "mor", ALL_MOR_APPLY_JOB_BUDGET),
+    ({"mor": False}, "cow", COW_APPLY_JOB_BUDGET),
+    ({"compact_files_per_bucket": 1}, "cow", COMPACTING_APPLY_JOB_BUDGET),
+], ids=["all_mor", "cow", "compacting"])
+def test_apply_spark_job_budget(spark, tmp_path, kw, mode, budget):
+    """One apply_batch runs at most the measured number of Spark jobs
+    (counted by the DAG scheduler's next job id) in each write mode:
+    all merge-on-read, copy-on-write, and a compacting rewrite."""
     table, batch = _all_mor_batch(spark, tmp_path)
     before = _next_job_id(spark)
-    lineage = apply_batch(spark, table, batch, 1)
+    lineage = apply_batch(spark, table, batch, 1, **kw)
     n_jobs = _next_job_id(spark) - before
-    assert {r.get("write_mode") for r in lineage} == {"mor"}
-    assert n_jobs <= ALL_MOR_APPLY_JOB_BUDGET, n_jobs
+    assert {r.get("write_mode") for r in lineage} == {mode}
+    changed = {r["bucket"] for r in lineage if r.get("write_mode")}
+    files = {b: s["n_files"] for b, s in table.bucket_summaries().items()}
+    assert {files[b] for b in changed} == {1 if "compact_files_per_bucket" in kw else 2}
+    assert n_jobs <= budget, n_jobs
 
 
 def test_stats_filter_on_internal_seq(spark, tmp_path):

@@ -355,121 +355,6 @@ def test_band_index_probe_matches_in_session_index(spark):
     assert got == want
 
 
-# ------------------------------------ exact per-bucket key stamps (r6 MOR fix)
-def _kv_batch(spark, seq0, ids):
-    return spark.createDataFrame(
-        [(seq0 + j, "U", f"doc_{i:08d}", [1, 2], 2, "web")
-         for j, i in enumerate(ids)],
-        "event_seq long, op string, doc_id string, tokens array<int>, "
-        "n_tok int, source string",
-    )
-
-
-def test_keys_stamp_tracks_mor_added_keys(spark, tmp_path):
-    """Manifest `keys` stamp = exact distinct doc_ids (incl. tombstones) even
-    when merge-on-read deltas ADD keys — and the MOR threshold denominator
-    uses it: 100 delta-added keys move the 5% line from 20 to 25, so a 23-doc
-    dribble goes MOR where the old base-rows denominator forced COW."""
-    from recidiviz_data_spark.cdc.apply import apply_batch, create_empty_table
-    from tests.test_replay import V1_PAYLOAD
-
-    table = create_empty_table(str(tmp_path / "t_keys"), V1_PAYLOAD, num_buckets=1)
-    apply_batch(spark, table, _kv_batch(spark, 0, range(400)), 0,
-                mor="auto", compact=False)
-    assert table.bucket_summaries(table.manifest())[0]["keys"] == 400
-    # 100 brand-new keys land as a forced delta: base files still hold 400
-    # rows but the logical table is 500 keys
-    apply_batch(spark, table, _kv_batch(spark, 1000, range(400, 500)), 1,
-                mor=True, compact=False)
-    assert table.bucket_summaries(table.manifest())[0]["keys"] == 500
-    # 23 changed docs: 23 <= 0.05*500 (exact) but 23 > 0.05*400 (stale
-    # base-rows denominator) — exact stamp keeps the dribble on the delta path
-    lin = apply_batch(spark, table, _kv_batch(spark, 2000, range(23)), 2,
-                      mor="auto", compact=False, compact_files_per_bucket=99)
-    assert [r.get("write_mode") for r in lin] == ["mor"]
-    assert table.bucket_summaries(table.manifest())[0]["keys"] == 500
-    assert table.read(spark).count() == 500
-    # deletes keep tombstone rows: keys counts them (stamp unchanged)
-    d = spark.createDataFrame(
-        [(3000, "D", "doc_00000000", None, None, "web")],
-        "event_seq long, op string, doc_id string, tokens array<int>, "
-        "n_tok int, source string",
-    )
-    apply_batch(spark, table, d, 3, mor="auto", compact=False,
-                compact_files_per_bucket=99)
-    assert table.bucket_summaries(table.manifest())[0]["keys"] == 500
-    assert table.read(spark).count() == 499  # default read hides the tombstone
-
-
-def test_keys_stamp_inexact_fallback_and_compaction_restamp(spark, tmp_path):
-    """A pre-stamp bucket that already carries deltas can only LOWER-bound its
-    key count from base files — apply must not re-stamp it as exact; the next
-    compaction (one row per key by construction) restores the stamp, and a
-    tombstone purge is reflected in it."""
-    from recidiviz_data_spark.cdc.apply import apply_batch, create_empty_table
-    from recidiviz_data_spark.tables.maintenance import compact
-    from tests.test_replay import V1_PAYLOAD
-
-    table = create_empty_table(str(tmp_path / "t_pre"), V1_PAYLOAD, num_buckets=1)
-    apply_batch(spark, table, _kv_batch(spark, 0, range(100)), 0,
-                mor="auto", compact=False)
-    apply_batch(spark, table, _kv_batch(spark, 1000, range(100, 110)), 1,
-                mor=True, compact=False)  # delta adds 10 new keys
-    # simulate a pre-stamp manifest: rewrite the bucket summary from its own
-    # file entries without a bucket_keys stamp (stamps never survive an
-    # unstamped rewrite by design)
-    m = table.manifest()
-    entries = list(table.files(manifest=m))
-    table.commit(added_files=entries, replaced_buckets={0},
-                 expected_parent=m["version"])
-    assert "keys" not in table.bucket_summaries(table.manifest())[0]
-    # the rewrite re-registers the same entries; their delta kinds survive
-    assert any(e.get("kind") == "delta" for e in table.files())
-    lin = apply_batch(spark, table, _kv_batch(spark, 2000, range(3)), 2,
-                      mor="auto", compact=False, compact_files_per_bucket=99)
-    # bucket had deltas + no stamp -> inexact: still NOT stamped
-    assert "keys" not in table.bucket_summaries(table.manifest())[0]
-    assert table.read(spark).count() == 110
-    # delete one doc, then compact with a purge horizon: stamp comes back
-    # exact and reflects the purged tombstone
-    d = spark.createDataFrame(
-        [(3000, "D", "doc_00000005", None, None, "web")],
-        "event_seq long, op string, doc_id string, tokens array<int>, "
-        "n_tok int, source string",
-    )
-    apply_batch(spark, table, d, 3, mor="auto", compact=False,
-                compact_files_per_bucket=99)
-    compact(spark, table, min_files=1, tombstone_horizon=3000)
-    assert table.bucket_summaries(table.manifest())[0]["keys"] == 109
-    assert table.read(spark).count() == 109
-
-
-def test_keys_stamp_survives_split_and_carry(spark, tmp_path):
-    """split_buckets re-stamps every output bucket (map-only rewrite is one
-    row per key); untouched buckets carry their stamp verbatim across later
-    commits."""
-    from recidiviz_data_spark.cdc.apply import apply_batch, create_empty_table
-    from recidiviz_data_spark.tables.maintenance import split_buckets
-    from tests.test_replay import V1_PAYLOAD
-
-    table = create_empty_table(str(tmp_path / "t_spl"), V1_PAYLOAD, num_buckets=2)
-    apply_batch(spark, table, _kv_batch(spark, 0, range(200)), 0,
-                mor="auto", compact=False)
-    split_buckets(spark, table, factor=2)
-    summ = table.bucket_summaries(table.manifest())
-    assert sum(s["keys"] for s in summ.values()) == 200
-    per_bucket_before = dict(summ)
-    # touch ONE bucket; the others' stamps must carry verbatim
-    lin = apply_batch(spark, table, _kv_batch(spark, 1000, [0]), 1,
-                      mor="auto", compact=False, compact_files_per_bucket=99)
-    touched = {r["bucket"] for r in lin if r.get("write_mode")}
-    summ2 = table.bucket_summaries(table.manifest())
-    for b, s in summ2.items():
-        if b not in touched:
-            assert s["keys"] == per_bucket_before[b]["keys"]
-    assert sum(s["keys"] for s in summ2.values()) == 200
-
-
 # --------------------------------- band index follows the CDC table (r6 sync)
 def test_band_index_sync_follows_cdc_table(spark, tmp_path):
     """The persisted band index advances with the miniberg table through the

@@ -61,3 +61,20 @@ def test_string_to_int_rejected(tmp_path):
     t = _t(tmp_path, BASE)
     with pytest.raises(ValueError, match="incompatible"):
         t.evolve_schema(T.StructType([T.StructField("doc_id", T.LongType(), False)]))
+
+
+@pytest.mark.parametrize("new_type,ok", [
+    (T.ArrayType(T.IntegerType(), False), True),  # non-null elements: stored nullable
+    (T.ArrayType(T.StringType()), False),         # array<int> -> array<string>
+], ids=["nonnull_array_accepted", "array_element_change_rejected"])
+def test_nested_type_changes(tmp_path, new_type, ok):
+    t = _t(tmp_path, BASE + [T.StructField("tokens", T.ArrayType(T.IntegerType()), True)])
+    new = T.StructType([T.StructField("tokens", new_type, True)])
+    if not ok:
+        with pytest.raises(ValueError, match="incompatible"):
+            t.evolve_schema(new)
+        return
+    fields, changed = t.evolve_schema(new)
+    by = {f["name"]: f["type"] for f in fields["fields"]}
+    assert not changed
+    assert by["tokens"] == T.ArrayType(T.IntegerType()).jsonValue()
